@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.core.Tables
+import graft.core.{GraftSession, Tables}
 import graft.ops.{CurationOps, DedupOps, MaskingOps, PqOps, SimilarityOps}
 import graft.streaming.StreamingOps
 
@@ -1338,27 +1338,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.parquet stores ts as TIMESTAMP(NANOS); see Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // generated-class cache sized to the sweep's ~600 plans (default
-      // 100): eviction re-Janinos whole plan families mid-sweep and
-      // restarts their JIT tiering — the round-12 residual-bimodality
-      // mechanism (see GraftSession for the PlanProbe numbers).
-      // 2000 → 4000 (r13): at 362 rows the sweep crossed the 2000-entry
-      // line and the evictions landed on the LAST-run phase — every
-      // streaming row read 2-9× its committed value in the aged JVM
-      // while a fresh-JVM isolated re-run reproduced the r12 walls
-      // exactly; headroom restores the sized-to-the-sweep contract.
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(appName = "graft-bench")
     // warmup: pay the one-time session/codegen/scan setup outside the
     // per-query timings (otherwise the first query absorbs ~5s of it),
     // and the once-per-corpus-version reps precompute for

@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import com.fasterxml.jackson.databind.ObjectMapper
+import graft.core.GraftSession
+import java.io.File
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -11,23 +12,11 @@ object Verify {
       case Array(a, b)    => (a, b, None)
       case Array(a, b, c) => (a, b, Some(c.split(",").toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet stores ts as TIMESTAMP(NANOS); see Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // ~600-plan run; the 100-entry default evicts and re-Janinos
-      // plan families mid-run (see GraftSession). 4000 = one constant
-      // across Bench/GraftSession/Verify (r13 eviction postmortem).
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
+    val selected = (name: String) => only.forall(_.contains(name))
+    val spark = GraftSession.build(appName = "graft-verify")
+    new File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -38,22 +27,12 @@ object Verify {
       // ride into later queries
       spark.sharedState.cacheManager.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val mapper = new ObjectMapper()
+    val json = mapper.createObjectNode()
+    SparkEntry.oracleSql
+      .filter { case (k, _) => selected(k) }
+      .foreach { case (k, v) => json.put(k, v) }
+    mapper.writeValue(new File(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
 }

@@ -11,18 +11,25 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Local core count for every entry point: `SPARK_GRAFT_CPUS`, or
+    * the machine's processor count when unset.
+    */
+  private val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
   /** Build (or fetch) the engine session.
     *
-    * @param master            Spark master; local threads by default.
+    * @param master            Spark master; `local[cpus]` by default.
     * @param shufflePartitions number of shuffle partitions. On a real
     *                          cluster leave larger (AQE coalesces); in
     *                          local[N] match N so a 60k-row test run
-    *                          doesn't schedule 200 empty tasks.
+    *                          doesn't schedule 200 empty tasks. The
+    *                          default matches the default master.
     */
   def build(
-      master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
+      master: String = s"local[$cpus]",
       appName: String = "graft",
-      shufflePartitions: Int = 32
+      shufflePartitions: Int = cpus
   ): SparkSession = {
     val spark = SparkSession
       .builder()
@@ -49,8 +56,7 @@ object GraftSession {
       // is bounded by plan count, not data. 2000 → 4000 (r14): the
       // 362-row r13 sweep crossed the 2000-entry line and evictions
       // landed on the last-run phase (2-9x streaming inflation, see
-      // Bench/BASELINE); one constant for BOTH builders so a Verify
-      // or user session replaying the registry can't re-trigger it.
+      // Bench/BASELINE).
       .config("spark.sql.codegen.cache.maxEntries", "4000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -345,15 +345,13 @@ object Sources {
     val (n, h, ddl) = contentManifest(spark.read.parquet(path))
     val p = new org.apache.hadoop.fs.Path(path, "_graft_manifest.json")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val manifest = mapper.createObjectNode()
+      .put("rows", n).put("content_hash", h).put("schema", ddl)
     val out = fs.create(p, true)
-    try out.write(
-      s"""{"rows": $n, "content_hash": "$h", "schema": ${ujsonStr(ddl)}}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(mapper.writeValueAsBytes(manifest))
     finally out.close()
   }
-
-  private def ujsonStr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 
   /** Recompute a dataset's manifest and diff it against the sidecar.
     * Returns None when everything matches, or a human-readable

@@ -408,18 +408,6 @@ object SimilarityOps {
   private def planeLit(plane: Int, dim: Int): Column =
     array((0 until dim).map(d => lit(planeComponent(plane, d))): _*)
 
-  /** Sign-bit LSH signature: bit p = sign(v · plane_p). Returns a long
-    * with `numPlanes` (<= 60) bits. Buckets group vectors by angular
-    * region; cosine-similar vectors collide with high probability.
-    */
-  def hyperplaneSignature(vec: Column, numPlanes: Int, dim: Int): Column =
-    (0 until numPlanes).map { p =>
-      val dotP = aggregate(
-        zip_with(vec, planeLit(p, dim), (x, c) => x.cast("double") * c),
-        lit(0.0), (acc, x) => acc + x)
-      when(dotP > 0, shiftleft(lit(1L), p)).otherwise(0L)
-    }.reduce(_.bitwiseOR(_))
-
   /** IVF (inverted-file) approximate top-k — the other standard ANN
     * scale path: a deterministic coarse quantizer of `nlist` centroids
     * (chosen as the embeddings with the smallest key-hash — no k-means

@@ -625,7 +625,7 @@ object VectorOps {
     // fanOutSmall + stageNarrow (r15): the cleaned vector frame feeds
     // EVERY eager pass of the iteration — the base-stats count +
     // collect and one [[powerPass]] collect per iteration. Probe
-    // (Scratch, sf0.1): unfanned, each pass's n·dim cell aggregation
+    // (sf0.1): unfanned, each pass's n·dim cell aggregation
     // ran on the source's ONE scan split (single task of ~128k exact
     // DECIMAL adds, ~1.2 s/pass warm); fanned to session parallelism
     // it reads 0.7–0.9 s/pass. The checkpoint then feeds all passes

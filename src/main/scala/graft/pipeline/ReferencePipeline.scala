@@ -69,7 +69,7 @@ object ReferencePipeline {
     // OP-15/16/17: tokenize (injectable), budgeted assembly with the
     // reference's priority/floor algebra, pad + mask.
     val assembled = labeled.withColumn("tokens",
-        TextOps.budgetedAssemble(
+        TextOps.budgetedAssembleFused(
           tokenizer(col("title")),
           tokenizer(col("asr")),
           tokenizer(col("ocr_text")),

@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+
+import graft.core.GraftSession
 
 /** Synthetic ≥10× scale-point generator for the documents/embeddings/
   * events fixture (VERDICT r8 task #4, extended to events by r10 #3):
@@ -80,15 +82,7 @@ object ScaleGen {
     val outDir = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(appName = "graft-scalegen")
     import spark.implicits._
 
     new java.io.File(outDir).mkdirs()

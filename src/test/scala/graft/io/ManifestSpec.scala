@@ -3,6 +3,7 @@ package graft.io
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MetadataBuilder
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
@@ -48,6 +49,20 @@ class ManifestSpec extends AnyFunSuite {
 
     assert(Sources.verifyManifest(spark,
       Files.createTempDirectory("no-manifest").toString).isDefined)
+  }
+
+  test("manifest stays valid JSON when the schema DDL holds control characters") {
+    val base = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    val commented = base.withColumn("v", col("v").as("v",
+      new MetadataBuilder().putString("comment", "line1\nline2\ttab").build()))
+    val tabName = base.withColumnRenamed("v", "a\tb")
+    val cases = Seq("comment with \\n and \\t" -> commented, "column name with \\t" -> tabName)
+    val errs = cases.flatMap { case (label, df) =>
+      val out = Files.createTempDirectory("manifest-ctrl").toString
+      Sources.writeWithManifest(df, out)
+      Sources.verifyManifest(spark, out).map(e => s"$label: $e")
+    }
+    assert(errs.isEmpty, errs.mkString("\n"))
   }
 
   test("compactParquet merges small files, verifies content, swaps in place") {

@@ -104,6 +104,19 @@ class VectorOpsSpec extends AnyFunSuite {
     assert(got(2) == None, "fewer than k layers is a caller error, not a partial pool")
   }
 
+  test("maskedMean is (hidden*mask).sum / mask.sum, partial masks included (OP-29)") {
+    val rows = Seq(
+      (Seq(1.0f, 2.0f, 3.0f, 4.0f), Seq(1, 1, 1, 1)),
+      (Seq(1.0f, 2.0f, 3.0f, 4.0f), Seq(1, 1, 0, 0)),
+      (Seq(0.5f, -2.0f, 100.0f, 7.25f), Seq(0, 1, 0, 1)))
+    val got = rows.toDF("h", "m")
+      .select(VectorOps.maskedMean(col("h"), col("m"))).as[Double].collect().toSeq
+    val reference = rows.map { case (h, m) =>
+      h.zip(m).map { case (x, k) => x.toDouble * k }.sum / m.sum }
+    assert(got == reference)
+    assert(got == Seq(2.5, 1.5, 2.625), "masked-out positions must not contribute")
+  }
+
   // ------------------------------------------------ random projection
 
   test("randomProject of a basis vector reads off the sign matrix exactly") {
