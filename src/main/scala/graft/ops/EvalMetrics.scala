@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.F1Aggregator
+
 /** Classification metric block — the reference's `evaluate`
   * (`src/util.py:136-156`) rewritten as pure relational algebra, no UDAF:
   * per-class TP/FP/FN via conditional sums, micro-F1 from global counts,
@@ -14,6 +16,9 @@ import org.apache.spark.sql.functions._
   *
   * Scales: one shuffle (groupBy class) over pre-aggregated counts, then a
   * tiny (|classes|-row) reduction — no per-row state, streaming-friendly.
+  * [[hierarchicalF1]] needs two such blocks at once, so it runs the
+  * same semantics through [[graft.functions.F1Aggregator]] instead: one
+  * aggregate with a column per hierarchy level.
   */
 object EvalMetrics {
 
@@ -54,13 +59,25 @@ object EvalMetrics {
     * predicted vid must exist in the ground truth (unknown ids raise),
     * and the row counts must match exactly. Returns the joined
     * (vid, pred, label) frame on success.
+    *
+    * Both guards come from ONE action: the two vid columns are unioned,
+    * grouped by vid, and a single aggregate yields (unknown, np, nt).
+    * Counting is per row: a duplicated pred vid counts twice, and a pred
+    * row with a null vid is unknown (a null key never matches the truth,
+    * as in a `left_anti` join).
     */
   def validatePredictions(
       preds: DataFrame, truth: DataFrame,
       vidCol: String = "vid", predCol: String = "pred", labelCol: String = "label"): DataFrame = {
-    val unknown = preds.join(truth, Seq(vidCol), "left_anti").count()
+    val vids = preds.select(col(vidCol), lit(1L).as("p"), lit(0L).as("t"))
+      .union(truth.select(col(vidCol), lit(0L).as("p"), lit(1L).as("t")))
+      .groupBy(vidCol).agg(sum("p").as("p"), sum("t").as("t"))
+    def total(c: Column): Column = coalesce(sum(c), lit(0L))
+    val r = vids.agg(
+      total(when(col(vidCol).isNull || col("t") === 0L, col("p")).otherwise(0L)),
+      total(col("p")), total(col("t"))).head()
+    val (unknown, np, nt) = (r.getLong(0), r.getLong(1), r.getLong(2))
     require(unknown == 0, s"$unknown predicted ids missing from ground truth")
-    val (np, nt) = (preds.count(), truth.count())
     require(np == nt, s"prediction count $np != ground truth count $nt")
     preds.join(truth, Seq(vidCol))
   }
@@ -78,6 +95,10 @@ object EvalMetrics {
     * NULL`) — a dim row with a null lv1id cannot vouch for its lv2id —
     * and a null pred/label id prints as "NULL" in the error rather than
     * nulling the whole message.
+    *
+    * Both levels come from one aggregate: two `udaf(F1Aggregator)`
+    * columns (spec-pinned to [[f1Block]]) over the guarded pairs, so the
+    * metrics row is one action with no cross joins.
     */
   def hierarchicalF1(
       pairs: DataFrame, dim: DataFrame,
@@ -94,14 +115,20 @@ object EvalMetrics {
         .withColumnRenamed("lv1id", "label_lv1")), Seq(labelLv2), "left")
       .withColumn("pred_lv1", found("pred_lv1", predLv2))
       .withColumn("label_lv1", found("label_lv1", labelLv2))
-    val lv2m = f1Block(withLv1, predLv2, labelLv2)
-      .select(col("micro_f1").as("lv2_f1_micro"), col("macro_f1").as("lv2_f1_macro"),
-        col("accuracy").as("lv2_acc"))
-    val lv1m = f1Block(withLv1, "pred_lv1", "label_lv1")
-      .select(col("micro_f1").as("lv1_f1_micro"), col("macro_f1").as("lv1_f1_macro"),
-        col("accuracy").as("lv1_acc"))
-    lv2m.crossJoin(lv1m).withColumn("mean_f1",
-      (col("lv2_f1_macro") + col("lv1_f1_macro") + col("lv1_f1_micro") + col("lv2_f1_micro")) / 4.0)
+    // both levels in one aggregate; an empty input gives a row of nulls,
+    // as the relational f1Block does (the aggregator alone would say 0)
+    val f1 = udaf(F1Aggregator)
+    val m = withLv1.agg(
+      count(lit(1)).as("n"),
+      f1(col(predLv2).cast("int"), col(labelLv2).cast("int")).as("lv2"),
+      f1(col("pred_lv1").cast("int"), col("label_lv1").cast("int")).as("lv1"))
+    def metric(level: String, field: Int, name: String): Column =
+      when(col("n") > 0, col(s"$level._$field")).as(s"${level}_$name")
+    m.select(
+        metric("lv2", 1, "f1_micro"), metric("lv2", 2, "f1_macro"), metric("lv2", 3, "acc"),
+        metric("lv1", 1, "f1_micro"), metric("lv1", 2, "f1_macro"), metric("lv1", 3, "acc"))
+      .withColumn("mean_f1",
+        (col("lv2_f1_macro") + col("lv1_f1_macro") + col("lv1_f1_micro") + col("lv2_f1_micro")) / 4.0)
   }
 
   /** ROUGE-N (Lin 2004) per reference/candidate pair: clipped n-gram

@@ -20,11 +20,15 @@ import graft.ops._
   *   → OP-24 validation join + OP-26 hierarchical F1 block
   *   → OP-07 CSV result sink.
   *
-  * The whole pipeline is lazy until the two actions (metrics collect,
-  * CSV write); Catalyst prunes the unused annotation fields out of the
-  * JSON scan and pipelines every narrow stage. The only shuffles are
-  * the split window (by lv2id), the majority-class aggregate, and the
-  * metric groupBys — same shape at any scale.
+  * The input is read once: the split, projected to (id, lv2id, split),
+  * is persisted on its first action and unpersisted before `run`
+  * returns. On top of it come four actions — the majority class
+  * (collected and used as a literal), the one-aggregate validation
+  * guards, the one-aggregate metrics row, and the CSV write. Catalyst
+  * prunes the unused annotation fields out of the JSON scan and
+  * pipelines every narrow stage. The only shuffles are the split
+  * window (by lv2id), the majority-class and validation groupBys, and
+  * the metric aggregate's merge — same shape at any scale.
   */
 object ReferencePipeline {
 
@@ -76,33 +80,42 @@ object ReferencePipeline {
           Budget, MinTitle, MinAsr, MinOcr))
       .withColumn("attention_mask", TextOps.attentionMask(col("tokens"), 256))
 
-    // OP-36 split
+    // OP-36 split, kept for every action below
     val split = SplitOps.stratifiedSplit(assembled, "lv2id", "id", valRatio, seed)
-    val valSet = split.filter(col("split") === "val")
+      .select("id", "lv2id", "split")
+      .persist()
+    try {
+      val valSet = split.filter(col("split") === "val")
 
-    // trivial deterministic predictor: majority lv2id of the train set
-    // (ties to the smaller id) — enough to drive the metric/sink path.
-    val majority = split.filter(col("split") === "train")
-      .groupBy("lv2id").count()
-      .orderBy(col("count").desc, col("lv2id"))
-      .limit(1)
-      .select(col("lv2id").as("pred"))
+      // trivial deterministic predictor: majority lv2id of the train set
+      // (ties to the smaller id) — enough to drive the metric/sink path.
+      // No train rows means no prediction, so `scored` is empty.
+      val majority = split.filter(col("split") === "train")
+        .groupBy("lv2id").count()
+        .orderBy(col("count").desc, col("lv2id"))
+        .limit(1)
+        .collect().headOption.map(_.getInt(0))
 
-    val scored = valSet.crossJoin(broadcast(majority))
-      .select(col("id").as("vid"), col("pred"), col("lv2id").as("label"))
+      val scored = valSet.where(lit(majority.isDefined))
+        .select(col("id").as("vid"), lit(majority.getOrElse(0)).as("pred"), col("lv2id").as("label"))
 
-    // OP-24 + OP-26
-    val truth = valSet.select(col("id").as("vid"), col("lv2id").as("label"))
-    val validated = EvalMetrics.validatePredictions(
-      scored.select("vid", "pred"), truth)
-    val metrics = EvalMetrics.hierarchicalF1(validated, dim)
+      // OP-24 + OP-26
+      val truth = valSet.select(col("id").as("vid"), col("lv2id").as("label"))
+      val validated = EvalMetrics.validatePredictions(
+        scored.select("vid", "pred"), truth)
+      val metricsDf = EvalMetrics.hierarchicalF1(validated, dim)
+      val metrics = spark.createDataFrame(
+        java.util.List.of(metricsDf.head()), metricsDf.schema)
 
-    // OP-07: lv2id → category string, then the csv result sink
-    val predictions = CategoryOps.attachCode(
-      scored.withColumnRenamed("pred", "lv2id"), dim, "lv2id")
-      .select(col("vid"), col("category_id_rt").as("category_id"))
-    Sources.writeResultCsv(predictions, resultCsvPath, singleFile = true)
+      // OP-07: lv2id → category string, then the csv result sink
+      val predictions = CategoryOps.attachCode(
+        scored.withColumnRenamed("pred", "lv2id"), dim, "lv2id")
+        .select(col("vid"), col("category_id_rt").as("category_id"))
+      Sources.writeResultCsv(predictions, resultCsvPath, singleFile = true)
 
-    Output(metrics, predictions)
+      // `metrics` is a local row; `predictions` stays lazy and re-reads
+      // the input once the split is unpersisted
+      Output(metrics, predictions)
+    } finally split.unpersist()
   }
 }

@@ -44,14 +44,52 @@ class EvalMetricsSpec extends AnyFunSuite {
     val dim = Seq((10, 1), (20, 2)).toDF("lv2id", "lv1id")
     val ok = Seq((10, 20), (20, 20)).toDF("pred", "label")
     assert(EvalMetrics.hierarchicalF1(ok, dim).collect().length == 1)
-    val bad = Seq((10, 20), (99, 20)).toDF("pred", "label") // 99 not in dim
-    val e = intercept[Exception] {
-      EvalMetrics.hierarchicalF1(bad, dim).collect()
+    def failure(pairs: org.apache.spark.sql.DataFrame): String = {
+      val e = intercept[Exception] { EvalMetrics.hierarchicalF1(pairs, dim).collect() }
+      Iterator.iterate(e: Throwable)(_.getCause)
+        .takeWhile(_ != null).map(t => Option(t.getMessage).getOrElse("")).mkString("\n")
     }
-    val messages = Iterator.iterate(e: Throwable)(_.getCause)
-      .takeWhile(_ != null).map(t => Option(t.getMessage).getOrElse("")).mkString("\n")
-    assert(messages.contains("absent from category dim"),
-      s"expected the raise_error contract, got:\n$messages")
+    val cases = Seq(
+      Seq((Some(10), 20), (Some(99), 20)) -> "pred id absent from category dim: 99",
+      Seq((Some(10), 20), (Some(20), 99)) -> "label id absent from category dim: 99",
+      Seq((Some(10), 20), (None, 20)) -> "pred id absent from category dim: NULL")
+    cases.foreach { case (rows, want) =>
+      val messages = failure(rows.toDF("pred", "label"))
+      assert(messages.contains(want), s"expected the raise_error contract '$want', got:\n$messages")
+    }
+  }
+
+  test("hierarchicalF1 equals the per-level f1Block values on a 3-group fixture") {
+    // lv2 0..6 over lv1 groups 1 (0,1,2), 2 (3,4), 3 (5,6); label→pred
+    // misses within a group (1→0, 4→3, 1→2) and across (2→5, 6→1, 3→0)
+    val dim = Seq((0, 1), (1, 1), (2, 1), (3, 2), (4, 2), (5, 3), (6, 3)).toDF("lv2id", "lv1id")
+    val lv1Of = Map(0 -> 1, 1 -> 1, 2 -> 1, 3 -> 2, 4 -> 2, 5 -> 3, 6 -> 3)
+    val pairs = Seq((0, 0), (0, 1), (1, 1), (5, 2), (2, 2), (3, 3), (3, 4), (4, 4),
+      (5, 5), (1, 6), (6, 6), (0, 3), (0, 0), (4, 4), (2, 1))
+    val got = EvalMetrics.hierarchicalF1(pairs.toDF("pred", "label"), dim).head()
+    def block(ps: Seq[(Int, Int)]): (Double, Double, Double) =
+      EvalMetrics.f1Block(ps.toDF("pred", "label"), "pred", "label")
+        .as[(Double, Double, Double)].head()
+    val lv2 = block(pairs)
+    val lv1 = block(pairs.map { case (p, l) => (lv1Of(p), lv1Of(l)) })
+    assert(lv1 != lv2 && lv2._1 < 1.0 && lv1._1 < 1.0, "fixture must miss at both levels")
+    val want = Map(
+      "lv2_f1_micro" -> lv2._1, "lv2_f1_macro" -> lv2._2, "lv2_acc" -> lv2._3,
+      "lv1_f1_micro" -> lv1._1, "lv1_f1_macro" -> lv1._2, "lv1_acc" -> lv1._3,
+      "mean_f1" -> (lv2._1 + lv2._2 + lv1._1 + lv1._2) / 4.0)
+    assert(got.schema.fieldNames.toSeq == Seq("lv2_f1_micro", "lv2_f1_macro", "lv2_acc",
+      "lv1_f1_micro", "lv1_f1_macro", "lv1_acc", "mean_f1"))
+    want.foreach { case (f, v) =>
+      assert(math.abs(got.getAs[Double](f) - v) < 1e-12, s"$f: got ${got.getAs[Double](f)}, f1Block $v")
+    }
+  }
+
+  test("hierarchicalF1 over no pairs is one row of nulls, as f1Block gives") {
+    val dim = Seq((10, 1), (20, 2)).toDF("lv2id", "lv1id")
+    val empty = Seq.empty[(Int, Int)].toDF("pred", "label")
+    val rows = EvalMetrics.hierarchicalF1(empty, dim).collect()
+    assert(rows.length == 1 && rows.head.toSeq.forall(_ == null), rows.toSeq)
+    assert(EvalMetrics.f1Block(empty, "pred", "label").head().toSeq.forall(_ == null))
   }
 
   test("aucRoc: perfect separation, ties averaged, degenerate class -> null") {

@@ -111,6 +111,56 @@ class ReferencePipelineSpec extends AnyFunSuite {
       EvalMetrics.validatePredictions(short, truth)
     }
     assert(e2.getMessage.contains("count"))
+
+    // a null pred vid never matches (even a null truth vid): unknown
+    val nullTruth = Seq[(Option[String], Int)]((Some("a"), 1), (None, 2)).toDF("vid", "label")
+    val nullPred = Seq[(Option[String], Int)]((Some("a"), 1), (None, 1)).toDF("vid", "pred")
+    val e3 = intercept[IllegalArgumentException] {
+      EvalMetrics.validatePredictions(nullPred, nullTruth)
+    }
+    assert(e3.getMessage.contains("1 predicted ids missing from ground truth"), e3.getMessage)
+
+    // duplicated pred vids count per row
+    val dup = Seq(("a", 1), ("a", 1), ("b", 2)).toDF("vid", "pred")
+    val e4 = intercept[IllegalArgumentException] {
+      EvalMetrics.validatePredictions(dup, truth)
+    }
+    assert(e4.getMessage.contains("prediction count 3 != ground truth count 2"), e4.getMessage)
+  }
+
+  test("validatePredictions over empty preds and empty truth is an empty join (OP-24)") {
+    val truth = Seq.empty[(String, Int)].toDF("vid", "label")
+    val preds = Seq.empty[(String, Int)].toDF("vid", "pred")
+    val joined = EvalMetrics.validatePredictions(preds, truth)
+    assert(joined.columns.toSeq == Seq("vid", "pred", "label"))
+    assert(joined.count() == 0)
+  }
+
+  test("run releases its persisted split and returns a materialised metrics row") {
+    val annDir = writeFixture()
+    val outCsv = Files.createTempDirectory("result-cache").toFile.getAbsolutePath + "/preds"
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = ReferencePipeline.run(spark, s"$annDir/labeled.json", codes, outCsv, valRatio = 0.25)
+    val after = spark.sparkContext.getPersistentRDDs.keySet
+    assert(after.size == before.size && after == before,
+      s"run left ${(after -- before).size} persisted RDDs behind")
+    val row = out.metrics.collect().toSeq
+    Files.delete(java.nio.file.Path.of(annDir, "labeled.json"))
+    // a fresh plan over `metrics` (not the already-executed one, whose
+    // shuffle outputs would be reused) must not need the input
+    assert(out.metrics.select("*").collect().toSeq == row, "metrics must not re-read the input")
+    assert(row.length == 1 && out.metrics.columns.length == 7)
+  }
+
+  test("run with no train rows predicts nothing, so validation fails and the split is released") {
+    val annDir = writeFixture()
+    val outCsv = Files.createTempDirectory("result-empty").toFile.getAbsolutePath + "/preds"
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[IllegalArgumentException] {
+      ReferencePipeline.run(spark, s"$annDir/labeled.json", codes, outCsv, valRatio = 1.0)
+    }
+    assert(e.getMessage.contains("prediction count 0 != ground truth count 24"), e.getMessage)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
   }
 
   test("category dim round-trip law on all codes (OP-14)") {
