@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.core.{GraftSession, Tables}
 import graft.ops.{CurationOps, DedupOps, MaskingOps, PqOps, SimilarityOps}
@@ -1704,17 +1703,12 @@ object Bench {
       val sink = s"${name}__t$tryIdx"
       val t0 = System.nanoTime()
       try {
-        val q = graft.core.PlanOps.withShufflePartitions(spark, stateParts) {
-          val q0 = df.writeStream.format("memory").queryName(sink)
-            .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-          q0.awaitTermination()
-          q0
-        }
-        val maxState = q.recentProgress.iterator
-          .flatMap(p => Option(p.stateOperators).iterator.flatten.map(_.numRowsTotal))
-          .foldLeft(0L)(math.max)
+        val (table, maxState, _) =
+          graft.core.PlanOps.withShufflePartitions(spark, stateParts) {
+            StreamingOps.runToMemoryStats(df, sink, mode)
+          }
         // force the sink so the timing covers materialization
-        spark.table(sink).count()
+        table.count()
         val sec = (System.nanoTime() - t0) / 1e9
         spark.catalog.dropTempView(sink)
         (sec, maxState, None)

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -30,9 +29,23 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
   override def dataType: DataType = DoubleType
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  override def nullSafeEval(l: Any, r: Any): Any =
+    CosineSimilarity.cosine(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.CosineSimilarity.cosine($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+
+  override def prettyName: String = "cosine_sim"
+}
+
+object CosineSimilarity {
+
+  /** The one-loop dot/norm pass both eval paths run. */
+  def cosine(a: ArrayData, b: ArrayData): Double = {
     val n = math.min(a.numElements(), b.numElements())
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
@@ -46,47 +59,10 @@ case class CosineSimilarity(left: Expression, right: Expression)
     if (d == 0.0) 0.0 else dot / d
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = (double) $a.getFloat($i);
-         |  double $y = (double) $b.getFloat($i);
-         |  $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |}
-         |double $d = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
-         |${ev.value} = ($d == 0.0) ? 0.0 : $dot / $d;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "cosine_sim"
-}
-
-object CosineSimilarity {
-
   /** Column-API entry point (Spark 4 Column↔Expression bridge). */
   def cosineFused(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(
       CosineSimilarity(ColumnBridge.expression(a), ColumnBridge.expression(b)))
   }
-
-  /** SQL registration: `SELECT cosine_sim(a, b)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
 }

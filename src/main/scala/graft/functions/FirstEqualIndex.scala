@@ -24,30 +24,12 @@ case class FirstEqualIndex(left: Expression, right: Expression)
 
   override def dataType: DataType = IntegerType
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var i = 0
-    while (i < n) {
-      if (a.getLong(i) == b.getLong(i)) return i
-      i += 1
-    }
-    -1
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    FirstEqualIndex.firstEqualAt(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |${ev.value} = -1;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.getLong($i) == $b.getLong($i)) { ${ev.value} = $i; break; }
-         |}
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"graft.functions.FirstEqualIndex.firstEqualAt($a, $b)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -57,6 +39,18 @@ case class FirstEqualIndex(left: Expression, right: Expression)
 }
 
 object FirstEqualIndex {
+
+  /** The position scan both eval paths run. */
+  def firstEqualAt(a: ArrayData, b: ArrayData): Int = {
+    val n = math.min(a.numElements(), b.numElements())
+    var i = 0
+    while (i < n) {
+      if (a.getLong(i) == b.getLong(i)) return i
+      i += 1
+    }
+    -1
+  }
+
   def firstEqualIndex(a: Column, b: Column): Column =
     ColumnBridge.column(
       FirstEqualIndex(ColumnBridge.expression(a), ColumnBridge.expression(b)))

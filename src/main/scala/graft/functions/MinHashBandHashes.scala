@@ -34,8 +34,8 @@ import org.apache.spark.sql.types._
   * doc lands in the same buckets, so exact-empty duplicates still meet in
   * the verify stage. Null elements are skipped. NOT portable across
   * engines by design — the oracle-checked portable construction
-  * ([[graft.core.PortableHash]] md5 family) lives in
-  * `DedupOps.minHashSignature`/`minHashCandidates(portable = true)`.
+  * ([[graft.core.PortableHash]] md5 family) is DedupOps' private
+  * `Portable` hash family behind the `*Portable` twins.
   */
 case class MinHashBandHashes(child: Expression, bands: Int, rowsPerBand: Int)
     extends UnaryExpression with ExpectsInputTypes {

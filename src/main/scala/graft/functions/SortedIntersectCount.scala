@@ -28,9 +28,24 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 
   override def dataType: DataType = IntegerType
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  override def nullSafeEval(l: Any, r: Any): Any =
+    SortedIntersectCount.intersectSize(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"graft.functions.SortedIntersectCount.intersectSize($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+
+  override def prettyName: String = "sorted_intersect_count"
+}
+
+object SortedIntersectCount {
+
+  /** The two-pointer merge both eval paths run. */
+  def intersectSize(a: ArrayData, b: ArrayData): Int = {
     val (na, nb) = (a.numElements(), b.numElements())
     var i = 0; var j = 0; var c = 0
     while (i < na && j < nb) {
@@ -42,31 +57,6 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     c
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j"); val c = ctx.freshName("c")
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      s"""
-         |int $na = $a.numElements(), $nb = $b.numElements();
-         |int $i = 0, $j = 0, $c = 0;
-         |while ($i < $na && $j < $nb) {
-         |  long $x = $a.getLong($i); long $y = $b.getLong($j);
-         |  if ($x == $y) { $c++; $i++; $j++; }
-         |  else if ($x < $y) $i++; else $j++;
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "sorted_intersect_count"
-}
-
-object SortedIntersectCount {
   def sortedIntersectCount(a: Column, b: Column): Column =
     ColumnBridge.column(
       SortedIntersectCount(ColumnBridge.expression(a), ColumnBridge.expression(b)))

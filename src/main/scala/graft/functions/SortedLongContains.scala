@@ -24,9 +24,24 @@ case class SortedLongContains(left: Expression, right: Expression)
 
   override def dataType: DataType = BooleanType
 
-  override def nullSafeEval(arr: Any, key: Any): Any = {
-    val a = arr.asInstanceOf[ArrayData]
-    val k = key.asInstanceOf[Long]
+  override def nullSafeEval(arr: Any, key: Any): Any =
+    SortedLongContains.binarySearch(arr.asInstanceOf[ArrayData], key.asInstanceOf[Long])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, k) =>
+      s"graft.functions.SortedLongContains.binarySearch($a, $k)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+
+  override def prettyName: String = "sorted_long_contains"
+}
+
+object SortedLongContains {
+
+  /** The binary search both eval paths run. */
+  def binarySearch(a: ArrayData, k: Long): Boolean = {
     var lo = 0
     var hi = a.numElements() - 1
     while (lo <= hi) {
@@ -39,32 +54,6 @@ case class SortedLongContains(left: Expression, right: Expression)
     false
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, k) => {
-      val lo = ctx.freshName("lo"); val hi = ctx.freshName("hi")
-      val mid = ctx.freshName("mid"); val v = ctx.freshName("v")
-      val found = ctx.freshName("found")
-      s"""
-         |boolean $found = false;
-         |int $lo = 0, $hi = $a.numElements() - 1;
-         |while ($lo <= $hi) {
-         |  int $mid = ($lo + $hi) >>> 1;
-         |  long $v = $a.getLong($mid);
-         |  if ($v == $k) { $found = true; break; }
-         |  else if ($v < $k) $lo = $mid + 1; else $hi = $mid - 1;
-         |}
-         |${ev.value} = $found;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "sorted_long_contains"
-}
-
-object SortedLongContains {
   def sortedLongContains(sortedArr: Column, key: Column): Column =
     ColumnBridge.column(
       SortedLongContains(ColumnBridge.expression(sortedArr), ColumnBridge.expression(key)))

@@ -26,9 +26,24 @@ case class SortedLongUpperBound(left: Expression, right: Expression)
 
   override def dataType: DataType = IntegerType
 
-  override def nullSafeEval(arr: Any, key: Any): Any = {
-    val a = arr.asInstanceOf[ArrayData]
-    val k = key.asInstanceOf[Long]
+  override def nullSafeEval(arr: Any, key: Any): Any =
+    SortedLongUpperBound.upperBound(arr.asInstanceOf[ArrayData], key.asInstanceOf[Long])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, k) =>
+      s"graft.functions.SortedLongUpperBound.upperBound($a, $k)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+
+  override def prettyName: String = "sorted_long_upper_bound"
+}
+
+object SortedLongUpperBound {
+
+  /** The binary search both eval paths run. */
+  def upperBound(a: ArrayData, k: Long): Int = {
     var lo = 0
     var hi = a.numElements()
     while (lo < hi) {
@@ -39,28 +54,6 @@ case class SortedLongUpperBound(left: Expression, right: Expression)
     lo
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, k) => {
-      val lo = ctx.freshName("lo"); val hi = ctx.freshName("hi")
-      val mid = ctx.freshName("mid")
-      s"""
-         |int $lo = 0, $hi = $a.numElements();
-         |while ($lo < $hi) {
-         |  int $mid = ($lo + $hi) >>> 1;
-         |  if ($a.getLong($mid) <= $k) $lo = $mid + 1; else $hi = $mid;
-         |}
-         |${ev.value} = $lo;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "sorted_long_upper_bound"
-}
-
-object SortedLongUpperBound {
   def sortedLongUpperBound(sortedArr: Column, key: Column): Column =
     ColumnBridge.column(
       SortedLongUpperBound(ColumnBridge.expression(sortedArr), ColumnBridge.expression(key)))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.PortableHash
+
 /** Deduplication operators for the training-data pipeline surface:
   * exact (normalized-hash groupBy), pairwise token-set Jaccard (the
   * oracle-checkable fixture-scale formulation), and the scale paths —
@@ -80,18 +82,18 @@ object DedupOps {
     *
     * Only `(hash, id, source)` rows shuffle (text never crosses an
     * exchange); the pair join is per-group quadratic in DUPLICATE
-    * group sizes only. `hashFn` defaults to xxhash64; pass
+    * group sizes only. `keyFn` defaults to xxhash64; pass
     * [[graft.core.PortableHash.md5Long]] for the oracle-replayable
     * twin. NULL-text rows are dropped before hashing: xxhash64 maps
     * NULL to its seed (one giant phantom dup group) while md5Long
     * yields NULL (drops out of the equi-join) — excluding them keeps
-    * both hashFn options on one contract.
+    * both keyFn options on one contract.
     */
   def crossSourceDupMatrix(
       df: DataFrame, textCol: String, idCol: String, srcCol: String,
-      hashFn: Column => Column = xxhash64(_)): DataFrame = {
+      keyFn: Column => Column = xxhash64(_)): DataFrame = {
     val t = df.filter(col(textCol).isNotNull)
-      .select(hashFn(normText(col(textCol))).as("__h"),
+      .select(keyFn(normText(col(textCol))).as("__h"),
         col(idCol).as("__id"), col(srcCol).as("__src"))
     val a = t.select(col("__h"), col("__id").as("__ida"),
       col("__src").as("__sa"))
@@ -307,153 +309,179 @@ object DedupOps {
       .select("id_a", "id_b", "containment")
   }
 
-  /** The default per-(token, index) hash family: xxhash64 salted by the
-    * hash index. Declared as a stable value (not an inline default
-    * lambda) so the non-portable paths can VERIFY the caller did not
-    * pass a custom family they would silently ignore — the production
-    * branch of [[minHashCandidates]] always buckets with the fused
-    * [[graft.functions.MinHashBandHashes]] xxhash64 family.
+  /** The hash family of a MinHash or SimHash dedup plan — the ONLY
+    * thing a production decision and its oracle-portable twin differ
+    * in. Each decision below (candidate pairs, verified pairs, token-set
+    * and n-gram keepers, incremental keepers, the reps pair, SimHash and
+    * edit keepers) is ONE private plan over a family, bound twice:
+    * [[Production]] and [[Portable]].
     */
-  val defaultMinHashFn: (Column, Int) => Column = (t, i) => xxhash64(t, lit(i))
+  private sealed trait HashFamily {
+    /** Distinct token set — the banding AND verify representation. */
+    def tokens(text: Column): Column
+    /** (id, band_arr) rows: the `bands` band hashes of each doc's `sets`. */
+    def bandArrays(
+        df: DataFrame, sets: Column, idCol: String,
+        bands: Int, rowsPerBand: Int): DataFrame
+    /** No position of two equal-length band-hash prefixes is equal. */
+    def noEarlierCollision(preA: Column, preB: Column): Column
+    /** |A ∩ B| of two verify sets. */
+    def intersect(a: Column, b: Column): Column
+    /** Jaccard over the verify stage's `inter`, `n_a`, `n_b` columns. */
+    def jaccard(emptyMatchesEmpty: Boolean): Column
+    /** SimHash signature of a text column. */
+    def simHash(text: Column): Column
+    /** Width of each of the 4 signature chunks SimHash bands on. */
+    def chunkBits: Int
+  }
 
-  /** MinHash signature: `numHashes` 64-bit min-hashes over the token set.
-    * This is the ORACLE-replayable composable form — `hashFn` is
-    * pluggable so oracle-checked queries can use
-    * [[graft.core.PortableHash]] (md5-based, reproducible in any engine).
-    * The production scale paths do not call it: they use the fused
-    * single-pass [[graft.functions.MinHashBandHashes]] instead.
+  /** The production family: fused single-pass xxhash64 banding
+    * ([[graft.functions.MinHashBandHashes]], never 64 string re-hash
+    * traversals) over sorted token hashes ([[hashedTokenSet]]), the
+    * codegen'd two-pointer [[graft.functions.SortedIntersectCount]]
+    * verify, and fused [[graft.functions.SimHash64]] signatures
+    * (value-identical to `simHash(toks, 64, xxhash64)`) in 16-bit chunks.
     */
-  def minHashSignature(
-      toks: Column, numHashes: Int,
-      hashFn: (Column, Int) => Column = defaultMinHashFn): Column =
-    array((0 until numHashes).map { i =>
-      array_min(transform(toks, t => hashFn(t, i)))
-    }: _*)
+  private object Production extends HashFamily {
+    def tokens(text: Column): Column = hashedTokenSet(text)
+    def bandArrays(
+        df: DataFrame, sets: Column, idCol: String,
+        bands: Int, rowsPerBand: Int): DataFrame =
+      df.select(col(idCol).as("id"),
+        graft.functions.MinHashBandHashes.minHashBandHashes(
+          sets, bands, rowsPerBand).as("band_arr"))
+    def noEarlierCollision(preA: Column, preB: Column): Column =
+      graft.functions.FirstEqualIndex.firstEqualIndex(preA, preB) === lit(-1)
+    def intersect(a: Column, b: Column): Column =
+      graft.functions.SortedIntersectCount.sortedIntersectCount(a, b)
+    /** With `emptyMatchesEmpty` (the token-set paths), two empty token
+      * sets are identical documents for dedup purposes: J(∅,∅) = 1
+      * (instead of 0/0, which raises under ANSI) so byte-empty /
+      * whitespace-only duplicates collapse like any other exact-duplicate
+      * cluster (all-empty docs share every band hash, so they always
+      * reach the verify stage together). The shingle path passes false:
+      * an empty SHINGLE set just means the doc is shorter than n — no
+      * evidence, never a match.
+      */
+    def jaccard(emptyMatchesEmpty: Boolean): Column =
+      when(col("n_a") === 0 && col("n_b") === 0,
+        lit(if (emptyMatchesEmpty) 1.0 else 0.0))
+        .otherwise(col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")))
+    def simHash(text: Column): Column =
+      graft.functions.SimHash64.simHash64(TextOps.whitespaceTokenize(text))
+    val chunkBits = 16
+  }
 
-  /** LSH candidate pairs: split the signature into `bands` bands of
-    * `rowsPerBand`, hash each band, and emit pairs that collide in at
-    * least one band. Only (band_idx, band_hash) tuples shuffle — the
-    * candidate space never materializes O(n²).
+  /** The ORACLE-portable family — what "portable" means for every
+    * `*Portable` twin, replayed verbatim by the DuckDB oracle
+    * (q21/q42/q43/q44/q46/q76/q239/q254): a salted-md5 min-hash
+    * signature ([[graft.core.PortableHash.md5Long]] of (token, i)), an
+    * md5-STRING band hash of each row-group joined with ',', raw
+    * distinct token STRINGS verified by `array_intersect` (DuckDB's
+    * `list_intersect` over `list_distinct(string_split(text, ' '))`),
+    * and the 48-bit [[graft.functions.SimHashMd5]] signature over a
+    * plain single-space split (q29's construction) in 12-bit chunks
+    * (maxHamming < 4 is still guaranteed by banding). The Jaccard is the
+    * raw ratio: the oracle SQL defines these semantics, so the
+    * production empty-set rule does not apply.
+    */
+  private object Portable extends HashFamily {
+    def tokens(text: Column): Column = tokenSet(text)
+    def bandArrays(
+        df: DataFrame, sets: Column, idCol: String,
+        bands: Int, rowsPerBand: Int): DataFrame = df
+      .select(col(idCol).as("id"),
+        array((0 until bands * rowsPerBand).map { i =>
+          array_min(transform(sets, t => PortableHash.md5Long(t, lit(i))))
+        }: _*).as("sig"))
+      .select(col("id"),
+        array((0 until bands).map(b =>
+          md5(array_join(transform(
+            slice(col("sig"), b * rowsPerBand + 1, rowsPerBand),
+            _.cast("string")), ","))): _*).as("band_arr"))
+    def noEarlierCollision(preA: Column, preB: Column): Column =
+      forall(zip_with(preA, preB, (x, y) => x =!= y), b => b)
+    def intersect(a: Column, b: Column): Column = size(array_intersect(a, b))
+    def jaccard(emptyMatchesEmpty: Boolean): Column =
+      col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter"))
+    def simHash(text: Column): Column =
+      graft.functions.SimHashMd5.simHashMd5(split(text, " "), 48)
+    val chunkBits = 12
+  }
+
+  /** LSH candidate pairs (id_a < id_b): split each doc's MinHash
+    * signature into `bands` bands of `rowsPerBand`, hash each band, and
+    * emit pairs that collide in at least one band. Only (band_idx,
+    * band_hash) tuples shuffle — the candidate space never materializes
+    * O(n²).
     *
-    * Production path computes the band hashes with the fused codegen
-    * [[graft.functions.MinHashBandHashes]] (one xxhash64 per token +
-    * multiply-add permutations, single pass — never 64 string re-hash
-    * traversals) and dedups WITHOUT a distinct(): a pair is emitted only
-    * from its FIRST colliding band (each occurrence can check earlier
-    * bands locally because rows carry the full band-hash array), so the
+    * Band hashes come from the fused [[graft.functions.MinHashBandHashes]],
+    * and pairs dedup WITHOUT a distinct(): a pair is emitted only from
+    * its FIRST colliding band (each occurrence can check earlier bands
+    * locally because rows carry their band-hash prefix), so the
     * ~`bands`× duplicated pair stream never hits a shuffle.
-    *
-    * @param portable md5-family signature ([[minHashSignature]] with
-    *        `hashFn`), md5-string band hashes + distinct() — the exact
-    *        construction the DuckDB oracle replays (q21); keep false in
-    *        production. `hashFn` is honored ONLY on this portable path;
-    *        the production branch requires the default family and
-    *        throws on a custom one rather than silently ignoring it.
-    * @param firstCollisionWins production-path switch between the
-    *        shuffle-free first-colliding-band emission and a plain
-    *        `.distinct()` over the same band hashes — the two MUST give
-    *        identical pair sets (pinned by `DedupOpsSpec`).
     */
   def minHashCandidates(
       df: DataFrame, textCol: String, idCol: String,
-      bands: Int, rowsPerBand: Int,
-      hashFn: (Column, Int) => Column = defaultMinHashFn,
-      portable: Boolean = false,
-      firstCollisionWins: Boolean = true): DataFrame = {
-    require(portable || (hashFn eq defaultMinHashFn),
-      "minHashCandidates: a custom hashFn is only honored with portable = true; " +
-        "the production path buckets with the fused MinHashBandHashes xxhash64 family")
-    if (portable) {
-      val sig = minHashSignature(tokenSet(col(textCol)), bands * rowsPerBand, hashFn)
-      val banded = df
-        .select(col(idCol).as("id"), sig.as("sig"))
-        .select(col("id"), posexplode(
-          array((0 until bands).map(b =>
-            md5(array_join(transform(
-              slice(col("sig"), b * rowsPerBand + 1, rowsPerBand),
-              _.cast("string")), ","))): _*)))
-        .withColumnRenamed("pos", "band")
-        .withColumnRenamed("col", "band_hash")
-      val l = banded.select(col("band"), col("band_hash"), col("id").as("id_a"))
-      val r = banded.select(col("band"), col("band_hash"), col("id").as("id_b"))
-      l.join(r, Seq("band", "band_hash"))
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b").distinct()
-    } else {
-      val bandedFull = df
-        .select(col(idCol).as("id"),
-          graft.functions.MinHashBandHashes.minHashBandHashes(
-            hashedTokenSet(col(textCol)), bands, rowsPerBand).as("band_arr"))
-        .select(col("id"), col("band_arr"), posexplode(col("band_arr")))
-        .withColumnRenamed("pos", "band")
-        .withColumnRenamed("col", "band_hash")
-      if (firstCollisionWins) {
-        // an occurrence survives only if THIS band is the first equal
-        // position — pairs come out unique with no distinct() shuffle;
-        // the check is a codegen'd primitive loop. The check only ever
-        // reads positions BEFORE the colliding band (both sides share
-        // `band`, so position `band` is equal by the join key), so each
-        // occurrence carries just its `band`-length PREFIX of the band
-        // array, not all `bands` hashes: on a duplicate-dense corpus the
-        // (band, band_hash) self-join streams O(Σ bucket²) rows, and
-        // halving the per-row payload (avg prefix = bands/2) halves the
-        // bytes the hot join stage materializes (guide §2.3 — project
-        // before the exchange, here: before the join's row explosion).
-        // firstEqualIndex(pre_a, pre_b) == -1  ⟺  no band < `band`
-        // collides  ⟺  the old firstEqualIndex(full_a, full_b) == band.
-        val banded = bandedFull.select(col("id"), col("band"),
-          col("band_hash"),
-          slice(col("band_arr"), lit(1), col("band")).as("pre"))
-        val l = banded.select(col("band"), col("band_hash"),
-          col("id").as("id_a"), col("pre").as("pre_a"))
-        val r = banded.select(col("band"), col("band_hash"),
-          col("id").as("id_b"), col("pre").as("pre_b"))
-        l.join(r, Seq("band", "band_hash"))
-          .filter(col("id_a") < col("id_b"))
-          .filter(graft.functions.FirstEqualIndex
-            .firstEqualIndex(col("pre_a"), col("pre_b")) === lit(-1))
-          .select("id_a", "id_b")
-      } else {
-        val l = bandedFull.select(col("band"), col("band_hash"),
-          col("id").as("id_a"))
-        val r = bandedFull.select(col("band"), col("band_hash"),
-          col("id").as("id_b"))
-        l.join(r, Seq("band", "band_hash"))
-          .filter(col("id_a") < col("id_b"))
-          .select("id_a", "id_b").distinct()
-      }
-    }
-  }
+      bands: Int, rowsPerBand: Int): DataFrame =
+    candidatePairs(Production, df, textCol, idCol, bands, rowsPerBand)
 
-  /** MinHash+LSH near-dup pairs with exact Jaccard verification of the
-    * candidates (the standard two-phase plan: LSH recall, exact
-    * precision).
-    *
-    * @param hashedVerify true (production) verifies over sorted token-
-    *        hash arrays with the codegen'd two-pointer intersect; false
-    *        (oracle parity) verifies over the raw string sets exactly as
-    *        the DuckDB oracle does.
+  /** MinHash+LSH near-dup pairs (id_a, id_b, jaccard) with exact Jaccard
+    * verification of the [[minHashCandidates]] (the standard two-phase
+    * plan: LSH recall, exact precision) over sorted token-hash arrays.
+    * Two empty token sets verify at J(∅,∅) = 1, the [[dedupKeepers]]
+    * rule.
     */
   def minHashDedup(
       df: DataFrame, textCol: String, idCol: String, threshold: Double,
-      bands: Int = 16, rowsPerBand: Int = 4,
-      hashFn: (Column, Int) => Column = defaultMinHashFn,
-      hashedVerify: Boolean = true, portable: Boolean = false): DataFrame = {
-    val cands = minHashCandidates(df, textCol, idCol, bands, rowsPerBand, hashFn, portable)
-    val toks = if (hashedVerify) hashedTokenSet(col(textCol)) else tokenSet(col(textCol))
-    val t = df.select(col(idCol).as("id"), toks.as("toks"), size(toks).as("n"))
-    val inter =
-      if (hashedVerify)
-        graft.functions.SortedIntersectCount.sortedIntersectCount(col("toks_a"), col("toks_b"))
-      else size(array_intersect(col("toks_a"), col("toks_b")))
-    cands
-      .join(t.select(col("id").as("id_a"), col("toks").as("toks_a"), col("n").as("n_a")), "id_a")
-      .join(t.select(col("id").as("id_b"), col("toks").as("toks_b"), col("n").as("n_b")), "id_b")
-      .withColumn("inter", inter)
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+      bands: Int = 16, rowsPerBand: Int = 4): DataFrame =
+    verifiedPairs(Production, df, textCol, idCol, threshold, bands, rowsPerBand)
+
+  /** ORACLE-portable twin of [[minHashDedup]]: the same candidate and
+    * verify plan over the md5 family ([[Portable]]) — the construction
+    * q21 replays in DuckDB.
+    */
+  def minHashDedupPortable(
+      df: DataFrame, textCol: String, idCol: String, threshold: Double,
+      bands: Int, rowsPerBand: Int): DataFrame =
+    verifiedPairs(Portable, df, textCol, idCol, threshold, bands, rowsPerBand)
+
+  private def candidatePairs(
+      f: HashFamily, df: DataFrame, textCol: String, idCol: String,
+      bands: Int, rowsPerBand: Int): DataFrame = {
+    // an occurrence survives only if no band BEFORE this one collides —
+    // pairs come out unique with no distinct() shuffle. The check only
+    // ever reads positions BEFORE the colliding band (both sides share
+    // `band`, so position `band` is equal by the join key), so each
+    // occurrence carries just its `band`-length PREFIX of the band
+    // array, not all `bands` hashes: on a duplicate-dense corpus the
+    // (band, band_hash) self-join streams O(Σ bucket²) rows, and
+    // halving the per-row payload (avg prefix = bands/2) halves the
+    // bytes the hot join stage materializes (guide §2.3 — project
+    // before the exchange, here: before the join's row explosion).
+    val banded = explodeBands(
+        f.bandArrays(df, f.tokens(col(textCol)), idCol, bands, rowsPerBand),
+        "id", "band_arr")
+      .select(col("id"), col("band"), col("band_hash"),
+        slice(col("band_arr"), lit(1), col("band")).as("pre"))
+    val l = banded.select(col("band"), col("band_hash"),
+      col("id").as("id_a"), col("pre").as("pre_a"))
+    val r = banded.select(col("band"), col("band_hash"),
+      col("id").as("id_b"), col("pre").as("pre_b"))
+    l.join(r, Seq("band", "band_hash"))
+      .filter(col("id_a") < col("id_b"))
+      .filter(f.noEarlierCollision(col("pre_a"), col("pre_b")))
+      .select("id_a", "id_b")
+  }
+
+  private def verifiedPairs(
+      f: HashFamily, df: DataFrame, textCol: String, idCol: String,
+      threshold: Double, bands: Int, rowsPerBand: Int): DataFrame = {
+    val edges = candidatePairs(f, df, textCol, idCol, bands, rowsPerBand)
+      .select(col("id_a").as("id"), col("id_b").as("rep"))
+    val toks = tokArrays(f, df, textCol, idCol)
+    verifiedEdges(f, edges, toks, toks, threshold)
+      .select(col("id").as("id_a"), col("rep").as("id_b"), col("jaccard"))
   }
 
   /** Scale-path near-dedup DECISION: keep/drop per document, never a
@@ -484,8 +512,8 @@ object DedupOps {
   def dedupKeepers(
       df: DataFrame, textCol: String, idCol: String, threshold: Double,
       bands: Int = 16, rowsPerBand: Int = 4): DataFrame =
-    keepersBySets(df, hashedTokenSet(col(textCol)), idCol, threshold,
-      bands, rowsPerBand, emptyMatchesEmpty = true)
+    keepersBySets(Production, df, Production.tokens(col(textCol)), idCol,
+      threshold, bands, rowsPerBand, emptyMatchesEmpty = true)
 
   /** [[dedupKeepers]] over word n-gram (shingle) sets — the scale
     * DECISION path for the n-gram Jaccard family (the pairwise q22 form
@@ -512,104 +540,58 @@ object DedupOps {
     // fused one-pass shingle hashing ([[graft.functions.ShingleHashes64]],
     // value-identical to hashedNgramSet) — the composable form's
     // per-window slice/concat HOF tower dominated the bench ~16×
-    keepersBySets(df,
+    keepersBySets(Production, df,
       graft.functions.ShingleHashes64.shingleHashes64(
         TextOps.whitespaceTokenize(col(textCol)), n),
       idCol, threshold, bands, rowsPerBand, emptyMatchesEmpty = false)
   }
 
-  /** ORACLE-portable twin of [[dedupKeepers]]: the SAME decision plan —
-    * per-bucket min-id rep, verified edges, left-anti — built from the
-    * md5-family signatures and md5-string band hashes the DuckDB oracle
-    * replays (the construction q21 already pins for the pair form), and
-    * a raw-string-set verify. Production calls [[dedupKeepers]] (fused
-    * xxhash64 banding, hashed-array verify); this form exists so the
-    * DECISION path itself — not just its candidate pairs — has a
-    * row-level cross-engine oracle (q42).
+  /** ORACLE-portable twin of [[dedupKeepers]]: the same decision plan
+    * over the md5 family ([[Portable]]), so the keep/drop DECISION
+    * itself — not just its candidate pairs (q21) — has a row-level
+    * DuckDB oracle (q42).
     */
   def dedupKeepersPortable(
       df: DataFrame, textCol: String, idCol: String, threshold: Double,
-      bands: Int, rowsPerBand: Int,
-      hashFn: (Column, Int) => Column,
-      ngram: Option[Int] = None): DataFrame = {
-    // ngram = Some(n): the shingle-level decision ([[dedupKeepersNgram]]'s
-    // portable twin, q46) — same plan, sets built from [[ngramSet]]
-    def sets: Column = ngram match {
-      case Some(n) => ngramSet(col(textCol), n)
-      case None => tokenSet(col(textCol))
-    }
-    val banded = portableBanded(df, sets, idCol, bands, rowsPerBand, hashFn)
-    val reps = banded.groupBy("band", "band_hash").agg(min("id").as("rep"))
-    val edges = banded.join(reps, Seq("band", "band_hash"))
-      .filter(col("id") > col("rep"))
-      .select("id", "rep").distinct()
-    val t = df.select(col(idCol).as("id"), sets.as("toks"))
-      .withColumn("n", size(col("toks")))
-    val inter = size(array_intersect(col("toks_a"), col("toks_b")))
-    val dropped = edges
-      .join(t.select(col("id"), col("toks").as("toks_a"), col("n").as("n_a")), "id")
-      .join(t.select(col("id").as("rep"), col("toks").as("toks_b"), col("n").as("n_b")), "rep")
-      .withColumn("inter", inter)
-      .filter(col("inter").cast("double") /
-        (col("n_a") + col("n_b") - col("inter")) >= threshold)
-      .select("id").distinct()
-    df.join(dropped.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
-  }
+      bands: Int, rowsPerBand: Int): DataFrame =
+    keepersBySets(Portable, df, Portable.tokens(col(textCol)), idCol,
+      threshold, bands, rowsPerBand, emptyMatchesEmpty = true)
 
-  /** ORACLE-portable twin of [[dedupIncremental]]: the SAME two-stage
-    * decision — batch docs verified against per-bucket corpus reps
-    * (corpus always wins, no id comparison across sides), then the
-    * survivors deduped within themselves via
-    * [[dedupKeepersPortable]] — built from the md5-family hashes the
-    * DuckDB oracle replays (q44). Production calls
-    * [[dedupIncremental]]; this form gives the daily-ingest DECISION a
-    * row-level cross-engine oracle.
+  /** ORACLE-portable twin of [[dedupKeepersNgram]]: the same plan over
+    * the md5 family, sets built from [[ngramSet]] (q46).
     */
-  def dedupIncrementalPortable(
-      corpus: DataFrame, batch: DataFrame, textCol: String, idCol: String,
-      threshold: Double, bands: Int, rowsPerBand: Int,
-      hashFn: (Column, Int) => Column): DataFrame = {
-    def bandedP(df: DataFrame): DataFrame =
-      portableBanded(df, tokenSet(col(textCol)), idCol, bands, rowsPerBand, hashFn)
-    def toksP(df: DataFrame): DataFrame = portableTokSets(df, textCol, idCol)
-    val corpusReps = bandedP(corpus).groupBy("band", "band_hash").agg(min("id").as("rep"))
-    val edges = bandedP(batch).join(corpusReps, Seq("band", "band_hash"))
-      .select("id", "rep").distinct()
-    val inter = size(array_intersect(col("toks_a"), col("toks_b")))
-    val dropped = edges
-      .join(toksP(batch).select(col("id"), col("toks").as("toks_a"), col("n").as("n_a")), "id")
-      .join(toksP(corpus).select(col("id").as("rep"), col("toks").as("toks_b"), col("n").as("n_b")), "rep")
-      .withColumn("inter", inter)
-      .filter(col("inter").cast("double") /
-        (col("n_a") + col("n_b") - col("inter")) >= threshold)
-      .select("id").distinct()
-    val survivors = batch.join(
-      dropped.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
-    dedupKeepersPortable(survivors, textCol, idCol, threshold, bands, rowsPerBand, hashFn)
+  def dedupKeepersNgramPortable(
+      df: DataFrame, textCol: String, idCol: String, threshold: Double,
+      n: Int, bands: Int, rowsPerBand: Int): DataFrame = {
+    require(n >= 1, s"need n >= 1, got $n")
+    keepersBySets(Portable, df, ngramSet(col(textCol), n), idCol,
+      threshold, bands, rowsPerBand, emptyMatchesEmpty = false)
   }
 
-  /** Shared keepers plan over an arbitrary hashed-set column (sorted
-    * 64-bit hashes): band → min-id rep per bucket → verified edges →
-    * left-anti. See [[dedupKeepers]] for the semantics and scale notes.
+  /** Shared keepers plan over an arbitrary set column: band → min-id
+    * rep per bucket → verified edges → left-anti. See [[dedupKeepers]]
+    * for the semantics and scale notes.
     */
   private def keepersBySets(
-      df: DataFrame, sets: Column, idCol: String, threshold: Double,
+      f: HashFamily, df: DataFrame, sets: Column, idCol: String, threshold: Double,
+      bands: Int, rowsPerBand: Int, emptyMatchesEmpty: Boolean): DataFrame = {
+    val dropped = verifiedRepEdges(f, df, sets, idCol, threshold, bands,
+        rowsPerBand, emptyMatchesEmpty)
+      .select("id").distinct()
+    df.join(dropped.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
+  }
+
+  /** Verified (id, rep, jaccard) star edges of `df`: each doc against
+    * the min-id doc of its LSH buckets, through the shared verify stage
+    * — the keepers' drop set and the components' graph.
+    */
+  private def verifiedRepEdges(
+      f: HashFamily, df: DataFrame, sets: Column, idCol: String, threshold: Double,
       bands: Int, rowsPerBand: Int, emptyMatchesEmpty: Boolean): DataFrame = {
     val withSets = df.select(col(idCol).as("id"), sets.as("toks"))
-    val banded = withSets
-      .select(col("id"),
-        graft.functions.MinHashBandHashes.minHashBandHashes(
-          col("toks"), bands, rowsPerBand).as("band_arr"))
-      .select(col("id"), posexplode(col("band_arr")))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "band_hash")
-    val reps = banded.groupBy("band", "band_hash").agg(min("id").as("rep"))
-    val edges = banded.join(reps, Seq("band", "band_hash"))
-      .filter(col("id") > col("rep"))
-      .select("id", "rep").distinct()
+    val edges = repEdges(banded(f, withSets, col("toks"), "id", bands, rowsPerBand))
     val toks = withSets.withColumn("n", size(col("toks")))
-    val dropped = verifiedDropIds(edges, toks, toks, threshold, emptyMatchesEmpty)
-    df.join(dropped.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
+    verifiedEdges(f, edges, toks, toks, threshold, emptyMatchesEmpty)
   }
 
   /** Sorted 64-bit hashes of the word n-gram (shingle) set — the
@@ -681,14 +663,8 @@ object DedupOps {
     var converged = false
     while (pass < maxPasses && !converged) {
       val passT0 = System.nanoTime()
-      val banded = prep.select(col("id"), posexplode(col("band_arr")))
-        .withColumnRenamed("pos", "band")
-        .withColumnRenamed("col", "band_hash")
-      val reps = banded.groupBy("band", "band_hash").agg(min("id").as("rep"))
-      val edges = banded.join(reps, Seq("band", "band_hash"))
-        .filter(col("id") > col("rep"))
-        .select("id", "rep").distinct()
-      val dropped = verifiedDropIds(
+      val edges = repEdges(explodeBands(prep, "id"))
+      val dropped = verifiedDropIds(Production,
         edges, prep.select("id", "toks", "n"), prep.select("id", "toks", "n"), threshold)
       // eager localCheckpoint: materializes (so the count below reads
       // blocks) AND truncates the plan to a LogicalRDD leaf — see the
@@ -766,9 +742,7 @@ object DedupOps {
   def corpusBucketReps(
       corpus: DataFrame, textCol: String, idCol: String,
       bands: Int = 16, rowsPerBand: Int = 4): DataFrame =
-    bucketRepsBy(corpus,
-      bandedIds(_, textCol, idCol, bands, rowsPerBand),
-      tokArrays(_, textCol, idCol))
+    bucketRepsBy(Production, corpus, textCol, idCol, bands, rowsPerBand)
 
   /** ORACLE-portable twin of [[corpusBucketReps]] (the
     * [[dedupKeepersPortable]] hash family: md5-salted min-hashes,
@@ -778,27 +752,20 @@ object DedupOps {
     */
   def corpusBucketRepsPortable(
       corpus: DataFrame, textCol: String, idCol: String,
-      bands: Int, rowsPerBand: Int,
-      hashFn: (Column, Int) => Column): DataFrame =
-    bucketRepsBy(corpus,
-      portableBanded(_, tokenSet(col(textCol)), idCol, bands, rowsPerBand, hashFn),
-      portableTokSets(_, textCol, idCol))
+      bands: Int, rowsPerBand: Int): DataFrame =
+    bucketRepsBy(Portable, corpus, textCol, idCol, bands, rowsPerBand)
 
-  /** Shared reps construction over an arbitrary banding/verify
-    * representation: `banded(df)` yields (id, band, band_hash) rows and
-    * `toks(df)` (id, toks, n) — production binds the fused xxhash64
-    * banding + hashed verify arrays, the portable form the md5-family
-    * construction the DuckDB oracle replays. One builder, two hash
-    * families (the q252 parameterization discipline).
+  /** Shared reps construction: min-id rep per (band, band_hash) bucket
+    * plus the rep's verify set, in the family's banding and verify
+    * representation.
     */
   private def bucketRepsBy(
-      corpus: DataFrame,
-      banded: DataFrame => DataFrame,
-      toks: DataFrame => DataFrame): DataFrame =
-    banded(corpus)
+      f: HashFamily, corpus: DataFrame, textCol: String, idCol: String,
+      bands: Int, rowsPerBand: Int): DataFrame =
+    banded(f, corpus, f.tokens(col(textCol)), idCol, bands, rowsPerBand)
       .groupBy("band", "band_hash").agg(min("id").as("rep"))
       .join(
-        toks(corpus)
+        tokArrays(f, corpus, textCol, idCol)
           .select(col("id").as("rep"), col("toks").as("rep_toks"), col("n").as("rep_n")),
         Seq("rep"))
       .select("band", "band_hash", "rep", "rep_toks", "rep_n")
@@ -880,9 +847,8 @@ object DedupOps {
   def removedBucketReps(
       reps: CorpusReps, corpus: DataFrame, removedIds: DataFrame,
       textCol: String, idCol: String): DataFrame =
-    removedRepsBy(reps.df, corpus, removedIds, idCol,
-      bandedIds(_, textCol, idCol, reps.bands, reps.rowsPerBand),
-      tokArrays(_, textCol, idCol))
+    removedRepsBy(Production, reps.df, corpus, removedIds, textCol, idCol,
+      reps.bands, reps.rowsPerBand)
 
   /** ORACLE-portable twin of [[removedBucketReps]] over a
     * [[corpusBucketRepsPortable]] frame — the removal half of the q254
@@ -894,21 +860,17 @@ object DedupOps {
     */
   def removedBucketRepsPortable(
       reps: DataFrame, corpus: DataFrame, removedIds: DataFrame,
-      textCol: String, idCol: String, bands: Int, rowsPerBand: Int,
-      hashFn: (Column, Int) => Column): DataFrame =
-    removedRepsBy(reps, corpus, removedIds, idCol,
-      portableBanded(_, tokenSet(col(textCol)), idCol, bands, rowsPerBand, hashFn),
-      portableTokSets(_, textCol, idCol))
+      textCol: String, idCol: String, bands: Int, rowsPerBand: Int): DataFrame =
+    removedRepsBy(Portable, reps, corpus, removedIds, textCol, idCol,
+      bands, rowsPerBand)
 
-  /** Shared removal construction (see [[bucketRepsBy]] for the
-    * banding/verify parameterization): keep-side broadcast anti-join,
+  /** Shared removal construction: keep-side broadcast anti-join,
     * affected-bucket semi-join, one narrow banded pass over the
     * remaining corpus, verify arrays only for promoted reps.
     */
   private def removedRepsBy(
-      reps: DataFrame, corpus: DataFrame, removedIds: DataFrame, idCol: String,
-      banded: DataFrame => DataFrame,
-      toks: DataFrame => DataFrame): DataFrame = {
+      f: HashFamily, reps: DataFrame, corpus: DataFrame, removedIds: DataFrame,
+      textCol: String, idCol: String, bands: Int, rowsPerBand: Int): DataFrame = {
     val rem = removedIds.select(col(idCol).as("__rid")).distinct()
     val keep = reps.join(broadcast(rem),
       col("rep") === col("__rid"), "left_anti")
@@ -917,13 +879,13 @@ object DedupOps {
       .select("band", "band_hash")
     val remaining = corpus.join(broadcast(rem),
       col(idCol) === col("__rid"), "left_anti")
-    val newReps = banded(remaining)
+    val newReps = banded(f, remaining, f.tokens(col(textCol)), idCol, bands, rowsPerBand)
       .join(broadcast(affected), Seq("band", "band_hash"), "left_semi")
       .groupBy("band", "band_hash").agg(min("id").as("rep"))
     val repDocs = remaining.join(
       newReps.select(col("rep").as(idCol)).distinct(), Seq(idCol), "left_semi")
     val rebuilt = newReps.join(
-      toks(repDocs)
+      tokArrays(f, repDocs, textCol, idCol)
         .select(col("id").as("rep"), col("toks").as("rep_toks"),
           col("n").as("rep_n")),
       Seq("rep"))
@@ -943,8 +905,29 @@ object DedupOps {
     */
   def dedupIncremental(
       reps: CorpusReps, batch: DataFrame, textCol: String, idCol: String,
-      threshold: Double): DataFrame = {
-    val edges = bandedIds(batch, textCol, idCol, reps.bands, reps.rowsPerBand)
+      threshold: Double): DataFrame =
+    incrementalKeepers(Production, reps, batch, textCol, idCol, threshold)
+
+  /** ORACLE-portable twin of [[dedupIncremental]]: the SAME two-stage
+    * decision — batch docs verified against per-bucket corpus reps
+    * (corpus always wins, no id comparison across sides), then the
+    * survivors deduped within themselves — built from the md5-family
+    * reps ([[corpusBucketRepsPortable]]) the DuckDB oracle replays
+    * (q44). Production calls [[dedupIncremental]]; this form gives the
+    * daily-ingest DECISION a row-level cross-engine oracle.
+    */
+  def dedupIncrementalPortable(
+      corpus: DataFrame, batch: DataFrame, textCol: String, idCol: String,
+      threshold: Double, bands: Int, rowsPerBand: Int): DataFrame =
+    incrementalKeepers(Portable,
+      CorpusReps(corpusBucketRepsPortable(corpus, textCol, idCol, bands, rowsPerBand),
+        bands, rowsPerBand),
+      batch, textCol, idCol, threshold)
+
+  private def incrementalKeepers(
+      f: HashFamily, reps: CorpusReps, batch: DataFrame, textCol: String,
+      idCol: String, threshold: Double): DataFrame = {
+    val edges = banded(f, batch, f.tokens(col(textCol)), idCol, reps.bands, reps.rowsPerBand)
       .join(reps.df.select("band", "band_hash", "rep"), Seq("band", "band_hash"))
       .select("id", "rep").distinct()
     // a rep can own many buckets — one verify row per rep, not per bucket
@@ -952,93 +935,66 @@ object DedupOps {
       .select(col("rep").as("id"), col("rep_toks").as("toks"), col("rep_n").as("n"))
       .dropDuplicates("id")
     val dropped = verifiedDropIds(
-      edges, tokArrays(batch, textCol, idCol), repToks, threshold)
+      f, edges, tokArrays(f, batch, textCol, idCol), repToks, threshold)
     val survivors = batch.join(
       dropped.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
-    dedupKeepers(survivors, textCol, idCol, threshold, reps.bands, reps.rowsPerBand)
+    keepersBySets(f, survivors, f.tokens(col(textCol)), idCol, threshold,
+      reps.bands, reps.rowsPerBand, emptyMatchesEmpty = true)
   }
 
-  /** (id, band, band_hash) rows — `bands` per doc, fused band hashing. */
-  private def bandedIds(
-      df: DataFrame, textCol: String, idCol: String,
+  /** (id, band, band_hash) rows — `bands` per doc over `sets`. */
+  private def banded(
+      f: HashFamily, df: DataFrame, sets: Column, idCol: String,
       bands: Int, rowsPerBand: Int): DataFrame =
-    df.select(col(idCol).as("id"),
-        graft.functions.MinHashBandHashes.minHashBandHashes(
-          hashedTokenSet(col(textCol)), bands, rowsPerBand).as("band_arr"))
-      .select(col("id"), posexplode(col("band_arr")))
+    explodeBands(f.bandArrays(df, sets, idCol, bands, rowsPerBand), "id")
+
+  /** The `cols` of `df` plus (band, band_hash): one row per element of
+    * its `band_arr` column.
+    */
+  private def explodeBands(df: DataFrame, cols: String*): DataFrame =
+    df.select(cols.map(col) :+ posexplode(col("band_arr")): _*)
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "band_hash")
 
-  /** Portable (id, band, band_hash) rows — the md5-family banding every
-    * oracle-replayable decision twin shares ([[dedupKeepersPortable]],
-    * [[dedupIncrementalPortable]], [[corpusBucketRepsPortable]]):
-    * salted-md5 min-hash signature over `sets`, md5-STRING band hash of
-    * each row-group joined with ','. DuckDB replays it verbatim
-    * (q42/q44/q46/q254); the production twin is [[bandedIds]].
+  /** Candidate (id, rep) edges of banded rows: each doc against the
+    * min-id doc of every bucket it shares with a smaller id, deduped on
+    * ids only (≤ bands edges per doc).
     */
-  private def portableBanded(
-      df: DataFrame, sets: Column, idCol: String,
-      bands: Int, rowsPerBand: Int,
-      hashFn: (Column, Int) => Column): DataFrame = df
-    .select(col(idCol).as("id"),
-      minHashSignature(sets, bands * rowsPerBand, hashFn).as("sig"))
-    .select(col("id"), posexplode(
-      array((0 until bands).map(b =>
-        md5(array_join(transform(
-          slice(col("sig"), b * rowsPerBand + 1, rowsPerBand),
-          _.cast("string")), ","))): _*)))
-    .withColumnRenamed("pos", "band")
-    .withColumnRenamed("col", "band_hash")
+  private def repEdges(banded: DataFrame): DataFrame = {
+    val reps = banded.groupBy("band", "band_hash").agg(min("id").as("rep"))
+    banded.join(reps, Seq("band", "band_hash"))
+      .filter(col("id") > col("rep"))
+      .select("id", "rep").distinct()
+  }
 
-  /** Portable (id, toks, n) verify side: raw distinct token STRINGS
-    * (DuckDB's `list_distinct(string_split(text, ' '))`), vs the
-    * production [[tokArrays]]' sorted 64-bit hashes.
-    */
-  private def portableTokSets(
-      df: DataFrame, textCol: String, idCol: String): DataFrame = df
-    .select(col(idCol).as("id"), tokenSet(col(textCol)).as("toks"))
-    .withColumn("n", size(col("toks")))
-
-  /** (id, toks, n) verify-side representation (sorted token hashes). */
-  private def tokArrays(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    df.select(col(idCol).as("id"), hashedTokenSet(col(textCol)).as("toks"))
+  /** (id, toks, n) verify side in the family's token representation. */
+  private def tokArrays(
+      f: HashFamily, df: DataFrame, textCol: String, idCol: String): DataFrame =
+    df.select(col(idCol).as("id"), f.tokens(col(textCol)).as("toks"))
       .withColumn("n", size(col("toks")))
 
-  /** Exact-Jaccard verify of (id, rep) edges: the distinct `id`s whose
-    * edge passes `threshold`. With `emptyMatchesEmpty` (the token-set
-    * paths), two empty token sets are identical documents for dedup
-    * purposes: J(∅,∅) = 1 (instead of 0/0 = null) so byte-empty /
-    * whitespace-only duplicates collapse like any other exact-duplicate
-    * cluster (all-empty docs share every band hash, so they always
-    * reach the verify stage together). The shingle path passes false:
-    * an empty SHINGLE set just means the doc is shorter than n — no
-    * evidence, never a match.
-    */
-  /** Candidate (id, rep) edges that pass the exact-Jaccard verify —
-    * the shared verify stage of the decision ([[verifiedDropIds]]) and
-    * component ([[dupComponentsFromReps]]) paths.
+  /** Candidate (id, rep) edges that pass the exact-Jaccard verify, with
+    * their `jaccard` — the shared verify stage of the pair
+    * ([[minHashDedup]]), decision ([[verifiedDropIds]]) and component
+    * ([[dupComponentsFromReps]]) paths. `aToks`/`bToks` are (id, toks,
+    * n) frames for the `id` and `rep` sides; `emptyMatchesEmpty` is the
+    * family's empty-set rule ([[Production]]).
     */
   private def verifiedEdges(
-      edges: DataFrame, aToks: DataFrame, bToks: DataFrame,
-      threshold: Double, emptyMatchesEmpty: Boolean = true): DataFrame = {
-    val inter = graft.functions.SortedIntersectCount
-      .sortedIntersectCount(col("toks_a"), col("toks_b"))
-    val bothEmpty = when(col("n_a") === 0 && col("n_b") === 0,
-      lit(if (emptyMatchesEmpty) 1.0 else 0.0))
-    val jaccard = bothEmpty
-      .otherwise(col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")))
+      f: HashFamily, edges: DataFrame, aToks: DataFrame, bToks: DataFrame,
+      threshold: Double, emptyMatchesEmpty: Boolean = true): DataFrame =
     edges
       .join(aToks.select(col("id"), col("toks").as("toks_a"), col("n").as("n_a")), "id")
       .join(bToks.select(col("id").as("rep"), col("toks").as("toks_b"), col("n").as("n_b")), "rep")
-      .withColumn("inter", inter)
-      .filter(jaccard >= threshold)
-      .select("id", "rep")
-  }
+      .withColumn("inter", f.intersect(col("toks_a"), col("toks_b")))
+      .withColumn("jaccard", f.jaccard(emptyMatchesEmpty))
+      .filter(col("jaccard") >= threshold)
+      .select("id", "rep", "jaccard")
 
   private def verifiedDropIds(
-      edges: DataFrame, aToks: DataFrame, bToks: DataFrame,
+      f: HashFamily, edges: DataFrame, aToks: DataFrame, bToks: DataFrame,
       threshold: Double, emptyMatchesEmpty: Boolean = true): DataFrame =
-    verifiedEdges(edges, aToks, bToks, threshold, emptyMatchesEmpty)
+    verifiedEdges(f, edges, aToks, bToks, threshold, emptyMatchesEmpty)
       .select("id")
       .distinct()
 
@@ -1062,16 +1018,16 @@ object DedupOps {
     * ONE hash per token: the token hashes are the aggregate's input
     * collection (evaluated once per row) and a single fold updates all
     * `nBits` counters per token. The naive per-bit formulation (`nBits`
-    * separate folds over `toks`) re-evaluates `hashFn` per token PER BIT
+    * separate folds over `toks`) re-evaluates `tokenHash` per token PER BIT
     * — 48-64× redundant hashing, which dominated the simhash benches.
     * Values are identical either way.
     */
   def simHash(
       toks: Column, nBits: Int = 64,
-      hashFn: Column => Column = xxhash64(_)): Column = {
+      tokenHash: Column => Column = xxhash64(_)): Column = {
     val bitIdx = sequence(lit(0), lit(nBits - 1))
     val sums = aggregate(
-      transform(toks, t => hashFn(t)),
+      transform(toks, t => tokenHash(t)),
       array_repeat(lit(0), nBits),
       (acc, h) => zip_with(acc, bitIdx, (a, b) =>
         a + when(shiftRightC(h, b).bitwiseAND(1) === 1, 1).otherwise(-1)))
@@ -1089,7 +1045,7 @@ object DedupOps {
     */
   def simHashPairs(df: DataFrame, textCol: String, idCol: String, maxHamming: Int): DataFrame = {
     require(maxHamming < 4, "banding guarantee needs maxHamming < chunks")
-    val banded = simHashBanded(df, textCol, idCol)
+    val banded = simHashBanded(Production, df, textCol, idCol)
     val l = banded.select(col("chunk"), col("chunk_val"), col("id").as("id_a"), col("sig").as("sig_a"))
     val r = banded.select(col("chunk"), col("chunk_val"), col("id").as("id_b"), col("sig").as("sig_b"))
     l.join(r, Seq("chunk", "chunk_val"))
@@ -1120,44 +1076,23 @@ object DedupOps {
     * Returns the KEPT rows of `df`, unchanged schema.
     */
   def simHashKeepers(
-      df: DataFrame, textCol: String, idCol: String, maxHamming: Int): DataFrame = {
-    require(maxHamming < 4, "banding guarantee needs maxHamming < chunks")
-    val banded = simHashBanded(df, textCol, idCol)
-    val reps = banded.groupBy("chunk", "chunk_val")
-      .agg(min("id").as("rep"), min_by(col("sig"), col("id")).as("rep_sig"))
-    val dropped = banded.join(reps, Seq("chunk", "chunk_val"))
-      .filter(col("id") > col("rep") &&
-        hamming64(col("sig"), col("rep_sig")) <= maxHamming)
-      .select("id").distinct()
-    df.join(dropped.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
-  }
+      df: DataFrame, textCol: String, idCol: String, maxHamming: Int): DataFrame =
+    simHashKeepersBy(Production, df, textCol, idCol, maxHamming)
 
   /** ORACLE-portable twin of [[simHashKeepers]]: the SAME decision plan
-    * — min-id rep (with its signature) per chunk bucket, Hamming verify
-    * at the bucket join, left-anti — over the 48-bit md5-family
-    * signature the q29 oracle already replays, in 4 chunks of 12 bits
-    * (maxHamming < 4 still guaranteed by banding). Production calls
-    * [[simHashKeepers]] (fused 64-bit xxhash signature); this form
-    * gives the SimHash keep/drop DECISION a row-level DuckDB oracle
-    * (q43). Token MULTISET via a plain single-space split, matching
-    * q29's construction.
+    * over the 48-bit md5-family signature the q29 oracle already
+    * replays, in 4 chunks of 12 bits (maxHamming < 4 still guaranteed
+    * by banding) — gives the SimHash keep/drop DECISION a row-level
+    * DuckDB oracle (q43).
     */
   def simHashKeepersPortable(
-      df: DataFrame, textCol: String, idCol: String, maxHamming: Int): DataFrame = {
-    require(maxHamming < 4, "banding guarantee needs maxHamming < chunks")
-    val banded = df
-      .select(col(idCol).as("id"),
-        graft.functions.SimHashMd5.simHashMd5(split(col(textCol), " "), 48).as("sig"))
-      .select(col("id"), col("sig"), posexplode(
-        array((0 until 4).map(c =>
-          shiftright(col("sig"), c * 12).bitwiseAND(0xFFFL)): _*)))
-      .withColumnRenamed("pos", "chunk")
-      .withColumnRenamed("col", "chunk_val")
-    val reps = banded.groupBy("chunk", "chunk_val")
-      .agg(min("id").as("rep"), min_by(col("sig"), col("id")).as("rep_sig"))
-    val dropped = banded.join(reps, Seq("chunk", "chunk_val"))
-      .filter(col("id") > col("rep") &&
-        hamming64(col("sig"), col("rep_sig")) <= maxHamming)
+      df: DataFrame, textCol: String, idCol: String, maxHamming: Int): DataFrame =
+    simHashKeepersBy(Portable, df, textCol, idCol, maxHamming)
+
+  private def simHashKeepersBy(
+      f: HashFamily, df: DataFrame, textCol: String, idCol: String,
+      maxHamming: Int): DataFrame = {
+    val dropped = simHashCandidates(f, df, textCol, idCol, maxHamming)
       .select("id").distinct()
     df.join(dropped.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
   }
@@ -1183,11 +1118,8 @@ object DedupOps {
     */
   def editKeepers(
       df: DataFrame, textCol: String, idCol: String,
-      maxDist: Int, maxHamming: Int = 3): DataFrame = {
-    require(maxHamming < 4, "banding guarantee needs maxHamming < chunks")
-    val banded = simHashBanded(df, textCol, idCol)
-    editKeepersFrom(df, banded, textCol, idCol, maxDist, maxHamming)
-  }
+      maxDist: Int, maxHamming: Int = 3): DataFrame =
+    editKeepersBy(Production, df, textCol, idCol, maxDist, maxHamming)
 
   /** ORACLE-portable twin of [[editKeepers]]: identical decision plan
     * over the 48-bit md5-family signature (q29/q43's chain) so DuckDB
@@ -1196,27 +1128,13 @@ object DedupOps {
     */
   def editKeepersPortable(
       df: DataFrame, textCol: String, idCol: String,
-      maxDist: Int, maxHamming: Int = 3): DataFrame = {
-    require(maxHamming < 4, "banding guarantee needs maxHamming < chunks")
-    val banded = df
-      .select(col(idCol).as("id"),
-        graft.functions.SimHashMd5.simHashMd5(split(col(textCol), " "), 48).as("sig"))
-      .select(col("id"), col("sig"), posexplode(
-        array((0 until 4).map(c =>
-          shiftright(col("sig"), c * 12).bitwiseAND(0xFFFL)): _*)))
-      .withColumnRenamed("pos", "chunk")
-      .withColumnRenamed("col", "chunk_val")
-    editKeepersFrom(df, banded, textCol, idCol, maxDist, maxHamming)
-  }
+      maxDist: Int, maxHamming: Int = 3): DataFrame =
+    editKeepersBy(Portable, df, textCol, idCol, maxDist, maxHamming)
 
-  private def editKeepersFrom(
-      df: DataFrame, banded: DataFrame, textCol: String, idCol: String,
+  private def editKeepersBy(
+      f: HashFamily, df: DataFrame, textCol: String, idCol: String,
       maxDist: Int, maxHamming: Int): DataFrame = {
-    val reps = banded.groupBy("chunk", "chunk_val")
-      .agg(min("id").as("rep"), min_by(col("sig"), col("id")).as("rep_sig"))
-    val cand = banded.join(reps, Seq("chunk", "chunk_val"))
-      .filter(col("id") > col("rep") &&
-        hamming64(col("sig"), col("rep_sig")) <= maxHamming)
+    val cand = simHashCandidates(f, df, textCol, idCol, maxHamming)
       .select("id", "rep").distinct()
     val texts = df.select(col(idCol).as("tid"), col(textCol).as("ttxt"))
     val dropped = cand
@@ -1228,19 +1146,33 @@ object DedupOps {
     df.join(dropped.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
   }
 
-  /** (id, sig, chunk, chunk_val) rows — 4 per doc, 16-bit chunks. The
-    * signature comes from the fused codegen expression
-    * ([[graft.functions.SimHash64]], value-identical to
-    * `simHash(toks, 64, xxhash64)`): the signature pass dominated both
-    * simhash benches because the HOF form allocates a 64-element array
-    * per token outside whole-stage codegen.
+  /** The SimHash candidate stage shared by the keepers and edit
+    * decisions: per chunk bucket the min-id doc (with its signature) is
+    * the rep, and every (id, rep) row of a doc within `maxHamming` bits
+    * of a rep with a smaller id survives.
     */
-  private def simHashBanded(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    df.select(col(idCol).as("id"),
-        graft.functions.SimHash64.simHash64(TextOps.whitespaceTokenize(col(textCol))).as("sig"))
+  private def simHashCandidates(
+      f: HashFamily, df: DataFrame, textCol: String, idCol: String,
+      maxHamming: Int): DataFrame = {
+    require(maxHamming < 4, "banding guarantee needs maxHamming < chunks")
+    val banded = simHashBanded(f, df, textCol, idCol)
+    val reps = banded.groupBy("chunk", "chunk_val")
+      .agg(min("id").as("rep"), min_by(col("sig"), col("id")).as("rep_sig"))
+    banded.join(reps, Seq("chunk", "chunk_val"))
+      .filter(col("id") > col("rep") &&
+        hamming64(col("sig"), col("rep_sig")) <= maxHamming)
+  }
+
+  /** (id, sig, chunk, chunk_val) rows — 4 per doc, `f.chunkBits`-bit
+    * chunks of the family's signature.
+    */
+  private def simHashBanded(
+      f: HashFamily, df: DataFrame, textCol: String, idCol: String): DataFrame =
+    df.select(col(idCol).as("id"), f.simHash(col(textCol)).as("sig"))
       .select(col("id"), col("sig"), posexplode(
         array((0 until 4).map(c =>
-          shiftright(col("sig"), c * 16).bitwiseAND(0xFFFFL)): _*)))
+          shiftright(col("sig"), c * f.chunkBits)
+            .bitwiseAND((1L << f.chunkBits) - 1)): _*)))
       .withColumnRenamed("pos", "chunk")
       .withColumnRenamed("col", "chunk_val")
 
@@ -1457,24 +1389,11 @@ object DedupOps {
     */
   private def starComponentLabels(
       df: DataFrame, textCol: String, idCol: String, threshold: Double,
-      bands: Int, rowsPerBand: Int, maxPasses: Int): DataFrame = {
-    val withSets = df.select(col(idCol).as("id"),
-      hashedTokenSet(col(textCol)).as("toks"))
-    val banded = withSets
-      .select(col("id"),
-        graft.functions.MinHashBandHashes.minHashBandHashes(
-          col("toks"), bands, rowsPerBand).as("band_arr"))
-      .select(col("id"), posexplode(col("band_arr")))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "band_hash")
-    val reps = banded.groupBy("band", "band_hash").agg(min("id").as("rep"))
-    val starEdges = banded.join(reps, Seq("band", "band_hash"))
-      .filter(col("id") > col("rep"))
-      .select("id", "rep").distinct()
-    val toks = withSets.withColumn("n", size(col("toks")))
-    val verified = verifiedEdges(starEdges, toks, toks, threshold)
-    connectedComponents(verified, "id", "rep", maxPasses)
-  }
+      bands: Int, rowsPerBand: Int, maxPasses: Int): DataFrame =
+    connectedComponents(
+      verifiedRepEdges(Production, df, Production.tokens(col(textCol)), idCol,
+        threshold, bands, rowsPerBand, emptyMatchesEmpty = true),
+      "id", "rep", maxPasses)
 
   /** ONE-PASS cluster dedup (VERDICT r7 #5): keep exactly one doc —
     * the min id — per CONNECTED COMPONENT of the verified star-edge

@@ -27,12 +27,9 @@ object ExtensionQueries {
     * the portable hash family.
     */
   def q21(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.minHashDedup(
+    DedupOps.minHashDedupPortable(
       Tables.documents(spark, dir), "text", "doc_id", threshold = 0.6,
-      bands = 4, rowsPerBand = 4,
-      hashFn = (t, i) => PortableHash.md5Long(t, lit(i)),
-      // string-set verify + md5 band hashes: exactly the oracle's algebra
-      hashedVerify = false, portable = true)
+      bands = 4, rowsPerBand = 4)
 
   /** q21's CTE chain through the verified pair list `vpairs` — shared
     * with q69's transitive closure (which needs the WITH to be
@@ -403,8 +400,7 @@ object ExtensionQueries {
   def q42(spark: SparkSession, dir: String): DataFrame =
     DedupOps.dedupKeepersPortable(
       Tables.documents(spark, dir), "text", "doc_id", threshold = 0.6,
-      bands = 4, rowsPerBand = 4,
-      hashFn = (t, i) => PortableHash.md5Long(t, lit(i)))
+      bands = 4, rowsPerBand = 4)
       .select(col("doc_id"))
 
   val q42Sql: String =
@@ -486,8 +482,7 @@ object ExtensionQueries {
     val part = pmod(PortableHash.md5Long(col("doc_id")), lit(5))
     DedupOps.dedupIncrementalPortable(
       docs.filter(part =!= 0), docs.filter(part === 0), "text", "doc_id",
-      threshold = 0.6, bands = 4, rowsPerBand = 4,
-      hashFn = (t, i) => PortableHash.md5Long(t, lit(i)))
+      threshold = 0.6, bands = 4, rowsPerBand = 4)
       .select(col("doc_id"))
   }
 
@@ -619,19 +614,17 @@ object ExtensionQueries {
 
   // --------------------------------------------------------------- q46
   /** The shingle-level (word 3-gram) dedup DECISION, oracle-checked
-    * row-level ([[graft.ops.DedupOps.dedupKeepersPortable]] with
-    * `ngram = Some(3)` — the md5-family twin of the production
+    * row-level ([[graft.ops.DedupOps.dedupKeepersNgramPortable]] with
+    * n = 3 — the md5-family twin of the production
     * `dedupKeepersNgram`): q22 pins the shingle-set construction for
     * pairs, q42 the token-set decision; this pins the order-aware
     * shingle decision. Threshold 0.05 like q22 — trigram Jaccard runs
     * far below token Jaccard on the fixture.
     */
   def q46(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.dedupKeepersPortable(
+    DedupOps.dedupKeepersNgramPortable(
       Tables.documents(spark, dir), "text", "doc_id", threshold = 0.05,
-      bands = 4, rowsPerBand = 4,
-      hashFn = (t, i) => PortableHash.md5Long(t, lit(i)),
-      ngram = Some(3))
+      n = 3, bands = 4, rowsPerBand = 4)
       .select(col("doc_id"))
 
   val q46Sql: String =
@@ -6423,7 +6416,7 @@ object ExtensionQueries {
       .select((col("doc_id") + 10000000L).as("doc_id"), col("text"),
         concat(lit("mirror_"), col("source")).as("source"))
     DedupOps.crossSourceDupMatrix(d.unionByName(mirror), "text",
-      "doc_id", "source", hashFn = PortableHash.md5Long(_))
+      "doc_id", "source", keyFn = PortableHash.md5Long(_))
   }
 
   val q198Sql: String =
@@ -8292,11 +8285,9 @@ object ExtensionQueries {
     */
   def q239(spark: SparkSession, dir: String): DataFrame = {
     val ts = Seq(0.5, 0.6, 0.7, 0.8, 0.9)
-    val pairs = DedupOps.minHashDedup(
+    val pairs = DedupOps.minHashDedupPortable(
       Tables.documents(spark, dir), "text", "doc_id", threshold = 0.5,
-      bands = 4, rowsPerBand = 4,
-      hashFn = (t, i) => PortableHash.md5Long(t, lit(i)),
-      hashedVerify = false, portable = true)
+      bands = 4, rowsPerBand = 4)
     val aggs = ts.zipWithIndex.map { case (t, i) =>
       sum(when(col("jaccard") >= t, 1L).otherwise(0L)).as(s"__n$i") }
     val agg = pairs.agg(aggs.head, aggs.tail: _*)
@@ -9637,14 +9628,12 @@ object ExtensionQueries {
     val docs = Tables.documents(spark, dir)
     val part = pmod(PortableHash.md5Long(col("doc_id")), lit(5))
     val corpus = docs.filter(part =!= 0)
-    val hashFn = (t: org.apache.spark.sql.Column, i: Int) =>
-      PortableHash.md5Long(t, lit(i))
     val reps = DedupOps.corpusBucketRepsPortable(
-      corpus, "text", "doc_id", bands = 4, rowsPerBand = 4, hashFn)
+      corpus, "text", "doc_id", bands = 4, rowsPerBand = 4)
     val removed = docs.filter(part === 1 || part === 0).select("doc_id")
     DedupOps.removedBucketRepsPortable(
       reps, corpus, removed, "text", "doc_id",
-      bands = 4, rowsPerBand = 4, hashFn)
+      bands = 4, rowsPerBand = 4)
       .select(col("band"), col("band_hash"), col("rep"), col("rep_n"),
         md5(array_join(array_sort(col("rep_toks")), " ")).as("rep_toks_md5"))
   }

@@ -36,7 +36,6 @@ class CosineSimilaritySpec extends AnyFunSuite {
   }
 
   test("SQL registration works and codegen path evaluates") {
-    CosineSimilarity.register(spark)
     Seq((Seq(1.0f, 0.0f), Seq(1.0f, 0.0f))).toDF("a", "b").createOrReplaceTempView("cs_t")
     val v = spark.sql("SELECT cosine_sim(a, b) AS c FROM cs_t").as[Double].head()
     assert(v == 1.0)

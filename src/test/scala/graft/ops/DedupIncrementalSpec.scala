@@ -163,21 +163,19 @@ class DedupIncrementalSpec extends AnyFunSuite {
       (110L, "alpha beta gamma delta epsilon zeta eta THETA"),
       (120L, "standalone material unlike anything else here")
     ).toDF("doc_id", "text"))
-    val hashFn = (t: org.apache.spark.sql.Column, i: Int) =>
-      graft.core.PortableHash.md5Long(t, org.apache.spark.sql.functions.lit(i))
     def canonP(df: DataFrame): Set[(Int, String, Long, Seq[String], Int)] =
       df.select("band", "band_hash", "rep", "rep_toks", "rep_n")
         .as[(Int, String, Long, Seq[String], Int)].collect()
         .map(r => (r._1, r._2, r._3, r._4.sorted, r._5)).toSet
     val reps = DedupOps.corpusBucketRepsPortable(
-      corpus4, "text", "doc_id", bands = 4, rowsPerBand = 4, hashFn)
+      corpus4, "text", "doc_id", bands = 4, rowsPerBand = 4)
     for (removed <- Seq(Seq(100L), Seq(120L), Seq(110L), Seq(9999L),
         Seq(100L, 120L, 9999L))) {
       val got = DedupOps.removedBucketRepsPortable(reps, corpus4,
-        removed.toDF("doc_id"), "text", "doc_id", 4, 4, hashFn)
+        removed.toDF("doc_id"), "text", "doc_id", 4, 4)
       val want = DedupOps.corpusBucketRepsPortable(
         corpus4.filter(!col("doc_id").isin(removed.map(Long.box): _*)),
-        "text", "doc_id", 4, 4, hashFn)
+        "text", "doc_id", 4, 4)
       assert(canonP(got) == canonP(want),
         s"portable removedBucketReps(removed=$removed) must equal the recompute")
     }

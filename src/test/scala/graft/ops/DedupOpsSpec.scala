@@ -40,41 +40,53 @@ class DedupOpsSpec extends AnyFunSuite {
   }
 
   test("hashed verify path finds exactly the same pairs as string-set verify") {
-    val a = DedupOps.minHashDedup(docs, "text", "doc_id", 0.6, hashedVerify = true)
+    // production minHashDedup == the string-set jaccardPairs oracle
+    // restricted to the LSH candidate set, pairs AND jaccard values
+    val got = DedupOps.minHashDedup(docs, "text", "doc_id", 0.6)
       .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect().toSet
-    val b = DedupOps.minHashDedup(docs, "text", "doc_id", 0.6, hashedVerify = false)
-      .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect().toSet
-    assert(a == b)
+    val cands = DedupOps.minHashCandidates(docs, "text", "doc_id", 16, 4)
+      .as[(Long, Long)].collect().toSet
+    val want = DedupOps.jaccardPairs(docs, "text", "doc_id", 0.6)
+      .as[(Long, Long, Double)].collect()
+      .filter(p => cands((p._1, p._2))).toSet
+    assert(want.nonEmpty)
+    assert(got == want)
   }
 
   test("first-collision-wins candidates equal the distinct() construction") {
     val fast = DedupOps.minHashCandidates(docs, "text", "doc_id", 16, 4)
       .as[(Long, Long)].collect()
-    val slow = DedupOps.minHashCandidates(docs, "text", "doc_id", 16, 4,
-        firstCollisionWins = false)
+    // the reference: every colliding (band, band_hash) pair, distinct()
+    val banded = docs
+      .select(col("doc_id").as("id"), posexplode(
+        graft.functions.MinHashBandHashes.minHashBandHashes(
+          DedupOps.hashedTokenSet(col("text")), 16, 4)))
+      .withColumnRenamed("pos", "band")
+      .withColumnRenamed("col", "band_hash")
+    val slow = banded.select(col("band"), col("band_hash"), col("id").as("id_a"))
+      .join(banded.select(col("band"), col("band_hash"), col("id").as("id_b")),
+        Seq("band", "band_hash"))
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b").distinct()
       .as[(Long, Long)].collect()
     assert(fast.length == fast.distinct.length, "fast path must emit unique pairs")
     assert(fast.toSet == slow.toSet, "same candidate set either way")
   }
 
-  test("a custom hashFn on the non-portable path throws instead of being silently ignored") {
-    val custom: (org.apache.spark.sql.Column, Int) => org.apache.spark.sql.Column =
-      (t, i) => graft.core.PortableHash.md5Long(t, lit(i))
-    val err = intercept[IllegalArgumentException] {
-      DedupOps.minHashCandidates(docs, "text", "doc_id", 16, 4, hashFn = custom)
-    }
-    assert(err.getMessage.contains("portable"))
-    // the same family IS honored on the portable path
-    val ok = DedupOps.minHashCandidates(
-      docs, "text", "doc_id", 16, 4, hashFn = custom, portable = true)
-      .as[(Long, Long)].collect().toSet
-    assert(ok.contains((1L, 2L)))
+  test("portable (oracle) candidates find the same exact-dup cluster") {
+    val port = DedupOps.minHashDedupPortable(docs, "text", "doc_id", 0.9, 16, 4)
+      .select("id_a", "id_b").as[(Long, Long)].collect()
+    assert(port.contains((1L, 2L)), "identical docs must collide in the md5 family too")
+    assert(port.length == port.distinct.length,
+      "first-collision-wins emits each pair once over md5 band hashes too")
   }
 
-  test("portable (oracle) candidates find the same exact-dup cluster") {
-    val port = DedupOps.minHashCandidates(docs, "text", "doc_id", 16, 4, portable = true)
-      .as[(Long, Long)].collect().toSet
-    assert(port.contains((1L, 2L)), "identical docs must collide in the md5 family too")
+  test("minHashDedup: empty/whitespace-only docs verify at J(∅,∅)=1, no 0/0") {
+    val df = Seq((1L, ""), (2L, "   "), (3L, "a b c"), (4L, "a b c"))
+      .toDF("doc_id", "text")
+    val got = DedupOps.minHashDedup(df, "text", "doc_id", 0.9)
+      .as[(Long, Long, Double)].collect().toSet
+    assert(got == Set((1L, 2L, 1.0), (3L, 4L, 1.0)))
   }
 
   test("minHash LSH candidates are a superset of verified pairs (recall structure)") {
@@ -160,7 +172,7 @@ class DedupOpsSpec extends AnyFunSuite {
   test("crossSourceDupMatrix: NULL texts never form a phantom dup group") {
     // under the xxhash64 default NULL used to hash to the seed, so all
     // NULL-text rows collided as one giant "duplicate" group; both
-    // hashFn options must now agree: NULLs contribute no pairs
+    // keyFn options must now agree: NULLs contribute no pairs
     val docs = Seq(
       (1L, null.asInstanceOf[String], "s1"), (2L, null.asInstanceOf[String], "s2"),
       (3L, null.asInstanceOf[String], "s2"), (4L, "real dup", "s1"),
@@ -169,7 +181,7 @@ class DedupOpsSpec extends AnyFunSuite {
     val xx = DedupOps.crossSourceDupMatrix(docs, "text", "doc_id", "source")
       .as[(String, String, Long)].collect().toSeq.sorted
     val md = DedupOps.crossSourceDupMatrix(docs, "text", "doc_id", "source",
-        hashFn = c => graft.core.PortableHash.md5Long(c))
+        keyFn = c => graft.core.PortableHash.md5Long(c))
       .as[(String, String, Long)].collect().toSeq.sorted
     assert(xx == Seq(("s1", "s2", 1L)), s"got $xx")
     assert(md == xx, "xxhash64 and md5Long paths must share NULL semantics")
