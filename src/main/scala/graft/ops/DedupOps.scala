@@ -110,7 +110,8 @@ object DedupOps {
     * `threshold`. Pairwise with a size-band prefilter — safe because
     * J(A,B) <= min(|A|,|B|)/max(|A|,|B|), so pairs outside the band
     * cannot reach the threshold. Fixture-scale / oracle formulation;
-    * use [[minHashCandidates]] + verify at scale.
+    * use [[minHashCandidates]] + verify at scale. Two empty sets give
+    * 0/0 = NULL, as in the DuckDB oracle, and no pair.
     */
   def jaccardPairs(df: DataFrame, textCol: String, idCol: String, threshold: Double): DataFrame = {
     val t = df.select(col(idCol).as("id"), tokenSet(col(textCol)).as("toks"))
@@ -124,7 +125,7 @@ object DedupOps {
           greatest(col("n_a"), col("n_b")) * threshold)
       .withColumn("inter", inter)
       .withColumn("jaccard",
-        col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")))
+        try_divide(col("inter").cast("double"), col("n_a") + col("n_b") - col("inter")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
@@ -383,7 +384,9 @@ object DedupOps {
     * plain single-space split (q29's construction) in 12-bit chunks
     * (maxHamming < 4 is still guaranteed by banding). The Jaccard is the
     * raw ratio: the oracle SQL defines these semantics, so the
-    * production empty-set rule does not apply.
+    * production empty-set rule does not apply. Two empty sets give
+    * 0/0 = NULL (`try_divide`, DuckDB's `0::double/0`), so they never
+    * pair.
     */
   private object Portable extends HashFamily {
     def tokens(text: Column): Column = tokenSet(text)
@@ -403,7 +406,7 @@ object DedupOps {
       forall(zip_with(preA, preB, (x, y) => x =!= y), b => b)
     def intersect(a: Column, b: Column): Column = size(array_intersect(a, b))
     def jaccard(emptyMatchesEmpty: Boolean): Column =
-      col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter"))
+      try_divide(col("inter").cast("double"), col("n_a") + col("n_b") - col("inter"))
     def simHash(text: Column): Column =
       graft.functions.SimHashMd5.simHashMd5(split(text, " "), 48)
     val chunkBits = 12

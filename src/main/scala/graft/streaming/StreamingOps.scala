@@ -837,27 +837,14 @@ object StreamingOps {
   }
 
   /** Drain a streaming DataFrame into an in-memory table synchronously
-    * (test/local harness): returns the materialized result.
-    */
-  def runToMemory(df: DataFrame, name: String, outputMode: String): DataFrame =
-    runToMemoryMaxState(df, name, outputMode)._1
-
-  /** [[runToMemory]] plus the MAX state rows across the run's progress
-    * reports — the bounded-state evidence: for watermarked operators
-    * state must track open windows / live keys, never input size, and
-    * returning the observed max lets specs and the bench ASSERT that
-    * bound instead of just recording it.
-    */
-  def runToMemoryMaxState(
-      df: DataFrame, name: String, outputMode: String): (DataFrame, Long) =
-    runToMemoryStats(df, name, outputMode) match { case (t, s, _) => (t, s) }
-
-  /** [[runToMemoryMaxState]] plus the TOTAL rows dropped by the
-    * watermark across the run — the late-data evidence: an
-    * out-of-order replay can assert exactly how many
-    * late-beyond-watermark rows the engine discarded (and therefore
-    * that emissions equal the batch twin minus those documented
-    * drops), not just that state stayed bounded.
+    * (test/local harness) and return it with the MAX state rows across
+    * the run's progress reports — the bounded-state evidence: for
+    * watermarked operators state must track open windows / live keys,
+    * never input size — and the TOTAL rows dropped by the watermark —
+    * the late-data evidence: an out-of-order replay can assert exactly
+    * how many late-beyond-watermark rows the engine discarded (and
+    * therefore that emissions equal the batch twin minus those
+    * documented drops), not just that state stayed bounded.
     */
   def runToMemoryStats(
       df: DataFrame, name: String, outputMode: String): (DataFrame, Long, Long) = {

@@ -316,4 +316,17 @@ class DedupOpsSpec extends AnyFunSuite {
       .as[(Long, Long, Long, Double)].collect().map(r => r._1 -> r).toMap
     assert(str == s, "xxhash64 keys and string keys census identically")
   }
+
+  test("portable family: two empty docs divide 0/0 to NULL and never pair (DuckDB semantics)") {
+    val d = Seq((1L, ""), (2L, "   "), (3L, "a b c"), (4L, "a b c")).toDF("doc_id", "text")
+    val pairs = DedupOps.minHashDedupPortable(d, "text", "doc_id", 0.5, 4, 2)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(pairs == Set((3L, 4L)))
+    val keep = DedupOps.dedupKeepersPortable(d, "text", "doc_id", 0.5, 4, 2)
+      .select("doc_id").as[Long].collect().toSet
+    assert(keep == Set(1L, 2L, 3L))
+    val exact = DedupOps.jaccardPairs(d, "text", "doc_id", 0.5)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(exact == Set((3L, 4L)))
+  }
 }

@@ -33,7 +33,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       new org.apache.hadoop.fs.Path(streamDir.getAbsolutePath, "part-0.parquet"),
       false, spark.sparkContext.hadoopConfiguration)
 
-    val streaming = StreamingOps.runToMemory(
+    val streaming = StreamingHarness.runToMemory(
       StreamingOps.tumblingCounts(
         StreamingOps.eventsStream(spark, streamDir.getAbsolutePath)),
       "tumbling_test", "complete")
@@ -59,7 +59,7 @@ class StreamingOpsSpec extends AnyFunSuite {
 
     // the IDENTICAL batch transform runs as a streaming query — the
     // q74-pinned hop semantics carry over unchanged
-    val streaming = StreamingOps.runToMemory(
+    val streaming = StreamingHarness.runToMemory(
       SessionOps.slidingCounts(
         StreamingOps.eventsStream(spark, streamDir.getAbsolutePath),
         "ts", "event_type", "value", windowSeconds = 3600L, slideSeconds = 1800L),
@@ -100,7 +100,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.mode("append").parquet(streamDir)
 
-    val got = StreamingOps.runToMemory(
+    val got = StreamingHarness.runToMemory(
       StreamingOps.sessionCounts(
         StreamingOps.eventsStream(spark, streamDir), "30 minutes", "1 hour"),
       "session_test", "append")
@@ -131,7 +131,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       dst.setLastModified(1000000L * (i + 1))
     }
 
-    val (got, maxState) = StreamingOps.runToMemoryMaxState(
+    val (got, maxState) = StreamingHarness.runToMemoryMaxState(
       StreamingOps.tumblingCountsAppend(
         StreamingOps.eventsStream(spark, streamDir), "1 hour"),
       "tumbling_wm_test", "append")
@@ -189,7 +189,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       writeBatch(rows, s"b$i.parquet", 1000000L * (i + 1))
     }
 
-    val (got, maxState) = StreamingOps.runToMemoryMaxState(
+    val (got, maxState) = StreamingHarness.runToMemoryMaxState(
       StreamingOps.sessionCounts(
         StreamingOps.eventsStream(spark, streamDir), "30 minutes", "1 hour"),
       "session_bound_test", "append")
@@ -363,7 +363,7 @@ class StreamingOpsSpec extends AnyFunSuite {
 
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir)
-    val got = StreamingOps.runToMemory(
+    val got = StreamingHarness.runToMemory(
       StreamingOps.streamingExactDedup(stream, "text", "ts", "1 hour"),
       "dedup_test", "append")
       .select(col("doc_id"), lower(trim(col("text"))).as("k"))
@@ -406,7 +406,7 @@ class StreamingOpsSpec extends AnyFunSuite {
 
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir)
-    val got = StreamingOps.runToMemory(gate(stream), "gate_test", "append")
+    val got = StreamingHarness.runToMemory(gate(stream), "gate_test", "append")
       .as[(Long, String)].collect().toMap
     val want = gate(spark.read.schema(schema).parquet(streamDir))
       .as[(Long, String)].collect().toMap
@@ -436,7 +436,7 @@ class StreamingOpsSpec extends AnyFunSuite {
 
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir)
-    val got = StreamingOps.runToMemory(
+    val got = StreamingHarness.runToMemory(
       StreamingOps.streamingSimHashDedup(stream, "text", "ts", "1 hour"),
       "simdedup_test", "append")
       .select("doc_id").as[Long].collect().toSet
@@ -479,7 +479,7 @@ class StreamingOpsSpec extends AnyFunSuite {
 
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir)
-    val got = StreamingOps.runToMemory(
+    val got = StreamingHarness.runToMemory(
       StreamingOps.streamingTwap(stream, "key", "ts", "value"),
       "twap_test", "append")
       .as[(String, Long, Double, Long)].collect()
@@ -532,7 +532,7 @@ class StreamingOpsSpec extends AnyFunSuite {
 
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir)
-    val hits = StreamingOps.runToMemory(
+    val hits = StreamingHarness.runToMemory(
       StreamingOps.streamingFunnel(stream, "user_id", "ts", "event_type",
         Seq("view", "click", "buy")),
       "funnel_stream_test", "append")
@@ -595,7 +595,7 @@ class StreamingOpsSpec extends AnyFunSuite {
 
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir)
-    val got = StreamingOps.runToMemory(
+    val got = StreamingHarness.runToMemory(
       StreamingOps.streamingEma(stream, "key", "ord", "value", 0.9),
       "ema_test", "append")
       .as[(String, Long, Double)].collect()
@@ -642,7 +642,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir)
     val reps = 16
-    val (out, maxState) = StreamingOps.runToMemoryMaxState(
+    val (out, maxState) = StreamingHarness.runToMemoryMaxState(
       StreamingOps.streamingBootstrapGauge(stream, "key", "ts", "value",
         "event_id", reps = reps, seed = "sg", alpha = 0.1),
       "boot_gauge_test", "append")
@@ -702,7 +702,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir)
     val k = 4
-    val (out, maxState) = StreamingOps.runToMemoryMaxState(
+    val (out, maxState) = StreamingHarness.runToMemoryMaxState(
       StreamingOps.streamingHeavyHitters(stream, "key", "value", k),
       "hh_gauge_test", "append")
     val got = out.as[(String, String, Long, Long)].collect()
@@ -756,7 +756,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       .toDF("key", "event_id", "ts", "value"), "b2.parquet", 2000000L)
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir)
-    val (out, maxState) = StreamingOps.runToMemoryMaxState(
+    val (out, maxState) = StreamingHarness.runToMemoryMaxState(
       StreamingOps.streamingBootstrapGauge(stream, "key", "ts", "value",
         "event_id", reps = 8, seed = "sg", alpha = 0.1,
         watermarkDelay = "1 minute", idleTtlMs = 60L * 60L * 1000L),
@@ -880,7 +880,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration),
       new org.apache.hadoop.fs.Path(streamDir.getAbsolutePath, "part-0.parquet"),
       false, spark.sparkContext.hadoopConfiguration)
-    val (out, maxState) = StreamingOps.runToMemoryMaxState(
+    val (out, maxState) = StreamingHarness.runToMemoryMaxState(
       StreamingOps.streamingDrift(
         StreamingOps.eventsStream(spark, streamDir.getAbsolutePath),
         "event_type", reference),
@@ -921,7 +921,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     def attr(df: org.apache.spark.sql.DataFrame) =
       StreamingOps.streamingAttribution(
         df, "view", "purchase", horizonSec = 1800L, watermark = "1 hour")
-    val (got, maxState) = StreamingOps.runToMemoryMaxState(
+    val (got, maxState) = StreamingHarness.runToMemoryMaxState(
       attr(StreamingOps.eventsStream(spark, streamDir)),
       "attr_join_test", "append")
     val batch = attr(Tables.normalizeTs(spark.read.parquet(streamDir)))
@@ -964,7 +964,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       java.nio.file.Files.copy(part.toPath, dst.toPath)
       dst.setLastModified(1000000L * (i + 1))
     }
-    val got = StreamingOps.runToMemory(
+    val got = StreamingHarness.runToMemory(
       StreamingOps.streamingAttribution(
         StreamingOps.eventsStream(spark, streamDir),
         "view", "purchase", horizonSec = 1800L, watermark = "30 minutes",
