@@ -7,9 +7,8 @@ import java.nio.charset.StandardCharsets
   *
   * The reference ingests per-id `{id}.npy` fp16 feature matrices
   * (`src/prepare_img_npy.py:12-24`, loaded at `src/data_helper.py:91,157`);
-  * this reader turns those payload bytes into `Array[Array[Float]]` so
-  * [[graft.ops.MultimodalOps]] can decode real reference-shaped inputs
-  * instead of the deterministic stub.
+  * this reader parses the header and widens the elements to one flat
+  * `Array[Float]`, which [[graft.functions.NpyDecode]] cuts into frames.
   *
   * Format (public spec, numpy/lib/format.py): magic `\x93NUMPY`, one
   * byte each major/minor version, little-endian header length (2 bytes
@@ -102,20 +101,5 @@ object Npy {
       case t => throw new IllegalArgumentException(s"npy: unsupported dtype '${h.descr}' ($t)")
     }
     (h, out)
-  }
-
-  /** Decode to a row-major 2-D float matrix: scalars and 1-D arrays
-    * become a single row; Fortran-order data is transposed to C order.
-    */
-  def readFloatMatrix(bytes: Array[Byte]): Array[Array[Float]] = {
-    val (h, flat) = readFloats(bytes)
-    h.shape match {
-      case Seq() | Seq(_) => Array(flat)
-      case Seq(r, c) =>
-        if (h.fortranOrder) Array.tabulate(r, c)((i, j) => flat(j * r + i))
-        else Array.tabulate(r, c)((i, j) => flat(i * c + j))
-      case s => throw new IllegalArgumentException(
-        s"npy: expected <=2-D payload, got shape ${s.mkString("(", ",", ")")}")
-    }
   }
 }

@@ -101,13 +101,14 @@ object Sources {
         col("length").as("n_bytes"))
 
   /** OP-02/03: per-id `.npy` feature scan — the binary scan composed
-    * with the real NPY decode ([[Npy]], fp16→fp32), yielding
+    * with the real NPY decode ([[graft.functions.NpyDecode]] over
+    * [[Npy]], fp16→fp32), yielding
     * `(id string, frames array<array<float>>)`. This is the engine's
     * end-to-end path for the reference's `{id}.npy` feature files.
     */
   def readNpyById(spark: SparkSession, dir: String): DataFrame =
-    graft.ops.MultimodalOps.decodeNpyFrames(
-      readBinaryById(spark, dir, "npy")).toDF()
+    readBinaryById(spark, dir, "npy")
+      .select(col("id"), graft.functions.NpyDecode.frames(col("payload")).as("frames"))
 
   /** OP-15 support: load a WordPiece vocabulary file — one token per
     * line, line number = token id (the BERT `vocab.txt` layout; the

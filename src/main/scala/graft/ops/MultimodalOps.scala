@@ -84,34 +84,6 @@ object MultimodalOps {
       }
   }
 
-  /** A decoded row keyed by the filename-derived string id (the shape
-    * [[graft.io.Sources.readBinaryById]] produces).
-    */
-  final case class NpyFrames(id: String, frames: Array[Array[Float]])
-
-  /** REAL decoder for `.npy` payloads ([[graft.io.Npy]]): the
-    * reference's per-id fp16 feature matrices
-    * (`src/prepare_img_npy.py:12-24`, `src/data_helper.py:91,157`)
-    * decoded to (id, frames) — fp16→fp32, C or Fortran order. Same
-    * per-partition boundary as [[decodeFrames]]; null/empty payloads
-    * yield zero frames rather than failing the task.
-    */
-  def decodeNpyFrames(df: DataFrame, idCol: String = "id",
-      payloadCol: String = "payload"): Dataset[NpyFrames] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("string").as("id"),
-        col(payloadCol).cast("binary").as("payload"))
-      .as[(String, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, payload) =>
-          NpyFrames(id,
-            if (payload == null || payload.isEmpty) Array.empty
-            else graft.io.Npy.readFloatMatrix(payload))
-        }
-      }
-  }
-
   /** Per-frame mean feature over decoded frames — a representative
     * downstream vector op proving the decoded shape composes with
     * [[VectorOps]] (pad, mask, sample, pool).

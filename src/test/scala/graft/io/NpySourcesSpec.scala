@@ -5,7 +5,11 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ArrayType, FloatType}
+
 import graft.SharedSpark
+import graft.functions.NpyDecode
 
 /** End-to-end: per-id `.npy` files on disk → binaryFile scan →
   * real NPY decode → (id, frames) rows. This is the ingest path for the
@@ -38,7 +42,11 @@ class NpySourcesSpec extends AnyFunSuite {
     Files.write(Paths.get(dir, "vid102.npy"), npyF4(b))
     Files.write(Paths.get(dir, "ignore.txt"), "not npy".getBytes)
 
-    val got = Sources.readNpyById(spark, dir).collect()
+    val df = Sources.readNpyById(spark, dir)
+    assert(df.schema("frames").dataType ==
+      ArrayType(ArrayType(FloatType, containsNull = false), containsNull = true),
+      "the shard schema: frames may be null in the type, elements never")
+    val got = df.collect()
       .map(r => r.getAs[String]("id") ->
         r.getSeq[scala.collection.Seq[Float]](r.fieldIndex("frames")).map(_.toSeq).toSeq)
       .toMap
@@ -47,13 +55,31 @@ class NpySourcesSpec extends AnyFunSuite {
     assert(got("vid102") == b.map(_.toSeq).toSeq)
   }
 
-  test("decodeNpyFrames: null/empty payloads yield zero frames, not task failure") {
+  test("npy_frames: null/empty payloads yield zero frames, not task failure") {
     import spark.implicits._
-    val df = Seq(("x", Option.empty[Array[Byte]]), ("y", Some(npyF4(Array(Array(9.0f))))))
+    val df = Seq(("x", Option.empty[Array[Byte]]), ("e", Some(Array.empty[Byte])),
+        ("y", Some(npyF4(Array(Array(9.0f))))))
       .toDF("id", "payload")
-    val got = graft.ops.MultimodalOps.decodeNpyFrames(df).collect()
-      .map(d => d.id -> d.frames.map(_.toSeq).toSeq).toMap
-    assert(got("x") == Seq.empty)
-    assert(got("y") == Seq(Seq(9.0f)))
+    // interpreted (local relation folded by the optimizer) and generated
+    // (same rows through an RDD scan) evaluation must agree
+    val viaRdd = spark.createDataFrame(df.rdd, df.schema)
+    for (in <- Seq(df, viaRdd)) {
+      val got = in.select(col("id"), NpyDecode.frames(col("payload")).as("frames")).collect()
+        .map(r => r.getString(0) ->
+          r.getSeq[scala.collection.Seq[Float]](1).map(_.toSeq).toSeq).toMap
+      assert(got("x") == Seq.empty)
+      assert(got("e") == Seq.empty)
+      assert(got("y") == Seq(Seq(9.0f)))
+    }
+  }
+
+  test("npy_frames: a malformed payload fails the task with the npy: message") {
+    val dir = Files.createTempDirectory("graft_npy_bad").toString
+    Files.write(Paths.get(dir, "ok.npy"), npyF4(Array(Array(1.0f))))
+    Files.write(Paths.get(dir, "bad.npy"), npyF4(Array(Array(1.0f))).take(20))
+    val e = intercept[Exception](Sources.readNpyById(spark, dir).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => t.getMessage != null && t.getMessage.contains("npy: truncated header")),
+      e.toString)
   }
 }

@@ -2,6 +2,8 @@ package graft.io
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.NpyDecode
+
 /** Golden-file tests for the NPY decoder: the byte streams below are
   * verbatim `numpy.save` output (numpy 1.x, format v1.0) — header
   * padding, dtype strings, and element bytes exactly as the reference's
@@ -11,6 +13,12 @@ class NpySpec extends AnyFunSuite {
 
   private def hex(s: String): Array[Byte] =
     s.grouped(2).map(java.lang.Integer.parseInt(_, 16).toByte).toArray
+
+  /** The `npy_frames` kernel's output as row-major frames. */
+  private def frames(bytes: Array[Byte]): Seq[Seq[Float]] = {
+    val outer = NpyDecode.decode(bytes)
+    (0 until outer.numElements()).map(i => outer.getArray(i).toFloatArray().toSeq)
+  }
 
   /** np.save of np.array([[1.0, -2.5, 0.15625], [65504.0, 6.103515625e-05, -0.0]], dtype=np.float16) */
   private val f2Golden = hex(
@@ -39,9 +47,9 @@ class NpySpec extends AnyFunSuite {
     assert(!h.fortranOrder)
     assert(h.shape == Seq(2, 3))
     assert(h.dataOffset == 128, "numpy pads the v1 header to a 64-byte-aligned data start")
-    val m = Npy.readFloatMatrix(f2Golden)
+    val m = frames(f2Golden)
     assert(m.length == 2 && m.forall(_.length == 3))
-    assert(m(0).toSeq == Seq(1.0f, -2.5f, 0.15625f))
+    assert(m(0) == Seq(1.0f, -2.5f, 0.15625f))
     assert(m(1)(0) == 65504.0f, "half max")
     assert(m(1)(1) == 6.103515625e-05f, "smallest normal half")
     assert(java.lang.Float.floatToRawIntBits(m(1)(2)) == 0x80000000, "-0.0 sign preserved")
@@ -50,15 +58,15 @@ class NpySpec extends AnyFunSuite {
   test("golden fp32 Fortran-order matrix is transposed back to row-major") {
     val h = Npy.readHeader(f4FortranGolden)
     assert(h.descr == "<f4" && h.fortranOrder && h.shape == Seq(3, 2))
-    val m = Npy.readFloatMatrix(f4FortranGolden)
-    assert(m.map(_.toSeq).toSeq ==
+    val m = frames(f4FortranGolden)
+    assert(m ==
       Seq(Seq(1.5f, 2.5f), Seq(3.5f, 4.5f), Seq(5.5f, 6.5f)))
   }
 
   test("golden fp64 1-D array becomes a single row") {
-    val m = Npy.readFloatMatrix(f8OneDGolden)
+    val m = frames(f8OneDGolden)
     assert(m.length == 1)
-    assert(m(0).toSeq == Seq(7.25f, -8.5f))
+    assert(m(0) == Seq(7.25f, -8.5f))
   }
 
   test("half->float edge cases: subnormal, infinities, NaN, rounding-free values") {
@@ -83,8 +91,8 @@ class NpySpec extends AnyFunSuite {
       Array[Byte](0, 0, 0x40.toByte, 0x40.toByte, 0, 0, 0x80.toByte, 0x3F.toByte)) // 3.0f, 1.0f LE
     val h = Npy.readHeader(bytes)
     assert(h.shape == Seq(1, 2) && h.dataOffset % 64 == 0)
-    val m = Npy.readFloatMatrix(bytes)
-    assert(m(0).toSeq == Seq(3.0f, 1.0f))
+    val m = frames(bytes)
+    assert(m(0) == Seq(3.0f, 1.0f))
   }
 
   test("corrupt inputs fail loudly, not silently") {
@@ -96,5 +104,7 @@ class NpySpec extends AnyFunSuite {
     assert(at > 0)
     "'<c8'".getBytes("ISO-8859-1").copyToArray(bad, at)
     assertThrows[IllegalArgumentException](Npy.readFloats(bad))
+    val e = intercept[IllegalArgumentException](NpyDecode.decode(f2Golden.take(64)))
+    assert(e.getMessage == "requirement failed: npy: truncated header")
   }
 }
