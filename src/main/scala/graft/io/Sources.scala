@@ -152,245 +152,11 @@ object Sources {
     */
   def writeBucketed(
       df: DataFrame, table: String, buckets: Int, keyCols: Seq[String],
-      sortCols: Seq[String] = Nil): Unit =
-    writeBucketedMode(df, table, buckets, keyCols, sortCols, SaveMode.Overwrite)
-
-  /** Append a batch to an existing bucketed table (bucket spec must
-    * match the original write — Spark enforces it). The incremental
-    * path of the standing-deployment contract: each append adds files
-    * per bucket, and every downstream bucket-keyed join/scan keeps its
-    * zero-exchange property because the table's distribution is
-    * unchanged.
-    */
-  def appendBucketed(
-      df: DataFrame, table: String, buckets: Int, keyCols: Seq[String],
-      sortCols: Seq[String] = Nil): Unit =
-    writeBucketedMode(df, table, buckets, keyCols, sortCols, SaveMode.Append)
-
-  private def writeBucketedMode(
-      df: DataFrame, table: String, buckets: Int, keyCols: Seq[String],
-      sortCols: Seq[String], mode: SaveMode): Unit = {
-    val w = df.write.mode(mode)
+      sortCols: Seq[String] = Nil): Unit = {
+    val w = df.write.mode(SaveMode.Overwrite)
       .bucketBy(buckets, keyCols.head, keyCols.tail: _*)
     (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
       .format("parquet")
       .saveAsTable(table)
-  }
-
-  /** Hive-partitioned parquet sink — the partition-PRUNING layout for
-    * columns that are FILTERED repeatedly at scale (lang, source,
-    * date). Each distinct partition-column combination becomes its own
-    * directory (`lang=en/...`), so a filtered read never opens the
-    * other directories at all: at 100 TB a `lang = 'en'` scan touches
-    * 1/|langs| of the files, enforced by the planner's
-    * PartitionFilters (spec-asserted on the physical plan), not by
-    * row-level filtering. Choose LOW-cardinality columns — one
-    * directory (and ≥ 1 file) per combination; high-cardinality keys
-    * belong in [[writeBucketed]] instead.
-    */
-  def writeHivePartitioned(
-      df: DataFrame, path: String, partCols: Seq[String]): Unit = {
-    require(partCols.nonEmpty, "need at least one partition column")
-    df.write.mode(SaveMode.Overwrite)
-      .partitionBy(partCols: _*)
-      .parquet(path)
-  }
-
-  /** SMALL-FILE COMPACTION — the table-maintenance pass every
-    * long-running ingest needs: streaming/incremental appends leave
-    * thousands of KB-sized files whose per-file open/footer/task cost
-    * eventually dominates scans (the classic small-file problem). Reads
-    * the directory, sizes the REWRITE from the measured on-disk bytes
-    * (`targetBytes` per output file, ≥ 1 file), writes to `tmpPath`,
-    * verifies the rewrite carries the exact same rows via the
-    * order-free [[contentManifest]] hash, and only then swaps it into
-    * place — a failed verify leaves the original untouched (compaction
-    * must never be able to lose data). Returns (filesBefore,
-    * filesAfter).
-    *
-    * Scale shape: one read + one `repartition(n)` round-robin shuffle
-    * of the data (unavoidable — coalesce would skip the shuffle but
-    * chains the small files' partitioning into every later scan and
-    * cannot split an unlucky large partition); the manifest check is
-    * one aggregate per side. Partition-column layouts should compact
-    * per partition directory (compose with
-    * [[writeHivePartitioned]]'s directory structure).
-    */
-  def compactParquet(
-      spark: SparkSession, path: String, tmpPath: String,
-      targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    require(targetBytes > 0, "compactParquet: targetBytes must be positive")
-    val hadoopPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(hadoopPath)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    val totalBytes = parts.map(_.getLen).sum
-    val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val df = spark.read.parquet(path)
-    val before = contentManifest(df)
-    df.repartition(nOut).write.mode(SaveMode.Overwrite).parquet(tmpPath)
-    val after = contentManifest(spark.read.parquet(tmpPath))
-    require(after == before,
-      s"compaction manifest mismatch (rows/hash/schema): $before vs $after — " +
-        "original left untouched")
-    fs.delete(hadoopPath, true)
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmpPath), hadoopPath),
-      s"rename $tmpPath -> $path failed")
-    val outFiles = fs.listStatus(hadoopPath)
-      .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    (parts.length, outFiles)
-  }
-
-  /** Morton (Z-order) key over `zCols`, appended as `outCol` — the
-    * multi-column DATA-SKIPPING layout key: each column is
-    * quantile-binned to `bits` bits (approx-percentile cutoffs on a
-    * 1-row broadcast — the [[graft.ops.CurationOps.quantileBuckets]]
-    * scalar contract, skew-proof where equal-width bins are not) and
-    * the bin bits INTERLEAVE, so rows close in z are close in EVERY
-    * clustered dimension at once. Binning is a generated
-    * balanced-comparison tree (depth = `bits`, no interpreted HOF
-    * scan); the interleave is pure shift/or arithmetic. NULLs bin to
-    * 0.
-    */
-  def zOrderKey(
-      df: DataFrame, zCols: Seq[String], bits: Int = 8,
-      outCol: String = "__z"): DataFrame = {
-    require(zCols.nonEmpty, "zOrderKey: need at least one column")
-    require(bits >= 1 && bits * zCols.size <= 62,
-      s"bits * cols must fit a long, got $bits x ${zCols.size}")
-    val nbins = 1 << bits
-    val probs = (1 until nbins).map(_.toDouble / nbins)
-    val cuts: Map[String, Array[Double]] = {
-      val aggs = zCols.map(c =>
-        approx_percentile(col(c).cast("double"),
-          array(probs.map(lit): _*), lit(10000)).as(s"__cuts_$c"))
-      val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-      zCols.zipWithIndex.map { case (c, i) =>
-        c -> (if (row.isNullAt(i)) Array.empty[Double]
-              else row.getSeq[Double](i).toArray)
-      }.toMap
-    }
-    def bin(v: org.apache.spark.sql.Column, cs: Array[Double],
-        lo: Int, hi: Int): org.apache.spark.sql.Column =
-      if (lo == hi) lit(lo.toLong)
-      else {
-        val mid = (lo + hi) / 2
-        when(v <= lit(cs(mid)), bin(v, cs, lo, mid))
-          .otherwise(bin(v, cs, mid + 1, hi))
-      }
-    val ncols = zCols.size
-    val z = zCols.zipWithIndex.foldLeft(lit(0L)) { case (acc, (c, ci)) =>
-      val cs = cuts(c)
-      val b =
-        if (cs.isEmpty) lit(0L)
-        else when(col(c).isNull, lit(0L))
-          .otherwise(bin(col(c).cast("double"), cs, 0, cs.length))
-      (0 until bits).foldLeft(acc)((a, k) =>
-        a.bitwiseOR(shiftleft(
-          shiftright(b, k).bitwiseAND(lit(1L)), k * ncols + ci)))
-    }
-    df.withColumn(outCol, z)
-  }
-
-  /** Z-ORDER CLUSTERED parquet sink: range-partition on the Morton
-    * key of `zCols` into `numFiles` files, sorted within each — so
-    * every file covers a small hyper-rectangle of the clustered
-    * columns and its parquet min/max footer stats are NARROW in every
-    * one of them. A reader filtering on ANY clustered column then
-    * skips most files/row-groups on stats alone (the lakehouse
-    * OPTIMIZE ZORDER contract; a lexicographic sort gives this for
-    * the leading column only — spec-measured). At 100 TB this is the
-    * difference between a needle query reading one file and reading
-    * the corpus.
-    */
-  def writeZOrdered(
-      df: DataFrame, zCols: Seq[String], path: String,
-      numFiles: Int, bits: Int = 8): Unit = {
-    require(numFiles >= 1, "writeZOrdered: numFiles must be positive")
-    zOrderKey(df, zCols, bits)
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode(SaveMode.Overwrite).parquet(path)
-  }
-
-  /** Content manifest of a DataFrame: row count + an ORDER-FREE
-    * content hash (the exact DECIMAL sum of per-row `xxhash64` over
-    * all columns — addition commutes, so any partitioning/ordering of
-    * the same rows yields the same hash) + the schema DDL. The
-    * integrity contract for pipeline outputs: recompute on read and
-    * compare.
-    */
-  def contentManifest(df: DataFrame): (Long, String, String) = {
-    val row = df.agg(
-      count(lit(1)).as("n"),
-      sum(xxhash64(df.columns.map(col): _*).cast("decimal(38,0)")).as("h"))
-      .collect()(0)
-    val n = row.getLong(0)
-    val h = if (row.isNullAt(1)) "0" else row.getDecimal(1).toBigInteger.toString
-    (n, h, df.schema.toDDL)
-  }
-
-  /** Parquet sink with a `_graft_manifest.json` integrity sidecar
-    * (count, order-free content hash, schema) written through the
-    * Hadoop FS API — the verifiable-output contract: a reader calls
-    * [[verifyManifest]] before trusting the dataset (partial writes,
-    * manual edits, and schema drift all surface as a mismatch).
-    * The manifest pass is one extra aggregation over the frame —
-    * at 100 TB, run it on the same pass's cached input or accept the
-    * second scan as the price of end-to-end verifiability.
-    */
-  def writeWithManifest(df: DataFrame, path: String): Unit = {
-    df.write.mode(SaveMode.Overwrite).parquet(path)
-    val spark = df.sparkSession
-    val (n, h, ddl) = contentManifest(spark.read.parquet(path))
-    val p = new org.apache.hadoop.fs.Path(path, "_graft_manifest.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val manifest = mapper.createObjectNode()
-      .put("rows", n).put("content_hash", h).put("schema", ddl)
-    val out = fs.create(p, true)
-    try out.write(mapper.writeValueAsBytes(manifest))
-    finally out.close()
-  }
-
-  /** Recompute a dataset's manifest and diff it against the sidecar.
-    * Returns None when everything matches, or a human-readable
-    * mismatch description (missing sidecar, row-count drift, content
-    * drift, schema drift).
-    */
-  def verifyManifest(spark: SparkSession, path: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(path, "_graft_manifest.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Some(s"no _graft_manifest.json under $path")
-    val raw = {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    }
-    // a REAL JSON parse (Jackson ships with Spark): a malformed or
-    // truncated sidecar is a hard verification failure, never a silent
-    // regex miss (ADVICE r6 — the ad-hoc field regex mis-parsed under
-    // reordering/whitespace and could match inside the schema DDL)
-    val node =
-      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(raw)
-      catch {
-        case e: java.io.IOException =>
-          return Some(s"manifest is not valid JSON: ${e.getMessage}")
-      }
-    def textField(k: String): Option[String] =
-      Option(node.get(k)).filter(_.isTextual).map(_.asText)
-    val rowsField = Option(node.get("rows")).filter(_.canConvertToLong).map(_.asLong)
-    val (n, h, ddl) = contentManifest(spark.read.parquet(path))
-    (rowsField, textField("content_hash"), textField("schema")) match {
-      case (None, _, _) | (_, None, _) | (_, _, None) =>
-        Some("manifest missing/mistyped rows, content_hash, or schema")
-      case (Some(rows), _, _) if rows != n =>
-        Some(s"row count drifted: manifest $rows, actual $n")
-      case (_, Some(hash), _) if hash != h =>
-        Some(s"content hash drifted: manifest $hash, actual $h")
-      case (_, _, Some(schema)) if schema != ddl =>
-        Some(s"schema drifted: manifest '$schema', actual '$ddl'")
-      case _ => None
-    }
   }
 }

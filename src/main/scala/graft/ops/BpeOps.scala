@@ -176,24 +176,4 @@ object BpeOps {
         (col("n_chars").cast("double") / col("n_tokens").cast("double"))
           .as("chars_per_token"))
   }
-
-  def bpeEncode(
-      df: DataFrame, textCol: String, idCol: String,
-      merges: Seq[(String, String)]): DataFrame = {
-    var dict = df
-      .select(explode(TextOps.whitespaceTokenize(col(textCol))).as("word"))
-      .distinct()
-      .withColumn("syms", charSymbols(col("word")))
-    merges.zipWithIndex.foreach { case ((a, b), i) =>
-      dict = dict.withColumn("syms", applyMerge(col("syms"), a, b))
-      if ((i + 1) % 8 == 0) dict = dict.localCheckpoint()
-    }
-    val words = df.select(col(idCol),
-        posexplode(TextOps.whitespaceTokenize(col(textCol)))
-          .as(Seq("pos", "word")))
-    words.join(broadcast(dict), Seq("word"))
-      .groupBy(idCol)
-      .agg(flatten(array_sort(collect_list(
-        struct(col("pos"), col("syms")))).getField("syms")).as("tokens"))
-  }
 }

@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** Category-hierarchy dimension (OP-14, reference
   * `src/category_id_map.py:29-52`): 4-char level-2 codes whose first two
@@ -44,34 +43,9 @@ object CategoryOps {
   def referenceCategoryDim(spark: SparkSession): DataFrame =
     categoryDim(spark, referenceCategoryCodes)
 
-  /** Dictionary-encode a dynamic code column when no authoritative list
-    * exists: dense ids by sorted distinct order (Q11's construction).
-    *
-    * Guarded: a dictionary dimension is broadcast downstream and totally
-    * ordered here, so it must be SMALL — `maxCodes` caps the domain and
-    * the build fails loudly past it rather than silently sorting a
-    * high-cardinality column into one task. The dense ids come from
-    * sorted `zipWithIndex` (parallel), not an unpartitioned
-    * `dense_rank()` window (which coalesces to a single partition and
-    * fires `WindowExec: No Partition Defined`).
-    */
-  def dimFromData(df: DataFrame, codeCol: String, maxCodes: Int = 100000): DataFrame = {
-    val spark = df.sparkSession
-    val distinctCodes = df.select(col(codeCol).as("category_id")).distinct()
-    val n = distinctCodes.count()
-    require(n <= maxCodes,
-      s"dimFromData: $n distinct codes exceeds maxCodes=$maxCodes — not a dictionary domain; " +
-        "use an authoritative code list (categoryDim) or raise maxCodes deliberately")
-    val sorted = distinctCodes.orderBy("category_id")
-    val schema = StructType(sorted.schema.fields :+
-      StructField("lv2id", IntegerType, nullable = false))
-    val rdd = sorted.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i.toInt) }
-    spark.createDataFrame(rdd, schema)
-      .withColumn("lv1id", substring(col("category_id"), 1, 2).cast("int"))
-  }
-
   /** category_id string → (lv2id, lv1id) via broadcast join
-    * (`category_id_to_lv2id`, reference `:39-41`).
+    * (`category_id_to_lv2id`, reference `:39-41`). The attached `lv1id`
+    * is also the reference's `lv2id_to_lv1id` (`:50-52`).
     */
   def attachIds(df: DataFrame, dim: DataFrame, codeCol: String): DataFrame =
     df.join(broadcast(dim.withColumnRenamed("category_id", codeCol)), Seq(codeCol), "left")
@@ -80,8 +54,4 @@ object CategoryOps {
   def attachCode(df: DataFrame, dim: DataFrame, lv2Col: String): DataFrame =
     df.join(broadcast(dim.select(col("lv2id").as(lv2Col),
       col("category_id").as("category_id_rt"))), Seq(lv2Col), "left")
-
-  /** lv2id → lv1id without strings (`lv2id_to_lv1id`, reference `:50-52`). */
-  def lv2ToLv1(df: DataFrame, dim: DataFrame, lv2Col: String): DataFrame =
-    df.join(broadcast(dim.select(col("lv2id").as(lv2Col), col("lv1id"))), Seq(lv2Col), "left")
 }

@@ -42,26 +42,17 @@ object CurationOps {
       TextOps.whitespaceTokenize(text), n)
 
   /** Ids of training docs sharing at least one word n-gram with the
-    * eval corpus — GPT-3-style benchmark decontamination (Brown et al.
-    * 2020, appendix C uses 13-grams; `n` is the caller's contract).
+    * eval corpus's precomputed [[evalGramSet]] — GPT-3-style benchmark
+    * decontamination (Brown et al. 2020, appendix C uses 13-grams; `n`
+    * is the caller's contract).
     *
     * Plan shape at 100 TB: the eval side is benchmark-sized (at most
     * millions of grams), so its distinct gram-key set BROADCASTS; the
     * train side computes gram keys map-side and left-semi-joins against
-    * the broadcast without any exchange of text or grams. Only the
-    * surviving (contaminated) ids — bounded by the corpus hit rate —
-    * reach the final distinct. `gramKeys` defaults to the fused
-    * xxhash64 form (8-byte keys in the broadcast); oracles pass a
-    * composable string/md5 form.
+    * the broadcast without any exchange of text or grams. `gramKeys`
+    * defaults to the fused xxhash64 form; oracles pass a composable
+    * string/md5 form.
     */
-  def contaminatedIds(
-      train: DataFrame, evalDocs: DataFrame,
-      textCol: String, idCol: String, n: Int,
-      gramKeys: (Column, Int) => Column = defaultGramKeys): DataFrame =
-    contaminatedIdsWithGramSet(train,
-      evalGramSet(evalDocs, textCol, n, gramKeys), textCol, idCol, n, gramKeys)
-
-  /** [[contaminatedIds]] against a precomputed [[evalGramSet]]. */
   def contaminatedIdsWithGramSet(
       train: DataFrame, gramSet: DataFrame,
       textCol: String, idCol: String, n: Int,
@@ -608,9 +599,10 @@ object CurationOps {
   }
 
   /** Decontamination DECISION path: `train` minus every doc flagged by
-    * [[contaminatedIds]], unchanged schema. The anti-join side is the
-    * contaminated-id set — proportional to eval overlap, not the
-    * corpus — so it broadcasts and the full train rows never shuffle.
+    * [[contaminatedIdsWithGramSet]], unchanged schema. The anti-join
+    * side is the contaminated-id set — proportional to eval overlap,
+    * not the corpus — so it broadcasts and the full train rows never
+    * shuffle.
     */
   def decontaminate(
       train: DataFrame, evalDocs: DataFrame,
@@ -848,44 +840,6 @@ object CurationOps {
       .crossJoin(n1)
       .select(col("i"),
         (col("gsum").cast("double") / col("n").cast("double")).as("g"))
-  }
-
-  /** Full-batch gradient-descent logistic regression:
-    * `w ← w − lr·g` for `iters` passes from `w = 0`. Each pass is one
-    * [[logisticGradient]] job (a dim-row collect — the broadcast-dim
-    * contract, like the k-means recenter); the returned weights drive
-    * [[logisticScore]]. For corpus-scale training sets the per-pass
-    * cost is one narrow corpus scan — the published curation setting
-    * (a linear scorer over hashed features) converges in tens of
-    * passes.
-    */
-  def logisticTrain(
-      df: DataFrame, featCol: String, labelCol: String, dim: Int,
-      iters: Int, lr: Double): Array[Double] = {
-    require(iters >= 1 && lr > 0.0, "logisticTrain: iters >= 1, lr > 0")
-    var w = Array.fill(dim)(0.0)
-    var it = 0
-    while (it < iters) {
-      val g = logisticGradient(df, featCol, labelCol, dim, w)
-        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-      w = Array.tabulate(dim)(i => w(i) - lr * g.getOrElse(i, 0.0))
-      it += 1
-    }
-    w
-  }
-
-  /** Score rows with trained logistic weights: `σ(w·x)` via the same
-    * unrolled constant-chain dot — per-row column algebra, zero
-    * shuffles. Output adds `score` (and keeps every input column).
-    */
-  def logisticScore(
-      df: DataFrame, featCol: String, w: Array[Double],
-      outCol: String = "score"): DataFrame = {
-    val dot = w.indices.map(i =>
-      element_at(col(featCol), i + 1).cast("double") * lit(w(i)))
-      .reduceLeft(_ + _)
-    df.filter(col(featCol).isNotNull && size(col(featCol)) === w.length)
-      .withColumn(outCol, lit(1.0) / (lit(1.0) + exp(-dot)))
   }
 
   // ------------------------------------------------------------------

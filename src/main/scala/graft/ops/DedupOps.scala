@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Column, SparkSession}
+import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,7 +25,7 @@ object DedupOps {
   /** Exact duplicate groups: one row per normalized text with count > 1.
     * Shuffles (hash64(norm), id) only — the document text itself never
     * enters the exchange (at 100 TB the groupBy key would BE the corpus);
-    * same key as [[graft.streaming.StreamingOps.streamingExactDedup]].
+    * same key as [[graft.streaming.StreamingOps.streamingExactDedupOptOut]].
     * 64-bit collisions are negligible (see [[hashedTokenSet]]) and can
     * only merge two distinct texts into one group, never split a group.
     * The winner per group is the smallest id (deterministic).
@@ -781,34 +781,6 @@ object DedupOps {
     * would just miss duplicates.
     */
   final case class CorpusReps(df: DataFrame, bands: Int = 16, rowsPerBand: Int = 4)
-
-  /** Fold a batch's ACCEPTED survivors into an existing
-    * [[corpusBucketReps]] frame — the third leg of the standing
-    * deployment's daily loop (reps → [[dedupIncremental]] → survivors →
-    * mergedBucketReps → persist for tomorrow), so the reps are NEVER
-    * recomputed from the full corpus after day one. Cost is O(accepted ×
-    * bands) banding plus a groupBy over (old reps ∪ accepted reps) —
-    * the reps frame is bounded by occupied buckets, not corpus text.
-    *
-    * Exactly equal to recomputing [[corpusBucketReps]] over
-    * (corpus ∪ accepted) — spec-pinned: the rep per bucket is the min
-    * id over both sides and its token array is a pure function of the
-    * doc, so a bucket-wise min-by merge is lossless. Requires ids
-    * unique ACROSS corpus and accepted (a standing corpus has one id
-    * space; [[dedupIncremental]]'s overlap tolerance is only about
-    * judging candidate batches by content).
-    */
-  def mergedBucketReps(
-      reps: CorpusReps, accepted: DataFrame, textCol: String, idCol: String): DataFrame =
-    reps.df
-      .unionByName(
-        corpusBucketReps(accepted, textCol, idCol, reps.bands, reps.rowsPerBand))
-      .groupBy("band", "band_hash")
-      .agg(min_by(
-        struct(col("rep"), col("rep_toks"), col("rep_n")), col("rep")).as("r"))
-      .select(col("band"), col("band_hash"),
-        col("r.rep").as("rep"), col("r.rep_toks").as("rep_toks"),
-        col("r.rep_n").as("rep_n"))
 
   /** REMOVE ids from a standing [[corpusBucketReps]] frame — the
     * removal verb for the dedup leg (completing the engine-wide

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -274,27 +274,5 @@ object MultimodalOps {
       .withColumn("hamming", ham)
       .filter(col("hamming") <= maxHamming)
       .select(col("id_a"), col("id_b"), col("hamming"))
-  }
-
-  /** SILENCE TRIM: drop leading and trailing frames whose energy is
-    * below `minEnergy`, returning the contiguous sample span from the
-    * first to the last active frame (interior quiet frames are kept —
-    * trimming, not gating). An all-quiet signal returns an empty
-    * array. The energy rule is [[frameFeatures]]' exact fold, so the
-    * decision is deterministic; the per-frame energies are evaluated
-    * per REFERENCE (no HOF subexpression elimination) — ~3 traversals
-    * of an O(n) expression, the documented small-constant trade.
-    */
-  def trimSilence(
-      vec: Column, nFrames: Int, frameLen: Int,
-      minEnergy: Double): Column = {
-    val keep = transform(frameFeatures(vec, nFrames, frameLen),
-      f => f.getField("energy") >= minEnergy)
-    val first = array_position(keep, lit(true))
-    val last = lit(nFrames.toLong) + 1L - array_position(reverse(keep), lit(true))
-    when(first === 0, array().cast("array<float>"))
-      .otherwise(slice(vec,
-        ((first - 1) * frameLen + 1).cast("int"),
-        ((last - first + 1) * frameLen).cast("int")))
   }
 }

@@ -391,9 +391,7 @@ object PqOps {
   }
 
   /** APPEND a new corpus batch to a standing [[ivfPqIndex]] — the
-    * FAISS `add()` half of the daily-ingest ANN loop (the
-    * [[SimilarityOps.appendLshIndex]] /
-    * [[DedupOps.mergedBucketReps]] pattern for the compressed leg).
+    * FAISS `add()` half of the daily-ingest ANN loop.
     * The coarse quantizer and the codebooks are FROZEN at build time —
     * quantizer drift is a rebuild decision, never a side effect of
     * ingest — so the batch is assigned and (residual-)encoded with the

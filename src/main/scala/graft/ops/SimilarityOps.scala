@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.PortableHash
-
 /** Similarity search over embedding columns (`array<float>`).
   *
   * Two paths:
@@ -384,13 +382,6 @@ object SimilarityOps {
       transform(vec, x => round(x.cast("double") / safe).cast("int")).as("q"))
   }
 
-  /** Inverse of [[quantizeInt8]]: array<float> with per-component
-    * error ≤ scale/2.
-    */
-  def dequantizeInt8(qs: Column): Column =
-    transform(qs.getField("q"),
-      q => (q.cast("double") * qs.getField("scale")).cast("float"))
-
   /** Deterministic pseudo-random hyperplane component for (plane, dim):
     * uniform in [-1, 1) from a splitmix64 draw. Computed ONCE on the
     * driver and shipped as literals — plane components are row-
@@ -631,45 +622,15 @@ object SimilarityOps {
       bands: Int = 8, planesPerBand: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding",
       dim: Int = 64, maxBucket: Int = defaultMaxBucket,
-      numFileBuckets: Int = 32): Unit =
-    graft.io.Sources.writeBucketed(
-      bandedIndexRows(corpus, bands, planesPerBand, idCol, vecCol, dim,
-        maxBucket),
-      table, numFileBuckets, Seq("band", "bucket"))
-
-  /** Append a NEW corpus batch to an existing [[writeLshIndex]] table —
-    * the incremental path of the standing ANN deployment (the
-    * [[graft.ops.DedupOps.mergedBucketReps]] pattern for vectors):
-    * signatures are deterministic, so a batch's banded rows land in
-    * the same (band, bucket) space as the original write; the bucketed
-    * table's distribution is unchanged, so [[lshSearchIndexed]] keeps
-    * its zero-exchange corpus side. Cost is O(batch) — the existing
-    * index is never read. The `maxBucket` occupancy cap applies
-    * PER WRITE (a hot bucket can hold up to m rows per append);
-    * re-compact with a full [[writeLshIndex]] rebuild when append
-    * count × m approaches the scan budget.
-    */
-  def appendLshIndex(
-      batch: DataFrame, table: String,
-      bands: Int = 8, planesPerBand: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      dim: Int = 64, maxBucket: Int = defaultMaxBucket,
-      numFileBuckets: Int = 32): Unit =
-    graft.io.Sources.appendBucketed(
-      bandedIndexRows(batch, bands, planesPerBand, idCol, vecCol, dim,
-        maxBucket),
-      table, numFileBuckets, Seq("band", "bucket"))
-
-  private def bandedIndexRows(
-      corpus: DataFrame, bands: Int, planesPerBand: Int,
-      idCol: String, vecCol: String, dim: Int, maxBucket: Int): DataFrame = {
+      numFileBuckets: Int = 32): Unit = {
     val sigs = graft.functions.HyperplaneBandSigs
       .hyperplaneBandSigs(col(vecCol), bands, planesPerBand, dim)
     val banded = corpus
       .select(col(idCol).as("id"), col(vecCol).as("vec"), sigs.as("buckets"))
       .select(col("id"), col("vec"), col("buckets"), posexplode(col("buckets")))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-    capBucketSide(banded, "id", maxBucket)
+    graft.io.Sources.writeBucketed(capBucketSide(banded, "id", maxBucket),
+      table, numFileBuckets, Seq("band", "bucket"))
   }
 
   /** DELETE ids from a standing [[writeLshIndex]] table —
@@ -677,17 +638,15 @@ object SimilarityOps {
     * (opt-out/contamination/licensing without a rebuild): the ids land
     * as a sibling TOMBSTONE table `<table>__tombstones` (append mode,
     * in-batch deduplicated, O(ids)); [[lshSearchIndexed]] anti-joins it
-    * when present (broadcast — bounded by the between-compactions
-    * opt-out stream, same contract as the IVF-PQ leg), and
-    * [[compactLshIndex]] physically drops the tombstoned rows and
-    * retires the tombstones. Deleting an absent id is a no-op; repeat
-    * deletes accumulate; a deleted id takes effect at the NEXT query.
+    * when present (broadcast — bounded by the opt-out stream, same
+    * contract as the IVF-PQ leg). Deleting an absent id is a no-op;
+    * repeat deletes accumulate; a deleted id takes effect at the NEXT
+    * query.
     *
     * Tombstoning removes a row from the SERVED candidate set — it does
     * not re-run the `maxBucket` occupancy cap, so rows the deleted ones
     * capped out at write time stay out until a full [[writeLshIndex]]
-    * rebuild (the same rows-untouched contract as compaction; the cap
-    * is a write-time property, never a serve-time one).
+    * rebuild (the cap is a write-time property, never a serve-time one).
     */
   def deleteFromLshIndex(
       ids: DataFrame, table: String, idCol: String = "vec_id"): Unit =
@@ -696,63 +655,13 @@ object SimilarityOps {
       .write.mode(org.apache.spark.sql.SaveMode.Append)
       .format("parquet").saveAsTable(s"${table}__tombstones")
 
-  /** The table's pending tombstones, if a delete has run since the
-    * last compaction.
-    */
+  /** The table's tombstones, if a delete has run on it. */
   private def lshTombstones(
       spark: org.apache.spark.sql.SparkSession,
       table: String): Option[DataFrame] =
     if (spark.catalog.tableExists(s"${table}__tombstones"))
       Some(spark.table(s"${table}__tombstones"))
     else None
-
-  /** COMPACT a standing [[writeLshIndex]] table: physically apply
-    * pending [[deleteFromLshIndex]] tombstones (and consolidate
-    * [[appendLshIndex]]'s per-append file sets) by rewriting the index
-    * as one bucketed table — rows otherwise untouched, so served
-    * results are identical by construction and the rewrite costs one
-    * O(index-rows) pass on the maintenance cadence. The rewrite goes
-    * through a staging table and a rename swap (the
-    * [[graft.ops.PqOps.ivfPqCompact]] discipline on catalog tables):
-    * a surviving `__compacting` table is a discarded partial rewrite;
-    * the index missing with `__old` present is a crash between the two
-    * swap renames, rolled back; `__old` beside the index is a crash
-    * after the swap, discarded. Tombstones are dropped strictly LAST —
-    * at no crash point can a deleted id resurface (an already-applied
-    * tombstone left by a post-swap crash is a serving no-op retired by
-    * the next compaction).
-    */
-  def compactLshIndex(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      numFileBuckets: Int = 32): Unit = {
-    val tmp = s"${table}__compacting"
-    val old = s"${table}__old"
-    val tomb = s"${table}__tombstones"
-    if (spark.catalog.tableExists(tmp))
-      spark.sql(s"DROP TABLE $tmp")
-    if (!spark.catalog.tableExists(table) && spark.catalog.tableExists(old))
-      spark.sql(s"ALTER TABLE $old RENAME TO $table")
-    else if (spark.catalog.tableExists(old))
-      spark.sql(s"DROP TABLE $old")
-    require(spark.catalog.tableExists(table),
-      s"compactLshIndex: no index table $table")
-    val src = lshTombstones(spark, table) match {
-      case Some(t) =>
-        spark.table(table)
-          .join(broadcast(t.select(col("id"))), Seq("id"), "left_anti")
-          // a USING anti-join fronts the key; the stored schema must
-          // stay (band, bucket, id, vec, buckets)-stable
-          .select(spark.table(table).columns.map(col).toIndexedSeq: _*)
-      case None => spark.table(table)
-    }
-    graft.io.Sources.writeBucketed(src, tmp, numFileBuckets,
-      Seq("band", "bucket"))
-    spark.sql(s"ALTER TABLE $table RENAME TO $old")
-    spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    spark.sql(s"DROP TABLE $old")
-    if (spark.catalog.tableExists(tomb)) spark.sql(s"DROP TABLE $tomb")
-    ()
-  }
 
   /** Search a [[writeLshIndex]] table: bands/planes/dim must match the
     * write (signatures are deterministic, so matching parameters mean

@@ -376,20 +376,6 @@ object SketchOps {
       .select(explode(col("ks")).as("h"))
   }
 
-  /** Distinct-count estimate from a [[kmvSketch]] frame: exact `n`
-    * while the sketch is unsaturated (`n < k` — every distinct value
-    * is IN the buffer), else the order-statistic estimator
-    * `(k-1) / (h_k / 2^60)` — the k-th smallest of uniform hashes
-    * sits at ≈ k/(D+1) of the range. One row `(n_seen, est)`; the
-    * sketch is ≤ k rows so this is constant work.
-    */
-  def kmvEstimate(sketch: DataFrame, k: Int): DataFrame =
-    sketch.agg(count(lit(1)).as("n_seen"), max(col("h")).as("hk"))
-      .select(col("n_seen"),
-        when(col("n_seen") < k, col("n_seen").cast("double"))
-          .otherwise(lit((k - 1).toDouble) * lit(Hash60Range) /
-            col("hk").cast("double")).as("est"))
-
   /** Set-overlap estimates between two [[kmvSketch]] frames built with
     * the SAME `k` and seed (Beyer et al. 2007 §4): the k smallest of
     * the combined buffers form K(A∪B) (the k-min of a union is the

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew mitigation utilities. AQE's skew-join handling (enabled by
@@ -40,29 +40,4 @@ object SkewOps {
     // deterministic (oracle contract, q125)
     df.groupBy(key).count()
       .orderBy(col("count").desc, col(key)).limit(topN)
-
-  /** [[saltedJoin]] with the salt factor PICKED from the data: probe
-    * the hottest key ([[keyHistogram]] top-1 — one aggregate + a 1-row
-    * collect), aim for ≤ `targetPerTask` rows of that key per task,
-    * clamp to `maxSalts`, and fall back to the PLAIN join when no key
-    * is hot — closing the skew loop (diagnose → decide → mitigate) in
-    * one call. The result contract is the plain join's (q126's
-    * equivalence proof applies for any salt factor, and the decision
-    * is deterministic given the data). Returns (joined frame, salts
-    * used — 1 means unsalted). At 100 TB run the probe on a sample and
-    * pass the decision explicitly; this convenience form pays one
-    * extra scan of `big` for the histogram.
-    */
-  def autoSaltedJoin(
-      big: DataFrame, small: DataFrame, key: String,
-      targetPerTask: Long = 1000000L, maxSalts: Int = 32,
-      joinType: String = "inner"): (DataFrame, Int) = {
-    require(targetPerTask > 0 && maxSalts >= 1)
-    val top = keyHistogram(big, key, topN = 1).collect()
-    val hottest = if (top.isEmpty) 0L else top(0).getLong(1)
-    val salts = math.min(maxSalts.toLong,
-      math.max(1L, (hottest + targetPerTask - 1) / targetPerTask)).toInt
-    if (salts <= 1) (big.join(small, Seq(key), joinType), 1)
-    else (saltedJoin(big, small, key, salts, joinType), salts)
-  }
 }

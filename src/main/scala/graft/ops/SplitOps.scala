@@ -109,57 +109,6 @@ object SplitOps {
     df.orderBy(PortableHash.md5Long(col(idCol), lit(seed)), col(idCol)).limit(k)
   }
 
-  /** Weighted exact-k sampling WITHOUT replacement (Efraimidis &
-    * Spirakis 2006 A-ES): the `k` rows with the smallest
-    * `-ln(u) / w` priority, where `u` is the key-derived uniform of
-    * (idCol, seed) — equivalent to ordering by `u^(1/w)` descending,
-    * which draws each subset with the exact weighted
-    * without-replacement probabilities. The weighted companion of
-    * [[sampleExactK]]: same TakeOrderedAndProject shape (per-partition
-    * partial top-k, k-row driver merge, no global sort), same
-    * repartition-proof determinism.
-    *
-    * ENGINE-side only (no oracle row): the priority involves `ln`,
-    * and the sampling family's oracle rule is no transcendentals in
-    * MEMBERSHIP decisions (a last-ulp divergence between engines
-    * could flip the k-th selection — see [[weightedSample]]'s
-    * scaladoc). Determinism is instead pinned by a differential spec
-    * against an independent Scala fold of the identical arithmetic.
-    * Rows with weight <= 0 or null never qualify.
-    */
-  def weightedSampleExactK(
-      df: DataFrame, idCol: String, weight: Column, k: Int,
-      seed: Long = 42L): DataFrame = {
-    require(k >= 0, "weightedSampleExactK: k must be non-negative")
-    val u = PortableHash.uniform01(col(idCol), lit(seed))
-    // u = 0 would make -ln(u) infinite-but-valid; guard the exact-0
-    // draw (probability 2^-60) to keep the priority finite and ordered
-    val priority = -log(greatest(u, lit(java.lang.Double.MIN_VALUE))) / weight
-    df.filter(weight.isNotNull && weight > 0)
-      .orderBy(priority, col(idCol))
-      .limit(k)
-  }
-
-  /** Per-stratum [[weightedSampleExactK]]: `min(k, |stratum|)` rows
-    * per `strataCol` group by the same A-ES priority, ranked in a
-    * stratum-PARTITIONED window (never global) — the full sampling
-    * matrix closes: exact budget × weights × strata. Same engine-only
-    * contract as the global form (transcendental priority ⇒ spec
-    * differential, no oracle row).
-    */
-  def weightedSampleExactKStratified(
-      df: DataFrame, idCol: String, strataCol: String, weight: Column,
-      k: Int, seed: Long = 42L): DataFrame = {
-    require(k >= 0, "weightedSampleExactKStratified: k must be non-negative")
-    val u = PortableHash.uniform01(col(idCol), lit(seed))
-    val priority = -log(greatest(u, lit(java.lang.Double.MIN_VALUE))) / weight
-    val w = Window.partitionBy(strataCol).orderBy(priority, col(idCol))
-    df.filter(weight.isNotNull && weight > 0)
-      .withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") <= k)
-      .drop("__rk")
-  }
-
   /** Per-stratum [[sampleExactK]]: exactly `min(k, |stratum|)` rows
     * from every `strataCol` group (the balanced-eval-set carve: "200
     * docs per language"). Same key-derived hash order, so per-stratum

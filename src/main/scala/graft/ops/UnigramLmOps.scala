@@ -122,7 +122,7 @@ object UnigramLmOps {
   }
 
   /** Encode a corpus with a trained model: segment the DISTINCT-word
-    * dictionary once ([[BpeOps.bpeEncode]]'s shape — the expression
+    * dictionary once ([[BpeOps.bpeFertility]]'s shape — the expression
     * runs |dictionary| times, not |corpus| times) and broadcast-join
     * the per-word piece arrays back onto the exploded corpus. Output:
     * (idCol, pieces array per document, in word order flattened).

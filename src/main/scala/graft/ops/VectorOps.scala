@@ -55,10 +55,14 @@ object VectorOps {
   def meanFirstK(a: Column, k: Int): Column =
     arraySumD(slice(a, 1, k)) / k
 
-  /** Masked mean-pool with an explicit 0/1 mask column. */
+  /** Masked mean-pool with an explicit 0/1 mask column (OP-29,
+    * reference `src/model.py:48-49`): `sum(x*mask)/sum(mask)`, both
+    * folded left-to-right in double. An all-zero mask pools nothing and
+    * gives NULL (DuckDB's `x/0`), never an ANSI DIVIDE_BY_ZERO failure.
+    */
   def maskedMean(a: Column, mask: Column): Column =
     aggregate(zip_with(a, mask, (x, m) => x.cast("double") * m.cast("double")),
-      lit(0.0), (acc, x) => acc + x) / arraySumD(mask)
+      lit(0.0), (acc, x) => acc + x) / nullif(arraySumD(mask), lit(0.0))
 
   /** Elementwise sum of two logit vectors (ensemble fan-in,
     * reference `src/inference_kfold.py:86-89`). Element type preserved.
@@ -80,9 +84,6 @@ object VectorOps {
     when(size(layers) < k, lit(null))
       .otherwise(transform(summed, x => x / k))
   }
-
-  /** Elementwise sum across N vectors. */
-  def vecAddAll(vs: Seq[Column]): Column = vs.reduce(vecAdd)
 
   /** Pad a frame matrix (array<array<float>>) to `maxFrames` rows with
     * zero-vectors of `dim`, and emit the 0/1 mask — reference
@@ -128,14 +129,6 @@ object VectorOps {
     val exps = transform(a, x => exp(x.cast("double") - m))
     val z = aggregate(exps, lit(0.0), (acc, x) => acc + x)
     transform(exps, e => e / z)
-  }
-
-  /** Log-softmax (numerically stable form). */
-  def logSoftmax(a: Column): Column = {
-    val m = array_max(transform(a, _.cast("double")))
-    val z = aggregate(transform(a, x => exp(x.cast("double") - m)),
-      lit(0.0), (acc, x) => acc + x)
-    transform(a, x => x.cast("double") - m - log(z))
   }
 
   /** erf by the Abramowitz–Stegun 7.1.26 polynomial (|err| < 1.5e-7) —
@@ -239,27 +232,12 @@ object VectorOps {
 
   /** Seeded pseudo-random subsample (train path, reference
     * `src/data_helper.py:173-178`): take `maxFrames` indices keyed by a
-    * deterministic per-(key, index) hash, re-sorted ascending to keep
+    * deterministic per-(key, index) draw, re-sorted ascending to keep
     * temporal order. Row-key-seeded so results survive repartitioning
-    * (SURVEY §7.4.2: key-derived randomness only).
-    */
-  def seededSample(frames: Column, key: Column, maxFrames: Int, seed: Long): Column = {
-    // per-element index lambda — empty-safe (sequence(0, n-1) is
-    // [0, -1] for n = 0, two phantom indices)
-    val scored = transform(frames,
-      (_, i) => struct(xxhash64(key, i, lit(seed)).as("h"), i.as("i")))
-    val chosen = slice(array_sort(scored), 1, maxFrames)
-    val idx = array_sort(transform(chosen, s => s.getField("i")))
-    transform(idx, i => element_at(frames, i + 1))
-  }
-
-  /** ORACLE-portable twin of [[seededSample]] (the MlmMaskMd5 /
-    * dedupKeepersPortable honesty pattern): the SAME select-sort-gather
-    * plan with the per-(key, index) draw from the md5 family DuckDB
-    * replays (`md5Long("key#i#seed")`) instead of production xxhash64 —
-    * so the key-derived DRAW itself, not just the plan, gets a
-    * row-level cross-engine oracle (q108). Production calls
-    * [[seededSample]].
+    * (SURVEY §7.4.2: key-derived randomness only). The draw is the md5
+    * family DuckDB replays (`md5Long("key#i#seed")`), so the draw
+    * itself, not just the plan, gets a row-level cross-engine oracle
+    * (q108).
     */
   def seededSamplePortable(
       frames: Column, key: Column, maxFrames: Int, seed: Long): Column = {

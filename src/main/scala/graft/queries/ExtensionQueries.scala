@@ -2562,8 +2562,8 @@ object ExtensionQueries {
       |FROM s""".stripMargin
 
   // --------------------------------------------------------------- q108
-  /** OP-20 (random frame subsample) oracle row: the md5-portable twin
-    * of [[graft.ops.VectorOps.seededSample]] over the embeddings table
+  /** OP-20 (random frame subsample) oracle row:
+    * [[graft.ops.VectorOps.seededSamplePortable]] over the embeddings table
     * — each vector's 6-element seeded draw (seed 7), flattened to
     * (vec_id, position, value) rows. DuckDB replays the identical
     * score-sort-gather: md5Long("key#i#seed") per index, keep the 6
@@ -4033,7 +4033,7 @@ object ExtensionQueries {
     * predict `|orders ⋈ lineitem|` on the order key from two
     * constant-size frequency sketches WITHOUT running the join — the
     * planning primitive behind salt-or-broadcast decisions
-    * ([[graft.ops.SkewOps.autoSaltedJoin]] probes the key histogram;
+    * ([[graft.ops.SkewOps.keyHistogram]] probes the hot keys;
     * this answers the cheaper "how big is the output?" question at
     * any corpus scale). All cells and products are integer, so the
     * DuckDB replay is exact; the estimate is an upper bound on the

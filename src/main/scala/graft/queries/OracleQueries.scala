@@ -264,8 +264,7 @@ object OracleQueries {
     // domain (range-partitioned sort, parallel) — value-identical to
     // `DENSE_RANK() OVER (ORDER BY p_type) - 1` on distinct values but
     // WITHOUT the unpartitioned WindowExec that coalesces to a single
-    // task and warns. Same construction as CategoryOps.dimFromData
-    // (which additionally guards the domain size for unbounded inputs).
+    // task and warns.
     val distinctTypes = p.select("p_type").distinct().orderBy("p_type")
     val dimSchema = StructType(distinctTypes.schema.fields :+
       StructField("lv2id", IntegerType, nullable = false))

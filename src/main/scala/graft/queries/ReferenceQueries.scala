@@ -329,6 +329,34 @@ object ReferenceQueries {
       | CAST(length(replace(text, ' ', '')) AS INT) AS n_stripped
       |FROM documents""".stripMargin
 
+  // --------------------------------------------------------------- q256
+  /** OP-29 masked mean-pool ([[graft.ops.VectorOps.maskedMean]],
+    * reference `src/model.py:48-49`) with an explicit 0/1 mask derived
+    * from the key: stride `s = vec_id % 4` keeps every s-th element, and
+    * `s = 0` is the all-zero mask. So the fixture holds full (s = 1),
+    * partial and all-zero masks; the all-zero rows pin 0/0 → NULL
+    * against DuckDB's `x/0`.
+    */
+  def q256(spark: SparkSession, dir: String): DataFrame = {
+    val stride = col("vec_id") % 4
+    val mask = transform(sequence(lit(0), lit(63)),
+      i => (i % greatest(stride, lit(1)) === 0 && stride > 0).cast("int"))
+    Tables.embeddings(spark, dir).select(col("vec_id"),
+      VectorOps.maskedMean(col("embedding"), mask).as("masked_mean"))
+  }
+
+  val q256Sql: String =
+    """WITH m AS (
+      | SELECT vec_id, embedding,
+      |  list_transform(generate_series(0, 63),
+      |   i -> CAST(i % greatest(vec_id % 4, 1) = 0 AND vec_id % 4 > 0 AS INTEGER)) AS mask
+      | FROM embeddings)
+      |SELECT vec_id,
+      | list_sum(list_transform(generate_series(1, 64),
+      |   i -> CAST(embedding[i] AS DOUBLE) * CAST(mask[i] AS DOUBLE)))
+      |   / list_sum(list_transform(mask, x -> CAST(x AS DOUBLE))) AS masked_mean
+      |FROM m""".stripMargin
+
   val all: Seq[(String, ((SparkSession, String) => DataFrame, String))] = Seq(
     "q31_stratified_split" -> ((q31 _, q31Sql)),
     "q32_kfold" -> ((q32 _, q32Sql)),
@@ -341,5 +369,6 @@ object ReferenceQueries {
     "q48_last4_pool" -> ((q48 _, q48Sql)),
     "q49_seeded_shuffle" -> ((q49 _, q49Sql)),
     "q50_chunk_assign" -> ((q50 _, q50Sql)),
-    "q51_strip_spaces" -> ((q51 _, q51Sql)))
+    "q51_strip_spaces" -> ((q51 _, q51Sql)),
+    "q256_masked_mean" -> ((q256 _, q256Sql)))
 }

@@ -106,74 +106,6 @@ object StreamingOps {
       .select(col("user_id"), col("n_events"),
         col("session_window.start").as("session_start"))
 
-  /** Streaming exact dedup over a document stream: one doc per
-    * normalized text (lower(trim), same key as
-    * [[graft.ops.DedupOps.exactDupGroups]]) is emitted — the earlier
-    * micro-batch wins across batches; within a micro-batch the surviving
-    * row is arbitrary (engine contract of `dropDuplicates*`).
-    * `dropDuplicatesWithinWatermark` keeps one state row per
-    * distinct key and EVICTS it once the watermark passes — so state is
-    * bounded by the watermark horizon, not corpus size, which is what
-    * makes this runnable forever on an ingest firehose. Duplicates
-    * farther apart than the watermark delay can both be emitted (the
-    * documented streaming contract); the batch operator remains the
-    * exact-final-answer path.
-    *
-    * Works on a `readStream` DataFrame (append mode) and, semantics-
-    * pinned by the spec, on a batch DataFrame via `dropDuplicates` on
-    * the same key.
-    */
-  def streamingExactDedup(
-      docs: DataFrame, textCol: String, tsCol: String, watermark: String): DataFrame = {
-    val keyed = docs.withColumn("__norm_h",
-      xxhash64(graft.ops.DedupOps.normText(col(textCol))))
-    val deduped =
-      if (docs.isStreaming)
-        keyed.withWatermark(tsCol, watermark).dropDuplicatesWithinWatermark("__norm_h")
-      else keyed.dropDuplicates("__norm_h")
-    deduped.drop("__norm_h")
-  }
-
-  /** Streaming NEAR-dedup by SimHash signature equality: one doc per
-    * 64-bit [[graft.functions.SimHash64]] signature within the
-    * watermark horizon — the streaming counterpart of the batch
-    * decision paths ([[graft.ops.DedupOps.simHashKeepers]]). Signature
-    * EQUALITY (Hamming 0) is the streamable contract: banded
-    * Hamming-neighborhood matching needs a rep-per-bucket state join
-    * that `dropDuplicates*` cannot express, so docs a few bits apart
-    * both pass here — the batch operator remains the recall path; this
-    * one bounds state to one row per distinct signature and catches
-    * exact and boilerplate-identical near-dups on an ingest firehose.
-    * Same first-arrival-wins / watermark-eviction contract as
-    * [[streamingExactDedup]]; works on a batch DataFrame via
-    * `dropDuplicates` on the same signature.
-    */
-  /** Streaming curation gate — the STATELESS curation stages composed
-    * as one stream-safe projection + filter: quality-score floor,
-    * repetition (top-bigram) ceiling, PII scrub, weighted Bernoulli
-    * down-sampling. Every stage is per-row pure column algebra (no
-    * aggregation state, key-derived randomness), so the transform runs
-    * IDENTICALLY on a batch frame and an ingest `readStream` — chain
-    * [[streamingExactDedup]]/[[streamingSimHashDedup]] after it for the
-    * stateful dedup tail. Corpus-level stages (frequent-span sets, eval
-    * gram sets, bucket caps) are precomputed batch-side and joined as
-    * static broadcasts at stream time — the
-    * [[graft.ops.DedupOps.corpusBucketReps]] deployment pattern.
-    */
-  def streamingCurationGate(
-      docs: DataFrame, textCol: String, idCol: String,
-      minQuality: Double, maxTopBigram: Double,
-      sampleProb: Double, seed: Long = 42L): DataFrame = {
-    import graft.ops.{CurationOps, TextAnalysis}
-    docs
-      .filter(TextAnalysis.qualityScore(col(textCol)) >= minQuality &&
-        TextAnalysis.repetitionSignals(col(textCol))
-          .getField("top_bigram_frac") <= maxTopBigram)
-      .withColumn(textCol, CurationOps.scrubPii(col(textCol)))
-      .filter(graft.core.PortableHash.uniform01(col(idCol), lit(seed)) <
-        lit(sampleProb))
-  }
-
   /** STREAMING DRIFT GATE: per-window categorical PSI of `catCol`
     * against a STATIC reference distribution — the production monitor
     * that pages before a bad ingest batch lands ("did the language mix
@@ -226,18 +158,6 @@ object StreamingOps {
       aggregate(terms, lit(0.0), (acc, t) => acc + t).as("psi_total"))
   }
 
-  def streamingSimHashDedup(
-      docs: DataFrame, textCol: String, tsCol: String, watermark: String): DataFrame = {
-    val keyed = docs.withColumn("__sig",
-      graft.functions.SimHash64.simHash64(
-        graft.ops.TextOps.whitespaceTokenize(col(textCol))))
-    val deduped =
-      if (docs.isStreaming)
-        keyed.withWatermark(tsCol, watermark).dropDuplicatesWithinWatermark("__sig")
-      else keyed.dropDuplicates("__sig")
-    deduped.drop("__sig")
-  }
-
   /** Rows for [[streamingExactDedupOptOut]]: one tagged event per doc
     * or opt-out (kind 0 = ingest, 1 = removal), keyed by the normalized
     * content hash; output is the kept ingest rows' (id, ord).
@@ -281,8 +201,8 @@ object StreamingOps {
     * the spec asserts state rows = live contents EXACTLY. With the
     * [[streamingEma]] TTL trio (`tsCol`/`watermarkDelay`/`idleTtlMs`)
     * idle contents are additionally watermark-evicted (the
-    * run-forever bound: state tracks the active horizon like
-    * [[streamingExactDedup]]'s `dropDuplicatesWithinWatermark`);
+    * run-forever bound: state tracks the active horizon, as
+    * `dropDuplicatesWithinWatermark` does);
     * without it, state = live contents ever seen (the exact standing
     * contract). Works identically on batch frames (state simply never
     * persists), which the differential spec uses.
@@ -517,10 +437,9 @@ object StreamingOps {
     * Accumulation contract: sums here fold in DOUBLE in arrival order
     * (streaming cannot re-sort the past), so this is the monitoring
     * path; [[graft.ops.TrendOps.twap]]'s decimal-exact batch fold
-    * remains the oracle path (the streamingSimHashDedup honesty
-    * pattern). With in-order files the running value at each key's
-    * last event matches the batch TWAP to double-fold tolerance,
-    * which the spec pins. Same-timestamp events fold in `ordCol`
+    * remains the oracle path. With in-order files the running value
+    * at each key's last event matches the batch TWAP to double-fold
+    * tolerance, which the spec pins. Same-timestamp events fold in `ordCol`
     * order — the batch operator's (ts, event_id) tiebreak, so the two
     * paths cannot diverge on same-instant bursts. While every closed
     * interval so far has ZERO total duration (same-instant prefix:

@@ -51,7 +51,6 @@ class LocalFsProcessSpec extends AnyFunSuite {
         .start()
       q.awaitTermination()
       Sources.writeSharded(df, "id", 10, tmp.resolve("shards").toString)
-      Sources.writeWithManifest(df, tmp.resolve("manifest").toString)
       q.recentProgress
     } finally rec.stop()
     val jfr = tmp.resolve("proc.jfr")

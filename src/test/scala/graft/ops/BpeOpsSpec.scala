@@ -144,15 +144,4 @@ class BpeOpsSpec extends AnyFunSuite {
       assert(math.abs(r._6 - nc.toDouble / nt) < 1e-12)
     }
   }
-
-  test("bpeEncode: tokens concatenate back to the word stream") {
-    val df = Seq((1L, "hug hug pun"), (2L, "pug hugs")).toDF("doc_id", "text")
-    val (merges, _) = BpeOps.bpeTrain(df, "text", 3)
-    val enc = BpeOps.bpeEncode(df, "text", "doc_id", merges)
-      .as[(Long, Seq[String])].collect().toMap
-    assert(enc(1L).mkString == "hughugpun")
-    assert(enc(2L).mkString == "pughugs")
-    // a learned merge is actually used (some token longer than 1 char)
-    assert(enc(1L).exists(_.length > 1))
-  }
 }

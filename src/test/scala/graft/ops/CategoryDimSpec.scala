@@ -1,13 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
 
 /** OP-14 golden test on the REAL reference dimension: all 200 codes of
   * `src/category_id_map.py:1-27`, round-tripped through the broadcast
-  * maps, plus the dimFromData dictionary-encode guard.
+  * maps.
   */
 class CategoryDimSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
@@ -43,20 +42,11 @@ class CategoryDimSpec extends AnyFunSuite {
       assert(r.getInt(2) == CategoryOps.referenceCategoryCodes.indexOf(code), "lv2id = list position")
       assert(r.getInt(3) == code.take(2).toInt, "lv1id = int(code[0:2])")
     }
-    // lv2id -> lv1id without strings agrees with the prefix rule
-    val lv1 = CategoryOps.lv2ToLv1(withIds.select("lv2id"), dim, "lv2id")
+    // lv2id -> lv1id without strings: attachIds brings lv1id from the
+    // dim, and it agrees with the prefix rule
+    val lv1 = withIds.select("lv2id", "lv1id")
       .as[(Int, Int)].collect().toMap
     assert(lv1.size == 200 && lv1.forall { case (lv2, l1) =>
       l1 == CategoryOps.referenceCategoryCodes(lv2).take(2).toInt })
-  }
-
-  test("dimFromData: dense sorted ids without a window; cardinality guard trips") {
-    val df = Seq("1002", "0300", "1002", "0101", "0300").toDF("code")
-    val dim = CategoryOps.dimFromData(df, "code").orderBy("lv2id").collect()
-    assert(dim.map(_.getString(0)).toSeq == Seq("0101", "0300", "1002"))
-    assert(dim.map(_.getInt(1)).toSeq == Seq(0, 1, 2))
-    assert(dim.map(_.getInt(2)).toSeq == Seq(1, 3, 10))
-    val big = (0 until 50).map(i => f"$i%04d").toDF("code")
-    assertThrows[IllegalArgumentException](CategoryOps.dimFromData(big, "code", maxCodes = 10))
   }
 }

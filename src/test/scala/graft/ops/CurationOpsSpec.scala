@@ -60,9 +60,16 @@ class CurationOpsSpec extends AnyFunSuite {
     (101L, "totally unrelated benchmark question here")
   ).toDF("doc_id", "text")
 
+  /** Train ids sharing an n-gram with `evalSet`, via its gram set. */
+  private def contaminatedIds(
+      t: org.apache.spark.sql.DataFrame, n: Int,
+      gramKeys: (org.apache.spark.sql.Column, Int) => org.apache.spark.sql.Column =
+        CurationOps.defaultGramKeys) =
+    CurationOps.contaminatedIdsWithGramSet(t,
+      CurationOps.evalGramSet(evalSet, "text", n, gramKeys), "text", "doc_id", n, gramKeys)
+
   test("contaminatedIds flags exactly the overlapping train docs") {
-    val ids = CurationOps.contaminatedIds(train, evalSet, "text", "doc_id", n = 3)
-      .as[Long].collect().toSet
+    val ids = contaminatedIds(train, n = 3).as[Long].collect().toSet
     assert(ids == Set(1L, 4L))
   }
 
@@ -75,7 +82,7 @@ class CurationOpsSpec extends AnyFunSuite {
   test("a doc is flagged only for full n-gram matches, not shared words") {
     // shares words "quick" and "fox" but no 3-gram
     val t = Seq((9L, "fox saw a quick result")).toDF("doc_id", "text")
-    assert(CurationOps.contaminatedIds(t, evalSet, "text", "doc_id", 3).count() == 0L)
+    assert(contaminatedIds(t, 3).count() == 0L)
   }
 
   test("eval gram set joins by broadcast; no text attribute crosses an exchange") {
@@ -234,14 +241,13 @@ class CurationOpsSpec extends AnyFunSuite {
   }
 
   test("gramKeys is pluggable: portable md5/string forms match the fused default") {
-    val a = CurationOps.contaminatedIds(train, evalSet, "text", "doc_id", 3)
-      .as[Long].collect().toSet
-    val b = CurationOps.contaminatedIds(train, evalSet, "text", "doc_id", 3,
+    val a = contaminatedIds(train, 3).as[Long].collect().toSet
+    val b = contaminatedIds(train, 3,
         gramKeys = (t, n) => transform(
           array_distinct(CurationOps.ngramList(t, n)),
           g => graft.core.PortableHash.md5Long(g)))
       .as[Long].collect().toSet
-    val c = CurationOps.contaminatedIds(train, evalSet, "text", "doc_id", 3,
+    val c = contaminatedIds(train, 3,
         gramKeys = (t, n) => array_distinct(CurationOps.ngramList(t, n)))
       .as[Long].collect().toSet
     assert(a == b && b == c)

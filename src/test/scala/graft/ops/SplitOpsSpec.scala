@@ -54,63 +54,6 @@ class SplitOpsSpec extends AnyFunSuite {
     assert(a.sorted == (0L until 100L))
   }
 
-  test("weightedSampleExactK: differential vs an independent A-ES fold; weight bias; invariance") {
-    import org.apache.spark.sql.functions._
-    val n = 2000
-    val df = spark.range(0, n).toDF("id")
-      .withColumn("w", when(col("id") < 100, 10.0).otherwise(1.0))
-    val k = 200
-    val got = SplitOps.weightedSampleExactK(df, "id", col("w"), k, seed = 7L)
-      .select("id").as[Long].collect().toSet
-    assert(got.size == k)
-
-    // independent Scala replica of the identical arithmetic
-    def u01(id: Long, seed: Long): Double = {
-      val d = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$id#$seed".getBytes("UTF-8"))
-      val top64 = java.nio.ByteBuffer.wrap(d.take(8)).getLong
-      ((top64 >>> 4) & ((1L << 60) - 1)).toDouble / 1152921504606846976.0
-    }
-    val want = (0L until n).map { id =>
-      val w = if (id < 100) 10.0 else 1.0
-      val p = -math.log(math.max(u01(id, 7L), java.lang.Double.MIN_VALUE)) / w
-      (p, id)
-    }.sorted.take(k).map(_._2).toSet
-    assert(got == want, "engine A-ES selection != independent Scala fold")
-
-    // 10x-weighted ids (5% of rows) must be strongly overrepresented
-    val heavy = got.count(_ < 100)
-    assert(heavy > 50, s"only $heavy of 100 heavy ids in a $k-sample")
-
-    // repartition-proof
-    val got2 = SplitOps.weightedSampleExactK(
-      df.repartition(13), "id", col("w"), k, 7L).select("id").as[Long].collect().toSet
-    assert(got2 == got)
-
-    // zero/negative/null weights never qualify
-    val guarded = SplitOps.weightedSampleExactK(
-      df.withColumn("w", when(col("id") < 1900, lit(0.0)).otherwise(col("w"))),
-      "id", col("w"), 150, 7L).select("id").as[Long].collect()
-    assert(guarded.length == 100 && guarded.forall(_ >= 1900))
-  }
-
-  test("weightedSampleExactKStratified: per-stratum selection equals per-group global form") {
-    import org.apache.spark.sql.functions._
-    val df = spark.range(0, 900).toDF("id")
-      .withColumn("g", (col("id") % 3).cast("int"))
-      .withColumn("w", (col("id") % 5 + 1).cast("double"))
-    val got = SplitOps.weightedSampleExactKStratified(df, "id", "g", col("w"), 40, 9L)
-      .select("g", "id").as[(Int, Long)].collect().groupBy(_._1)
-      .view.mapValues(_.map(_._2).toSet).toMap
-    for (g <- 0 to 2) {
-      val direct = SplitOps.weightedSampleExactK(
-        df.filter(col("g") === g), "id", col("w"), 40, 9L)
-        .select("id").as[Long].collect().toSet
-      assert(got(g) == direct, s"stratum $g diverged from the global form")
-      assert(got(g).size == 40)
-    }
-  }
-
   test("weightedSample: deterministic, repartition-proof, tracks the probability") {
     val big = spark.range(0, 4000).toDF("id")
     val kept = SplitOps.weightedSample(big, "id", lit(0.3), seed = 5L)

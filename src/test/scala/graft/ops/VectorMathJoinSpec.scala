@@ -19,14 +19,6 @@ class VectorMathSpec extends AnyFunSuite {
     got(0).zip(expect.map(_ / z)).foreach { case (a, b) => assert(math.abs(a - b) < 1e-12) }
   }
 
-  test("logSoftmax = log(softmax) within tolerance") {
-    val df = Seq(Seq(0.5f, -1.5f, 2.5f)).toDF("v")
-    val (ls, s) = df.select(
-      VectorOps.logSoftmax(col("v")).as("ls"),
-      VectorOps.softmax(col("v")).as("s")).as[(Seq[Double], Seq[Double])].head()
-    ls.zip(s).foreach { case (l, p) => assert(math.abs(l - math.log(p)) < 1e-12) }
-  }
-
   test("gelu matches erf-gelu reference values") {
     // gelu(0)=0, gelu(large)≈x, gelu(-large)≈0, gelu(1)≈0.8413*1
     val df = Seq(0.0, 1.0, 3.0, -3.0).toDF("x")

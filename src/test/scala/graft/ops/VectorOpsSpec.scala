@@ -58,7 +58,7 @@ class VectorOpsSpec extends AnyFunSuite {
   test("seededSample: deterministic, sorted ascending, correct size") {
     val df = Seq.tabulate(3)(r => (s"id$r", (0 until 50).map(_.toFloat).map(Seq(_))))
       .toDF("id", "frames")
-    val sample = VectorOps.seededSample(col("frames"), col("id"), 32, seed = 7L)
+    val sample = VectorOps.seededSamplePortable(col("frames"), col("id"), 32, seed = 7L)
     val a = df.select(sample.as("s")).as[Seq[Seq[Float]]].collect()
     val b = df.repartition(3).select(sample.as("s")).as[Seq[Seq[Float]]].collect().toSet
     a.foreach { s =>
@@ -86,13 +86,6 @@ class VectorOpsSpec extends AnyFunSuite {
     assert(c == 0.0)
   }
 
-  test("vecAddAll sums logit vectors elementwise (ensemble OP-27)") {
-    val df = Seq((Seq(1.0f, 2.0f), Seq(10.0f, 20.0f), Seq(100.0f, 200.0f))).toDF("a", "b", "c")
-    val got = df.select(
-      VectorOps.vecAddAll(Seq(col("a"), col("b"), col("c"))).as("s")).as[Seq[Float]].head()
-    assert(got == Seq(111.0f, 222.0f))
-  }
-
   test("lastKLayerPool means the last k layer vectors (OP-30)") {
     val five = Seq(Seq(1.0f, 2.0f), Seq(3.0f, 4.0f), Seq(5.0f, 6.0f),
       Seq(7.0f, 8.0f), Seq(9.0f, 10.0f))
@@ -108,13 +101,16 @@ class VectorOpsSpec extends AnyFunSuite {
     val rows = Seq(
       (Seq(1.0f, 2.0f, 3.0f, 4.0f), Seq(1, 1, 1, 1)),
       (Seq(1.0f, 2.0f, 3.0f, 4.0f), Seq(1, 1, 0, 0)),
-      (Seq(0.5f, -2.0f, 100.0f, 7.25f), Seq(0, 1, 0, 1)))
+      (Seq(0.5f, -2.0f, 100.0f, 7.25f), Seq(0, 1, 0, 1)),
+      (Seq(1.0f, 2.0f, 3.0f, 4.0f), Seq(0, 0, 0, 0)))
     val got = rows.toDF("h", "m")
-      .select(VectorOps.maskedMean(col("h"), col("m"))).as[Double].collect().toSeq
+      .select(VectorOps.maskedMean(col("h"), col("m"))).as[Option[Double]].collect().toSeq
     val reference = rows.map { case (h, m) =>
-      h.zip(m).map { case (x, k) => x.toDouble * k }.sum / m.sum }
+      if (m.sum == 0) None
+      else Some(h.zip(m).map { case (x, k) => x.toDouble * k }.sum / m.sum) }
     assert(got == reference)
-    assert(got == Seq(2.5, 1.5, 2.625), "masked-out positions must not contribute")
+    assert(got == Seq(Some(2.5), Some(1.5), Some(2.625), None),
+      "masked-out positions must not contribute; an all-zero mask (0/0) pools to NULL")
   }
 
   // ------------------------------------------------ random projection

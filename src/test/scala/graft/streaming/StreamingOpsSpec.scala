@@ -325,132 +325,6 @@ class StreamingOpsSpec extends AnyFunSuite {
       s"closed sessions must be emitted once with batch-twin counts, got $emitted")
   }
 
-  test("streaming exact dedup: first arrival wins, same keys as batch dropDuplicates") {
-    import java.sql.Timestamp
-    import org.apache.spark.sql.types._
-    val streamDir = Files.createTempDirectory("dedup-stream").toFile.getAbsolutePath
-    def ts(min: Long) = new Timestamp(min * 60L * 1000L)
-
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("ts", TimestampType)))
-
-    // the file source orders same-mtime files arbitrarily, so write each
-    // micro-batch file with an explicit name and strictly increasing
-    // mtime to pin batch order
-    def writeBatch(df: org.apache.spark.sql.DataFrame, name: String, mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("dedup-batch").toFile.getAbsolutePath
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(streamDir, name)
-      java.nio.file.Files.copy(part.toPath, dst.toPath)
-      dst.setLastModified(mtimeMs)
-    }
-
-    // file 1 (first micro-batch): two distinct keys
-    writeBatch(Seq(
-      (1L, "hello world", ts(0)),
-      (3L, "something unique", ts(10))
-    ).toDF("doc_id", "text", "ts"), "batch-1.parquet", 1000000L)
-    // file 2 (second micro-batch): a normalized duplicate of doc 1 —
-    // dropped against the first batch's state (watermark has not passed
-    // it) — plus a genuinely new doc.
-    writeBatch(Seq(
-      (2L, "HELLO WORLD  ", ts(20)),
-      (4L, "brand new material", ts(25))
-    ).toDF("doc_id", "text", "ts"), "batch-2.parquet", 2000000L)
-
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir)
-    val got = StreamingHarness.runToMemory(
-      StreamingOps.streamingExactDedup(stream, "text", "ts", "1 hour"),
-      "dedup_test", "append")
-      .select(col("doc_id"), lower(trim(col("text"))).as("k"))
-      .as[(Long, String)].collect()
-    // exactly one emitted doc per normalized key, across micro-batches
-    // (WHICH row of a dup pair survives is the engine's arbitrary pick —
-    // only the one-per-key contract is pinned)
-    assert(got.length == 3, s"expected 3 keepers, got ${got.mkString(",")}")
-    assert(got.map(_._2).toSet ==
-      Set("hello world", "something unique", "brand new material"))
-    assert(got.exists(r => r._1 == 1L || r._1 == 2L))
-
-    // batch path: same normalized-key semantics via dropDuplicates
-    val batch = spark.read.schema(schema).parquet(streamDir)
-    val batchKeys = StreamingOps.streamingExactDedup(batch, "text", "ts", "1 hour")
-      .select(lower(trim(col("text")))).as[String].collect().toSet
-    assert(batchKeys == Set("hello world", "something unique", "brand new material"))
-  }
-
-  test("streaming curation gate: stream output == batch output, PII scrubbed") {
-    import org.apache.spark.sql.types._
-    val streamDir = Files.createTempDirectory("gate-stream").toFile.getAbsolutePath
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    // realistic mix: normal docs, a repetition-bomb (top-bigram ~1.0),
-    // a PII carrier; split over two files to cross micro-batches
-    Seq((1L, "the quick brown fox jumps over the lazy dog today fine"),
-        (2L, "spam spam spam spam spam spam spam spam spam spam"),
-        (3L, "write to jane.doe@example.com for a copy of the data"))
-      .toDF("doc_id", "text").coalesce(1)
-      .write.mode("overwrite").parquet(streamDir)
-    Seq((4L, "pack my box with five dozen liquor jugs and more words here"),
-        (5L, "sphinx of black quartz judge my vow said the old judge"))
-      .toDF("doc_id", "text").coalesce(1)
-      .write.mode("append").parquet(streamDir)
-
-    def gate(df: org.apache.spark.sql.DataFrame) =
-      StreamingOps.streamingCurationGate(df, "text", "doc_id",
-        minQuality = 0.1, maxTopBigram = 0.9, sampleProb = 0.9, seed = 3L)
-
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir)
-    val got = StreamingHarness.runToMemory(gate(stream), "gate_test", "append")
-      .as[(Long, String)].collect().toMap
-    val want = gate(spark.read.schema(schema).parquet(streamDir))
-      .as[(Long, String)].collect().toMap
-    assert(got == want, "stream and batch gates must agree row-for-row")
-    // the repetition bomb is gone; the PII carrier (if sampled in) is scrubbed
-    assert(!got.contains(2L))
-    got.get(3L).foreach(t => assert(t.contains("<EMAIL>") && !t.contains("@")))
-    assert(got.nonEmpty)
-  }
-
-  test("streaming simhash dedup: one doc per signature, stream == batch keys") {
-    import java.sql.Timestamp
-    import org.apache.spark.sql.types._
-    val streamDir = Files.createTempDirectory("simdedup-stream").toFile.getAbsolutePath
-    def ts(min: Long) = new Timestamp(min * 60L * 1000L)
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("ts", TimestampType)))
-    // token-identical docs share the signature (whitespace variations
-    // collapse under tokenization); distinct-vocab docs do not
-    Seq(
-      (1L, "alpha beta gamma delta", ts(0)),
-      (2L, "alpha  beta gamma   delta", ts(5)),
-      (3L, "totally different words here", ts(10))
-    ).toDF("doc_id", "text", "ts")
-      .coalesce(1).write.mode("overwrite").parquet(streamDir)
-
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir)
-    val got = StreamingHarness.runToMemory(
-      StreamingOps.streamingSimHashDedup(stream, "text", "ts", "1 hour"),
-      "simdedup_test", "append")
-      .select("doc_id").as[Long].collect().toSet
-    assert(got.size == 2, s"one keeper per signature, got $got")
-    assert(got.contains(3L))
-    assert(got.contains(1L) || got.contains(2L))
-
-    // batch path: same signature-key semantics
-    val batch = spark.read.schema(schema).parquet(streamDir)
-    val batchIds = StreamingOps.streamingSimHashDedup(batch, "text", "ts", "1 hour")
-      .select("doc_id").as[Long].collect().toSet
-    assert(batchIds.size == 2 && batchIds.contains(3L))
-  }
-
   test("streamingTwap carries state across micro-batches; final row matches batch twap") {
     import org.apache.spark.sql.types._
     import graft.ops.TrendOps
