@@ -1,9 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{GraftSession, Tables}
+import graft.core.{GraftSession, Scratch, Tables}
 import graft.ops.{CurationOps, DedupOps, MaskingOps, PqOps, SimilarityOps}
 import graft.streaming.StreamingOps
 
@@ -68,11 +70,14 @@ object Bench {
     * time as a parquet row count); hashing the full row forces every
     * projection to actually evaluate while still aggregating to one
     * driver-side value. bit_xor, not sum: summing 64-bit hashes
-    * overflows Long under ANSI mode.
+    * overflows Long under ANSI mode. [[graft.tools.PlanProbe]] probes
+    * the same frame.
     */
-  private def force(df: DataFrame): Unit =
+  private[graft] def forcing(df: DataFrame): DataFrame =
     df.select(xxhash64(struct(df.columns.map(col): _*)).as("__h"))
-      .agg(expr("bit_xor(__h)")).collect()
+      .agg(expr("bit_xor(__h)"))
+
+  private def force(df: DataFrame): Unit = forcing(df).collect()
 
   /** Production-path scale benches. Correctness of each operator is
     * pinned by its oracle variant and/or unit spec; these rows record
@@ -258,60 +263,16 @@ object Bench {
     // the reference's actual hot loop (data_helper.py:55-57,94 runs HF
     // BertTokenizer over three text fields per row), not the whitespace
     // floor (b_ws_tokenize times that separately).
-    "b_pipeline_etl" -> ((s, dir) => {
-      import graft.ops.{TextOps, VectorOps}
-      val ids = graft.functions.WordPieceTokenize.wordpiece(col("text"), syntheticVocab)
-      val textSide = Tables.documents(s, dir)
-        .select(col("doc_id"), ids.as("ids0"))
-        .withColumn("ids_t", TextOps.padTo(slice(col("ids0"), 1, 256), 256))
-        .withColumn("att", TextOps.attentionMask(col("ids0"), 256))
-      val mlm = MaskingOps.mlmMaskXxhFused(col("ids_t"), col("doc_id"),
-        maskProb = 0.25, maskToken = 999999, vocabSize = syntheticVocab.size)
-      val frames = transform(sequence(lit(0), lit(15)),
-        f => slice(col("embedding"), f * 4 + 1, lit(4)))
-      val frameSide = Tables.embeddings(s, dir).select(col("vec_id"),
-        VectorOps.padFrames(frames, 16, 4).as("frames"),
-        VectorOps.frameMask(frames, 16).as("fmask"))
-      val mfm = MaskingOps.mfmMask(col("frames"), col("vec_id"),
-        maskProb = 0.25, rng = MaskingOps.Xxh)
-      textSide.join(frameSide, pmod(col("doc_id"), lit(2000)) === col("vec_id"))
-        .select(col("doc_id"),
-          mlm.getField("ids").as("mlm_ids"), mlm.getField("labels").as("mlm_labels"),
-          col("att"),
-          mfm.getField("frames").as("mfm_frames"),
-          mfm.getField("labelIdx").as("mfm_label_idx"),
-          col("fmask"))
-    }),
+    "b_pipeline_etl" -> ((s, dir) =>
+      pipelineEtl(s, dir, pmod(col("doc_id"), lit(2000)) === col("vec_id"))),
     // the decade-measurable ETL: identical masking/tokenize work, but
     // the join is a plain doc_id = vec_id equi-join so BOTH sides (and
     // the join output) scale with the corpus — b_pipeline_etl's
     // pmod(doc_id, 2000) bridge caps its embeddings side at 2000 keys,
     // which made its round-9 decade ratio the most optimistic of the
     // five (BASELINE.md caveat); this row closes that caveat
-    "b_pipeline_etl_full" -> ((s, dir) => {
-      import graft.ops.{TextOps, VectorOps}
-      val ids = graft.functions.WordPieceTokenize.wordpiece(col("text"), syntheticVocab)
-      val textSide = Tables.documents(s, dir)
-        .select(col("doc_id"), ids.as("ids0"))
-        .withColumn("ids_t", TextOps.padTo(slice(col("ids0"), 1, 256), 256))
-        .withColumn("att", TextOps.attentionMask(col("ids0"), 256))
-      val mlm = MaskingOps.mlmMaskXxhFused(col("ids_t"), col("doc_id"),
-        maskProb = 0.25, maskToken = 999999, vocabSize = syntheticVocab.size)
-      val frames = transform(sequence(lit(0), lit(15)),
-        f => slice(col("embedding"), f * 4 + 1, lit(4)))
-      val frameSide = Tables.embeddings(s, dir).select(col("vec_id"),
-        VectorOps.padFrames(frames, 16, 4).as("frames"),
-        VectorOps.frameMask(frames, 16).as("fmask"))
-      val mfm = MaskingOps.mfmMask(col("frames"), col("vec_id"),
-        maskProb = 0.25, rng = MaskingOps.Xxh)
-      textSide.join(frameSide, col("doc_id") === col("vec_id"))
-        .select(col("doc_id"),
-          mlm.getField("ids").as("mlm_ids"), mlm.getField("labels").as("mlm_labels"),
-          col("att"),
-          mfm.getField("frames").as("mfm_frames"),
-          mfm.getField("labelIdx").as("mfm_label_idx"),
-          col("fmask"))
-    }),
+    "b_pipeline_etl_full" -> ((s, dir) =>
+      pipelineEtl(s, dir, col("doc_id") === col("vec_id"))),
     "b_mfm_mask_xxh" -> ((s, dir) => {
       val frames = transform(sequence(lit(0), lit(15)),
         f => slice(col("embedding"), f * 4 + 1, lit(4)))
@@ -1040,6 +1001,35 @@ object Bench {
         size(TextOps.whitespaceTokenize(col("text"))), 256L)
     }))
 
+  /** The two `b_pipeline_etl` rows: text side (WordPiece → truncate/pad
+    * → attention mask → MLM) joined to the frame side (slice → pad →
+    * frame mask → MFM) on `joinOn`.
+    */
+  private def pipelineEtl(s: SparkSession, dir: String, joinOn: Column): DataFrame = {
+    import graft.ops.{TextOps, VectorOps}
+    val ids = graft.functions.WordPieceTokenize.wordpiece(col("text"), syntheticVocab)
+    val textSide = Tables.documents(s, dir)
+      .select(col("doc_id"), ids.as("ids0"))
+      .withColumn("ids_t", TextOps.padTo(slice(col("ids0"), 1, 256), 256))
+      .withColumn("att", TextOps.attentionMask(col("ids0"), 256))
+    val mlm = MaskingOps.mlmMaskXxhFused(col("ids_t"), col("doc_id"),
+      maskProb = 0.25, maskToken = 999999, vocabSize = syntheticVocab.size)
+    val frames = transform(sequence(lit(0), lit(15)),
+      f => slice(col("embedding"), f * 4 + 1, lit(4)))
+    val frameSide = Tables.embeddings(s, dir).select(col("vec_id"),
+      VectorOps.padFrames(frames, 16, 4).as("frames"),
+      VectorOps.frameMask(frames, 16).as("fmask"))
+    val mfm = MaskingOps.mfmMask(col("frames"), col("vec_id"),
+      maskProb = 0.25, rng = MaskingOps.Xxh)
+    textSide.join(frameSide, joinOn)
+      .select(col("doc_id"),
+        mlm.getField("ids").as("mlm_ids"), mlm.getField("labels").as("mlm_labels"),
+        col("att"),
+        mfm.getField("frames").as("mfm_frames"),
+        mfm.getField("labelIdx").as("mfm_label_idx"),
+        col("fmask"))
+  }
+
   /** 1/4 or 1/2 key-split slice of the documents fixture (parts of 4). */
   private def docSlice(s: SparkSession, dir: String, parts: Int): DataFrame =
     Tables.documents(s, dir).filter(pmod(xxhash64(col("doc_id")), lit(4)) < parts)
@@ -1052,13 +1042,19 @@ object Bench {
     scala.collection.mutable.ArrayBuffer[(Int, Long, Double)]()
 
   /** Parquet path of the precomputed corpus bucket reps for
-    * `b_minhash_incr_precomp` — written once per (sf dir) per JVM to a
-    * fresh temp directory (per-run, so concurrent bench invocations
-    * never collide), exactly the "compute once per corpus version,
+    * `b_minhash_incr_precomp`, written once per sf dir into the
+    * [[Scratch]] store: exactly the "compute once per corpus version,
     * persist alongside the corpus" deployment the operator documents.
     * The 80% key-split corpus matches b_minhash_incremental's.
     */
-  private val repsPathCache = scala.collection.concurrent.TrieMap[String, String]()
+  private[graft] def precomputedRepsPath(s: SparkSession, dir: String): String =
+    Scratch.dir(s"reps:$dir") { out =>
+      val docs = Tables.documents(s, dir)
+      DedupOps.corpusBucketReps(
+          docs.filter(pmod(xxhash64(col("doc_id")), lit(5)) =!= 0), "text", "doc_id")
+        .write.mode("overwrite").parquet(out)
+    }
+
   /** Once-per-corpus-version fp16 re-encode of the embeddings table
     * (the SURVEY §1.2 storage lever): written at warmup so
     * `b_fp16_scan` times the SCAN+decode+reduce path a packed store
@@ -1067,10 +1063,8 @@ object Bench {
     * recorded delta IS the codec's scan-side win, and the on-disk
     * byte ratio is printed once to stderr for BASELINE.md.
     */
-  private val fp16PathCache = scala.collection.mutable.Map[String, String]()
   private[graft] def precomputedFp16Path(s: SparkSession, dir: String): String =
-    fp16PathCache.getOrElseUpdate(dir, {
-      val out = java.nio.file.Files.createTempDirectory("graft_fp16_").toString
+    Scratch.dir(s"fp16:$dir") { out =>
       Tables.embeddings(s, dir)
         .select(col("vec_id"),
           graft.functions.Fp16.packFp16(col("embedding")).as("emb16"))
@@ -1085,28 +1079,14 @@ object Bench {
       System.err.println(
         f"[bench] fp16 embeddings: $packed%d B packed vs $raw%d B fp32 " +
           f"(${raw.toDouble / packed}%.2fx smaller)")
-      out
-    })
-
-  private[graft] def precomputedRepsPath(s: SparkSession, dir: String): String =
-    repsPathCache.getOrElseUpdate(dir, {
-      val out = java.nio.file.Files.createTempDirectory("graft_reps_").toString
-      val docs = Tables.documents(s, dir)
-      DedupOps.corpusBucketReps(
-          docs.filter(pmod(xxhash64(col("doc_id")), lit(5)) =!= 0), "text", "doc_id")
-        .write.mode("overwrite").parquet(out)
-      out
-    })
+    }
 
   /** Once-per-corpus-version LSH index build (the [[precomputedRepsPath]]
     * deployment pattern for ANN): bucketed table per sf dir, built at
     * warmup so `b_lsh_indexed` times the per-batch SEARCH only.
     */
-  private val lshIndexCache = scala.collection.mutable.Map[String, String]()
   private[graft] def precomputedLshIndex(s: SparkSession, dir: String): String =
-    lshIndexCache.getOrElseUpdate(dir,
-      freshLshTable(s, "graft_bench_lsh_idx_" +
-        java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL), dir))
+    lshTable(s, "graft_bench_lsh_idx_", dir)
 
   /** A DEDICATED index table for `b_lsh_delete` (the
     * [[precomputedIvfPqDeleteBase]] discipline): its tombstones must
@@ -1114,31 +1094,27 @@ object Bench {
     * the benchSetups hook drops the tombstone table before every
     * attempt so each measures the same one-batch delete.
     */
-  private val lshDeleteIndexCache = scala.collection.mutable.Map[String, String]()
   private[graft] def precomputedLshDeleteIndex(s: SparkSession, dir: String): String =
-    lshDeleteIndexCache.getOrElseUpdate(dir,
-      freshLshTable(s, "graft_bench_lsh_del_" +
-        java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL), dir))
+    lshTable(s, "graft_bench_lsh_del_", dir)
 
-  private def freshLshTable(s: SparkSession, t: String, dir: String): String = {
-    // A previous PROCESS's managed-table directory can survive in
-    // spark-warehouse while this session's fresh catalog has no such
-    // table — saveAsTable(Overwrite) then refuses with
-    // LOCATION_ALREADY_EXISTS instead of overwriting. Clear the
-    // orphan (and any orphan tombstone dir) before building.
-    for (name <- Seq(t, s"${t}__tombstones"); if !s.catalog.tableExists(name)) {
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      val whPath = if (wh.startsWith("file:")) new java.net.URI(wh).getPath else wh
-      val loc = new java.io.File(whPath, name)
-      if (loc.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(); ()
-        }
-        rm(loc)
+  /** The LSH index is a managed catalog table, so its [[Scratch]]
+    * entry only memoises the build; the entry's directory stays empty.
+    */
+  private def lshTable(s: SparkSession, prefix: String, dir: String): String = {
+    val t = prefix + java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL)
+    Scratch.dir(s"lsh:$t:$dir") { _ =>
+      // A previous PROCESS's managed-table directory can survive in
+      // spark-warehouse while this session's fresh catalog has no such
+      // table — saveAsTable(Overwrite) then refuses with
+      // LOCATION_ALREADY_EXISTS instead of overwriting. Clear the
+      // orphan (and any orphan tombstone dir) before building.
+      for (name <- Seq(t, s"${t}__tombstones"); if !s.catalog.tableExists(name)) {
+        val wh = s.conf.get("spark.sql.warehouse.dir")
+        val whPath = if (wh.startsWith("file:")) new java.net.URI(wh).getPath else wh
+        FileUtils.deleteDirectory(new java.io.File(whPath, name))
       }
+      SimilarityOps.writeLshIndex(Tables.embeddings(s, dir), t)
     }
-    SimilarityOps.writeLshIndex(Tables.embeddings(s, dir), t)
     t
   }
 
@@ -1148,26 +1124,18 @@ object Bench {
     * only — the deployment shape where training is the ingest
     * pipeline's cost, not the query path's.
     */
-  private val ivfPqIndexCache = scala.collection.mutable.Map[String, String]()
   private[graft] def precomputedIvfPqIndex(s: SparkSession, dir: String): String =
-    ivfPqIndexCache.getOrElseUpdate(dir, {
-      val out = java.nio.file.Files.createTempDirectory("graft_ivfpq_idx_").toString
-      PqOps.ivfPqIndex(Tables.embeddings(s, dir), out,
-        nlist = ivfPqNlist, m = 8, ksub = 16, iters = 1, dim = 64)
-      out
-    })
+    Scratch.dir(s"ivfpq_idx:$dir")(pinnedIvfPqIndex(Tables.embeddings(s, dir), _))
 
-  /** nlist for every IVF-PQ bench row: 32 by default — the pin that
-    * keeps decade readings comparable across scales — overridable via
-    * `SPARK_GRAFT_IVFPQ_NLIST` so the DEPLOYMENT configuration (nlist
-    * grown with the corpus; per-probe list size and therefore per-query
-    * candidate work held down — BASELINE.md's nlist contract) can be
-    * measured at the 10×/100× fixtures instead of argued (VERDICT r10
-    * #2). The recorded JSON's `sf` field plus the invocation notes in
-    * BASELINE.md identify which configuration a reading used.
+  /** nlist for every pinned IVF-PQ bench row: 32 at every scale, the
+    * pin that keeps decade readings comparable. The deployment
+    * configuration (nlist grown with the corpus, BASELINE.md's nlist
+    * contract) is its own row, `b_ivf_pq_indexed_sqrtn`.
     */
-  private[graft] lazy val ivfPqNlist: Int =
-    sys.env.get("SPARK_GRAFT_IVFPQ_NLIST").map(_.toInt).getOrElse(32)
+  private val ivfPqNlist = 32
+
+  private def pinnedIvfPqIndex(corpus: DataFrame, out: String): Unit =
+    PqOps.ivfPqIndex(corpus, out, nlist = ivfPqNlist, m = 8, ksub = 16, iters = 1, dim = 64)
 
   /** A SEPARATE standing index (over the 80% key split) that
     * `b_ivf_pq_append` appends into — separate so the append's side
@@ -1175,16 +1143,9 @@ object Bench {
     * Append cost is O(batch) by contract (existing codes never read),
     * so re-appending across timed attempts does not distort the row.
     */
-  private val ivfPqAppendBaseCache = scala.collection.mutable.Map[String, String]()
   private[graft] def precomputedIvfPqAppendBase(s: SparkSession, dir: String): String =
-    ivfPqAppendBaseCache.getOrElseUpdate(dir, {
-      val out = java.nio.file.Files.createTempDirectory("graft_ivfpq_ab_").toString
-      PqOps.ivfPqIndex(
-        Tables.embeddings(s, dir)
-          .filter(pmod(xxhash64(col("vec_id")), lit(5)) =!= 0),
-        out, nlist = ivfPqNlist, m = 8, ksub = 16, iters = 1, dim = 64)
-      out
-    })
+    Scratch.dir(s"ivfpq_ab:$dir")(pinnedIvfPqIndex(
+      Tables.embeddings(s, dir).filter(pmod(xxhash64(col("vec_id")), lit(5)) =!= 0), _))
 
   /** The DEPLOYMENT-contract index (VERDICT r11 #6): nlist ≈ √n
     * self-configured from the corpus size — 45 at sf0.1's 2k vectors,
@@ -1193,69 +1154,43 @@ object Bench {
     * nprobe stays 4: the contract holds per-probe list size ≈ √n, so
     * per-query candidates stay ~4√n while the pinned-32 row's grow ∝ n.
     */
-  private val ivfPqSqrtIndexCache = scala.collection.mutable.Map[String, String]()
   private[graft] def precomputedIvfPqSqrtIndex(s: SparkSession, dir: String): String =
-    ivfPqSqrtIndexCache.getOrElseUpdate(dir, {
-      val out = java.nio.file.Files.createTempDirectory("graft_ivfpq_sq_").toString
+    Scratch.dir(s"ivfpq_sq:$dir") { out =>
       val e = Tables.embeddings(s, dir)
       val nlist = math.max(16, math.round(math.sqrt(e.count().toDouble)).toInt)
       PqOps.ivfPqIndex(e, out, nlist = nlist, m = 8, ksub = 16, iters = 1,
         dim = 64)
-      out
-    })
+    }
 
   /** A dedicated full-corpus index for `b_ivf_pq_delete` — separate so
     * its tombstones can never suppress rows in the searches other
     * bench rows time ([[precomputedIvfPqIndex]] stays tombstone-free).
     */
-  private val ivfPqDeleteBaseCache = scala.collection.mutable.Map[String, String]()
   private[graft] def precomputedIvfPqDeleteBase(s: SparkSession, dir: String): String =
-    ivfPqDeleteBaseCache.getOrElseUpdate(dir, {
-      val out = java.nio.file.Files.createTempDirectory("graft_ivfpq_db_").toString
-      PqOps.ivfPqIndex(Tables.embeddings(s, dir), out,
-        nlist = ivfPqNlist, m = 8, ksub = 16, iters = 1, dim = 64)
-      out
-    })
+    Scratch.dir(s"ivfpq_db:$dir")(pinnedIvfPqIndex(Tables.embeddings(s, dir), _))
 
   /** A dedicated compaction target in its genuinely-scattered shape
     * (VERDICT r11 advice): index over the 80% split + 3 appended
     * batches (the 20% split in thirds) = 4 codes file sets, then the
     * scattered codes dir SNAPSHOTTED so [[benchSetups]] can restore the
     * identical pre-compaction layout before every timed attempt.
-    * Returns (indexDir, snapshotDir). Local java.nio copies: the bench
+    * Returns (indexDir, snapshotDir). Local file copies: the bench
     * harness stages local fixtures by contract (the operator itself
     * goes through the Hadoop FileSystem API).
     */
-  private val ivfPqCompactBaseCache = scala.collection.mutable.Map[String, (String, String)]()
   private[graft] def precomputedIvfPqCompactBase(
-      s: SparkSession, dir: String): (String, String) =
-    ivfPqCompactBaseCache.getOrElseUpdate(dir, {
-      val idx = java.nio.file.Files.createTempDirectory("graft_ivfpq_cb_").toString
+      s: SparkSession, dir: String): (String, String) = {
+    val idx = Scratch.dir(s"ivfpq_cb:$dir") { out =>
       val e = Tables.embeddings(s, dir)
       val h = pmod(xxhash64(col("vec_id")), lit(15))
-      PqOps.ivfPqIndex(e.filter(h % 5 =!= 0), idx,
-        nlist = ivfPqNlist, m = 8, ksub = 16, iters = 1, dim = 64)
+      pinnedIvfPqIndex(e.filter(h % 5 =!= 0), out)
       for (b <- Seq(0, 5, 10))
-        PqOps.ivfPqAppend(e.filter(h === b), idx)
-      val snap = java.nio.file.Files.createTempDirectory("graft_ivfpq_cs_").toString
-      copyTree(new java.io.File(idx, "codes"), new java.io.File(snap, "codes"))
-      (idx, snap)
-    })
-
-  private def copyTree(src: java.io.File, dst: java.io.File): Unit = {
-    if (src.isDirectory) {
-      dst.mkdirs()
-      src.listFiles().foreach(f => copyTree(f, new java.io.File(dst, f.getName)))
-    } else {
-      java.nio.file.Files.copy(src.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      ()
+        PqOps.ivfPqAppend(e.filter(h === b), out)
     }
-  }
-
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete(); ()
+    val snap = Scratch.dir(s"ivfpq_cs:$dir") { out =>
+      FileUtils.copyDirectory(new java.io.File(idx, "codes"), new java.io.File(out, "codes"))
+    }
+    (idx, snap)
   }
 
   /** UNTIMED per-attempt setup, run immediately before every warm and
@@ -1269,14 +1204,14 @@ object Bench {
     "b_ivf_pq_compact" -> ((s, dir) => {
       val (idx, snap) = precomputedIvfPqCompactBase(s, dir)
       val codes = new java.io.File(idx, "codes")
-      rmTree(codes)
-      copyTree(new java.io.File(snap, "codes"), codes)
+      FileUtils.deleteDirectory(codes)
+      FileUtils.copyDirectory(new java.io.File(snap, "codes"), codes)
     }),
     // b_ivf_pq_delete restores the tombstone-free state so every
     // attempt times the same one-batch delete, not an accumulation
     "b_ivf_pq_delete" -> ((s, dir) => {
-      val t = new java.io.File(precomputedIvfPqDeleteBase(s, dir), "tombstones")
-      if (t.exists()) rmTree(t)
+      FileUtils.deleteDirectory(
+        new java.io.File(precomputedIvfPqDeleteBase(s, dir), "tombstones"))
     }),
     // same contract for the LSH leg: drop the catalog tombstone table
     // (managed, so the drop removes its directory too)
@@ -1295,7 +1230,7 @@ object Bench {
     val f = new java.io.File("bench_out", "latest.json")
     if (!f.isFile) Map.empty
     else try {
-      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
+      val root = new ObjectMapper().readTree(f)
       val q = root.get("queries")
       if (q == null) Map.empty
       else {
@@ -1380,15 +1315,6 @@ object Bench {
     // sweep. The driver passes no args — full run.
     val only: Option[Set[String]] = args.headOption.map(_.split(",").toSet)
     def wanted(name: String): Boolean = only.forall(_.contains(name))
-    // SPARK_GRAFT_SUBSET_CANARY=1: run the q01 canary gauge and the
-    // sweep-end burst re-check during SUBSET runs too — the scale-decade
-    // protocol (VERDICT r10 #1: the 100× table was the only one exempt
-    // from the repo's own contention discipline because subset runs had
-    // no canary). The prior-record comparison stays full-run-only: the
-    // committed record is sf0.1 readings, meaningless against a 10×/100×
-    // dir. Subset runs still never write latest.json.
-    val subsetCanary = only.isDefined &&
-      sys.env.get("SPARK_GRAFT_SUBSET_CANARY").contains("1")
     val ordered =
       (SparkEntry.queries.view.filterKeys(!excluded.contains(_)).toSeq.sortBy(_._1) ++
         scaleBenches.toSeq.sortBy(_._1)).filter(t => wanted(t._1))
@@ -1412,7 +1338,7 @@ object Bench {
       // untimed precondition restore (e.g. re-scatter the compaction
       // target) — setup cost is the fixture's, never the operator's.
       // Guarded like the fn call (r12 advice): a setup failure (disk
-      // full mid-copyTree, a vanished fixture) is THAT ROW's error,
+      // full mid-copy, a vanished fixture) is THAT ROW's error,
       // recorded and reported — not an exception that aborts the sweep
       // and loses every other row's reading.
       try benchSetups.get(name).foreach(su => su(spark, sfDir)) catch {
@@ -1454,11 +1380,8 @@ object Bench {
     // gauge can itself catch a one-off spike (or the run-start JIT
     // warmup) and mark a quiet run contended — the gauge must be less
     // noisy than what it gauges. The FIRST canary additionally gets an
-    // untimed warm pass: in an 11-row subset run the gauge has only
-    // two samples, and a run-start sample that pays q01's cold
-    // scan/codegen at a fresh fixture dir reads ~2× and flips the
-    // 2-sample median/min verdict to contended on a quiet box (three
-    // round-11 subset runs tripped exactly this way).
+    // untimed warm pass: a run-start sample pays q01's cold scan/codegen
+    // at a fresh fixture dir and reads ~2× on a quiet box (round 11).
     def runCanary(): Unit = canaryFn.foreach { fn =>
       if (canarySecs.isEmpty) {
         try force(fn(spark, sfDir)) catch { case _: Throwable => () }
@@ -1468,20 +1391,21 @@ object Bench {
         .filter(_._2.isEmpty)
       if (ok.nonEmpty) canarySecs += ok.map(_._1).min
     }
-    // (name, min seconds, spread max/min, error, diag passes of the min
-    // attempt): failures are REPORTED, never silently recorded as a
-    // plausible timing.
-    val firstPass = ordered.zipWithIndex.map { case ((name, fn), i) =>
-      if (i % canaryEvery == 0 && (only.isEmpty || subsetCanary)) runCanary()
-      // warm this row's plan family, then drop whatever it cached and
-      // any pass diagnostics the warm run emitted; warm failures are
-      // ignored (the timed run reports them)
+    // warm a row's plan family at warmDir, then drop whatever it cached;
+    // warm failures are ignored (the timed run reports them)
+    def warm(name: String, fn: (SparkSession, String) => DataFrame): Unit =
       warmDir.foreach { wd =>
         benchSetups.get(name).foreach(su =>
           try su(spark, wd) catch { case _: Throwable => () })
         try force(fn(spark, wd)) catch { case _: Throwable => () }
         spark.sharedState.cacheManager.clearCache()
       }
+    // (name, min seconds, spread max/min, error, diag passes of the min
+    // attempt): failures are REPORTED, never silently recorded as a
+    // plausible timing.
+    val firstPass = ordered.zipWithIndex.map { case ((name, fn), i) =>
+      if (i % canaryEvery == 0 && only.isEmpty) runCanary()
+      warm(name, fn)
       val attempts = scala.collection.mutable.ArrayBuffer(timeOnce(name, fn))
       if (attempts.head._2.isEmpty && !singleRun.contains(name)) {
         attempts += timeOnce(name, fn)
@@ -1508,23 +1432,15 @@ object Bench {
     // min of ALL attempts. Subset runs skip this (they never write the
     // record).
     val prior = priorRecord()
-    val results = firstPass.map { case row @ (name, fn, sec, spread, err, passes) =>
-      val suspect = err.isEmpty && !singleRun.contains(name) &&
-        (only.isEmpty || subsetCanary) &&
-        (spread > 2.0 ||
-          (only.isEmpty &&
-            prior.get(name).exists(p => p > 0.05 && sec > p * 1.5)))
+    val results = firstPass.map { case (name, fn, sec, spread, err, passes) =>
+      val suspect = err.isEmpty && !singleRun.contains(name) && only.isEmpty &&
+        (spread > 2.0 || prior.get(name).exists(p => p > 0.05 && sec > p * 1.5))
       if (!suspect) (name, sec, spread, err, passes)
       else {
         System.err.println(
           f"[bench] burst re-check: $name%s read $sec%.2f s " +
             f"(spread $spread%.2f, prior ${prior.getOrElse(name, -1.0)}%.2f) - re-running")
-        warmDir.foreach { wd =>
-          benchSetups.get(name).foreach(su =>
-            try su(spark, wd) catch { case _: Throwable => () })
-          try force(fn(spark, wd)) catch { case _: Throwable => () }
-          spark.sharedState.cacheManager.clearCache()
-        }
+        warm(name, fn)
         val extra = Seq(timeOnce(name, fn), timeOnce(name, fn))
           .filter(_._2.isEmpty)
         if (extra.isEmpty) (name, sec, spread, err, passes)
@@ -1536,44 +1452,34 @@ object Bench {
         }
       }
     }
-    if (only.isEmpty || subsetCanary) runCanary()
+    if (only.isEmpty) runCanary()
     val streaming =
       if (only.exists(names => !names.exists(_.startsWith("s_")))) Nil
       else streamingBenches(spark, sfDir).filter(t => wanted(t._1))
     val allTimings = results.map { case (k, v, _, e, _) => (k, v, e) } ++
       streaming.map { case (k, v, _, e, _) => (k, v, e) }
-    val qs = allTimings.map { case (k, v, err) =>
-      "\"" + k + "\":" + (if (err.isDefined) "-1" else v.toString)
-    }.mkString("{", ",", "}")
-    val errs = allTimings.collect { case (k, _, Some(m)) =>
-      "\"" + k + "\":\"" + m + "\""
-    }.mkString("{", ",", "}")
-    val stateRows = streaming.map { case (k, _, st, _, _) =>
-      "\"" + k + "\":" + st
-    }.mkString("{", ",", "}")
+    val mapper = new ObjectMapper()
+    val root = mapper.createObjectNode()
+    root.put("metric", "total")
+    root.put("value", allTimings.collect { case (_, v, None) => v }.sum)
+    root.put("unit", "sec")
+    val qs = root.putObject("queries")
+    allTimings.foreach { case (k, v, err) =>
+      if (err.isDefined) qs.put(k, -1) else qs.put(k, v)
+    }
+    val errs = root.putObject("errors")
+    for ((k, _, Some(m)) <- allTimings) errs.put(k, m)
+    val stateRows = root.putObject("streaming_state_rows")
+    streaming.foreach { case (k, _, st, _, _) => stateRows.put(k, st) }
     // per-row max/min across timed attempts (1.0 = attempts agreed or
     // single-run row; -1.0 = a streaming row whose SECOND try errored —
     // the sentinel keeps a half-failed row distinguishable from
     // "attempts agreed") — the from-the-JSON contention witness;
     // streaming rows carry one too (min-of-2 replays since round 10)
-    val spreads = (results.map { case (k, _, sp, _, _) => (k, sp) } ++
+    val spreads = root.putObject("spread")
+    (results.map { case (k, _, sp, _, _) => (k, sp) } ++
       streaming.map { case (k, _, _, _, sp) => (k, sp) })
-      .map { case (k, sp) =>
-        "\"" + k + "\":" + math.round(sp * 100.0) / 100.0
-      }.mkString("{", ",", "}")
-    val diag = results.collect { case (name, rowSec, _, _, ps) if ps.nonEmpty =>
-      // pass 0 is the prep stage (tokenize + band-hash + persist);
-      // result_sec is the remainder of the row — the final keeper
-      // materialize (VERDICT r7 #7: diag parts must sum to ~ the row
-      // total so an artifact swing is attributable from the JSON alone)
-      val (prep, passes) = ps.partition(_._1 == 0)
-      val accounted = prep.headOption.map(_._3).getOrElse(0.0) + passes.map(_._3).sum
-      "\"" + name + "\":{\"prep_sec\":" + prep.headOption.map(_._3).getOrElse(0.0) +
-        ",\"passes\":" + passes.length +
-        ",\"pass_secs\":[" + passes.map(_._3).mkString(",") +
-        "],\"pass_survivors\":[" + passes.map(_._2).mkString(",") +
-        "],\"result_sec\":" + math.max(0.0, rowSec - accounted) + "}"
-    }.mkString("{", ",", "}")
+      .foreach { case (k, sp) => spreads.put(k, math.round(sp * 100.0) / 100.0) }
     val canaryDrift =
       if (canarySecs.size >= 2) canarySecs.max / canarySecs.min else 1.0
     // the verdict flags SUSTAINED degradation, not a single burst: one
@@ -1588,17 +1494,36 @@ object Bench {
       val spikes = canarySecs.count(_ > sorted.head * 1.5)
       median / sorted.head > 1.5 || spikes >= 3
     }
-    val canary = "{\"secs\":[" +
-      canarySecs.map(s => math.round(s * 1000.0) / 1000.0).mkString(",") +
-      "],\"drift\":" + math.round(canaryDrift * 100.0) / 100.0 +
-      ",\"contended\":" + contended + "}"
-    val total = allTimings.collect { case (_, v, None) => v }.sum
+    val canary = root.putObject("canary")
+    val canaryArr = canary.putArray("secs")
+    canarySecs.foreach(s => canaryArr.add(math.round(s * 1000.0) / 1000.0))
+    canary.put("drift", math.round(canaryDrift * 100.0) / 100.0)
+    canary.put("contended", contended)
+    val diag = root.putObject("diag")
+    for ((name, rowSec, _, _, ps) <- results if ps.nonEmpty) {
+      // pass 0 is the prep stage (tokenize + band-hash + persist);
+      // result_sec is the remainder of the row — the final keeper
+      // materialize (VERDICT r7 #7: diag parts must sum to ~ the row
+      // total so an artifact swing is attributable from the JSON alone)
+      val (prep, passes) = ps.partition(_._1 == 0)
+      val prepSec = prep.headOption.map(_._3).getOrElse(0.0)
+      val accounted = prepSec + passes.map(_._3).sum
+      val d = diag.putObject(name)
+      d.put("prep_sec", prepSec)
+      d.put("passes", passes.length)
+      val secs = d.putArray("pass_secs")
+      passes.foreach(p => secs.add(p._3))
+      val survivors = d.putArray("pass_survivors")
+      passes.foreach(p => survivors.add(p._2))
+      d.put("result_sec", math.max(0.0, rowSec - accounted))
+    }
     // the gate-exclusion list rides in the artifact so tools/doccheck.py
     // can verify "every registry key has a bench row" without a
     // hand-mirrored copy of this set (r12 advice)
-    val excl = excluded.toSeq.sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"streaming_state_rows":$stateRows,"spread":$spreads,"canary":$canary,"diag":$diag,"excluded":$excl,"sf":"$sfDir"}"""
+    val excl = root.putArray("excluded")
+    excluded.toSeq.sorted.foreach(n => excl.add(n))
+    root.put("sf", sfDir)
+    val json = mapper.writeValueAsString(root)
     println(json)
     // VERDICT r6 #5: the driver's stdout capture truncates long runs
     // (BENCH_r06.json lost the whole q-family to a 2 KB tail), so the
@@ -1624,7 +1549,7 @@ object Bench {
   }
 
   /** Structured-Streaming rows at bench scale: the sf events table is
-    * re-laid as an 8-file directory in /tmp and driven through the
+    * re-laid as an 8-file directory in the [[Scratch]] store and driven through the
     * streaming operators as a REAL file stream — 4 micro-batches
     * (maxFilesPerTrigger=2, AvailableNow), memory sink. Each row
     * records (name, min-of-2 wall-clock s, max state rows across the
@@ -1634,12 +1559,12 @@ object Bench {
     */
   private def streamingBenches(
       spark: SparkSession, sfDir: String): Seq[(String, Double, Long, Option[String], Double)] = {
-    // per-run directory: two concurrent bench invocations on one box
+    // per-run directories: two concurrent bench invocations on one box
     // must never overwrite each other's stream input mid-run
-    val streamDir =
-      java.nio.file.Files.createTempDirectory("graft_bench_stream_").toString
-    graft.core.Tables.events(spark, sfDir)
-      .repartition(8).write.mode("overwrite").parquet(streamDir)
+    val streamDir = Scratch.dir(s"stream:$sfDir") { out =>
+      graft.core.Tables.events(spark, sfDir)
+        .repartition(8).write.mode("overwrite").parquet(out)
+    }
     // time-ORDERED re-lay for the watermarked row: with the hash-random
     // layout above every file spans the whole time range, so the
     // watermark can evict nothing until the end (measured: state 3,598
@@ -1648,32 +1573,32 @@ object Bench {
     // time; range-partition by ts and pin processing order with
     // strictly increasing mtimes (the file source breaks mtime ties by
     // path, but parallel write tasks can finish out of order).
-    val streamDirOrdered =
-      java.nio.file.Files.createTempDirectory("graft_bench_stream_ord_").toString
-    graft.core.Tables.events(spark, sfDir)
-      .repartitionByRange(8, col("ts")).sortWithinPartitions("ts")
-      .write.mode("overwrite").parquet(streamDirOrdered)
-    new java.io.File(streamDirOrdered).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .zipWithIndex.foreach { case (f, i) => f.setLastModified(1000000L * (i + 1)) }
+    val streamDirOrdered = Scratch.dir(s"stream_ord:$sfDir") { out =>
+      graft.core.Tables.events(spark, sfDir)
+        .repartitionByRange(8, col("ts")).sortWithinPartitions("ts")
+        .write.mode("overwrite").parquet(out)
+      new java.io.File(out).listFiles()
+        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+        .zipWithIndex.foreach { case (f, i) => f.setLastModified(1000000L * (i + 1)) }
+    }
 
     // the documents table re-laid the same way for the dedup-state
     // rows, plus an opt-out stream: the 10% key slice re-arrives as
     // removals with ords ABOVE every ingest ord, so a removal shares a
     // micro-batch with its content's ingest only in remove-after-ingest
     // order — the realistic opt-out arrival
-    val docsStreamDir =
-      java.nio.file.Files.createTempDirectory("graft_bench_docstream_").toString
-    graft.core.Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text"), col("doc_id").cast("long").as("ord"))
-      .repartition(8).write.mode("overwrite").parquet(docsStreamDir)
-    val remStreamDir =
-      java.nio.file.Files.createTempDirectory("graft_bench_remstream_").toString
-    graft.core.Tables.documents(spark, sfDir)
-      .filter(pmod(xxhash64(col("doc_id")), lit(10)) === 3)
-      .select(col("doc_id"), col("text"),
-        (col("doc_id") + lit(1000000000L)).cast("long").as("ord"))
-      .repartition(8).write.mode("overwrite").parquet(remStreamDir)
+    val docsStreamDir = Scratch.dir(s"docstream:$sfDir") { out =>
+      graft.core.Tables.documents(spark, sfDir)
+        .select(col("doc_id"), col("text"), col("doc_id").cast("long").as("ord"))
+        .repartition(8).write.mode("overwrite").parquet(out)
+    }
+    val remStreamDir = Scratch.dir(s"remstream:$sfDir") { out =>
+      graft.core.Tables.documents(spark, sfDir)
+        .filter(pmod(xxhash64(col("doc_id")), lit(10)) === 3)
+        .select(col("doc_id"), col("text"),
+          (col("doc_id") + lit(1000000000L)).cast("long").as("ord"))
+        .repartition(8).write.mode("overwrite").parquet(out)
+    }
 
     // the re-laid temp dirs were written from the normalized batch frame,
     // so `ts` is already a proper TimestampType — no conversion needed
@@ -1724,21 +1649,11 @@ object Bench {
     // from scratch (AvailableNow + a throwaway checkpoint), so the
     // second try is a true independent observation; `df` is by-name so
     // each try builds a fresh plan.
-    // SPARK_GRAFT_STREAM_MIN1=1: one replay per row instead of two —
-    // the disclosed budget form for the heaviest scale fixtures
-    // (VERDICT r12 #6: the 100× s_attribution replay is the state
-    // contract's second decade point; min-of-2 there costs more than
-    // the reading is worth). Spread is recorded as 0.0, a sentinel
-    // distinct from 1.0 = "attempts agreed" and -1.0 = "second try
-    // errored", so the artifact itself discloses the single-attempt
-    // provenance.
-    val streamMin1 = sys.env.get("SPARK_GRAFT_STREAM_MIN1").contains("1")
     def run(name: String, df: => DataFrame, mode: String,
         stateParts: Int = eventStateParts)
         : (String, Double, Long, Option[String], Double) = {
       val a = runOnce(name, 1, df, mode, stateParts)
       if (a._3.isDefined) (name, a._1, a._2, a._3, 1.0)
-      else if (streamMin1) (name, a._1, a._2, None, 0.0)
       else {
         val b = runOnce(name, 2, df, mode, stateParts)
         if (b._3.isDefined)

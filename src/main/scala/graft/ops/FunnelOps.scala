@@ -33,8 +33,6 @@ object FunnelOps {
       steps: Seq[String]): DataFrame = {
     require(steps.nonEmpty, "funnel needs at least one step")
     require(steps.distinct == steps, s"funnel steps must be distinct: $steps")
-    val spark = events.sparkSession
-    import spark.implicits._
 
     // (user, completion ts) per step; step i filtered to ts >= step i-1
     val completions = steps.zipWithIndex

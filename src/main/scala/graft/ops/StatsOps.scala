@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -382,7 +382,6 @@ object StatsOps {
       df: DataFrame, keyCol: String, valueCol: String,
       c: Double = 1.345, iters: Int = 3): DataFrame = {
     require(c > 0 && iters >= 1)
-    val d = (x: Column) => x.cast("double")
     def t9(x: Column) = round(x, 9).cast("decimal(38,9)")
     // fan out the narrow (key, value) projection when the scan can't
     // split, and MATERIALIZE every per-key center dim (median, scale,

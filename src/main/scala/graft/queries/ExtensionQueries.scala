@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{PortableHash, Tables}
+import graft.core.{PortableHash, Scratch, Tables}
 import graft.ops._
 
 /** LLM-data-pipeline extension queries (q21+): dedup (MinHash-LSH,
@@ -9159,35 +9159,24 @@ object ExtensionQueries {
     * q251 rows — the deployment shape where training is the INGEST
     * pipeline's cost and the registry rows verify/time the SERVED
     * stack ([[graft.ops.PqOps.ivfPqIndex]]: nlist=4, the q214 PQ
-    * configuration, residual encoding — the FAISS default). Temp-dir
-    * parquet, process-lifetime cached; the index content is a pure
-    * deterministic function of the corpus, so Verify's dumps are
-    * identical whatever the cache state. `full` = the whole embeddings
-    * table (q249's search corpus, q251's curve corpus); `base` = the
-    * `vec_id % 5 <> 0` key split (the standing corpus q250's incoming
-    * batch is gauged against).
+    * configuration, residual encoding — the FAISS default), built once
+    * per dir into the [[graft.core.Scratch]] store; the index content
+    * is a pure deterministic function of the corpus, so Verify's dumps
+    * are identical whatever the store holds. `q249Index` covers the
+    * whole embeddings table (q249's search corpus, q251's curve
+    * corpus); `q250Index` the `vec_id % 5 <> 0` key split (the
+    * standing corpus q250's incoming batch is gauged against).
     */
-  private val stackIdxCache =
-    scala.collection.concurrent.TrieMap[String, String]()
   private def q249Index(spark: SparkSession, dir: String): String =
-    stackIdxCache.getOrElseUpdate("full:" + dir, {
-      val out =
-        java.nio.file.Files.createTempDirectory("graft_q249_idx_").toString
-      PqOps.ivfPqIndex(Tables.embeddings(spark, dir), out,
-        nlist = 4, m = q214M, ksub = q214Ksub, iters = 1,
-        dim = q214M * q214Sub, byResidual = true)
-      out
-    })
+    Scratch.dir(s"q249_idx:$dir")(q248Index(Tables.embeddings(spark, dir), _))
   private def q250Index(spark: SparkSession, dir: String): String =
-    stackIdxCache.getOrElseUpdate("base:" + dir, {
-      val out =
-        java.nio.file.Files.createTempDirectory("graft_q250_idx_").toString
-      PqOps.ivfPqIndex(
-        Tables.embeddings(spark, dir).filter(col("vec_id") % 5 =!= 0), out,
-        nlist = 4, m = q214M, ksub = q214Ksub, iters = 1,
-        dim = q214M * q214Sub, byResidual = true)
-      out
-    })
+    Scratch.dir(s"q250_idx:$dir")(
+      q248Index(Tables.embeddings(spark, dir).filter(col("vec_id") % 5 =!= 0), _))
+
+  /** q248's construction (nlist=4, q214's PQ, residual) persisted at `out`. */
+  private def q248Index(corpus: DataFrame, out: String): Unit =
+    PqOps.ivfPqIndex(corpus, out, nlist = 4, m = q214M, ksub = q214Ksub,
+      iters = 1, dim = q214M * q214Sub, byResidual = true)
 
   /** q252's drifted corpus: the raw embeddings plus a REVERSED-vector
     * replica (ids offset by 1e6). Reversal is the cheapest both-engine
@@ -9225,27 +9214,15 @@ object ExtensionQueries {
     Tables.embeddings(spark, dir).select("vec_id", "embedding")
       .unionByName(q252Drift(spark, dir))
   private def q252StaleIndex(spark: SparkSession, dir: String): String =
-    stackIdxCache.getOrElseUpdate("stale:" + dir, {
-      val out =
-        java.nio.file.Files.createTempDirectory("graft_q252_idx_").toString
+    Scratch.dir(s"q252_stale_idx:$dir") { out =>
       // train on the pre-drift corpus, then ingest the drifted batch
       // through the frozen quantizer — the stale-index path the gauge
       // warns against
-      PqOps.ivfPqIndex(Tables.embeddings(spark, dir), out,
-        nlist = 4, m = q214M, ksub = q214Ksub, iters = 1,
-        dim = q214M * q214Sub, byResidual = true)
+      q248Index(Tables.embeddings(spark, dir), out)
       PqOps.ivfPqAppend(q252Drift(spark, dir), out)
-      out
-    })
+    }
   private def q252RebuiltIndex(spark: SparkSession, dir: String): String =
-    stackIdxCache.getOrElseUpdate("rebuilt:" + dir, {
-      val out =
-        java.nio.file.Files.createTempDirectory("graft_q252r_idx_").toString
-      PqOps.ivfPqIndex(q252Corpus(spark, dir), out,
-        nlist = 4, m = q214M, ksub = q214Ksub, iters = 1,
-        dim = q214M * q214Sub, byResidual = true)
-      out
-    })
+    Scratch.dir(s"q252_rebuilt_idx:$dir")(q248Index(q252Corpus(spark, dir), _))
 
   /** STALE-vs-REBUILT serving parity — the VALUE-LEVEL oracle replay
     * of [[PqOps.ivfPqAppend]]'s frozen-quantizer contract (no prior
@@ -9578,18 +9555,13 @@ object ExtensionQueries {
     * and crash-state halves; this row is the SERVING contract.
     */
   private def q253Index(spark: SparkSession, dir: String): String =
-    stackIdxCache.getOrElseUpdate("del:" + dir, {
-      val out =
-        java.nio.file.Files.createTempDirectory("graft_q253_idx_").toString
-      PqOps.ivfPqIndex(Tables.embeddings(spark, dir), out,
-        nlist = 4, m = q214M, ksub = q214Ksub, iters = 1,
-        dim = q214M * q214Sub, byResidual = true)
+    Scratch.dir(s"q253_idx:$dir") { out =>
+      q248Index(Tables.embeddings(spark, dir), out)
       PqOps.ivfPqDelete(
         Tables.embeddings(spark, dir)
           .filter(col("vec_id") % 10 === 3).select("vec_id"),
         out)
-      out
-    })
+    }
 
   def q253(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)

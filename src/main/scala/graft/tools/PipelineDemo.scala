@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 
-import graft.core.GraftSession
+import graft.core.{GraftSession, Scratch}
 import graft.pipeline.ReferencePipeline
 
 /** Runnable example of the reference-flavored pipeline slice: generates
@@ -15,16 +15,17 @@ object PipelineDemo {
     val codes = Seq("0101", "0102", "0201", "0202", "0301", "0302")
     def words(n: Int, p: String): String = (0 until n).map(i => s"$p$i").mkString(" ")
 
-    val dir = Files.createTempDirectory("demo-anns").toFile.getAbsolutePath
-    val rows = (0 until 30).map { i =>
-      val ocr = s"""[{"time": 0.5, "text": "${words(100 + i, "o")}"}]"""
-      s"""{"id": "vid$i", "title": "${words(40 + i, "t")}", "asr": "${words(90 + i, "a")}",
-         |"ocr": $ocr, "category_id": "${codes(i % 6)}"}""".stripMargin.replace("\n", " ")
+    val dir = Scratch.dir("demo-anns") { d =>
+      val rows = (0 until 30).map { i =>
+        val ocr = s"""[{"time": 0.5, "text": "${words(100 + i, "o")}"}]"""
+        s"""{"id": "vid$i", "title": "${words(40 + i, "t")}", "asr": "${words(90 + i, "a")}",
+           |"ocr": $ocr, "category_id": "${codes(i % 6)}"}""".stripMargin.replace("\n", " ")
+      }
+      Files.writeString(java.nio.file.Path.of(d, "labeled.json"),
+        rows.mkString("[", ",\n", "]"))
     }
-    Files.writeString(java.nio.file.Path.of(dir, "labeled.json"),
-      rows.mkString("[", ",\n", "]"))
 
-    val outCsv = Files.createTempDirectory("demo-out").toFile.getAbsolutePath + "/preds"
+    val outCsv = Scratch.dir("demo-out")(_ => ()) + "/preds"
     val out = ReferencePipeline.run(spark, s"$dir/labeled.json", codes, outCsv, valRatio = 0.2)
 
     println("=== metrics ===")

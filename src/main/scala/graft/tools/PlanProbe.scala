@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkEntry
 
 /** Bimodality prober (round-11 finding: b_pipeline_etl_full /
@@ -56,12 +54,9 @@ object PlanProbe {
     val fn = all.getOrElse(name, sys.error(s"unknown query: $name"))
     for (i <- 1 to attempts) {
       sink.reset()
-      val df = fn(spark, dir)
-      // the same evaluation-forcing action Bench times (hash of every
-      // column, bit_xor-folded) so the probe reproduces the bench row
-      val probe = df
-        .select(xxhash64(struct(df.columns.map(col): _*)).as("__h"))
-        .agg(expr("bit_xor(__h)"))
+      // the same evaluation-forcing frame Bench times, so the probe
+      // reproduces the bench row
+      val probe = graft.Bench.forcing(fn(spark, dir))
       val t0 = System.nanoTime()
       probe.collect()
       val sec = (System.nanoTime() - t0) / 1e9

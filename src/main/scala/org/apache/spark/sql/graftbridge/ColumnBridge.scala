@@ -33,3 +33,13 @@ object DatasetBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
 }
+
+/** `org.apache.spark.util.Utils` is `private[spark]`. Its
+  * `createTempDir` registers the directory for recursive deletion at
+  * JVM exit, at `TEMP_DIR_SHUTDOWN_PRIORITY` (after the SparkContext's
+  * own stop hook), which is what [[graft.core.Scratch]] builds on.
+  */
+object TempDirBridge {
+  def createTempDir(): java.io.File =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = "graft")
+}

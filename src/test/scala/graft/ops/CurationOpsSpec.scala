@@ -434,7 +434,7 @@ class CurationOpsSpec extends AnyFunSuite {
 
   test("noveltyRate: hand gram overlaps, gram-less doc NULL rate, " +
       "repartition-proof") {
-    import org.apache.spark.sql.functions.{array_distinct, col}
+    import org.apache.spark.sql.functions.array_distinct
     val evalDocs = Seq((1L, "a b c d"), (2L, "x y z w"), (3L, "p q"))
       .toDF("doc_id", "text")
     val train = Seq((10L, "a b c q q"), (11L, "m n o")).toDF("doc_id", "text")

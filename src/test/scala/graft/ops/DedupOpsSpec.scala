@@ -267,7 +267,6 @@ class DedupOpsSpec extends AnyFunSuite {
 
   test("cdcDupStats: planted shared span is census'd; differential vs a " +
       "plain-Scala fold replay; hashed keys agree with string keys") {
-    import org.apache.spark.sql.functions.col
     // plain-Scala replay of the gear fold (the independent reference)
     def gear(c: Char): Long = (c.toLong * 2654435761L) % 1048576L
     def chunkRef(t: String): Seq[String] = {

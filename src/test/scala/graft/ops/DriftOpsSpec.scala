@@ -38,7 +38,6 @@ class DriftOpsSpec extends AnyFunSuite {
   }
 
   test("numericDrift: identical distributions ~ 0; a mean shift is flagged; nulls excluded") {
-    import org.apache.spark.sql.functions._
     val base = (1 to 1000).map(i => Tuple1(Some(i.toDouble))).toDF("v")
     val self = DriftOps.numericDrift(base, base, "v", nBins = 4)
       .select("psi_total").as[Double].collect().head

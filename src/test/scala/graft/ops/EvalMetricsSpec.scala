@@ -166,7 +166,6 @@ class EvalMetricsSpec extends AnyFunSuite {
 
   test("labelDisagreement: hand fractions, NULL-label contracts, " +
       "suspect threshold inclusive") {
-    import org.apache.spark.sql.functions.col
     val neighbors = Seq(
       (1L, 2L), (1L, 3L), (1L, 4L),   // q1: labels B, B, NULL
       (2L, 1L), (2L, 3L),             // q2: labels A, B

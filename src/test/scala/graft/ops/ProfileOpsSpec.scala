@@ -132,7 +132,6 @@ class ProfileOpsSpec extends AnyFunSuite {
 
   test("dpMean: clipping bounds sensitivity, draws replay independently, " +
       "mean is the post-processed ratio") {
-    import org.apache.spark.sql.functions.col
     val df = Seq(("g", 5.0), ("g", 250.0), ("g", -10.0), ("h", 50.0))
       .toDF("grp", "v")
     val got = ProfileOps.dpMean(df, "grp", "v", epsilon = 0.5,
@@ -162,7 +161,6 @@ class ProfileOpsSpec extends AnyFunSuite {
 
   test("dpCounts: noise replays the independent inverse-CDF recompute; " +
       "deterministic under repartition; epsilon scales the noise") {
-    import org.apache.spark.sql.functions.col
     val df = (Seq.fill(30)("a") ++ Seq.fill(12)("b") ++ Seq.fill(7)("c"))
       .toDF("g")
     val got = ProfileOps.dpCounts(df, "g", epsilon = 0.5, salt = "dp")

@@ -84,7 +84,6 @@ class StreamingOpsSpec extends AnyFunSuite {
   }
 
   test("streaming session_window with watermark emits closed sessions") {
-    import java.sql.Timestamp
     val streamDir = Files.createTempDirectory("sess-stream").toFile.getAbsolutePath
     def micros(min: Long): Long = min * 60L * 1000000L * 1000L // nanos-as-long input
 
