@@ -26,8 +26,7 @@ object BasketOps {
     * an item in one basket count once.
     */
   def associationRules(
-      df: DataFrame, basketCols: Seq[String], itemCol: String,
-      minPairCount: Long = 1L): DataFrame = {
+      df: DataFrame, basketCols: Seq[String], itemCol: String): DataFrame = {
     require(basketCols.nonEmpty, "need at least one basket column")
     val basket = struct(basketCols.map(col): _*).as("__basket")
     val obs = df.select(basket, col(itemCol).as("__item")).distinct()
@@ -45,7 +44,7 @@ object BasketOps {
       .filter(col("item_a") =!= col("item_b"))
       .groupBy("item_a", "item_b")
       .agg(count(lit(1)).as("n_ab"))
-      .filter(col("n_ab") >= minPairCount)
+      .filter(col("n_ab") >= 1L) // support floor: one co-occurrence
 
     val d = (c: Column) => c.cast("double")
     pairs
@@ -74,10 +73,9 @@ object BasketOps {
     * the pair frame — already far smaller than the obs it came from.
     */
   def itemNeighbors(
-      df: DataFrame, basketCols: Seq[String], itemCol: String, k: Int,
-      minPairCount: Long = 1L): DataFrame = {
+      df: DataFrame, basketCols: Seq[String], itemCol: String, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val rules = associationRules(df, basketCols, itemCol, minPairCount)
+    val rules = associationRules(df, basketCols, itemCol)
     val score = col("n_ab").cast("double") /
       sqrt(col("n_a").cast("double") * col("n_b").cast("double"))
     val w = org.apache.spark.sql.expressions.Window
@@ -106,10 +104,9 @@ object BasketOps {
     */
   def recommendItems(
       df: DataFrame, userCol: String, basketCols: Seq[String],
-      itemCol: String, kNeighbors: Int, topN: Int,
-      minPairCount: Long = 1L): DataFrame = {
+      itemCol: String, kNeighbors: Int, topN: Int): DataFrame = {
     require(topN >= 1, s"topN must be >= 1, got $topN")
-    val nb = itemNeighbors(df, basketCols, itemCol, kNeighbors, minPairCount)
+    val nb = itemNeighbors(df, basketCols, itemCol, kNeighbors)
       .select(col("item").as("__item"), col("neighbor").as("__cand"),
         col("score"))
     val profile = df.select(col(userCol).as("__user"),

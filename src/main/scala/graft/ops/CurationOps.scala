@@ -347,7 +347,7 @@ object CurationOps {
     * EMNLP 2007 "Large Language Models in Machine Translation") — the
     * smoothing designed precisely for distributed count-table LMs:
     * no discount bookkeeping, just relative frequencies with a fixed
-    * backoff multiplier,
+    * backoff multiplier λ = 0.4 (the published value),
     * `S(w3|w1 w2) = c(w1w2w3)/c(w1w2)` when the trigram was seen, else
     * `λ·c(w2w3)/c(w2)`, else the add-one unigram floor
     * `λ²·(c(w3)+1)/(N+V)` (the published form ends at `c(w3)/N`,
@@ -372,9 +372,8 @@ object CurationOps {
   def stupidBackoff(
       df: DataFrame, textCol: String, idCol: String,
       uni: DataFrame, bi: DataFrame, tri: DataFrame,
-      tokenKey: Column => Column = xxhash64(_),
-      lambda: Double = 0.4): DataFrame = {
-    require(lambda > 0.0 && lambda <= 1.0, s"lambda in (0, 1], got $lambda")
+      tokenKey: Column => Column = xxhash64(_)): DataFrame = {
+    val lambda = 0.4
     val totals = broadcast(
       uni.agg(sum(col("n")).as("n_tokens"), count(lit(1)).as("v")))
     val occ = graft.core.PlanOps.fanOutSmall(
@@ -418,12 +417,11 @@ object CurationOps {
     */
   def stupidBackoffSelf(
       df: DataFrame, textCol: String, idCol: String,
-      tokenKey: Column => Column = xxhash64(_),
-      lambda: Double = 0.4): DataFrame =
+      tokenKey: Column => Column = xxhash64(_)): DataFrame =
     stupidBackoff(df, textCol, idCol,
       lmUnigramCounts(df, textCol, tokenKey),
       lmBigramCounts(df, textCol, tokenKey),
-      lmTrigramCounts(df, textCol, tokenKey), tokenKey, lambda)
+      lmTrigramCounts(df, textCol, tokenKey), tokenKey)
 
   /** Quantile-band tagging — CCNet's head/middle/tail split
     * generalized: tag every row with the label of the quantile band its
@@ -675,16 +673,15 @@ object CurationOps {
     * corpus.
     */
   def blocklistFilter(
-      df: DataFrame, textCol: String, words: Seq[String],
-      tokenKey: Column => Column = xxhash64(_)): DataFrame = {
+      df: DataFrame, textCol: String, words: Seq[String]): DataFrame = {
     require(words.nonEmpty, "blocklistFilter: empty blocklist")
     import df.sparkSession.implicits._
     val wset = words.toDF("w")
-      .agg(sort_array(collect_list(tokenKey(col("w")))).as("bl_keys"))
+      .agg(sort_array(collect_list(xxhash64(col("w")))).as("bl_keys"))
     df.crossJoin(broadcast(wset))
       .filter(!exists(TextOps.whitespaceTokenize(col(textCol)),
         t => graft.functions.SortedLongContains.sortedLongContains(
-          col("bl_keys"), tokenKey(t))))
+          col("bl_keys"), xxhash64(t))))
       .drop("bl_keys")
   }
 

@@ -19,6 +19,11 @@ import graft.core.PortableHash
   */
 object DedupOps {
 
+  /** The MinHash banding of every production decision path: 16 bands
+    * of 4 rows (the portable twins take theirs as arguments). */
+  private val Bands = 16
+  private val RowsPerBand = 4
+
   /** Normalization used for exact dedup: lower(trim(text)). */
   def normText(text: Column): Column = lower(trim(text))
 
@@ -513,10 +518,9 @@ object DedupOps {
     * Returns the KEPT rows of `df`, unchanged schema.
     */
   def dedupKeepers(
-      df: DataFrame, textCol: String, idCol: String, threshold: Double,
-      bands: Int = 16, rowsPerBand: Int = 4): DataFrame =
+      df: DataFrame, textCol: String, idCol: String, threshold: Double): DataFrame =
     keepersBySets(Production, df, Production.tokens(col(textCol)), idCol,
-      threshold, bands, rowsPerBand, emptyMatchesEmpty = true)
+      threshold, Bands, RowsPerBand, emptyMatchesEmpty = true)
 
   /** [[dedupKeepers]] over word n-gram (shingle) sets — the scale
     * DECISION path for the n-gram Jaccard family (the pairwise q22 form
@@ -538,7 +542,7 @@ object DedupOps {
     */
   def dedupKeepersNgram(
       df: DataFrame, textCol: String, idCol: String, threshold: Double,
-      n: Int, bands: Int = 16, rowsPerBand: Int = 4): DataFrame = {
+      n: Int): DataFrame = {
     require(n >= 1, s"need n >= 1, got $n")
     // fused one-pass shingle hashing ([[graft.functions.ShingleHashes64]],
     // value-identical to hashedNgramSet) — the composable form's
@@ -546,7 +550,7 @@ object DedupOps {
     keepersBySets(Production, df,
       graft.functions.ShingleHashes64.shingleHashes64(
         TextOps.whitespaceTokenize(col(textCol)), n),
-      idCol, threshold, bands, rowsPerBand, emptyMatchesEmpty = false)
+      idCol, threshold, Bands, RowsPerBand, emptyMatchesEmpty = false)
   }
 
   /** ORACLE-portable twin of [[dedupKeepers]]: the same decision plan
@@ -607,7 +611,7 @@ object DedupOps {
   /** [[dedupKeepers]] iterated to a fixpoint — the documented remedy for
     * the decision path's chain-recall gap (two non-rep cluster members
     * are never compared directly in one pass) shipped as an operator.
-    * The loop stops when a pass drops nothing or after `maxPasses`.
+    * The loop stops when a pass drops nothing or after 5 passes.
     * Driver-side control flow touches only COUNTS (one aggregate per
     * pass) — no rows ever collect. The fixpoint is IDEMPOTENT (one more
     * pass drops nothing): every survivor either is the min id of all its
@@ -651,20 +655,19 @@ object DedupOps {
     */
   def dedupKeepersConverged(
       df: DataFrame, textCol: String, idCol: String, threshold: Double,
-      bands: Int = 16, rowsPerBand: Int = 4, maxPasses: Int = 5,
       onPass: (Int, Long, Double) => Unit = (_, _, _) => ()): DataFrame = {
     val prepT0 = System.nanoTime()
     var prep = df
       .select(col(idCol).as("id"), hashedTokenSet(col(textCol)).as("toks"))
       .select(col("id"), col("toks"), size(col("toks")).as("n"),
         graft.functions.MinHashBandHashes.minHashBandHashes(
-          col("toks"), bands, rowsPerBand).as("band_arr"))
+          col("toks"), Bands, RowsPerBand).as("band_arr"))
       .persist()
     var curCount = prep.count()
     onPass(0, curCount, (System.nanoTime() - prepT0) / 1e9)
     var pass = 0
     var converged = false
-    while (pass < maxPasses && !converged) {
+    while (pass < 5 && !converged) {
       val passT0 = System.nanoTime()
       val edges = repEdges(explodeBands(prep, "id"))
       val dropped = verifiedDropIds(Production,
@@ -722,10 +725,8 @@ object DedupOps {
     */
   def dedupIncremental(
       corpus: DataFrame, batch: DataFrame, textCol: String, idCol: String,
-      threshold: Double, bands: Int = 16, rowsPerBand: Int = 4): DataFrame =
-    dedupIncremental(
-      CorpusReps(corpusBucketReps(corpus, textCol, idCol, bands, rowsPerBand),
-        bands, rowsPerBand),
+      threshold: Double): DataFrame =
+    dedupIncremental(CorpusReps(corpusBucketReps(corpus, textCol, idCol)),
       batch, textCol, idCol, threshold)
 
   /** The precomputable corpus side of [[dedupIncremental]] as a public,
@@ -743,9 +744,8 @@ object DedupOps {
     * version, amortized over every subsequent batch.
     */
   def corpusBucketReps(
-      corpus: DataFrame, textCol: String, idCol: String,
-      bands: Int = 16, rowsPerBand: Int = 4): DataFrame =
-    bucketRepsBy(Production, corpus, textCol, idCol, bands, rowsPerBand)
+      corpus: DataFrame, textCol: String, idCol: String): DataFrame =
+    bucketRepsBy(Production, corpus, textCol, idCol, Bands, RowsPerBand)
 
   /** ORACLE-portable twin of [[corpusBucketReps]] (the
     * [[dedupKeepersPortable]] hash family: md5-salted min-hashes,
@@ -780,7 +780,7 @@ object DedupOps {
     * identically to the reps — a silent mismatch would not error, it
     * would just miss duplicates.
     */
-  final case class CorpusReps(df: DataFrame, bands: Int = 16, rowsPerBand: Int = 4)
+  final case class CorpusReps(df: DataFrame, bands: Int = Bands, rowsPerBand: Int = RowsPerBand)
 
   /** REMOVE ids from a standing [[corpusBucketReps]] frame — the
     * removal verb for the dedup leg (completing the engine-wide
@@ -1075,8 +1075,8 @@ object DedupOps {
   /** Edit-distance fuzzy dedup DECISION path — the record-linkage
     * verify (classic Levenshtein matching) grafted onto the SimHash
     * candidate plan: per chunk bucket the min-id doc is the rep, a
-    * candidate is any (doc, rep) pair whose signatures are within
-    * `maxHamming` (the [[simHashKeepers]] gate — cheap, text-free), and
+    * candidate is any (doc, rep) pair whose signatures are within 3
+    * bits (the [[simHashKeepers]] gate — cheap, text-free), and
     * a candidate is DROPPED only if the exact character-level
     * `levenshtein(doc, rep) <= maxDist`. Keep/drop per doc, no pair
     * list.
@@ -1088,13 +1088,11 @@ object DedupOps {
     * O(len²) Levenshtein DP runs once per surviving candidate pair —
     * bounded by bucket occupancy, never |corpus|². Banding recall
     * contract is [[simHashKeepers]]'s: a true near-dup pair farther
-    * than `maxHamming` in signature space is not seen (raise chunks /
-    * lower `maxHamming` trades recall for candidates).
+    * than 3 bits in signature space is not seen.
     */
   def editKeepers(
-      df: DataFrame, textCol: String, idCol: String,
-      maxDist: Int, maxHamming: Int = 3): DataFrame =
-    editKeepersBy(Production, df, textCol, idCol, maxDist, maxHamming)
+      df: DataFrame, textCol: String, idCol: String, maxDist: Int): DataFrame =
+    editKeepersBy(Production, df, textCol, idCol, maxDist)
 
   /** ORACLE-portable twin of [[editKeepers]]: identical decision plan
     * over the 48-bit md5-family signature (q29/q43's chain) so DuckDB
@@ -1102,14 +1100,13 @@ object DedupOps {
     * (both engines implement the classic unit-cost DP).
     */
   def editKeepersPortable(
-      df: DataFrame, textCol: String, idCol: String,
-      maxDist: Int, maxHamming: Int = 3): DataFrame =
-    editKeepersBy(Portable, df, textCol, idCol, maxDist, maxHamming)
+      df: DataFrame, textCol: String, idCol: String, maxDist: Int): DataFrame =
+    editKeepersBy(Portable, df, textCol, idCol, maxDist)
 
   private def editKeepersBy(
       f: HashFamily, df: DataFrame, textCol: String, idCol: String,
-      maxDist: Int, maxHamming: Int): DataFrame = {
-    val cand = simHashCandidates(f, df, textCol, idCol, maxHamming)
+      maxDist: Int): DataFrame = {
+    val cand = simHashCandidates(f, df, textCol, idCol, maxHamming = 3)
       .select("id", "rep").distinct()
     val texts = df.select(col(idCol).as("tid"), col(textCol).as("ttxt"))
     val dropped = cand
@@ -1312,10 +1309,9 @@ object DedupOps {
     */
   def dupComponents(
       df: DataFrame, idCol: String, pairs: DataFrame,
-      aCol: String = "id_a", bCol: String = "id_b",
-      maxPasses: Int = 20): DataFrame = {
+      aCol: String = "id_a", bCol: String = "id_b"): DataFrame = {
     val comp = graft.ops.GraphOps
-      .connectedComponentsAlternating(pairs, aCol, bCol, maxPasses)
+      .connectedComponentsAlternating(pairs, aCol, bCol, 20)
     df.join(comp.withColumnRenamed("id", idCol), Seq(idCol), "left")
       .withColumn("component",
         coalesce(col("component"), col(idCol).cast("long")))
@@ -1347,9 +1343,9 @@ object DedupOps {
     */
   def dupComponentsFromReps(
       df: DataFrame, textCol: String, idCol: String, threshold: Double,
-      bands: Int = 16, rowsPerBand: Int = 4, maxPasses: Int = 20): DataFrame = {
+      bands: Int = Bands, rowsPerBand: Int = RowsPerBand): DataFrame = {
     val comp = starComponentLabels(df, textCol, idCol, threshold, bands,
-      rowsPerBand, maxPasses)
+      rowsPerBand)
     df.join(comp.withColumnRenamed("id", idCol), Seq(idCol), "left")
       .withColumn("component",
         coalesce(col("component"), col(idCol).cast("long")))
@@ -1364,11 +1360,11 @@ object DedupOps {
     */
   private def starComponentLabels(
       df: DataFrame, textCol: String, idCol: String, threshold: Double,
-      bands: Int, rowsPerBand: Int, maxPasses: Int): DataFrame =
+      bands: Int, rowsPerBand: Int): DataFrame =
     connectedComponents(
       verifiedRepEdges(Production, df, Production.tokens(col(textCol)), idCol,
         threshold, bands, rowsPerBand, emptyMatchesEmpty = true),
-      "id", "rep", maxPasses)
+      "id", "rep")
 
   /** ONE-PASS cluster dedup (VERDICT r7 #5): keep exactly one doc —
     * the min id — per CONNECTED COMPONENT of the verified star-edge
@@ -1400,10 +1396,9 @@ object DedupOps {
     * small loser set the anti-join broadcasts outright.
     */
   def dedupKeepersByComponents(
-      df: DataFrame, textCol: String, idCol: String, threshold: Double,
-      bands: Int = 16, rowsPerBand: Int = 4, maxPasses: Int = 20): DataFrame = {
-    val losers = starComponentLabels(df, textCol, idCol, threshold, bands,
-        rowsPerBand, maxPasses)
+      df: DataFrame, textCol: String, idCol: String, threshold: Double): DataFrame = {
+    val losers = starComponentLabels(df, textCol, idCol, threshold, Bands,
+        RowsPerBand)
       .filter(col("component") =!= col("id"))
       .select("id")
     df.join(losers.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
@@ -1434,11 +1429,9 @@ object DedupOps {
     * label, weight — O(docs × bands) end to end.
     */
   def softDedupWeightsFromReps(
-      df: DataFrame, textCol: String, idCol: String, threshold: Double,
-      bands: Int = 16, rowsPerBand: Int = 4, maxPasses: Int = 20): DataFrame =
+      df: DataFrame, textCol: String, idCol: String, threshold: Double): DataFrame =
     softDedupWeights(
-      dupComponentsFromReps(df, textCol, idCol, threshold,
-        bands, rowsPerBand, maxPasses)
+      dupComponentsFromReps(df, textCol, idCol, threshold)
         .select(col(idCol), col("component")))
 
   /** SemDeDup (Abbas et al. 2023): k-means-cluster the embeddings,
@@ -1510,12 +1503,9 @@ object DedupOps {
     * measured ~30× the native cost at sf0.1, the reason the fused
     * form is the production default).
     */
-  def cdcChunksComposable(
-      text: Column, maskBits: Int = 6, hashBits: Int = 20): Column = {
-    require(maskBits >= 1 && maskBits <= hashBits && hashBits <= 30,
-      s"cdcChunks: need 1 <= maskBits <= hashBits <= 30")
-    val mod = lit(1L << hashBits)
-    val mask = lit(1L << maskBits)
+  def cdcChunksComposable(text: Column): Column = {
+    val mod = lit(1L << 20)  // hashBits = 20
+    val mask = lit(1L << 6)  // maskBits = 6
     val n = length(text)
     // ONE left fold over positions (HOFs get no subexpression
     // elimination, so a cuts-array formulation re-evaluates the hash
@@ -1568,10 +1558,9 @@ object DedupOps {
     */
   def cdcDupStats(
       df: DataFrame, textCol: String, idCol: String,
-      maskBits: Int = 6, hashBits: Int = 20,
       keyFn: Column => Column = c => xxhash64(c)): DataFrame = {
     val chunks = df
-      .select(col(idCol), explode(cdcChunks(col(textCol), maskBits, hashBits))
+      .select(col(idCol), explode(cdcChunks(col(textCol)))
         .as("__chunk"))
       .select(col(idCol), keyFn(col("__chunk")).as("__ck"))
     val shared = chunks.select(col(idCol), col("__ck")).distinct()

@@ -226,11 +226,10 @@ object DriftOps {
     */
   def mmdDrift(
       a: DataFrame, b: DataFrame, vecCol: String, dim: Int,
-      features: Int = 16, sigma: Double = 4.0,
-      seed: Long = 8L): DataFrame = {
+      features: Int = 16, sigma: Double = 4.0): DataFrame = {
     require(dim > 0 && features > 0 && sigma > 0, "bad mmdDrift params")
-    val w = rffMatrix(dim, features, sigma, seed)
-    val phases = rffPhases(features, seed)
+    val w = rffMatrix(dim, features, sigma, 8L)
+    val phases = rffPhases(features, 8L)
     val bLit = typedlit(phases.toSeq)
     val scale = math.sqrt(2.0 / features)
     def featureMeans(df: DataFrame, muCol: String): DataFrame =

@@ -101,26 +101,25 @@ object EvalMetrics {
     * metrics row is one action with no cross joins.
     */
   def hierarchicalF1(
-      pairs: DataFrame, dim: DataFrame,
-      predLv2: String = "pred", labelLv2: String = "label"): DataFrame = {
+      pairs: DataFrame, dim: DataFrame): DataFrame = {
     val lv1 = dim.filter(col("lv1id").isNotNull).select(col("lv2id"), col("lv1id"))
     def found(lv1Col: String, lv2Col: String): Column =
       when(col(lv1Col).isNull, raise_error(concat(
         lit(s"hierarchicalF1: $lv2Col id absent from category dim: "),
         coalesce(col(lv2Col).cast("string"), lit("NULL"))))).otherwise(col(lv1Col))
     val withLv1 = pairs
-      .join(broadcast(lv1.withColumnRenamed("lv2id", predLv2)
-        .withColumnRenamed("lv1id", "pred_lv1")), Seq(predLv2), "left")
-      .join(broadcast(lv1.withColumnRenamed("lv2id", labelLv2)
-        .withColumnRenamed("lv1id", "label_lv1")), Seq(labelLv2), "left")
-      .withColumn("pred_lv1", found("pred_lv1", predLv2))
-      .withColumn("label_lv1", found("label_lv1", labelLv2))
+      .join(broadcast(lv1.withColumnRenamed("lv2id", "pred")
+        .withColumnRenamed("lv1id", "pred_lv1")), Seq("pred"), "left")
+      .join(broadcast(lv1.withColumnRenamed("lv2id", "label")
+        .withColumnRenamed("lv1id", "label_lv1")), Seq("label"), "left")
+      .withColumn("pred_lv1", found("pred_lv1", "pred"))
+      .withColumn("label_lv1", found("label_lv1", "label"))
     // both levels in one aggregate; an empty input gives a row of nulls,
     // as the relational f1Block does (the aggregator alone would say 0)
     val f1 = udaf(F1Aggregator)
     val m = withLv1.agg(
       count(lit(1)).as("n"),
-      f1(col(predLv2).cast("int"), col(labelLv2).cast("int")).as("lv2"),
+      f1(col("pred").cast("int"), col("label").cast("int")).as("lv2"),
       f1(col("pred_lv1").cast("int"), col("label_lv1").cast("int")).as("lv1"))
     def metric(level: String, field: Int, name: String): Column =
       when(col("n") > 0, col(s"$level._$field")).as(s"${level}_$name")
@@ -217,18 +216,16 @@ object EvalMetrics {
   }
 
   /** Expected calibration error (Naeini et al. 2015; Guo et al. 2017's
-    * reliability-diagram summary): scores in [0, 1] land in `bins`
+    * reliability-diagram summary): scores in [0, 1] land in 10
     * equal-width bins (right-closed at 1), ECE = Σ_b (n_b / N) ·
     * |accuracy_b − confidence_b|. Returns the per-bin reliability
     * frame (bin, n, avg confidence, accuracy, |gap|) PLUS the ECE on
-    * every row — one keyed agg over ≤ `bins` rows, round-then-DECIMAL
+    * every row — one keyed agg over ≤ 10 rows, round-then-DECIMAL
     * terms so the weighted sum replays bit-level cross-engine.
     */
   def calibrationBins(
-      df: DataFrame, scoreCol: String, labelCol: String,
-      bins: Int = 10): DataFrame = {
-    require(bins >= 1, "calibrationBins: bins must be >= 1")
-    val b = least(floor(col(scoreCol).cast("double") * bins), lit(bins - 1))
+      df: DataFrame, scoreCol: String, labelCol: String): DataFrame = {
+    val b = least(floor(col(scoreCol).cast("double") * 10), lit(9))
       .cast("int")
     // per-row round-then-DECIMAL before the bin sums: a double `avg`
     // folds in partition order and can differ in the last ulp across

@@ -21,7 +21,8 @@ import org.apache.spark.sql.functions._
 object GraphOps {
 
   /** PageRank over a DIRECTED edge list, `iters` synchronous passes:
-    * `rank = (1-d)/N + d * (sum(rank_in / outdeg_in) [+ dangle/N])`.
+    * `rank = (1-d)/N + d * (sum(rank_in / outdeg_in) [+ dangle/N])`,
+    * damping d = 0.85.
     *
     * Nodes = union of both endpoint sets; a node with no in-edges keeps
     * the teleport term. With `redistributeDangling` the mass held by
@@ -37,10 +38,11 @@ object GraphOps {
     * resolution per pass, far inside the oracle's 6-decimal compare.
     */
   def pageRank(
-      edges: DataFrame, iters: Int, damping: Double = 0.85,
+      edges: DataFrame, iters: Int,
       srcCol: String = "src", dstCol: String = "dst",
       redistributeDangling: Boolean = false): DataFrame = {
-    require(iters >= 0 && damping > 0 && damping < 1)
+    require(iters >= 0)
+    val damping = 0.85
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst")).distinct().localCheckpoint()
     val nodes = e.select(col("src").as("id"))

@@ -135,7 +135,7 @@ object MixOps {
     */
   def epochPlanApply(
       df: DataFrame, domainCol: String, tokensCol: String, idCol: String,
-      targetTokens: Long, temperature: Double, seed: Long = 42L): DataFrame = {
+      targetTokens: Long, temperature: Double): DataFrame = {
     val plan = epochPlan(df, domainCol, tokensCol, targetTokens, temperature)
       .select(col("domain").as(domainCol), col("epochs"))
     df.join(broadcast(plan), domainCol)
@@ -148,7 +148,7 @@ object MixOps {
       // (index == full_copies) survives its stochastic-rounding draw
       .filter(col("copy") < col("full_copies") ||
         PortableHash.uniform01(
-          concat_ws("#", col(idCol), col("copy")), lit(seed)) < col("frac"))
+          concat_ws("#", col(idCol), col("copy")), lit(42L)) < col("frac"))
       .select(col(idCol), col("domain"), col("copy"))
   }
 

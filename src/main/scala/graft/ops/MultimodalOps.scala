@@ -212,14 +212,13 @@ object MultimodalOps {
     * degenerate corpus floods one bucket).
     */
   def imageNearDups(
-      df: DataFrame, idCol: String, vecCol: String, maxHamming: Int,
-      cells: Int = 64): DataFrame =
+      df: DataFrame, idCol: String, vecCol: String, maxHamming: Int): DataFrame =
     nearDupsFromHashes(df
       // fused one-pass expression; the composable [[averageHash]] is
       // its bit-identical differential twin (the HOF form re-evaluates
       // the mean fold inside every pack step — O(cells²)/row)
       .withColumn("__h", graft.functions.AverageHashHalves
-        .averageHashHalves(col(vecCol), cells)),
+        .averageHashHalves(col(vecCol))),
       idCol, maxHamming)
 
   /** [[imageNearDups]] with the DCT perceptual hash

@@ -24,6 +24,9 @@ import org.apache.spark.sql.functions._
   */
 object PqOps {
 
+  /** Lloyd rounds of every codebook the search and index members train. */
+  private val Iters = 1
+
   /** Scheme-agnostic child path under a standing-index dir — Hadoop
     * `Path`, never `java.io.File`: index dirs live wherever the ingest
     * pipeline writes (local FS in the sandbox, HDFS/S3 behind the
@@ -165,14 +168,14 @@ object PqOps {
   def ivfPqSearchADC(
       queries: DataFrame, corpus: DataFrame, k: Int,
       nlist: Int = 16, nprobe: Int = 4,
-      m: Int = 4, ksub: Int = 8, iters: Int = 1, dim: Int = 64,
+      m: Int = 4, ksub: Int = 8, dim: Int = 64,
       byResidual: Boolean = true,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && nlist >= 1 && nprobe >= 1 && nprobe <= nlist,
       s"ivfPqSearchADC: need k,nlist,nprobe >= 1 and nprobe <= nlist")
     val centVecs = ivfCentroidVecs(corpus, nlist, dim, idCol, vecCol)
     val (cb, enc) =
-      ivfTrainEncode(corpus, centVecs, m, ksub, iters, dim, byResidual,
+      ivfTrainEncode(corpus, centVecs, m, ksub, dim, byResidual,
         idCol, vecCol)
     ivfPqProbeSearch(queries, centVecs, cb, enc, k, nprobe, m, ksub, dim,
       byResidual, idCol, vecCol)
@@ -229,7 +232,7 @@ object PqOps {
     */
   private def ivfTrainEncode(
       corpus: DataFrame, centVecs: Array[Seq[Float]],
-      m: Int, ksub: Int, iters: Int, dim: Int, byResidual: Boolean,
+      m: Int, ksub: Int, dim: Int, byResidual: Boolean,
       idCol: String, vecCol: String): (Array[Float], DataFrame) = {
     val mat = flatMat(centVecs, dim)
     val assigned = validVecs(corpus, vecCol, idCol, dim)
@@ -241,7 +244,7 @@ object PqOps {
         if (byResidual) residualOf(centVecs, col("vec"), col("centroid"))
         else col("vec"))
     val cb = trainCodebooks(assigned, "enc_vec", "neighbor_id",
-      m, ksub, iters, dim)
+      m, ksub, Iters, dim)
     val enc = assigned.select(col("centroid"), col("neighbor_id"),
       graft.functions.Pq.pqCodes(col("enc_vec"), cb, m, ksub, dim)
         .as("codes"))
@@ -308,7 +311,7 @@ object PqOps {
     */
   def ivfPqIndex(
       corpus: DataFrame, indexDir: String,
-      nlist: Int = 16, m: Int = 4, ksub: Int = 8, iters: Int = 1,
+      nlist: Int = 16, m: Int = 4, ksub: Int = 8,
       dim: Int = 64, byResidual: Boolean = true,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     require(nlist >= 1, "ivfPqIndex: need nlist >= 1")
@@ -316,7 +319,7 @@ object PqOps {
     import spark.implicits._
     val centVecs = ivfCentroidVecs(corpus, nlist, dim, idCol, vecCol)
     val (cb, enc) =
-      ivfTrainEncode(corpus, centVecs, m, ksub, iters, dim, byResidual,
+      ivfTrainEncode(corpus, centVecs, m, ksub, dim, byResidual,
         idCol, vecCol)
     val subdim = dim / m
     def p(name: String) = idxPath(indexDir, name)
@@ -618,15 +621,15 @@ object PqOps {
     *
     * Returns [[DriftOps.categoricalDrift]]'s per-centroid frame
     * (centroid, n_old, n_new, p_old, p_new, psi_term, psi_total) plus
-    * a `verdict` column: `rebuild` iff psi_total > psiThreshold (0.25
-    * — the standard industry PSI action line) else `keep`.
+    * a `verdict` column: `rebuild` iff psi_total > 0.25 (the standard
+    * industry PSI action line) else `keep`.
     *
     * Scale shape: the base side scans only the codes' centroid ints
     * (parquet prunes the other columns), the batch side is one fused
     * assignment pass; both collapse map-side to ≤ nlist rows.
     */
   def ivfPqRebuildGauge(
-      batch: DataFrame, indexDir: String, psiThreshold: Double = 0.25,
+      batch: DataFrame, indexDir: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = batch.sparkSession
     val (_, _, _, dim, _, centVecs, _) = loadIndexArtifacts(spark, indexDir)
@@ -651,7 +654,7 @@ object PqOps {
         1).as("centroid"))
     DriftOps.categoricalDrift(base, incoming, "centroid")
       .withColumn("verdict",
-        when(col("psi_total") > psiThreshold, lit("rebuild"))
+        when(col("psi_total") > 0.25, lit("rebuild"))
           .otherwise(lit("keep")))
   }
 
@@ -780,9 +783,9 @@ object PqOps {
 
   def pqSearchADC(
       queries: DataFrame, corpus: DataFrame, k: Int,
-      m: Int = 4, ksub: Int = 8, iters: Int = 1, dim: Int = 64,
+      m: Int = 4, ksub: Int = 8, dim: Int = 64,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val cb = trainCodebooks(corpus, vecCol, idCol, m, ksub, iters, dim)
+    val cb = trainCodebooks(corpus, vecCol, idCol, m, ksub, Iters, dim)
     val enc = pqEncode(corpus, vecCol, idCol, cb, m, ksub, dim)
       .withColumnRenamed(idCol, "neighbor_id")
     val q = validVecs(queries, vecCol, idCol, dim)

@@ -162,14 +162,14 @@ object ProfileOps {
     * customer-value segmentation): per key, days since the last
     * transaction (relative to the corpus max date), transaction
     * count, and exact DECIMAL-summed spend, each bucketed into
-    * `buckets` quantile scores 1..buckets (higher = better: more
+    * five quantile scores 1..5 (higher = better: more
     * recent, more frequent, bigger spend). Ties break on the key, so
     * every score is deterministic under any partitioning.
     *
     * Scale shape: one keyed aggregation to the per-key metric frame,
     * then each score is a RANGE-PARTITIONED sort + dense row index
     * ([[graft.ops.JoinOps.withRowIndex]] — the gini pattern, NO
-    * single-partition ntile window), `score = ⌊idx·buckets/n⌋ + 1`;
+    * single-partition ntile window), `score = ⌊idx·5/n⌋ + 1`;
     * three key-equi-joins reassemble. The corpus max date rides a
     * 1-row broadcast.
     *
@@ -177,9 +177,7 @@ object ProfileOps {
     * f_score, m_score, segment)` with `segment = r·100 + f·10 + m`.
     */
   def rfmScores(
-      df: DataFrame, keyCol: String, tsCol: String, amountCol: String,
-      buckets: Int = 5): DataFrame = {
-    require(buckets >= 2, s"buckets must be >= 2, got $buckets")
+      df: DataFrame, keyCol: String, tsCol: String, amountCol: String): DataFrame = {
     val perKey = df.groupBy(col(keyCol).as("k"))
       .agg(max(col(tsCol)).as("__last"),
         count(lit(1)).as("frequency"),
@@ -214,7 +212,7 @@ object ProfileOps {
     val scoredAll = JoinOps.withRowIndex(stacked, "__gi")
       .select(col("__m"), col("k"), col("recency_days"), col("frequency"),
         col("monetary"),
-        (floor((col("__gi") - col("__m") * n).cast("double") * buckets /
+        (floor((col("__gi") - col("__m") * n).cast("double") * 5 /
           n.toDouble) + 1).cast("int").as("__score"))
     def sc(m: Int) = max(when(col("__m") === m, col("__score")))
     scoredAll.groupBy(col("k"))
@@ -230,9 +228,9 @@ object ProfileOps {
 
   /** ABC / PARETO CLASSIFICATION — the 80/15/5 inventory cut: items
     * ranked by exact integer metric (micros), class A while the
-    * cumulative total sits within `aPct`% of the grand total, B
-    * within `bPct`%, C beyond. Both thresholds compare as INTEGER
-    * cross-products (`cum·100 ≤ tot·aPct`) — no floating boundary can
+    * cumulative total sits within 80% of the grand total, B
+    * within 95%, C beyond. Both thresholds compare as INTEGER
+    * cross-products (`cum·100 ≤ tot·80`) — no floating boundary can
     * flip an item between engines. Ranks come from the
     * range-partitioned sorted row index + [[graft.ops.StatsOps
     * .runningTotals]] prefix sums (the gini pattern — NO
@@ -242,10 +240,7 @@ object ProfileOps {
     * units — e.g. `round(x, 6)·10⁶`).
     */
   def abcClassify(
-      df: DataFrame, itemCol: String, metricMicrosCol: String,
-      aPct: Int = 80, bPct: Int = 95): DataFrame = {
-    require(aPct >= 1 && aPct < bPct && bPct < 100,
-      s"need 1 <= aPct < bPct < 100, got ($aPct, $bPct)")
+      df: DataFrame, itemCol: String, metricMicrosCol: String): DataFrame = {
     val items = df.groupBy(col(itemCol))
       .agg(sum(col(metricMicrosCol)).as("metric_micros"))
     // order by metric desc (negated metric ascending), item tiebreak —
@@ -258,8 +253,8 @@ object ProfileOps {
     cum.crossJoin(broadcast(tot))
       .select(col(itemCol), col("metric_micros"),
         col("metric_micros_cum").as("cum_micros"),
-        when(col("metric_micros_cum") * 100 <= col("__tot") * aPct, "A")
-          .when(col("metric_micros_cum") * 100 <= col("__tot") * bPct, "B")
+        when(col("metric_micros_cum") * 100 <= col("__tot") * 80, "A")
+          .when(col("metric_micros_cum") * 100 <= col("__tot") * 95, "B")
           .otherwise("C").as("abc_class"))
   }
 

@@ -68,7 +68,8 @@ object SearchOps {
     * best-scoring docs against `query` terms, score descending with
     * `idCol` ascending as the deterministic tiebreak. Docs matching no
     * term score 0 and still rank (filter upstream if unwanted).
-    * `k1`/`b` are the standard saturation/length-normalization knobs.
+    * `k1` = 1.2 and `b` = 0.75 are the standard saturation and
+    * length-normalization constants.
     *
     * The term sum folds LEFT-TO-RIGHT in query order with plain IEEE
     * double arithmetic (+ one `ln` per term), so a SQL oracle can
@@ -76,9 +77,10 @@ object SearchOps {
     */
   def bm25TopK(
       df: DataFrame, textCol: String, idCol: String,
-      query: Seq[String], k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+      query: Seq[String], k: Int): DataFrame = {
     require(query.nonEmpty, "bm25TopK: empty query")
+    val k1 = 1.2
+    val b = 0.75
     val toks = TextOps.whitespaceTokenize(col(textCol))
     // one corpus pass: N, average doc length, df per query term
     val statAggs =
@@ -165,7 +167,7 @@ object SearchOps {
 
   /** Reciprocal-rank fusion (Cormack et al. 2009) — the standard
     * hybrid-search combiner: each input ranking contributes
-    * `1 / (rrfK + rank)` per doc (1-based ranks), fused score = the
+    * `1 / (60 + rank)` per doc (1-based ranks), fused score = the
     * sum, output = the global top-`k` by round(score, 6) descending
     * with id ascending as the engine-portable tiebreak (IEEE addition
     * is commutative, so the two-list sum is order-exact; beyond two
@@ -183,12 +185,11 @@ object SearchOps {
     * final cut is TakeOrdered.
     */
   def rrfFuse(
-      rankings: Seq[DataFrame], idCol: String, k: Int,
-      rrfK: Int = 60): DataFrame = {
+      rankings: Seq[DataFrame], idCol: String, k: Int): DataFrame = {
     require(rankings.nonEmpty, "rrfFuse: no rankings")
     val u = rankings.map(_.select(col(idCol), col("rank"))).reduce(_ unionByName _)
     u.groupBy(idCol)
-      .agg(sum(lit(1.0) / (lit(rrfK.toDouble) + col("rank").cast("double"))).as("rrf"),
+      .agg(sum(lit(1.0) / (lit(60.0) + col("rank").cast("double"))).as("rrf"),
         count(lit(1)).as("n_lists"))
       .orderBy(round(col("rrf"), 6).desc, col(idCol))
       .limit(k)

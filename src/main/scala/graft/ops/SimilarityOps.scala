@@ -17,6 +17,13 @@ import org.apache.spark.sql.functions._
   */
 object SimilarityOps {
 
+  /** The hyperplane-LSH banding every production search, index and
+    * mining member uses: 8 bands of 8 planes. One pair for all of them
+    * keeps a [[writeLshIndex]] table and its [[lshSearchIndexed]]
+    * queries banded alike; a mismatch would find no candidates. */
+  private val Bands = 8
+  private val PlanesPerBand = 8
+
   /** Exact cosine top-k: for every row of `queries`, the `k` nearest
     * `corpus` rows by cosine (self-pairs excluded when ids collide).
     * Broadcast the queries side when it is small — Catalyst then plans a
@@ -155,11 +162,10 @@ object SimilarityOps {
     * the upstream top-k operators.
     */
   def annRecallCI(
-      exactNN: DataFrame, approxNN: DataFrame, k: Int, reps: Int = 40,
-      seed: String = "annci", alpha: Double = 0.05): DataFrame =
+      exactNN: DataFrame, approxNN: DataFrame, k: Int): DataFrame =
     graft.ops.StatsOps.poissonBootstrapCI(
       annRecall(exactNN, approxNN, k), "recall_at_k", "query_id",
-      reps = reps, seed = seed, alpha = alpha)
+      seed = "annci")
 
   /** CONTRASTIVE PAIR MINING — per anchor the top-k most-similar
     * corpus rows with a DIFFERENT label (`negatives = true`: hard
@@ -424,20 +430,6 @@ object SimilarityOps {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     ivfCosineSearch(df, df, k, nlist, nprobe, idCol, vecCol)
 
-  /** LSH-bucketed approximate top-k: `bands` independent signatures of
-    * `planesPerBand` bits; candidates share a (band, signature) bucket;
-    * exact cosine re-rank keeps the best k per query. Recall rises with
-    * `bands`; cost scales with bucket occupancy, not |corpus|².
-    *
-    * Shuffle discipline: vectors ride only the LINEAR banded stream
-    * (docs × bands rows). Cross-band duplicate candidates are dropped
-    * with first-colliding-band-wins ([[graft.functions.FirstEqualIndex]]
-    * over the per-doc bucket arrays — a codegen'd primitive loop, no
-    * `distinct()`), and the exact cosine is computed once per unique
-    * pair RIGHT AT the bucket join where both vectors are already
-    * co-located — so the only pair-level shuffle (the per-query top-k
-    * window) carries (ids, cosine) and nothing else.
-    */
   /** The composable band-signature construction — kept as the
     * reference formulation for the differential spec; production uses
     * the fused codegen [[graft.functions.HyperplaneBandSigs]] (the
@@ -457,12 +449,26 @@ object SimilarityOps {
       }.reduce(_.bitwiseOR(_))
     }: _*)
 
+  /** LSH-bucketed approximate top-k: `Bands` (8) independent
+    * signatures of `PlanesPerBand` (8) bits; candidates share a (band,
+    * signature) bucket; exact cosine re-rank keeps the best k per query.
+    * Recall rises with the band count; cost scales with bucket
+    * occupancy, not |corpus|².
+    *
+    * Shuffle discipline: vectors ride only the LINEAR banded stream
+    * (docs × bands rows). Cross-band duplicate candidates are dropped
+    * with first-colliding-band-wins ([[graft.functions.FirstEqualIndex]]
+    * over the per-doc bucket arrays — a codegen'd primitive loop, no
+    * `distinct()`), and the exact cosine is computed once per unique
+    * pair RIGHT AT the bucket join where both vectors are already
+    * co-located — so the only pair-level shuffle (the per-query top-k
+    * window) carries (ids, cosine) and nothing else.
+    */
   def lshCosineTopK(
-      df: DataFrame, k: Int, bands: Int = 8, planesPerBand: Int = 8,
+      df: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       dim: Int = 64, maxBucket: Int = defaultMaxBucket): DataFrame =
-    lshCosineSearch(df, df, k, bands, planesPerBand, idCol, vecCol, dim,
-      maxBucket)
+    lshCosineSearch(df, df, k, idCol, vecCol, dim, maxBucket)
 
   /** Default corpus-side (band, bucket) occupancy cap for the LSH
     * search family. Uncapped, a hot bucket costs |bucket|² cosines in
@@ -543,11 +549,10 @@ object SimilarityOps {
     */
   def lshCosineSearch(
       queries: DataFrame, corpus: DataFrame, k: Int,
-      bands: Int = 8, planesPerBand: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding",
       dim: Int = 64, maxBucket: Int = defaultMaxBucket): DataFrame = {
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
-    lshScoredPairs(queries, corpus, bands, planesPerBand, idCol, vecCol, dim, maxBucket)
+    lshScoredPairs(queries, corpus, Bands, PlanesPerBand, idCol, vecCol, dim, maxBucket)
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select("query_id", "neighbor_id", "cosine", "rank")
@@ -563,7 +568,7 @@ object SimilarityOps {
     */
   def lshScoredPairs(
       queries: DataFrame, corpus: DataFrame,
-      bands: Int = 8, planesPerBand: Int = 8,
+      bands: Int = Bands, planesPerBand: Int = PlanesPerBand,
       idCol: String = "vec_id", vecCol: String = "embedding",
       dim: Int = 64, maxBucket: Int = defaultMaxBucket): DataFrame = {
     def banded(df: DataFrame): DataFrame = {
@@ -619,18 +624,16 @@ object SimilarityOps {
     */
   def writeLshIndex(
       corpus: DataFrame, table: String,
-      bands: Int = 8, planesPerBand: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      dim: Int = 64, maxBucket: Int = defaultMaxBucket,
-      numFileBuckets: Int = 32): Unit = {
+      dim: Int = 64, maxBucket: Int = defaultMaxBucket): Unit = {
     val sigs = graft.functions.HyperplaneBandSigs
-      .hyperplaneBandSigs(col(vecCol), bands, planesPerBand, dim)
+      .hyperplaneBandSigs(col(vecCol), Bands, PlanesPerBand, dim)
     val banded = corpus
       .select(col(idCol).as("id"), col(vecCol).as("vec"), sigs.as("buckets"))
       .select(col("id"), col("vec"), col("buckets"), posexplode(col("buckets")))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
     graft.io.Sources.writeBucketed(capBucketSide(banded, "id", maxBucket),
-      table, numFileBuckets, Seq("band", "bucket"))
+      table, 32, Seq("band", "bucket"))
   }
 
   /** DELETE ids from a standing [[writeLshIndex]] table —
@@ -663,9 +666,9 @@ object SimilarityOps {
       Some(spark.table(s"${table}__tombstones"))
     else None
 
-  /** Search a [[writeLshIndex]] table: bands/planes/dim must match the
-    * write (signatures are deterministic, so matching parameters mean
-    * matching buckets). Same candidate semantics as a capped
+  /** Search a [[writeLshIndex]] table: `dim` must match the write
+    * (signatures are deterministic, so the shared banding and a
+    * matching dim mean matching buckets). Same candidate semantics as a capped
     * [[lshCosineSearch]] over the same corpus — the spec pins the
     * results equal — but the corpus side comes off the bucketed scan
     * with zero exchanges. Pending [[deleteFromLshIndex]] tombstones are
@@ -676,12 +679,11 @@ object SimilarityOps {
     */
   def lshSearchIndexed(
       queries: DataFrame, table: String, k: Int,
-      bands: Int = 8, planesPerBand: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding",
       dim: Int = 64): DataFrame = {
     val spark = queries.sparkSession
     val sigs = graft.functions.HyperplaneBandSigs
-      .hyperplaneBandSigs(col(vecCol), bands, planesPerBand, dim)
+      .hyperplaneBandSigs(col(vecCol), Bands, PlanesPerBand, dim)
     val l = queries
       .select(col(idCol).as("id"), col(vecCol).as("vec"), sigs.as("buckets"))
       .select(col("id"), col("vec"), col("buckets"), posexplode(col("buckets")))
@@ -725,12 +727,11 @@ object SimilarityOps {
     */
   def hardNegativesLsh(
       df: DataFrame, k: Int, labelCol: String = "label",
-      bands: Int = 8, planesPerBand: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding",
       dim: Int = 64, maxBucket: Int = defaultMaxBucket): DataFrame = {
     def banded(d: DataFrame): DataFrame = {
       val sigs = graft.functions.HyperplaneBandSigs
-        .hyperplaneBandSigs(col(vecCol), bands, planesPerBand, dim)
+        .hyperplaneBandSigs(col(vecCol), Bands, PlanesPerBand, dim)
       d.select(col(idCol).as("id"), col(vecCol).as("vec"),
           col(labelCol).as("lbl"), sigs.as("buckets"))
         .select(col("id"), col("vec"), col("lbl"), col("buckets"),

@@ -226,13 +226,13 @@ object SketchOps {
   }
 
   /** Mergeable per-group quantile sketch: log-binned counts (≤ 64 ×
-    * `subBins` buckets per group — constant state like CMS/HLL: the
+    * 16 buckets per group — constant state like CMS/HLL: the
     * map-side partial aggregate IS the per-partition sketch and the
     * shuffle merge IS the sketch merge, counts adding), then each
     * requested probability resolves to the first bucket whose
     * cumulative count reaches ceil(p·N), reported as the bucket's
     * lower edge — an underestimate by at most one bucket, i.e.
-    * relative error ≤ 1/subBins (+ the 1e-6 micros quantization).
+    * relative error ≤ 1/16 (+ the 1e-6 micros quantization).
     * NULL and non-positive values are excluded by contract (log
     * binning needs a positive domain; shift or split by sign
     * upstream). All binning and target arithmetic is exact integer
@@ -240,9 +240,9 @@ object SketchOps {
     */
   def hdrQuantiles(
       df: DataFrame, valueCol: String, groupCol: String,
-      probs: Seq[Double], subBins: Int = 16): DataFrame = {
+      probs: Seq[Double]): DataFrame = {
     require(probs.nonEmpty && probs.forall(p => p > 0 && p <= 1))
-    require(subBins >= 1)
+    val subBins = 16
     val b = df
       .filter(col(valueCol).isNotNull && col(valueCol) > 0)
       .select(col(groupCol).as("g"),

@@ -365,7 +365,7 @@ object StatsOps {
         col("__N").as("n_rows"))
   }
 
-  /** HUBER ROBUST LOCATION (M-estimator, `iters` fixed IRLS passes) —
+  /** HUBER ROBUST LOCATION (M-estimator, 3 fixed IRLS passes, c = 1.345) —
     * the efficiency upgrade over the median: near-Gaussian data keeps
     * ~95% efficiency (the median only 64%) while outliers beyond
     * `c·scale` are down-weighted `w = c·scale/|x−m|` instead of
@@ -379,9 +379,9 @@ object StatsOps {
     * the median IS the MLE.
     */
   def huberMean(
-      df: DataFrame, keyCol: String, valueCol: String,
-      c: Double = 1.345, iters: Int = 3): DataFrame = {
-    require(c > 0 && iters >= 1)
+      df: DataFrame, keyCol: String, valueCol: String): DataFrame = {
+    val c = 1.345
+    val iters = 3
     def t9(x: Column) = round(x, 9).cast("decimal(38,9)")
     // fan out the narrow (key, value) projection when the scan can't
     // split, and MATERIALIZE every per-key center dim (median, scale,
@@ -742,8 +742,8 @@ object StatsOps {
     * flags). Both centers are exact lower-edge quantiles
     * ([[weightedQuantile]] with unit weights — deterministic under
     * ties and partitioning); a row flags when
-    * `|0.6745·(x − median)/MAD| > zThresh` (Iglewicz–Hoaglin 3.5 by
-    * default). Per group: n, median, MAD, outlier count and the max
+    * `|0.6745·(x − median)/MAD| > 3.5` (Iglewicz–Hoaglin). Per group:
+    * n, median, MAD, outlier count and the max
     * |modified z|; a zero-MAD group (> half the mass on one value)
     * emits NULL counts — the score is undefined there, and a NULL
     * beats silently flagging everything off-mode.
@@ -753,8 +753,7 @@ object StatsOps {
     * over the rows, one keyed aggregate ends it.
     */
   def madOutliers(
-      df: DataFrame, keyCol: String, valueCol: String,
-      zThresh: Double = 3.5): DataFrame = {
+      df: DataFrame, keyCol: String, valueCol: String): DataFrame = {
     // NO stageNarrow here (r15): unlike huberMean/theilSen, every
     // reference to `clean` is LAZY inside one final plan — there are
     // no eager passes to deduplicate, so the localCheckpoint
@@ -776,7 +775,7 @@ object StatsOps {
       .groupBy(keyCol)
       .agg(count(lit(1)).as("n"),
         min(col("median")).as("median"), min(col("mad")).as("mad"),
-        sum(when(col("mad") > 0 && abs(z) > zThresh, 1L).otherwise(0L))
+        sum(when(col("mad") > 0 && abs(z) > 3.5, 1L).otherwise(0L))
           .as("__no"),
         max(when(col("mad") > 0, abs(z))).as("max_abs_z"))
       .select(col(keyCol), col("n"), col("median"), col("mad"),

@@ -221,7 +221,7 @@ object TextAnalysis {
     * "Colossal Clean Crawled Corpus" rules, fixed and documented):
     * split on newlines; KEEP a line only if it ends in a terminal
     * punctuation mark (`.`/`!`/`?`/closing quote after one), has at
-    * least `minWords` whitespace words, and does not mention
+    * least 3 whitespace words, and does not mention
     * "javascript" (case-insensitive — the boilerplate-warning rule).
     * Doc-level: `keep` = cleaned text has at least `minSentences`
     * sentence-terminal marks AND the ORIGINAL text contains neither
@@ -235,11 +235,11 @@ object TextAnalysis {
     * boilerplate never reaches an exchange.
     */
   def c4LineFilter(
-      text: Column, minWords: Int = 3, minSentences: Int = 5): Column = {
+      text: Column, minSentences: Int = 5): Column = {
     val lines = split(text, "\n")
     val kept = filter(lines, l =>
       l.rlike("[.!?][\"']?\\s*$") &&
-        size(filter(split(l, " "), w => w =!= "")) >= minWords &&
+        size(filter(split(l, " "), w => w =!= "")) >= 3 &&
         !lower(l).contains("javascript"))
     val cleaned = array_join(kept, "\n")
     val nSentences = size(regexp_extract_all(cleaned, lit("[.!?]"), lit(0)))
@@ -255,7 +255,7 @@ object TextAnalysis {
 
   /** Gopher document-quality rules (Rae et al. 2021, Table A1 — the
     * published MassiveWeb filter, fixed thresholds as defaults):
-    * word count within [minWords, maxWords]; mean word length within
+    * word count within [minWords, 100000]; mean word length within
     * [3, 10]; symbol-to-word ratio (`#` or `...` occurrences / words)
     * at most 0.1; fraction of words containing at least one
     * alphabetic character at least 0.8; at least 2 distinct of the 8
@@ -271,7 +271,7 @@ object TextAnalysis {
     * [[repetitionSignals]].)
     */
   def gopherQualityFlags(
-      text: Column, minWords: Int = 50, maxWords: Int = 100000): Column = {
+      text: Column, minWords: Int = 50): Column = {
     val toks = TextOps.whitespaceTokenize(text)
     val n = size(toks)
     val nD = n.cast("double")
@@ -283,7 +283,7 @@ object TextAnalysis {
     val stopHits = (Seq("the", "be", "to", "of", "and", "that", "have", "with")
       .map(w => when(array_contains(transform(toks, lower _), w), 1).otherwise(0))
       .reduce((a, b) => a + b))
-    val fWordCount = when(n >= minWords && n <= maxWords, 1).otherwise(0)
+    val fWordCount = when(n >= minWords && n <= 100000, 1).otherwise(0)
     val fMeanLen = when(meanLen >= 3.0 && meanLen <= 10.0, 1).otherwise(0)
     val fSymbol = when(n > 0 && symbols.cast("double") / nD <= 0.1, 1).otherwise(0)
     val fAlpha = when(n > 0 && alphaWords.cast("double") / nD >= 0.8, 1).otherwise(0)

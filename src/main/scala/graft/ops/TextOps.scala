@@ -112,8 +112,8 @@ object TextOps {
   /** Zero-pad an int token array to `len` (reference
     * `src/data_helper.py:72-75`), truncating if longer.
     */
-  def padTo(a: Column, len: Int, padValue: Int = 0): Column =
-    slice(concat(a, array_repeat(lit(padValue), greatest(lit(0), lit(len) - size(a)))), 1, len)
+  def padTo(a: Column, len: Int): Column =
+    slice(concat(a, array_repeat(lit(0), greatest(lit(0), lit(len) - size(a)))), 1, len)
 
   /** Attention mask for a padded sequence: 1 for real, 0 for pad. */
   def attentionMask(a: Column, len: Int): Column =

@@ -81,17 +81,15 @@ object UnigramLmOps {
   }
 
   /** Full induction: seed → `rounds` hard-EM rounds, pruning the
-    * lowest-weight multi-char pieces by `pruneFraction` per round
+    * lowest-weight quarter of the multi-char pieces per round
     * (ties break piece-asc; single chars are never pruned) until at
     * most `vocabSize` pieces remain. Returns the final
     * (piece, logprob) model, weight-desc then piece-asc.
     */
   def unigramTrain(
       df: DataFrame, textCol: String, vocabSize: Int,
-      maxPieceLen: Int = 6, seedSize: Int = 2000, rounds: Int = 4,
-      pruneFraction: Double = 0.25): Seq[(String, Double)] = {
+      maxPieceLen: Int = 6, seedSize: Int = 2000, rounds: Int = 4): Seq[(String, Double)] = {
     require(vocabSize >= 1 && rounds >= 1)
-    require(pruneFraction > 0.0 && pruneFraction < 1.0)
     val words = wordCounts(df, textCol).localCheckpoint()
     var pieces = seedVocab(words, maxPieceLen, seedSize)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
@@ -105,7 +103,7 @@ object UnigramLmOps {
       val sortedMulti = multi.sortBy { case (p, w) => (-w, p) }
       val targetMulti = math.max(
         vocabSize - chars.size,
-        (sortedMulti.size * (1.0 - pruneFraction)).toInt)
+        (sortedMulti.size * (1.0 - 0.25)).toInt)
       // chars are NEVER pruned (the coverage guarantee) — a char fully
       // absorbed by longer pieces keeps a floor weight of 1
       val kept = sortedMulti.take(math.max(0, targetMulti)).filter(_._2 > 0L)

@@ -399,7 +399,7 @@ object VectorOps {
   final case class PcaModel(
       eigenvalues: Array[Double], components: Array[Array[Double]])
 
-  /** Cyclic JACOBI eigendecomposition of the symmetric matrix `a`
+  /** Cyclic JACOBI eigendecomposition (at most 32 sweeps) of the symmetric matrix `a`
     * (driver-side, dim×dim — the broadcast-dim contract: the matrix
     * is CONSTANT-size however large the corpus). Returns
     * (eigenvalues, eigenvectors as rows) sorted by eigenvalue
@@ -407,13 +407,13 @@ object VectorOps {
     * deterministic sign.
     */
   private[ops] def jacobiEigen(
-      a: Array[Array[Double]], sweeps: Int = 32): PcaModel = {
+      a: Array[Array[Double]]): PcaModel = {
     val n = a.length
     val m = Array.tabulate(n, n)((i, j) => a(i)(j))
     val vec = Array.tabulate(n, n)((i, j) => if (i == j) 1.0 else 0.0)
     var sweep = 0
     var off = Double.MaxValue
-    while (sweep < sweeps && off > 1e-14) {
+    while (sweep < 32 && off > 1e-14) {
       off = 0.0
       var p = 0
       while (p < n - 1) {
@@ -633,8 +633,8 @@ object VectorOps {
       .toDF("i", "loading", "eigenvalue", "var_share")
   }
 
-  /** FIRST k PRINCIPAL COMPONENTS by power iteration with HOTELLING
-    * DEFLATION — the k≥2 extension of [[powerComponent]] (same
+  /** FIRST k = 2 PRINCIPAL COMPONENTS by power iteration with HOTELLING
+    * DEFLATION — the two-component extension of [[powerComponent]] (same
     * matrix-free scale shape: never materializes dim², one corpus
     * pass per iteration, a dim-decimal driver collect per pass).
     * Component c power-iterates against the deflated operator
@@ -658,10 +658,10 @@ object VectorOps {
     * `(component ∈ 1..k, i, loading, eigenvalue, var_share)`.
     */
   def powerComponents(
-      df: DataFrame, vecCol: String, dim: Int, k: Int = 2,
+      df: DataFrame, vecCol: String, dim: Int,
       iters: Int = 3): DataFrame = {
-    require(dim > 0, s"powerComponents: dim must be positive, got $dim")
-    require(k >= 1 && k <= dim, s"powerComponents: need 1 <= k <= dim, got $k")
+    val k = 2
+    require(dim >= k, s"powerComponents: need dim >= $k, got $dim")
     require(iters >= 1, s"powerComponents: need iters >= 1, got $iters")
     val spark = df.sparkSession
     import spark.implicits._

@@ -1486,7 +1486,7 @@ object ExtensionQueries {
     */
   def q76(spark: SparkSession, dir: String): DataFrame =
     DedupOps.editKeepersPortable(Tables.documents(spark, dir),
-        "text", "doc_id", maxDist = q76MaxDist, maxHamming = 3)
+        "text", "doc_id", maxDist = q76MaxDist)
       .select(col("doc_id"))
 
   val q76Sql: String =
@@ -2864,7 +2864,7 @@ object ExtensionQueries {
         (graft.core.PortableHash.uniform01(col("doc_id"), lit("lab")) <
           graft.core.PortableHash.uniform01(col("doc_id"), lit("cal")) * 0.8 + 0.1)
           .cast("int").as("label")),
-      "score", "label", bins = 10)
+      "score", "label")
 
   val q113Sql: String =
     """WITH u AS (
@@ -3251,7 +3251,7 @@ object ExtensionQueries {
   def q124(spark: SparkSession, dir: String): DataFrame =
     SketchOps.hdrQuantiles(
       Tables.events(spark, dir), "value", "event_type",
-      probs = Seq(0.5, 0.95, 0.99), subBins = 16)
+      probs = Seq(0.5, 0.95, 0.99))
 
   val q124Sql: String =
     """WITH x AS (
@@ -4145,7 +4145,7 @@ object ExtensionQueries {
     val e = Tables.embeddings(spark, dir)
     DriftOps.mmdDrift(
       e.filter(col("label") < 5), e.filter(col("label") >= 5),
-      "embedding", dim = 64, features = 16, sigma = 4.0, seed = 8L)
+      "embedding", dim = 64, features = 16, sigma = 4.0)
   }
 
   val q148Sql: String =
@@ -4548,7 +4548,7 @@ object ExtensionQueries {
   def q157(spark: SparkSession, dir: String): DataFrame =
     ProfileOps.rfmScores(
       Tables.orders(spark, dir), "o_custkey", "o_orderdate",
-      "o_totalprice", buckets = 5)
+      "o_totalprice")
 
   val q157Sql: String =
     """WITH perkey AS (
@@ -7172,7 +7172,7 @@ object ExtensionQueries {
   def q214(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     PqOps.pqSearchADC(e.filter(col("vec_id") % 50 === 0), e, k = 3,
-      m = q214M, ksub = q214Ksub, iters = 1, dim = q214M * q214Sub)
+      m = q214M, ksub = q214Ksub, dim = q214M * q214Sub)
   }
 
   val q214Sql: String = {
@@ -7407,7 +7407,7 @@ object ExtensionQueries {
     */
   def q220(spark: SparkSession, dir: String): DataFrame =
     MixOps.epochPlanApply(Tables.documents(spark, dir), "source", "n_chars",
-      "doc_id", targetTokens = 1000000L, temperature = 0.7, seed = 42L)
+      "doc_id", targetTokens = 1000000L, temperature = 0.7)
 
   val q220Sql: String =
     """WITH per AS (
@@ -7909,7 +7909,7 @@ object ExtensionQueries {
     DedupOps.cdcDupStats(
       Tables.documents(spark, dir)
         .filter(col("text").isNotNull && length(col("text")) > 0),
-      "text", "doc_id", maskBits = 6, hashBits = 20, keyFn = c => c)
+      "text", "doc_id", keyFn = c => c)
 
   val q230Sql: String =
     """WITH d AS (
@@ -8323,8 +8323,7 @@ object ExtensionQueries {
     */
   def q240(spark: SparkSession, dir: String): DataFrame =
     VectorOps.powerComponents(
-      Tables.embeddings(spark, dir), "embedding", dim = 64, k = 2,
-      iters = 3)
+      Tables.embeddings(spark, dir), "embedding", dim = 64, iters = 3)
 
   val q240Sql: String = {
     val dim = 64
@@ -8685,8 +8684,7 @@ object ExtensionQueries {
     val t = e.select(col("vec_id"), slice(col("embedding"), 1, 16).as("embedding"))
     val trunc =
       SimilarityOps.bruteCosineTopK(t.filter(col("vec_id") < 20), t, 5)
-    SimilarityOps.annRecallCI(full, trunc, k = 5, reps = 40,
-      seed = "annci", alpha = 0.05)
+    SimilarityOps.annRecallCI(full, trunc, k = 5)
   }
 
   val q241Sql: String = {
@@ -8783,7 +8781,7 @@ object ExtensionQueries {
     val e = Tables.embeddings(spark, dir)
     val q = e.filter(col("vec_id") < 20)
     val cands = PqOps.pqSearchADC(q, e, k = 10,
-        m = q214M, ksub = q214Ksub, iters = 1, dim = q214M * q214Sub)
+        m = q214M, ksub = q214Ksub, dim = q214M * q214Sub)
       .select(col("query_id"), col("neighbor_id"),
         (-col("adc6")).as("cosine"))
     retrievalStackRow(cands, e, q)
@@ -9020,7 +9018,7 @@ object ExtensionQueries {
   def q248(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     PqOps.ivfPqSearchADC(e.filter(col("vec_id") % 50 === 0), e, k = 3,
-      nlist = 4, nprobe = 2, m = q214M, ksub = q214Ksub, iters = 1,
+      nlist = 4, nprobe = 2, m = q214M, ksub = q214Ksub,
       dim = q214M * q214Sub, byResidual = true)
   }
 
@@ -9176,7 +9174,7 @@ object ExtensionQueries {
   /** q248's construction (nlist=4, q214's PQ, residual) persisted at `out`. */
   private def q248Index(corpus: DataFrame, out: String): Unit =
     PqOps.ivfPqIndex(corpus, out, nlist = 4, m = q214M, ksub = q214Ksub,
-      iters = 1, dim = q214M * q214Sub, byResidual = true)
+      dim = q214M * q214Sub, byResidual = true)
 
   /** q252's drifted corpus: the raw embeddings plus a REVERSED-vector
     * replica (ids offset by 1e6). Reversal is the cheapest both-engine
@@ -9316,7 +9314,7 @@ object ExtensionQueries {
   def q250(spark: SparkSession, dir: String): DataFrame =
     PqOps.ivfPqRebuildGauge(
       Tables.embeddings(spark, dir).filter(col("vec_id") % 5 === 0),
-      q250Index(spark, dir), psiThreshold = 0.25)
+      q250Index(spark, dir))
 
   val q250Sql: String = {
     val dim = q214M * q214Sub

@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
@@ -121,13 +123,13 @@ object StreamingOps {
     * STATELESS column algebra over the ≤ |domain|-element map against
     * the reference shipped as a literal map (collected from the
     * `reference` dim — the broadcast-dim contract; a reference is a
-    * few categories by construction). State is bounded by open
-    * windows × categories, evicted by the watermark. Output one row
-    * per closed window: (bucket, k, n_new, psi_total).
+    * few categories by construction). Windows are 1 hour under a
+    * 2-hour watermark. State is bounded by open windows × categories,
+    * evicted by the watermark. Output one row per closed window:
+    * (bucket, k, n_new, psi_total).
     */
   def streamingDrift(
-      events: DataFrame, catCol: String, reference: DataFrame,
-      windowDur: String = "1 hour", watermark: String = "2 hours"): DataFrame = {
+      events: DataFrame, catCol: String, reference: DataFrame): DataFrame = {
     val ref = reference.collect()
       .map(r => r.getString(0) -> r.getLong(1)).toSeq
     require(ref.nonEmpty, "streamingDrift: empty reference")
@@ -136,11 +138,11 @@ object StreamingOps {
       Seq(lit(c), lit(n)) }: _*)
     val refCats = array(ref.map(c => lit(c._1)): _*)
     val c1 = events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowDur), col(catCol).as("cat"))
+      .withWatermark("ts", "2 hours")
+      .groupBy(window(col("ts"), "1 hour"), col(catCol).as("cat"))
       .agg(count(lit(1)).as("n_new"))
     val c2 = c1
-      .groupBy(window(window_time(col("window")), windowDur).as("w2"))
+      .groupBy(window(window_time(col("window")), "1 hour").as("w2"))
       .agg(map_from_entries(collect_list(struct(col("cat"), col("n_new")))).as("m"),
         sum(col("n_new")).as("n_tot"))
     val domain = array_union(map_keys(col("m")), refCats)
@@ -213,46 +215,30 @@ object StreamingOps {
       idleTtlMs: Long = -1L): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val ttl = ttlActive(docs, tsCol, watermarkDelay, idleTtlMs)
+    val ttl = ttlOf(docs, tsCol, watermarkDelay, idleTtlMs)
     def tag(df: DataFrame, kind: Int): DataFrame = df.select(
       xxhash64(graft.ops.DedupOps.normText(col(textCol))).as("key"),
       col(idCol).cast("long").as("id"),
       lit(kind).as("kind"),
       col(ordCol).cast("long").as("ord"),
-      (if (ttl) col(tsCol) else lit(null).cast("timestamp")).as("wm"))
-    val unioned0 = tag(docs, 0).unionByName(tag(removals, 1))
-    val unioned =
-      if (ttl) unioned0.withWatermark("wm", watermarkDelay) else unioned0
-    val timeout =
-      if (ttl) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-    unioned.as[DedupOptEvent]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[Long, DedupKeep](
-        OutputMode.Append, timeout) { (_, rows, state) =>
-        if (ttl && state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          var winner = state.getOption
-          val kept = Array.newBuilder[DedupKeep]
-          // (ord, kind): at equal ord the ingest lands before its own
-          // removal — "remove then re-add at one instant" is undefined
-          // input, not a contract
-          rows.toArray.sortBy(e => (e.ord, e.kind)).foreach { e =>
-            if (e.kind == 0) {
-              if (winner.isEmpty) { winner = Some(e.id); kept += DedupKeep(e.id, e.ord) }
-            } else if (winner.contains(e.id)) winner = None
-          }
-          winner match {
-            case Some(w) =>
-              state.update(w)
-              if (ttl) state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + idleTtlMs)
-            case None => if (state.exists) state.remove()
-          }
-          kept.result().iterator
+      wmCol(ttl))
+    // the tagged union is watermarked on its own `wm` column
+    foldByKey[DedupOptEvent, Long, Long, DedupKeep](
+        tag(docs, 0).unionByName(tag(removals, 1)),
+        ttl.map(_.copy(tsCol = "wm")), _.key)(identity) {
+      (_, prev, rows) =>
+        var winner = prev
+        val kept = Array.newBuilder[DedupKeep]
+        // (ord, kind): at equal ord the ingest lands before its own
+        // removal — "remove then re-add at one instant" is undefined
+        // input, not a contract
+        rows.sortBy(e => (e.ord, e.kind)).foreach { e =>
+          if (e.kind == 0) {
+            if (winner.isEmpty) { winner = Some(e.id); kept += DedupKeep(e.id, e.ord) }
+          } else if (winner.contains(e.id)) winner = None
         }
-      }
-      .toDF(idCol, ordCol)
+        (winner, kept.result().iterator)
+    }.toDF(idCol, ordCol)
   }
 
   /** Input/output/state rows for [[streamingEma]] (case classes so the
@@ -262,8 +248,10 @@ object StreamingOps {
       wm: java.sql.Timestamp)
   case class EmaPoint(key: String, ord: Long, ema: Double)
 
-  /** Idle-key state TTL for the typed `flatMapGroupsWithState` trio
-    * (VERDICT r6 "what's missing" #1): with `NoTimeout`, per-key state
+  /** Idle-key state TTL for the typed operators that offer it
+    * ([[streamingEma]], [[streamingBootstrapGauge]],
+    * [[streamingExactDedupOptOut]]; VERDICT r6 "what's missing" #1):
+    * with `NoTimeout`, per-key state
     * is O(1) but KEYS are never evicted — a run-forever stream over an
     * unbounded key space (user churn) accumulates one state row per
     * key ever seen. Passing `watermarkDelay` + `idleTtlMs` switches the
@@ -273,8 +261,8 @@ object StreamingOps {
     * — state tracks recently-active keys, independent of stream age.
     *
     * Contract trade (documented, caller-chosen): an evicted key that
-    * reappears restarts fresh (EMA re-seeds, funnel depth 0, TWAP
-    * accumulators zero), so pick a TTL comfortably above the key
+    * reappears restarts fresh (EMA re-seeds, gauge sums zero, opt-out
+    * winner forgotten), so pick a TTL comfortably above the key
     * silence horizon the pipeline must bridge. Turning the watermark on
     * also turns on Spark's late-row filter for this operator: input
     * rows whose event time is at or below the current watermark are
@@ -284,10 +272,58 @@ object StreamingOps {
     * and the defaults (TTL off = NoTimeout, no watermark, no late
     * filtering, batch mode unaffected) remain the exact path.
     */
-  private def ttlActive(
+  private final case class Ttl(tsCol: String, watermarkDelay: String, idleTtlMs: Long)
+
+  private def ttlOf(
       events: DataFrame, tsCol: String, watermarkDelay: String,
-      idleTtlMs: Long): Boolean =
-    events.isStreaming && tsCol != null && watermarkDelay != null && idleTtlMs > 0
+      idleTtlMs: Long): Option[Ttl] =
+    if (events.isStreaming && tsCol != null && watermarkDelay != null && idleTtlMs > 0)
+      Some(Ttl(tsCol, watermarkDelay, idleTtlMs))
+    else None
+
+  /** The `wm` column of a TTL operator's event rows: the watermarked
+    * COLUMN must reach the stateful operator's input (Spark's
+    * event-time-timeout check looks for the delay metadata on the
+    * child's output, not just an upstream watermark node), so the raw
+    * timestamp rides along unused by the fold itself.
+    */
+  private def wmCol(ttl: Option[Ttl]): Column =
+    ttl.fold(lit(null).cast("timestamp"))(t => col(t.tsCol)).as("wm")
+
+  /** The one stateful fold behind the typed operators. Each operator
+    * keeps its `project`ion of the (watermarked) `events` to its event
+    * rows, which carry a [[wmCol]] when `ttl` is possible, and its pure
+    * per-key `step`: (key, previous state, this micro-batch's rows) →
+    * (next state, rows to emit), where `None` drops the key's state.
+    * The skeleton owns the rest: the watermark on `ttl.tsCol`, the
+    * choice of timeout, a timed-out key's removal, the state update
+    * and the next timeout.
+    */
+  private def foldByKey[E: Encoder: ClassTag, K: Encoder, S: Encoder, O: Encoder](
+      events: DataFrame, ttl: Option[Ttl], key: E => K)(
+      project: DataFrame => DataFrame)(
+      step: (K, Option[S], Array[E]) => (Option[S], Iterator[O])): Dataset[O] = {
+    val src = ttl.fold(events)(t => events.withWatermark(t.tsCol, t.watermarkDelay))
+    val timeout =
+      if (ttl.isDefined) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
+    project(src).as[E].groupByKey(key)
+      .flatMapGroupsWithState[S, O](OutputMode.Append, timeout) { (k, rows, state) =>
+        if (state.hasTimedOut) {
+          state.remove()
+          Iterator.empty
+        } else {
+          val (next, out) = step(k, state.getOption, rows.toArray)
+          next match {
+            case Some(s) =>
+              state.update(s)
+              ttl.foreach(t =>
+                state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + t.idleTtlMs))
+            case None => if (state.exists) state.remove()
+          }
+          out
+        }
+      }
+  }
 
   /** Streaming per-key EMA via `flatMapGroupsWithState` — the custom-
     * state analog of [[graft.ops.VectorOps.emaByKey]] (OP-33's linear
@@ -317,46 +353,27 @@ object StreamingOps {
       idleTtlMs: Long = -1L): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    val ttl = ttlActive(events, tsCol, watermarkDelay, idleTtlMs)
-    val src = if (ttl) events.withWatermark(tsCol, watermarkDelay) else events
-    val timeout =
-      if (ttl) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-    // the watermarked COLUMN must reach the stateful operator's input
-    // (Spark's event-time-timeout check looks for the delay metadata on
-    // the child's output, not just an upstream watermark node), so the
-    // raw timestamp rides along unused by the fold itself
-    val ds = src.select(
-      col(keyCol).cast("string").as("key"),
-      col(ordCol).cast("long").as("ord"),
-      col(valueCol).cast("double").as("value"),
-      (if (ttl) col(tsCol) else lit(null).cast("timestamp")).as("wm")).as[EmaEvent]
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState[Double, EmaPoint](
-        OutputMode.Append, timeout) { (key, rows, state) =>
-        if (ttl && state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          var cur = state.getOption
-          val pts = rows.toArray.sortBy(_.ord).map { e =>
-            val next = cur match {
-              case Some(prev) => prev * decay + e.value * (1 - decay)
-              case None => e.value
-            }
-            cur = Some(next)
-            EmaPoint(key, e.ord, next)
-          }
-          cur.foreach(state.update)
-          if (ttl) state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + idleTtlMs)
-          pts.iterator
+    val ttl = ttlOf(events, tsCol, watermarkDelay, idleTtlMs)
+    foldByKey[EmaEvent, String, Double, EmaPoint](events, ttl, _.key)(_.select(
+        col(keyCol).cast("string").as("key"),
+        col(ordCol).cast("long").as("ord"),
+        col(valueCol).cast("double").as("value"),
+        wmCol(ttl))) { (key, prev, rows) =>
+      var cur = prev
+      val pts = rows.sortBy(_.ord).map { e =>
+        val next = cur match {
+          case Some(p) => p * decay + e.value * (1 - decay)
+          case None => e.value
         }
+        cur = Some(next)
+        EmaPoint(key, e.ord, next)
       }
-      .toDF(keyCol, ordCol, "ema")
+      (cur, pts.iterator)
+    }.toDF(keyCol, ordCol, "ema")
   }
 
   /** Rows for [[streamingFunnel]]. */
-  case class FunnelEvent(key: String, ts: Long, typ: String,
-      wm: java.sql.Timestamp)
+  case class FunnelEvent(key: String, ts: Long, typ: String)
   case class FunnelHit(key: String, step_idx: Int, ts: Long)
   case class FunnelState(depth: Int, chainTs: Long)
 
@@ -377,53 +394,35 @@ object StreamingOps {
     */
   def streamingFunnel(
       events: DataFrame, keyCol: String, tsCol: String, typeCol: String,
-      steps: Seq[String], watermarkDelay: String = null,
-      idleTtlMs: Long = -1L): DataFrame = {
+      steps: Seq[String]): DataFrame = {
     require(steps.nonEmpty && steps.distinct == steps, s"bad steps: $steps")
     val spark = events.sparkSession
     import spark.implicits._
-    val ttl = ttlActive(events, tsCol, watermarkDelay, idleTtlMs)
-    val src = if (ttl) events.withWatermark(tsCol, watermarkDelay) else events
-    val timeout =
-      if (ttl) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
     val stepIdx = steps.zipWithIndex.toMap
-    val ds = src
-      .filter(col(typeCol).isin(steps: _*))
-      .select(col(keyCol).cast("string").as("key"),
-        unix_micros(col(tsCol)).as("ts"), col(typeCol).as("typ"),
-        (if (ttl) col(tsCol) else lit(null).cast("timestamp")).as("wm"))
-      .as[FunnelEvent]
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState[FunnelState, FunnelHit](
-        OutputMode.Append, timeout) { (key, rows, state) =>
-        if (ttl && state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          var st = state.getOption.getOrElse(FunnelState(0, Long.MinValue))
-          val hits = rows.toArray
-            .sortBy(e => (e.ts, stepIdx(e.typ)))
-            .flatMap { e =>
-              if (st.depth < steps.size && e.typ == steps(st.depth) &&
-                  (st.depth == 0 || e.ts >= st.chainTs)) {
-                st = FunnelState(st.depth + 1, e.ts)
-                Some(FunnelHit(key, st.depth, e.ts))
-              } else None
-            }
-          state.update(st)
-          if (ttl) state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + idleTtlMs)
-          hits.iterator
-        }
-      }
-      .toDF(keyCol, "step_idx", "ts_us")
+    foldByKey[FunnelEvent, String, FunnelState, FunnelHit](events, None, _.key)(
+        _.filter(col(typeCol).isin(steps: _*))
+          .select(col(keyCol).cast("string").as("key"),
+            unix_micros(col(tsCol)).as("ts"), col(typeCol).as("typ"))) {
+      (key, prev, rows) =>
+        var st = prev.getOrElse(FunnelState(0, Long.MinValue))
+        val hits = rows
+          .sortBy(e => (e.ts, stepIdx(e.typ)))
+          .flatMap { e =>
+            if (st.depth < steps.size && e.typ == steps(st.depth) &&
+                (st.depth == 0 || e.ts >= st.chainTs)) {
+              st = FunnelState(st.depth + 1, e.ts)
+              Some(FunnelHit(key, st.depth, e.ts))
+            } else None
+          }
+        (Some(st), hits.iterator)
+    }.toDF(keyCol, "step_idx", "ts_us")
   }
 
   /** Rows for [[streamingTwap]]. `ord` is the same-timestamp tiebreak
     * (the batch operator's `event_id` column), carried so streaming and
     * batch fold same-instant events in the SAME order.
     */
-  case class TwapEvent(key: String, ts: Long, ord: Long, value: Double,
-      wm: java.sql.Timestamp)
+  case class TwapEvent(key: String, ts: Long, ord: Long, value: Double)
   case class TwapPoint(key: String, ts: Long, twap: Double, n_obs: Long)
   case class TwapState(lastTs: Long, lastV: Double, sumVW: Double, sumW: Double, n: Long)
 
@@ -449,49 +448,33 @@ object StreamingOps {
     */
   def streamingTwap(
       events: DataFrame, keyCol: String, tsCol: String,
-      valueCol: String, ordCol: String = "event_id",
-      watermarkDelay: String = null, idleTtlMs: Long = -1L): DataFrame = {
+      valueCol: String, ordCol: String = "event_id"): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    val ttl = ttlActive(events, tsCol, watermarkDelay, idleTtlMs)
-    val src = if (ttl) events.withWatermark(tsCol, watermarkDelay) else events
-    val timeout =
-      if (ttl) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-    val ds = src.select(
-      col(keyCol).cast("string").as("key"),
-      unix_micros(col(tsCol)).as("ts"),
-      col(ordCol).cast("long").as("ord"),
-      col(valueCol).cast("double").as("value"),
-      (if (ttl) col(tsCol) else lit(null).cast("timestamp")).as("wm")).as[TwapEvent]
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState[TwapState, TwapPoint](
-        OutputMode.Append, timeout) { (key, rows, state) =>
-        if (ttl && state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          var st = state.getOption
-          val out = rows.toArray.sortBy(e => (e.ts, e.ord)).flatMap { e =>
-            val (emitted, next) = st match {
-              case Some(s) =>
-                val w = (e.ts - s.lastTs).toDouble
-                val sumVW = s.sumVW + s.lastV * w
-                val sumW = s.sumW + w
-                val n = s.n + 1
-                (if (sumW > 0) Some(TwapPoint(key, e.ts, sumVW / sumW, n)) else None,
-                  TwapState(e.ts, e.value, sumVW, sumW, n))
-              case None =>
-                (None, TwapState(e.ts, e.value, 0.0, 0.0, 0L))
-            }
-            st = Some(next)
-            emitted
+    foldByKey[TwapEvent, String, TwapState, TwapPoint](events, None, _.key)(_.select(
+        col(keyCol).cast("string").as("key"),
+        unix_micros(col(tsCol)).as("ts"),
+        col(ordCol).cast("long").as("ord"),
+        col(valueCol).cast("double").as("value"))) {
+      (key, prev, rows) =>
+        var st = prev
+        val out = rows.sortBy(e => (e.ts, e.ord)).flatMap { e =>
+          val (emitted, next) = st match {
+            case Some(s) =>
+              val w = (e.ts - s.lastTs).toDouble
+              val sumVW = s.sumVW + s.lastV * w
+              val sumW = s.sumW + w
+              val n = s.n + 1
+              (if (sumW > 0) Some(TwapPoint(key, e.ts, sumVW / sumW, n)) else None,
+                TwapState(e.ts, e.value, sumVW, sumW, n))
+            case None =>
+              (None, TwapState(e.ts, e.value, 0.0, 0.0, 0L))
           }
-          st.foreach(state.update)
-          if (ttl) state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + idleTtlMs)
-          out.iterator
+          st = Some(next)
+          emitted
         }
-      }
-      .toDF(keyCol, "ts_us", "twap", "n_obs")
+        (st, out.iterator)
+    }.toDF(keyCol, "ts_us", "twap", "n_obs")
   }
 
   /** Input/output/state rows for [[streamingBootstrapGauge]]. */
@@ -545,10 +528,7 @@ object StreamingOps {
     require(alpha > 0 && alpha < 1, s"need 0 < alpha < 1, got $alpha")
     val spark = events.sparkSession
     import spark.implicits._
-    val ttl = ttlActive(events, tsCol, watermarkDelay, idleTtlMs)
-    val src = if (ttl) events.withWatermark(tsCol, watermarkDelay) else events
-    val timeout =
-      if (ttl) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
+    val ttl = ttlOf(events, tsCol, watermarkDelay, idleTtlMs)
     val v = col(valueCol).cast("double")
     // fan the NARROW pre-draw projection out to the session's cores
     // before the draw stage: the `reps` hash draws per event are the
@@ -562,51 +542,46 @@ object StreamingOps {
     // key-derived, so the fan-out cannot change any value (guide §2.2:
     // parallelism of the compute-bound stage should come from the
     // session, not the accident of input file layout).
-    val base = src.filter(v.isNotNull).select(
-      col(keyCol).cast("string").as("key"),
-      unix_micros(col(tsCol)).as("ord"),
-      col(rowKeyCol).cast("string").as("k"),
-      v.as("value"),
-      (if (ttl) col(tsCol) else lit(null).cast("timestamp")).as("wm"))
-      .repartition(spark.sparkContext.defaultParallelism)
-    val us = base.select(
-      col("key") +: col("ord") +: col("k") +: col("value") +: col("wm") +:
-        (0 until reps).map(b =>
-          graft.ops.StatsOps.bootstrapDraw(col("k"), lit(b), seed, uniform)
-            .as(s"__u$b")): _*)
-    val ds = us.select(col("key"), col("ord"), col("k"), col("value"),
+    def project(src: DataFrame): DataFrame = {
+      val base = src.filter(v.isNotNull).select(
+        col(keyCol).cast("string").as("key"),
+        unix_micros(col(tsCol)).as("ord"),
+        col(rowKeyCol).cast("string").as("k"),
+        v.as("value"),
+        wmCol(ttl))
+        .repartition(spark.sparkContext.defaultParallelism)
+      val us = base.select(
+        col("key") +: col("ord") +: col("k") +: col("value") +: col("wm") +:
+          (0 until reps).map(b =>
+            graft.ops.StatsOps.bootstrapDraw(col("k"), lit(b), seed, uniform)
+              .as(s"__u$b")): _*)
+      us.select(col("key"), col("ord"), col("k"), col("value"),
         array((0 until reps).map(b =>
           graft.ops.StatsOps.poissonWeight(col(s"__u$b")).cast("int")): _*)
           .as("w"),
-        col("wm")).as[BootEvent]
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState[BootState, BootGauge](
-        OutputMode.Append, timeout) { (key, rows, state) =>
-        if (ttl && state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          val prev = state.getOption.getOrElse(
-            BootState(0L, 0.0, Seq.fill(reps)(0.0), Seq.fill(reps)(0L)))
-          var n = prev.n
-          var sv = prev.sv
-          val s = prev.s.toArray
-          val c = prev.c.toArray
-          rows.toArray.sortBy(e => (e.ord, e.k)).foreach { e =>
-            n += 1
-            sv += e.value
-            var b = 0
-            while (b < reps) {
-              val wb = e.w(b)
-              if (wb > 0) { s(b) += wb * e.value; c(b) += wb }
-              b += 1
-            }
+        col("wm"))
+    }
+    foldByKey[BootEvent, String, BootState, BootGauge](events, ttl, _.key)(project) {
+      (key, prevState, rows) =>
+        val prev = prevState.getOrElse(
+          BootState(0L, 0.0, Seq.fill(reps)(0.0), Seq.fill(reps)(0L)))
+        var n = prev.n
+        var sv = prev.sv
+        val s = prev.s.toArray
+        val c = prev.c.toArray
+        rows.sortBy(e => (e.ord, e.k)).foreach { e =>
+          n += 1
+          sv += e.value
+          var b = 0
+          while (b < reps) {
+            val wb = e.w(b)
+            if (wb > 0) { s(b) += wb * e.value; c(b) += wb }
+            b += 1
           }
-          state.update(BootState(n, sv, s.toIndexedSeq, c.toIndexedSeq))
-          if (ttl)
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + idleTtlMs)
-          val means = (0 until reps)
-            .flatMap(b => if (c(b) == 0L) None else Some(s(b) / c(b))).sorted
+        }
+        val means = (0 until reps)
+          .flatMap(b => if (c(b) == 0L) None else Some(s(b) / c(b))).sorted
+        val out =
           if (n == 0 || means.isEmpty) Iterator.empty
           else {
             val bl = means.length
@@ -620,14 +595,12 @@ object StreamingOps {
             Iterator.single(
               BootGauge(key, n, sv / n, means(kk), means(bl - 1 - kk), se))
           }
-        }
-      }
-      .toDF(keyCol, "n", "mean", "boot_lo", "boot_hi", "boot_se")
+        (Some(BootState(n, sv, s.toIndexedSeq, c.toIndexedSeq)), out)
+    }.toDF(keyCol, "n", "mean", "boot_lo", "boot_hi", "boot_se")
   }
 
   /** Input/output/state rows for [[streamingHeavyHitters]]. */
-  case class HhEvent(key: String, ord: Long, value: String,
-      wm: java.sql.Timestamp)
+  case class HhEvent(key: String, ord: Long, value: String)
   case class HhTop(key: String, value: String, mg_count: Long, n_seen: Long)
   case class HhState(keys: Seq[String], counts: Seq[Long], n: Long)
 
@@ -651,59 +624,40 @@ object StreamingOps {
     * path, and the spec pins that every batch-qualifying value is
     * present in the final gauge with `mg_count` inside the MG error
     * band. State per group: ≤ k (value, count) pairs + one counter,
-    * hash-partitioned by group at 1000 executors; idle groups
-    * TTL-evictable like [[streamingEma]].
+    * hash-partitioned by group at 1000 executors.
     */
   def streamingHeavyHitters(
       events: DataFrame, keyCol: String, valueCol: String, k: Int,
-      tsCol: String = null, ordCol: String = "event_id",
-      watermarkDelay: String = null, idleTtlMs: Long = -1L): DataFrame = {
+      ordCol: String = "event_id"): DataFrame = {
     require(k >= 1, s"streamingHeavyHitters: k must be >= 1, got $k")
     val spark = events.sparkSession
     import spark.implicits._
-    val ttl = ttlActive(events, tsCol, watermarkDelay, idleTtlMs)
-    val src = if (ttl) events.withWatermark(tsCol, watermarkDelay) else events
-    val timeout =
-      if (ttl) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-    val ds = src.filter(col(valueCol).isNotNull).select(
-      col(keyCol).cast("string").as("key"),
-      col(ordCol).cast("long").as("ord"),
-      col(valueCol).cast("string").as("value"),
-      (if (ttl) col(tsCol) else lit(null).cast("timestamp")).as("wm"))
-      .as[HhEvent]
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState[HhState, HhTop](
-        OutputMode.Append, timeout) { (key, rows, state) =>
-        if (ttl && state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          val prev = state.getOption.getOrElse(HhState(Nil, Nil, 0L))
-          val buf = scala.collection.mutable.LinkedHashMap[String, Long](
-            prev.keys.zip(prev.counts): _*)
-          var n = prev.n
-          rows.toArray.sortBy(e => (e.ord, e.value)).foreach { e =>
-            n += 1
-            buf.get(e.value) match {
-              case Some(c) => buf(e.value) = c + 1
-              case None if buf.size < k => buf(e.value) = 1L
-              case None =>
-                // decrement-all; drop exhausted candidates
-                buf.keys.toArray.foreach { kk =>
-                  val c = buf(kk) - 1
-                  if (c <= 0) buf.remove(kk) else buf(kk) = c
-                }
+    foldByKey[HhEvent, String, HhState, HhTop](events, None, _.key)(
+        _.filter(col(valueCol).isNotNull).select(
+          col(keyCol).cast("string").as("key"),
+          col(ordCol).cast("long").as("ord"),
+          col(valueCol).cast("string").as("value"))) { (key, prevState, rows) =>
+      val prev = prevState.getOrElse(HhState(Nil, Nil, 0L))
+      val buf = scala.collection.mutable.LinkedHashMap[String, Long](
+        prev.keys.zip(prev.counts): _*)
+      var n = prev.n
+      rows.sortBy(e => (e.ord, e.value)).foreach { e =>
+        n += 1
+        buf.get(e.value) match {
+          case Some(c) => buf(e.value) = c + 1
+          case None if buf.size < k => buf(e.value) = 1L
+          case None =>
+            // decrement-all; drop exhausted candidates
+            buf.keys.toArray.foreach { kk =>
+              val c = buf(kk) - 1
+              if (c <= 0) buf.remove(kk) else buf(kk) = c
             }
-          }
-          state.update(HhState(buf.keys.toIndexedSeq,
-            buf.values.toIndexedSeq, n))
-          if (ttl)
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + idleTtlMs)
-          buf.toArray.sortBy { case (v, c) => (-c, v) }.iterator
-            .map { case (v, c) => HhTop(key, v, c, n) }
         }
       }
-      .toDF(keyCol, "value", "mg_count", "n_seen")
+      (Some(HhState(buf.keys.toIndexedSeq, buf.values.toIndexedSeq, n)),
+        buf.toArray.sortBy { case (v, c) => (-c, v) }.iterator
+          .map { case (v, c) => HhTop(key, v, c, n) })
+    }.toDF(keyCol, "value", "mg_count", "n_seen")
   }
 
   /** STREAM-STREAM interval self-join: attribute each `convType`

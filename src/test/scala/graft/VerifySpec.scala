@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, raise_error, when}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs.tempDir
+
 /** Verify's dump leaves `$outDir/$name` only for a query that wrote its
   * whole result, so `tools/check.py` reports a failed query as "no spark
   * output" rather than diffing a partial or stale directory.
@@ -24,7 +26,7 @@ class VerifySpec extends AnyFunSuite {
   }
 
   test("a query that throws while planning removes an earlier run's output") {
-    val out = Files.createTempDirectory("graft_verify_plan")
+    val out = tempDir()
     val stale = staleOutput(out, "q_plan")
     val planFails: Query = (s, _) => s.range(3).select(col("no_such_column"))
     Verify.dump(spark, "unused", out.toString, Seq("q_plan" -> planFails, "q_good" -> good))
@@ -33,7 +35,7 @@ class VerifySpec extends AnyFunSuite {
   }
 
   test("a query that throws mid-write leaves no partial directory") {
-    val out = Files.createTempDirectory("graft_verify_write")
+    val out = tempDir()
     staleOutput(out, "q_write")
     val writeFails: Query = (s, _) => s.range(0, 1000, 1, 1)
       .select(when(col("id") === 500, raise_error(lit("boom at row 500")))

@@ -1,11 +1,10 @@
 package graft.functions
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
+import graft.TempDirs.tempDir
 import graft.ops.EvalMetrics
 
 /** The one-pass F1 aggregator vs the relational metric block. */
@@ -32,7 +31,7 @@ class F1AggregatorSpec extends AnyFunSuite {
   }
 
   test("streaming: same metrics from a file stream in complete mode") {
-    val dir = Files.createTempDirectory("f1-stream").toFile.getAbsolutePath
+    val dir = tempDir().toFile.getAbsolutePath
     pairs.take(3).toDF("pred", "label").coalesce(1).write.mode("append").parquet(dir)
     pairs.drop(3).toDF("pred", "label").coalesce(1).write.mode("append").parquet(dir)
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
+import graft.TempDirs.tempDir
 
 /** Product quantization: the fused encode/lut/adc expressions vs an
   * independent straight-line Scala reference, the null contracts, the
@@ -151,7 +152,7 @@ class PqSpec extends AnyFunSuite {
     val df = pts.toDF("vec_id", "embedding")
     val queries = df.filter(col("vec_id") < 8)
     val top1 = graft.ops.PqOps.pqSearchADC(queries, df, k = 1,
-        m = m, ksub = ksub, iters = 1, dim = dim)
+        m = m, ksub = ksub, dim = dim)
       .collect().map(row => (row.getLong(0), row.getLong(1)))
     assert(top1.length == 8)
     top1.foreach { case (q, n) =>
@@ -172,10 +173,10 @@ class PqSpec extends AnyFunSuite {
     // differential: probing every list with raw-vector encoding is the
     // flat PQ search exactly (same seeds, codebooks, LUTs, candidates)
     val flat = graft.ops.PqOps.pqSearchADC(queries, df, k = 3,
-        m = m, ksub = ksub, iters = 1, dim = dim)
+        m = m, ksub = ksub, dim = dim)
       .as[(Long, Long, Double, Int)].collect().sortBy(t => (t._1, t._4))
     val gatedAll = graft.ops.PqOps.ivfPqSearchADC(queries, df, k = 3,
-        nlist = 4, nprobe = 4, m = m, ksub = ksub, iters = 1, dim = dim,
+        nlist = 4, nprobe = 4, m = m, ksub = ksub, dim = dim,
         byResidual = false)
       .as[(Long, Long, Double, Int)].collect().sortBy(t => (t._1, t._4))
     assert(gatedAll.toSeq == flat.toSeq,
@@ -183,7 +184,7 @@ class PqSpec extends AnyFunSuite {
     // residual IVFPQ: every query's top-1 stays in its planted cluster
     // even probing a single list
     val res = graft.ops.PqOps.ivfPqSearchADC(queries, df, k = 1,
-        nlist = 4, nprobe = 1, m = m, ksub = ksub, iters = 1, dim = dim)
+        nlist = 4, nprobe = 1, m = m, ksub = ksub, dim = dim)
       .collect().map(row => (row.getLong(0), row.getLong(1)))
     assert(res.length == 8)
     res.foreach { case (q, n) =>
@@ -192,7 +193,7 @@ class PqSpec extends AnyFunSuite {
     // deterministic under repartitioning (seeded pick, fused assigns)
     val re = graft.ops.PqOps.ivfPqSearchADC(queries.repartition(5),
         df.repartition(7), k = 1, nlist = 4, nprobe = 1,
-        m = m, ksub = ksub, iters = 1, dim = dim)
+        m = m, ksub = ksub, dim = dim)
       .collect().map(row => (row.getLong(0), row.getLong(1))).sortBy(_._1)
     assert(re.toSeq == res.sortBy(_._1).toSeq)
   }
@@ -210,12 +211,11 @@ class PqSpec extends AnyFunSuite {
     def sorted(d: org.apache.spark.sql.DataFrame) =
       d.as[(Long, Long, Double, Int)].collect().sortBy(t => (t._1, t._4)).toSeq
     for (byRes <- Seq(true, false)) {
-      val idx = java.nio.file.Files
-        .createTempDirectory(s"graft_ivfpq_idx_$byRes").toString
+      val idx = tempDir().toString
       graft.ops.PqOps.ivfPqIndex(df, idx, nlist = 4, m = m, ksub = ksub,
-        iters = 1, dim = dim, byResidual = byRes)
+        dim = dim, byResidual = byRes)
       val oneShot = sorted(graft.ops.PqOps.ivfPqSearchADC(queries, df,
-        k = 3, nlist = 4, nprobe = 2, m = m, ksub = ksub, iters = 1,
+        k = 3, nlist = 4, nprobe = 2, m = m, ksub = ksub,
         dim = dim, byResidual = byRes))
       val served = sorted(
         graft.ops.PqOps.ivfPqSearchIndexed(queries, idx, k = 3, nprobe = 2))
@@ -224,9 +224,9 @@ class PqSpec extends AnyFunSuite {
       assert(served.nonEmpty)
     }
     // parameter guard: probing more lists than the index holds fails loudly
-    val idx2 = java.nio.file.Files.createTempDirectory("graft_ivfpq_g").toString
+    val idx2 = tempDir().toString
     graft.ops.PqOps.ivfPqIndex(df, idx2, nlist = 4, m = m, ksub = ksub,
-      iters = 1, dim = dim)
+      dim = dim)
     intercept[IllegalArgumentException] {
       graft.ops.PqOps.ivfPqSearchIndexed(queries, idx2, k = 1, nprobe = 9)
     }
@@ -249,11 +249,11 @@ class PqSpec extends AnyFunSuite {
     // one append vs the same rows in two appends: encode is a pure
     // per-row function of (vector, stored artifacts), so the search
     // results must be byte-identical
-    val d1 = java.nio.file.Files.createTempDirectory("graft_ivfpq_a1").toString
-    val d2 = java.nio.file.Files.createTempDirectory("graft_ivfpq_a2").toString
+    val d1 = tempDir().toString
+    val d2 = tempDir().toString
     for (d <- Seq(d1, d2))
       graft.ops.PqOps.ivfPqIndex(baseDf, d, nlist = 4, m = m, ksub = ksub,
-        iters = 1, dim = dim)
+        dim = dim)
     graft.ops.PqOps.ivfPqAppend(batch.toDF("vec_id", "embedding"), d1)
     graft.ops.PqOps.ivfPqAppend(
       batch.filter(_._1 < 80).toDF("vec_id", "embedding"), d2)
@@ -269,9 +269,9 @@ class PqSpec extends AnyFunSuite {
     // the quantizer stayed frozen: searching only base-era queries on
     // the pre-append index gives the same codes for base rows (the
     // append touched nothing it shouldn't)
-    val d0 = java.nio.file.Files.createTempDirectory("graft_ivfpq_a0").toString
+    val d0 = tempDir().toString
     graft.ops.PqOps.ivfPqIndex(baseDf, d0, nlist = 4, m = m, ksub = ksub,
-      iters = 1, dim = dim)
+      dim = dim)
     val preCodes = spark.read.parquet(s"$d0/codes")
       .as[(Int, Long, Seq[Int])].collect().sortBy(_._2).toSeq
     val postCodes = spark.read.parquet(s"$d1/codes")
@@ -290,9 +290,9 @@ class PqSpec extends AnyFunSuite {
       (i.toLong, (0 until dim).map(j => centers(c)(j) + r.nextFloat() * 0.2f))
     }
     val base = (0 until 60).map(mk)
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivfpq_cp").toString
+    val idx = tempDir().toString
     graft.ops.PqOps.ivfPqIndex(base.toDF("vec_id", "embedding"), idx,
-      nlist = 4, m = m, ksub = ksub, iters = 1, dim = dim)
+      nlist = 4, m = m, ksub = ksub, dim = dim)
     for (b <- 0 until 3)
       graft.ops.PqOps.ivfPqAppend(
         (60 + b * 10 until 70 + b * 10).map(mk).toDF("vec_id", "embedding"),
@@ -327,9 +327,9 @@ class PqSpec extends AnyFunSuite {
     def mk(i: Int, c: Int): (Long, Seq[Float]) =
       (i.toLong, (0 until dim).map(j => centers(c)(j) + r.nextFloat() * 0.2f))
     val base = (0 until 80).map(i => mk(i, i % 4))
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivfpq_rg").toString
+    val idx = tempDir().toString
     graft.ops.PqOps.ivfPqIndex(base.toDF("vec_id", "embedding"), idx,
-      nlist = 4, m = m, ksub = ksub, iters = 1, dim = dim)
+      nlist = 4, m = m, ksub = ksub, dim = dim)
     // same cluster mix as the corpus: occupancy distributions align
     val like = (100 until 140).map(i => mk(i, i % 4))
     val keep = graft.ops.PqOps.ivfPqRebuildGauge(
@@ -361,9 +361,9 @@ class PqSpec extends AnyFunSuite {
       (i.toLong, (0 until dim).map(j => centers(c)(j) + r.nextFloat() * 0.2f))
     }
     val df = pts.toDF("vec_id", "embedding")
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivfpq_nc").toString
+    val idx = tempDir().toString
     graft.ops.PqOps.ivfPqIndex(df, idx, nlist = 4, m = m, ksub = ksub,
-      iters = 1, dim = dim)
+      dim = dim)
     val curve = graft.ops.PqOps.ivfPqNprobeCurve(
         df.filter(col("vec_id") < 8), df, idx, k = 3, nprobes = Seq(1, 2, 4))
       .orderBy("nprobe")
@@ -390,9 +390,9 @@ class PqSpec extends AnyFunSuite {
       val c = i % 4
       (i.toLong, (0 until dim).map(j => centers(c)(j) + r.nextFloat() * 0.2f))
     }
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivfpq_cr").toString
+    val idx = tempDir().toString
     graft.ops.PqOps.ivfPqIndex((0 until 60).map(mk).toDF("vec_id", "embedding"),
-      idx, nlist = 4, m = m, ksub = ksub, iters = 1, dim = dim)
+      idx, nlist = 4, m = m, ksub = ksub, dim = dim)
     def codesRows() = spark.read.parquet(s"$idx/codes")
       .as[(Int, Long, Seq[Int])].collect().sortBy(_._2).toSeq
     val rowsBefore = codesRows()
@@ -430,12 +430,12 @@ class PqSpec extends AnyFunSuite {
     }
     val rows = (0 until 60).map(mk)
     val batch = (60 until 80).map(mk)
-    val plain = java.nio.file.Files.createTempDirectory("graft_ivfpq_fs_p").toString
-    val uriDir = java.nio.file.Files.createTempDirectory("graft_ivfpq_fs_u")
+    val plain = tempDir().toString
+    val uriDir = tempDir()
     val uri = "file://" + uriDir.toString
     for (d <- Seq(plain, uri)) {
       graft.ops.PqOps.ivfPqIndex(rows.toDF("vec_id", "embedding"), d,
-        nlist = 4, m = m, ksub = ksub, iters = 1, dim = dim)
+        nlist = 4, m = m, ksub = ksub, dim = dim)
       graft.ops.PqOps.ivfPqAppend(batch.toDF("vec_id", "embedding"), d)
       graft.ops.PqOps.ivfPqCompact(spark, d)
     }
@@ -463,9 +463,9 @@ class PqSpec extends AnyFunSuite {
       (0 until dim).map(j =>
         (if (blocks(j / (dim / nBlocks))) 5f else 0.3f) + r.nextFloat() * 0.4f)
     val base = (0 until 90).map(i => (i.toLong, mkVec(Set(i % 3))))
-    val stale = java.nio.file.Files.createTempDirectory("graft_ivfpq_rl_s").toString
+    val stale = tempDir().toString
     graft.ops.PqOps.ivfPqIndex(base.toDF("vec_id", "embedding"), stale,
-      nlist = 3, m = m, ksub = ksub, iters = 1, dim = dim)
+      nlist = 3, m = m, ksub = ksub, dim = dim)
     // the drifted batch, with a 6-row near-duplicate sub-blob planted ON
     // the stale quantizer's decision midline (the midpoint of two stored
     // centroids): the blob is a DISTINCT exact top-5 set for each of its
@@ -498,9 +498,9 @@ class PqSpec extends AnyFunSuite {
     val staleRecall = recallAt1(stale)
     // 3. the rebuild the gauge asked for: retrain quantizer + codebooks
     //    on the post-drift corpus
-    val rebuilt = java.nio.file.Files.createTempDirectory("graft_ivfpq_rl_r").toString
+    val rebuilt = tempDir().toString
     graft.ops.PqOps.ivfPqIndex(corpus, rebuilt,
-      nlist = 4, m = m, ksub = ksub, iters = 1, dim = dim)
+      nlist = 4, m = m, ksub = ksub, dim = dim)
     val rebuiltRecall = recallAt1(rebuilt)
     // the measured consequence behind the gauge's 0.25 line: the stale
     // quantizer scatters the drifted cluster across two lists (and its
@@ -523,9 +523,9 @@ class PqSpec extends AnyFunSuite {
       (i.toLong, (0 until dim).map(j => centers(c)(j) + r.nextFloat() * 0.2f))
     }
     val rows = (0 until 80).map(mk)
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivfpq_del").toString
+    val idx = tempDir().toString
     graft.ops.PqOps.ivfPqIndex(rows.toDF("vec_id", "embedding"), idx,
-      nlist = 4, m = m, ksub = ksub, iters = 1, dim = dim)
+      nlist = 4, m = m, ksub = ksub, dim = dim)
     val queries = rows.take(8).toDF("vec_id", "embedding")
     def search() = graft.ops.PqOps
       .ivfPqSearchIndexed(queries, idx, k = 5, nprobe = 4)
@@ -580,9 +580,9 @@ class PqSpec extends AnyFunSuite {
     }
     val rows = (0 until 80).map(mk)
     val df = rows.toDF("vec_id", "embedding")
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivfpq_dl2").toString
+    val idx = tempDir().toString
     graft.ops.PqOps.ivfPqIndex(df, idx, nlist = 4, m = m, ksub = ksub,
-      iters = 1, dim = dim)
+      dim = dim)
     val queries = rows.take(8).toDF("vec_id", "embedding")
     def search() = graft.ops.PqOps
       .ivfPqSearchIndexed(queries, idx, k = 5, nprobe = 4)
@@ -624,9 +624,9 @@ class PqSpec extends AnyFunSuite {
       (i.toLong, (0 until dim).map(j => centers(c)(j) + r.nextFloat() * 0.2f))
     }
     val rows = (0 until 80).map(mk)
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivfpq_pp").toString
+    val idx = tempDir().toString
     graft.ops.PqOps.ivfPqIndex(rows.toDF("vec_id", "embedding"), idx,
-      nlist = 4, m = m, ksub = ksub, iters = 1, dim = dim)
+      nlist = 4, m = m, ksub = ksub, dim = dim)
     graft.ops.PqOps.ivfPqDelete(Seq(7L, 9L).toDF("vec_id"), idx)
     val queries = rows.take(4).toDF("vec_id", "embedding")
     val plan = graft.ops.PqOps
@@ -655,9 +655,9 @@ class PqSpec extends AnyFunSuite {
       (i.toLong, (0 until dim).map(j => centers(c)(j) + r.nextFloat() * 0.2f))
     }
     val rows = (0 until 80).map(mk)
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivfpq_dcr").toString
+    val idx = tempDir().toString
     graft.ops.PqOps.ivfPqIndex(rows.toDF("vec_id", "embedding"), idx,
-      nlist = 4, m = m, ksub = ksub, iters = 1, dim = dim)
+      nlist = 4, m = m, ksub = ksub, dim = dim)
     val queries = rows.take(8).toDF("vec_id", "embedding")
     def search() = graft.ops.PqOps
       .ivfPqSearchIndexed(queries, idx, k = 5, nprobe = 4)

@@ -12,6 +12,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
+import graft.TempDirs.tempDir
 
 /** The engine session's `file:` writes start no process: a stateful
   * streaming query with a file checkpoint (offset/commit logs and
@@ -31,7 +32,7 @@ class LocalFsProcessSpec extends AnyFunSuite {
   }
 
   test("checkpointed streaming and the parquet sinks start no chmod / readlink process") {
-    val tmp = Files.createTempDirectory("localfs-proc")
+    val tmp = tempDir()
     val in = Files.createDirectory(tmp.resolve("in"))
     Files.write(in.resolve("a.json"), "{\"k\":1}\n{\"k\":2}\n".getBytes)
     Files.write(in.resolve("b.json"), "{\"k\":2}\n{\"k\":3}\n".getBytes)

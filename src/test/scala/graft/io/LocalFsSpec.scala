@@ -11,6 +11,8 @@ import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs.tempDir
+
 /** [[NoForkRawLocalFileSystem]] against stock [[RawLocalFileSystem]] on
   * the same files: the stock class (which forks `chmod` / `readlink`
   * without libhadoop) is the reference for every observable result.
@@ -43,7 +45,7 @@ class LocalFsSpec extends AnyFunSuite {
 
   for ((umask, file, dir) <- Seq(("022", "rw-r--r--", "rwxr-xr-x"), ("077", "rw-------", "rwx------")))
     test(s"create / mkdirs / setPermission leave stock modes under umask $umask") {
-      val tmp = Files.createTempDirectory("localfs-perm")
+      val tmp = tempDir()
       val stock = modesAfterWrites(fs(new RawLocalFileSystem, umask),
         Files.createDirectory(tmp.resolve("stock")))
       val ours = modesAfterWrites(fs(new NoForkRawLocalFileSystem, umask),
@@ -54,14 +56,14 @@ class LocalFsSpec extends AnyFunSuite {
     }
 
   test("a sticky-bit setPermission still yields mode 1755") {
-    val d = Files.createTempDirectory("localfs-sticky")
+    val d = tempDir()
     fs(new NoForkRawLocalFileSystem, "022")
       .setPermission(new Path(d.toString), new FsPermission("1755"))
     assert((Files.getAttribute(d, "unix:mode").asInstanceOf[Int] & 0x0fff) == Integer.parseInt("1755", 8))
   }
 
   test("getFileLinkStatus / getLinkTarget match stock on links, missing and qualified paths") {
-    val d = Files.createTempDirectory("localfs-link").toRealPath()
+    val d = tempDir().toRealPath()
     val file = Files.write(d.resolve("f.txt"), "hello".getBytes)
     val sub = Files.createDirectory(d.resolve("sub"))
     Files.createSymbolicLink(d.resolve("ln"), file)
@@ -91,7 +93,7 @@ class LocalFsSpec extends AnyFunSuite {
 
   test("the FileSystem binding renames like the Hive ProxyLocalFileSystem it replaces") {
     def outcome(fs: FileSystem): (Boolean, Boolean, String) = {
-      val d = Files.createTempDirectory("localfs-rename")
+      val d = tempDir()
       Files.write(d.resolve("src"), "new".getBytes)
       Files.write(d.resolve("dst"), "old".getBytes)
       Files.write(d.resolve("moved"), "x".getBytes)

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 import graft.SharedSpark
+import graft.TempDirs.tempDir
 import graft.functions.NpyDecode
 
 /** End-to-end: per-id `.npy` files on disk → binaryFile scan →
@@ -35,7 +36,7 @@ class NpySourcesSpec extends AnyFunSuite {
   }
 
   test("readNpyById: {id}.npy files decode to (id, frames) rows") {
-    val dir = Files.createTempDirectory("graft_npy").toString
+    val dir = tempDir().toString
     val a = Array(Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f))
     val b = Array(Array(-1.5f, 0.25f, 8.0f))
     Files.write(Paths.get(dir, "vid101.npy"), npyF4(a))
@@ -74,7 +75,7 @@ class NpySourcesSpec extends AnyFunSuite {
   }
 
   test("npy_frames: a malformed payload fails the task with the npy: message") {
-    val dir = Files.createTempDirectory("graft_npy_bad").toString
+    val dir = tempDir().toString
     Files.write(Paths.get(dir, "ok.npy"), npyF4(Array(Array(1.0f))))
     Files.write(Paths.get(dir, "bad.npy"), npyF4(Array(Array(1.0f))).take(20))
     val e = intercept[Exception](Sources.readNpyById(spark, dir).collect())

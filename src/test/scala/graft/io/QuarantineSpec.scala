@@ -1,11 +1,10 @@
 package graft.io
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
+import graft.TempDirs.tempDir
 
 /** Ingest hygiene: malformed JSONL lines route to the quarantine frame
   * instead of killing the job or becoming silent all-null rows.
@@ -15,7 +14,7 @@ class QuarantineSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("readJsonlWithQuarantine splits good rows from malformed lines") {
-    val dir = Files.createTempDirectory("jsonl").toString
+    val dir = tempDir().toString
     val lines = Seq(
       """{"id": 1, "text": "hello"}""",
       """{"id": 2, "text": "world"}""",

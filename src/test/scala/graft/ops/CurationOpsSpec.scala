@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
+import graft.TempDirs.tempDir
 
 /** Curation-stage contracts: decontamination flags exactly the train
   * docs sharing an n-gram with the eval set, the decision path drops
@@ -213,7 +214,7 @@ class CurationOpsSpec extends AnyFunSuite {
   }
 
   test("precomputed eval gram set round-trips through parquet with equal decisions") {
-    val dir = java.nio.file.Files.createTempDirectory("gramset").toString
+    val dir = tempDir().toString
     CurationOps.evalGramSet(evalSet, "text", 3).write.mode("overwrite").parquet(dir)
     val fromDisk = spark.read.parquet(dir)
     val direct = CurationOps.decontaminate(train, evalSet, "text", "doc_id", 3)
@@ -229,7 +230,7 @@ class CurationOpsSpec extends AnyFunSuite {
       (1L, "spam spam spam alpha beta gamma"),
       (2L, "spam spam spam delta epsilon zeta"),
       (3L, "spam spam spam eta theta iota")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("freqspans").toString
+    val dir = tempDir().toString
     CurationOps.frequentSpans(docs, "text", 3, 3).write.mode("overwrite").parquet(dir)
     val direct = CurationOps.scrubFrequentSpans(docs, "text", 3, 3)
       .orderBy("doc_id").select("text").as[String].collect().toSeq

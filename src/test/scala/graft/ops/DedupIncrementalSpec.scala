@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
+import graft.TempDirs.tempDir
 
 /** Incremental (corpus vs new-batch) near-dedup
   * ([[DedupOps.dedupIncremental]]) — the daily-ingest contract: the
@@ -75,7 +76,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
       (3L, "totally new content nothing shared at all"),
       (4L, "totally new content nothing shared at all")      // in-batch dup of 3
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_reps_spec_").toString
+    val dir = tempDir().toString
     DedupOps.corpusBucketReps(corpus, "text", "doc_id")
       .write.mode("overwrite").parquet(dir)
     val reps = DedupOps.CorpusReps(spark.read.parquet(dir))

@@ -123,9 +123,9 @@ class DriftOpsSpec extends AnyFunSuite {
     val a2 = vecs(0.0, 120, 8, tag = 3) // same distribution, different draws
     val b = vecs(1.5, 120, 8, tag = 1) // mean-shifted cluster
     val near = DriftOps.mmdDrift(a, a2, "v", dim = 8, features = 32,
-      sigma = 2.0, seed = 8L).as[(Double, Long, Long)].collect().head
+      sigma = 2.0).as[(Double, Long, Long)].collect().head
     val far = DriftOps.mmdDrift(a, b, "v", dim = 8, features = 32,
-      sigma = 2.0, seed = 8L).as[(Double, Long, Long)].collect().head
+      sigma = 2.0).as[(Double, Long, Long)].collect().head
     assert(near._2 == 120L && near._3 == 120L)
     assert(near._1 >= 0.0 && near._1 < 0.02, s"null-drift mmd2 ${near._1}")
     assert(far._1 > 10 * math.max(near._1, 1e-6),
@@ -135,15 +135,15 @@ class DriftOpsSpec extends AnyFunSuite {
   test("mmdDrift is partition-invariant and drops contract-violating rows") {
     val a = vecs(0.0, 60, 8, tag = 0)
     val b = vecs(0.5, 60, 8, tag = 1)
-    val x = DriftOps.mmdDrift(a, b, "v", 8, 16, 2.0, 8L)
+    val x = DriftOps.mmdDrift(a, b, "v", 8, 16, 2.0)
       .as[(Double, Long, Long)].collect().head
     val y = DriftOps.mmdDrift(a.repartition(7), b.repartition(3),
-        "v", 8, 16, 2.0, 8L)
+        "v", 8, 16, 2.0)
       .as[(Double, Long, Long)].collect().head
     assert(x == y, "decimal term sums are order-free")
     val withBad = a.unionByName(
       Seq((999L, Array(1.0f, 2.0f))).toDF("id", "v")) // wrong dim
-    val z = DriftOps.mmdDrift(withBad, b, "v", 8, 16, 2.0, 8L)
+    val z = DriftOps.mmdDrift(withBad, b, "v", 8, 16, 2.0)
       .as[(Double, Long, Long)].collect().head
     assert(z._2 == 60L, "short vector must be excluded, not crash")
   }

@@ -116,7 +116,7 @@ class EvalMetricsSpec extends AnyFunSuite {
     // bin 9 (score 1.0 clamps): score 1.0 label 1 -> gap 0
     // bin 5: scores 0.55 label 1 -> conf .55 acc 1 gap .45
     val df = Seq((0.05, 0), (0.05, 1), (1.0, 1), (0.55, 1)).toDF("score", "label")
-    val rows = EvalMetrics.calibrationBins(df, "score", "label", bins = 10)
+    val rows = EvalMetrics.calibrationBins(df, "score", "label")
       .orderBy("bin")
       .as[(Int, Long, Double, Double, Double, Double)].collect().toSeq
     assert(rows.map(r => (r._1, r._2)) == Seq((0, 2L), (5, 1L), (9, 1L)))

@@ -51,7 +51,7 @@ class ProfileOpsSpec extends AnyFunSuite {
     val orders = (0 until 5).flatMap { i =>
       (0 to i).map(j => (i.toLong, ts(10 * i - j), 100.0 * (i + 1)))
     }.toDF("cust", "ts", "amount")
-    val got = ProfileOps.rfmScores(orders, "cust", "ts", "amount", buckets = 5)
+    val got = ProfileOps.rfmScores(orders, "cust", "ts", "amount")
       .as[(Long, Int, Long, Double, Int, Int, Int, Int)]
       .collect().sortBy(_._1)
     assert(got.map(_._2).toSeq == Seq(40, 30, 20, 10, 0), "recency days")
@@ -64,7 +64,7 @@ class ProfileOpsSpec extends AnyFunSuite {
     }
     assert(got.map(_._8).toSeq == Seq(111, 222, 333, 444, 555), "segment")
     val re = ProfileOps.rfmScores(
-        orders.repartition(7), "cust", "ts", "amount", 5)
+        orders.repartition(7), "cust", "ts", "amount")
       .as[(Long, Int, Long, Double, Int, Int, Int, Int)]
       .collect().sortBy(_._1)
     assert(re.toSeq == got.toSeq, "deterministic under partitioning")

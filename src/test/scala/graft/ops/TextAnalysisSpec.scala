@@ -107,7 +107,7 @@ class TextAnalysisSpec extends AnyFunSuite {
     val got = Seq(doc, "short doc.", "has lorem ipsum. " + "Five. Full. Sentences. Here. Now.",
         "curly { brace. One. Two. Three. Four. Five.")
       .toDF("text")
-      .select(TextAnalysis.c4LineFilter(col("text"), minWords = 3, minSentences = 3).as("c"))
+      .select(TextAnalysis.c4LineFilter(col("text"), minSentences = 3).as("c"))
       .select(col("c.n_lines_kept"), col("c.n_sentences"), col("c.keep"))
       .as[(Int, Int, Int)].collect().toSeq
     // doc 1: kept lines 1, 5, 6 -> sentences: 1 + 2 + 1 = 4 >= 3, no poison

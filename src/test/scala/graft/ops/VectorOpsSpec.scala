@@ -293,7 +293,7 @@ class VectorOpsSpec extends AnyFunSuite {
         (a * u1(i) + b * u2(i) + rnd.nextGaussian() * 0.05).toFloat))
     }
     val df = rows.toDF("v")
-    val got = VectorOps.powerComponents(df, "v", dim, k = 2, iters = 5)
+    val got = VectorOps.powerComponents(df, "v", dim, iters = 5)
       .as[(Int, Int, Double, Double, Double)].collect()
       .groupBy(_._1).view.mapValues(_.sortBy(_._2)).toMap
     assert(got.keySet == Set(1, 2))
@@ -322,7 +322,7 @@ class VectorOpsSpec extends AnyFunSuite {
     assert(got(1).head._5 > got(2).head._5 && got(2).head._5 > 0)
     // repartition-proof (exact decimal sufficient sums)
     val re = VectorOps.powerComponents(df.repartition(7), "v", dim,
-        k = 2, iters = 5)
+        iters = 5)
       .as[(Int, Int, Double, Double, Double)].collect().sortBy(r => (r._1, r._2))
     assert(re.toSeq ==
       (got(1) ++ got(2)).sortBy(r => (r._1, r._2)).toSeq)

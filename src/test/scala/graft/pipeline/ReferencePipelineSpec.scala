@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
+import graft.TempDirs.tempDir
 import graft.io.Sources
 import graft.ops.{CategoryOps, EvalMetrics}
 
@@ -25,7 +26,7 @@ class ReferencePipelineSpec extends AnyFunSuite {
   private def words(n: Int, p: String): String = (0 until n).map(i => s"$p$i").mkString(" ")
 
   private def writeFixture(): String = {
-    val dir = Files.createTempDirectory("anns").toFile.getAbsolutePath
+    val dir = tempDir().toFile.getAbsolutePath
     // 24 labeled rows across 6 classes + 2 unlabeled (test-shape) rows;
     // long asr/ocr rows force every cut regime of combine_text.
     val rows = (0 until 24).map { i =>
@@ -46,7 +47,7 @@ class ReferencePipelineSpec extends AnyFunSuite {
 
   test("pipeline end-to-end: metrics row + CSV sink + schema/shape invariants") {
     val annDir = writeFixture()
-    val outCsv = Files.createTempDirectory("result").toFile.getAbsolutePath + "/preds"
+    val outCsv = tempDir().toFile.getAbsolutePath + "/preds"
     val out = ReferencePipeline.run(spark, s"$annDir/labeled.json", codes, outCsv, valRatio = 0.25)
 
     val m = out.metrics.collect().head
@@ -74,7 +75,7 @@ class ReferencePipelineSpec extends AnyFunSuite {
     // ids feed the same string-typed budgeted assembly via a cast (the
     // cut_min algebra is index arithmetic, representation-agnostic).
     val annDir = writeFixture()
-    val outCsv = Files.createTempDirectory("result-wp").toFile.getAbsolutePath + "/preds"
+    val outCsv = tempDir().toFile.getAbsolutePath + "/preds"
     val vocab = Sources.readVocab(
       spark, getClass.getResource("/wordpiece_vocab.txt").getPath)
     val out = ReferencePipeline.run(
@@ -138,7 +139,7 @@ class ReferencePipelineSpec extends AnyFunSuite {
 
   test("run releases its persisted split and returns a materialised metrics row") {
     val annDir = writeFixture()
-    val outCsv = Files.createTempDirectory("result-cache").toFile.getAbsolutePath + "/preds"
+    val outCsv = tempDir().toFile.getAbsolutePath + "/preds"
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val out = ReferencePipeline.run(spark, s"$annDir/labeled.json", codes, outCsv, valRatio = 0.25)
     val after = spark.sparkContext.getPersistentRDDs.keySet
@@ -154,7 +155,7 @@ class ReferencePipelineSpec extends AnyFunSuite {
 
   test("run with no train rows predicts nothing, so validation fails and the split is released") {
     val annDir = writeFixture()
-    val outCsv = Files.createTempDirectory("result-empty").toFile.getAbsolutePath + "/preds"
+    val outCsv = tempDir().toFile.getAbsolutePath + "/preds"
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val e = intercept[IllegalArgumentException] {
       ReferencePipeline.run(spark, s"$annDir/labeled.json", codes, outCsv, valRatio = 1.0)
@@ -174,7 +175,7 @@ class ReferencePipelineSpec extends AnyFunSuite {
   }
 
   test("binary-by-id source extracts ids from filenames (OP-02/03 analog)") {
-    val dir = Files.createTempDirectory("bins")
+    val dir = tempDir()
     Files.write(dir.resolve("vid1.bin"), Array[Byte](1, 2, 3))
     Files.write(dir.resolve("vid2.bin"), Array[Byte](4, 5))
     Files.write(dir.resolve("ignore.txt"), Array[Byte](9))
@@ -184,7 +185,7 @@ class ReferencePipelineSpec extends AnyFunSuite {
   }
 
   test("sharded sink writes fixed-size partitions (OP-05)") {
-    val outDir = Files.createTempDirectory("shards").toFile.getAbsolutePath + "/ds"
+    val outDir = tempDir().toFile.getAbsolutePath + "/ds"
     val df = (0 until 95).map(i => (i.toLong, s"row$i")).toDF("id", "payload")
     Sources.writeSharded(df, "id", 40, outDir)
     val back = spark.read.parquet(outDir)

@@ -1,11 +1,10 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
+import graft.TempDirs.tempDir
 import graft.core.Tables
 import graft.ops.SessionOps
 
@@ -24,7 +23,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       .as[(String, String, Long, Double)].collect().toSet
 
     // stream the single parquet file through the same transform
-    val streamDir = Files.createTempDirectory("events-stream").toFile
+    val streamDir = tempDir().toFile
     val src = new java.io.File(s"$sfDir/events.parquet")
     org.apache.hadoop.fs.FileUtil.copy(
       org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration),
@@ -48,7 +47,7 @@ class StreamingOpsSpec extends AnyFunSuite {
         "ts", "event_type", "value", windowSeconds = 3600L, slideSeconds = 1800L)
       .as[(String, String, Long, Double)].collect().toSet
 
-    val streamDir = Files.createTempDirectory("events-stream-sliding").toFile
+    val streamDir = tempDir().toFile
     val src = new java.io.File(s"$sfDir/events.parquet")
     org.apache.hadoop.fs.FileUtil.copy(
       org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration),
@@ -84,7 +83,7 @@ class StreamingOpsSpec extends AnyFunSuite {
   }
 
   test("streaming session_window with watermark emits closed sessions") {
-    val streamDir = Files.createTempDirectory("sess-stream").toFile.getAbsolutePath
+    val streamDir = tempDir().toFile.getAbsolutePath
     def micros(min: Long): Long = min * 60L * 1000000L * 1000L // nanos-as-long input
 
     // file 1: user 1 has two sessions (gap 45min > 30min)
@@ -115,19 +114,14 @@ class StreamingOpsSpec extends AnyFunSuite {
     // hourly windows in total, but with a 1h watermark only the windows
     // inside the (file span + watermark) horizon are live at any batch
     // end — (160+60)/60 + 2 = 5 — while complete mode would hold all.
-    val streamDir = Files.createTempDirectory("tumb-wm-stream").toFile.getAbsolutePath
+    val streamDir = tempDir().toFile.getAbsolutePath
     def nanos(min: Long): Long = min * 60L * 1000000L * 1000L
     for ((lo, i) <- (0L until 600L by 160L).zipWithIndex) {
       val rows = for (m <- 0L until 600L by 10L if m >= lo && m < lo + 160)
         yield (m, nanos(m), 1L, "view", 1.0, "{}")
-      val tmp = Files.createTempDirectory("tumb-wm-batch").toFile.getAbsolutePath
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(streamDir, s"b$i.parquet")
-      java.nio.file.Files.copy(part.toPath, dst.toPath)
-      dst.setLastModified(1000000L * (i + 1))
+      StreamingHarness.writeStreamFile(
+        rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
+        streamDir, s"b$i.parquet", 1000000L * (i + 1))
     }
 
     val (got, maxState) = StreamingHarness.runToMemoryMaxState(
@@ -164,20 +158,14 @@ class StreamingOpsSpec extends AnyFunSuite {
     // rows — strictly less than the 30 total sessions. A watermark
     // regression (state never evicted) would hold all 30 and fail this
     // bound; state scaling with EVENTS would fail it even harder.
-    val streamDir = Files.createTempDirectory("sess-bound-stream").toFile.getAbsolutePath
+    val streamDir = tempDir().toFile.getAbsolutePath
     def nanos(min: Long): Long = min * 60L * 1000000L * 1000L
 
     def writeBatch(rows: Seq[(Long, Long, Long, String, Double, String)],
-        name: String, mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("sess-bound-batch").toFile.getAbsolutePath
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(streamDir, name)
-      java.nio.file.Files.copy(part.toPath, dst.toPath)
-      dst.setLastModified(mtimeMs)
-    }
+        name: String, mtimeMs: Long): Unit =
+      StreamingHarness.writeStreamFile(
+        rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
+        streamDir, name, mtimeMs)
 
     val allMinutes = (0L until 600L by 40L).toSeq // 15 events per user
     for ((lo, i) <- (0L until 600L by 160L).zipWithIndex) {
@@ -217,19 +205,13 @@ class StreamingOpsSpec extends AnyFunSuite {
     // (b) a late row whose window was already closed must be DROPPED,
     // and both must be visible in the emissions and the progress
     // metrics, not inferred.
-    val streamDir = Files.createTempDirectory("tumb-late-stream").toFile.getAbsolutePath
+    val streamDir = tempDir().toFile.getAbsolutePath
     def nanos(min: Long): Long = min * 60L * 1000000L * 1000L
     def writeBatch(rows: Seq[(Long, Long, Long, String, Double, String)],
-        name: String, mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("tumb-late-batch").toFile.getAbsolutePath
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(streamDir, name)
-      java.nio.file.Files.copy(part.toPath, dst.toPath)
-      dst.setLastModified(mtimeMs)
-    }
+        name: String, mtimeMs: Long): Unit =
+      StreamingHarness.writeStreamFile(
+        rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
+        streamDir, name, mtimeMs)
     def ev(min: Long): (Long, Long, Long, String, Double, String) =
       (min, nanos(min), 1L, "view", 1.0, "{}")
 
@@ -282,19 +264,13 @@ class StreamingOpsSpec extends AnyFunSuite {
 
   test("late data, session windows: beyond-watermark row neither revives nor " +
       "re-emits its closed session; drop is counted") {
-    val streamDir = Files.createTempDirectory("sess-late-stream").toFile.getAbsolutePath
+    val streamDir = tempDir().toFile.getAbsolutePath
     def nanos(min: Long): Long = min * 60L * 1000000L * 1000L
     def writeBatch(rows: Seq[(Long, Long, Long, String, Double, String)],
-        name: String, mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("sess-late-batch").toFile.getAbsolutePath
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(streamDir, name)
-      java.nio.file.Files.copy(part.toPath, dst.toPath)
-      dst.setLastModified(mtimeMs)
-    }
+        name: String, mtimeMs: Long): Unit =
+      StreamingHarness.writeStreamFile(
+        rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
+        streamDir, name, mtimeMs)
 
     // b0: user 1 -> session A (minutes 0,10), session B (minute 120)
     writeBatch(Seq(
@@ -327,20 +303,13 @@ class StreamingOpsSpec extends AnyFunSuite {
   test("streamingTwap carries state across micro-batches; final row matches batch twap") {
     import org.apache.spark.sql.types._
     import graft.ops.TrendOps
-    val streamDir = Files.createTempDirectory("twap-stream").toFile.getAbsolutePath
+    val streamDir = tempDir().toFile.getAbsolutePath
     val schema = StructType(Seq(
       StructField("key", StringType), StructField("event_id", LongType),
       StructField("ts", TimestampType), StructField("value", DoubleType)))
 
-    def writeBatch(df: org.apache.spark.sql.DataFrame, name: String, mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("twap-batch").toFile.getAbsolutePath
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(streamDir, name)
-      java.nio.file.Files.copy(part.toPath, dst.toPath)
-      dst.setLastModified(mtimeMs)
-    }
+    def writeBatch(df: org.apache.spark.sql.DataFrame, name: String, mtimeMs: Long): Unit =
+      StreamingHarness.writeStreamFile(df, streamDir, name, mtimeMs)
 
     def ts(min: Long) = new java.sql.Timestamp(min * 60000L)
     // clean quarter values so double and decimal folds agree exactly
@@ -375,20 +344,13 @@ class StreamingOpsSpec extends AnyFunSuite {
   test("streamingFunnel: per-level users match batch funnelCounts; state crosses batches") {
     import org.apache.spark.sql.types._
     import graft.ops.FunnelOps
-    val streamDir = Files.createTempDirectory("funnel-stream").toFile.getAbsolutePath
+    val streamDir = tempDir().toFile.getAbsolutePath
     val schema = StructType(Seq(
       StructField("user_id", LongType), StructField("event_id", LongType),
       StructField("ts", TimestampType), StructField("event_type", StringType)))
 
-    def writeBatch(df: org.apache.spark.sql.DataFrame, name: String, mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("funnel-batch").toFile.getAbsolutePath
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(streamDir, name)
-      java.nio.file.Files.copy(part.toPath, dst.toPath)
-      dst.setLastModified(mtimeMs)
-    }
+    def writeBatch(df: org.apache.spark.sql.DataFrame, name: String, mtimeMs: Long): Unit =
+      StreamingHarness.writeStreamFile(df, streamDir, name, mtimeMs)
     def ts(min: Long) = new java.sql.Timestamp(min * 60000L)
 
     // file 1: u1 view+click; u2 click only (can't start); u3 view
@@ -442,20 +404,13 @@ class StreamingOpsSpec extends AnyFunSuite {
   test("streamingEma carries state across micro-batches (== batch emaByKey when files arrive in order)") {
     import org.apache.spark.sql.types._
     import graft.ops.VectorOps
-    val streamDir = Files.createTempDirectory("ema-stream").toFile.getAbsolutePath
+    val streamDir = tempDir().toFile.getAbsolutePath
     val schema = StructType(Seq(
       StructField("key", StringType), StructField("ord", LongType),
       StructField("value", DoubleType)))
 
-    def writeBatch(df: org.apache.spark.sql.DataFrame, name: String, mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("ema-batch").toFile.getAbsolutePath
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(streamDir, name)
-      java.nio.file.Files.copy(part.toPath, dst.toPath)
-      dst.setLastModified(mtimeMs)
-    }
+    def writeBatch(df: org.apache.spark.sql.DataFrame, name: String, mtimeMs: Long): Unit =
+      StreamingHarness.writeStreamFile(df, streamDir, name, mtimeMs)
 
     // three micro-batches, ords strictly increasing across files (the
     // ingest norm the scaladoc contract names); deterministic values
@@ -490,20 +445,13 @@ class StreamingOpsSpec extends AnyFunSuite {
       "final gauge matches the batch bootstrap") {
     import org.apache.spark.sql.types._
     import graft.ops.StatsOps
-    val streamDir = Files.createTempDirectory("boot-stream").toFile.getAbsolutePath
+    val streamDir = tempDir().toFile.getAbsolutePath
     val schema = StructType(Seq(
       StructField("key", StringType), StructField("event_id", LongType),
       StructField("ts", TimestampType), StructField("value", DoubleType)))
 
-    def writeBatch(df: org.apache.spark.sql.DataFrame, name: String, mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("boot-batch").toFile.getAbsolutePath
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(streamDir, name)
-      java.nio.file.Files.copy(part.toPath, dst.toPath)
-      dst.setLastModified(mtimeMs)
-    }
+    def writeBatch(df: org.apache.spark.sql.DataFrame, name: String, mtimeMs: Long): Unit =
+      StreamingHarness.writeStreamFile(df, streamDir, name, mtimeMs)
     def ts(min: Long) = new java.sql.Timestamp(min * 60000L)
     def rows(lo: Long): Seq[(String, Long, java.sql.Timestamp, Double)] =
       for (k <- Seq("a", "b"); i <- lo until (lo + 30))
@@ -550,19 +498,12 @@ class StreamingOpsSpec extends AnyFunSuite {
       "batch-qualifying values present within the MG error band") {
     import org.apache.spark.sql.types._
     import graft.ops.SketchOps
-    val streamDir = Files.createTempDirectory("hh-stream").toFile.getAbsolutePath
+    val streamDir = tempDir().toFile.getAbsolutePath
     val schema = StructType(Seq(
       StructField("key", StringType), StructField("event_id", LongType),
       StructField("value", StringType)))
-    def writeBatch(df: org.apache.spark.sql.DataFrame, name: String, mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("hh-batch").toFile.getAbsolutePath
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(streamDir, name)
-      java.nio.file.Files.copy(part.toPath, dst.toPath)
-      dst.setLastModified(mtimeMs)
-    }
+    def writeBatch(df: org.apache.spark.sql.DataFrame, name: String, mtimeMs: Long): Unit =
+      StreamingHarness.writeStreamFile(df, streamDir, name, mtimeMs)
     // per file: 30 "hot" + 4 distractor values x 5 each; two groups
     def rows(lo: Long): Seq[(String, Long, String)] =
       (for (g <- Seq("a", "b"); i <- 0 until 50) yield {
@@ -605,19 +546,12 @@ class StreamingOpsSpec extends AnyFunSuite {
 
   test("streamingBootstrapGauge idle-group TTL bounds state") {
     import org.apache.spark.sql.types._
-    val streamDir = Files.createTempDirectory("boot-ttl").toFile.getAbsolutePath
+    val streamDir = tempDir().toFile.getAbsolutePath
     val schema = StructType(Seq(
       StructField("key", StringType), StructField("event_id", LongType),
       StructField("ts", TimestampType), StructField("value", DoubleType)))
-    def writeBatch(df: org.apache.spark.sql.DataFrame, name: String, mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("boot-ttl-b").toFile.getAbsolutePath
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(streamDir, name)
-      java.nio.file.Files.copy(part.toPath, dst.toPath)
-      dst.setLastModified(mtimeMs)
-    }
+    def writeBatch(df: org.apache.spark.sql.DataFrame, name: String, mtimeMs: Long): Unit =
+      StreamingHarness.writeStreamFile(df, streamDir, name, mtimeMs)
     // offset from 100 min: the initial watermark is 0 and the late
     // filter drops rows AT or below it (the streamingEma TTL note)
     def ts(min: Long) = new java.sql.Timestamp((100 + min) * 60000L)
@@ -642,20 +576,13 @@ class StreamingOpsSpec extends AnyFunSuite {
   test("streamingEma idle-key TTL: expired keys leave the state store") {
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.streaming.Trigger
-    val streamDir = Files.createTempDirectory("ema-ttl-stream").toFile.getAbsolutePath
+    val streamDir = tempDir().toFile.getAbsolutePath
     val schema = StructType(Seq(
       StructField("key", StringType), StructField("ord", LongType),
       StructField("ts", TimestampType), StructField("value", DoubleType)))
 
-    def writeBatch(df: org.apache.spark.sql.DataFrame, name: String, mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("ema-ttl-batch").toFile.getAbsolutePath
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(streamDir, name)
-      java.nio.file.Files.copy(part.toPath, dst.toPath)
-      dst.setLastModified(mtimeMs)
-    }
+    def writeBatch(df: org.apache.spark.sql.DataFrame, name: String, mtimeMs: Long): Unit =
+      StreamingHarness.writeStreamFile(df, streamDir, name, mtimeMs)
 
     // minutes offset from 100: the initial watermark is 0, and the
     // watermark late-filter drops rows AT or below it — an epoch-origin
@@ -745,7 +672,7 @@ class StreamingOpsSpec extends AnyFunSuite {
 
     // streaming run: two chained event-time aggs, append mode, state
     // bounded by open windows x categories
-    val streamDir = Files.createTempDirectory("events-stream-drift").toFile
+    val streamDir = tempDir().toFile
     val src = new java.io.File(s"$sfDir/events.parquet")
     org.apache.hadoop.fs.FileUtil.copy(
       org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration),
@@ -772,7 +699,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     // 3 users, a touch every 20min, conversions offset so each has
     // exactly the touches inside the 30min horizon behind it; 4
     // time-ordered files force cross-micro-batch matches
-    val streamDir = Files.createTempDirectory("attr-stream").toFile.getAbsolutePath
+    val streamDir = tempDir().toFile.getAbsolutePath
     // base offset keeps event times off epoch zero: a ts equal to the
     // initial watermark value (0) is dropped as late by the join
     def nanos(min: Long): Long = (86400L + min * 60L) * 1000000L * 1000L
@@ -782,14 +709,9 @@ class StreamingOpsSpec extends AnyFunSuite {
         if (isConv) "purchase" else "view", m.toDouble, "{}")
     }).sortBy(_._2)
     for ((grp, i) <- all.grouped(25).zipWithIndex) {
-      val tmp = Files.createTempDirectory("attr-batch").toFile.getAbsolutePath
-      grp.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(streamDir, s"b$i.parquet")
-      java.nio.file.Files.copy(part.toPath, dst.toPath)
-      dst.setLastModified(1000000L * (i + 1))
+      StreamingHarness.writeStreamFile(
+        grp.toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
+        streamDir, s"b$i.parquet", 1000000L * (i + 1))
     }
     def attr(df: org.apache.spark.sql.DataFrame) =
       StreamingOps.streamingAttribution(
@@ -810,7 +732,7 @@ class StreamingOpsSpec extends AnyFunSuite {
   }
 
   test("left-outer stream-stream join emits watermark-proven unmatched touches") {
-    val streamDir = Files.createTempDirectory("attr-lo").toFile.getAbsolutePath
+    val streamDir = tempDir().toFile.getAbsolutePath
     def nanos(min: Long): Long = (86400L + min * 60L) * 1000000L * 1000L
     // user 1: touch at 0 converts at 10; touch at 100 never converts.
     // The far-future tick advances the watermark so the unmatched
@@ -828,14 +750,9 @@ class StreamingOpsSpec extends AnyFunSuite {
       Seq((10L, nanos(10001), 2L, "view", 0.0, "{}"),
         (11L, nanos(10001), 2L, "purchase", 1.0, "{}")))
     for ((grp, i) <- batches.zipWithIndex) {
-      val tmp = Files.createTempDirectory("attr-lob").toFile.getAbsolutePath
-      grp.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(streamDir, s"b$i.parquet")
-      java.nio.file.Files.copy(part.toPath, dst.toPath)
-      dst.setLastModified(1000000L * (i + 1))
+      StreamingHarness.writeStreamFile(
+        grp.toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
+        streamDir, s"b$i.parquet", 1000000L * (i + 1))
     }
     val got = StreamingHarness.runToMemory(
       StreamingOps.streamingAttribution(
@@ -872,21 +789,15 @@ class StreamingOpsSpec extends AnyFunSuite {
 
   test("streamingExactDedupOptOut (streaming): state SHRINKS on winner " +
       "removal and the freed content is re-admitted in a later micro-batch") {
-    val dir = Files.createTempDirectory("dedup-optout").toFile
+    val dir = tempDir().toFile
     val docsDir = new java.io.File(dir, "docs"); docsDir.mkdirs()
     val remDir = new java.io.File(dir, "rem"); remDir.mkdirs()
     val schema = Seq((0L, "x", 0L)).toDF("doc_id", "text", "ord").schema
     def write(target: java.io.File, name: String, mtime: Long,
-        rows: Seq[(Long, String, Long)]): Unit = {
-      val tmp = Files.createTempDirectory("optout-b").toString
-      rows.toDF("doc_id", "text", "ord").coalesce(1)
-        .write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") && f.length > 0).get
-      val dst = new java.io.File(target, name)
-      Files.copy(part.toPath, dst.toPath)
-      dst.setLastModified(mtime); ()
-    }
+        rows: Seq[(Long, String, Long)]): Unit =
+      StreamingHarness.writeStreamFile(
+        rows.toDF("doc_id", "text", "ord"),
+        target.getAbsolutePath, name, mtime)
     // trigger 1: ingest A(1) A(2) B(3); trigger 2: removals only
     // (winner A=1 freed; id 99 against B's content: no-op);
     // trigger 3: A re-admitted, B still suppressed, C fresh
@@ -924,22 +835,16 @@ class StreamingOpsSpec extends AnyFunSuite {
   test("streamingExactDedupOptOut TTL: idle content is watermark-evicted " +
       "and a post-eviction dup is re-admitted (the bounded-state horizon " +
       "trade, streamingExactDedup's contract on the custom-state path)") {
-    val dir = Files.createTempDirectory("dedup-optout-ttl").toFile
+    val dir = tempDir().toFile
     val docsDir = new java.io.File(dir, "docs"); docsDir.mkdirs()
     val remDir = new java.io.File(dir, "rem"); remDir.mkdirs()
     def ts(min: Long) = new java.sql.Timestamp((100 + min) * 60000L)
     val schema = Seq((0L, "x", 0L, ts(0))).toDF("doc_id", "text", "ord", "ts").schema
     def write(target: java.io.File, name: String, mtime: Long,
-        rows: Seq[(Long, String, Long, java.sql.Timestamp)]): Unit = {
-      val tmp = Files.createTempDirectory("optout-ttl-b").toString
-      rows.toDF("doc_id", "text", "ord", "ts").coalesce(1)
-        .write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet") && f.length > 0).get
-      val dst = new java.io.File(target, name)
-      Files.copy(part.toPath, dst.toPath)
-      dst.setLastModified(mtime); ()
-    }
+        rows: Seq[(Long, String, Long, java.sql.Timestamp)]): Unit =
+      StreamingHarness.writeStreamFile(
+        rows.toDF("doc_id", "text", "ord", "ts"),
+        target.getAbsolutePath, name, mtime)
     // content A arrives once; B keeps arriving, advancing the watermark
     // far past A's 1h idle TTL; then A arrives again with CURRENT event
     // time — state was evicted, so it is re-admitted
@@ -1028,7 +933,7 @@ class StreamingOpsSpec extends AnyFunSuite {
 
   test("state partitions come from the conf at query start (the sizing lever) " +
       "and do not change emitted values") {
-    val streamDir = Files.createTempDirectory("sp-stream").toFile.getAbsolutePath
+    val streamDir = tempDir().toFile.getAbsolutePath
     val rows = (0 until 200).map(i => (s"k${i % 7}", i.toLong, (i % 13).toDouble))
     rows.toDF("key", "ord", "value").coalesce(1)
       .write.mode("overwrite").parquet(streamDir)

@@ -21,6 +21,20 @@ Prints every member that is not called. Members on ALLOWLIST, kept on
 purpose, are printed with their reason. Exit 1 when any other member is
 not called, or when an ALLOWLIST name is called after all (a stale entry).
 
+A second pass covers every default parameter of a scanned public member
+(a def, or a class's constructor). A parameter is set when a call site in
+src/main, perfbench/src or src/test passes it a value whose text differs
+from the default's, by name or by position; a call is any `name(` of the
+member's name, qualified or not, so calls inside the same object count
+and overloads share their call sites. Passing an enclosing member's own
+parameter through is a value other than the default's text, so it counts
+as set: the pass can miss a removable parameter, never flag a live one.
+A parameter that is never set is one value in use and belongs in the
+body as a constant. Column bindings (names ending in `Col` or `Cols`) and
+PARAM_ALLOWLIST entries stay parameters. Prints the number of default
+parameters and every one that is never set; exit 1 on any that is not
+exempt, or on a PARAM_ALLOWLIST entry that is set now (a stale entry).
+
 Usage: python3 tools/callers.py [repo_root]   (default: this script's repo)
 """
 import os
@@ -52,6 +66,11 @@ ALLOWLIST = {
         "spec oracle: SketchOpsSpec checks the HLL registers' estimate with it",
     "Sources.readJsonlWithQuarantine":
         "QuarantineSpec pins the JSONL quarantine contract the annotation read is to adopt",
+}
+
+# Default parameters that no call sets but that stay parameters, each
+# with its reason; keys are "Owner.member.param".
+PARAM_ALLOWLIST = {
 }
 
 IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
@@ -194,6 +213,207 @@ def reach(nodes, by_name, todo):
     return called
 
 
+def code(text, i=0):
+    """(index, char) for each char of text from i on that lies outside a
+    string or char literal."""
+    n = len(text)
+    while i < n:
+        if text.startswith('"""', i):
+            j = text.find('"""', i + 3)
+            i = n if j < 0 else j + 3
+        elif text[i] == '"':
+            j = i + 1
+            while j < n and text[j] not in '"\n':
+                j += 2 if text[j] == "\\" else 1
+            i = j + 1
+        elif text[i] == "'" and i + 2 < n and (text[i + 2] == "'" or text[i + 1] == "\\"):
+            j = text.find("'", i + 2)
+            i = n if j < 0 else j + 1
+        else:
+            yield i, text[i]
+            i += 1
+
+
+def closing(text, i):
+    """Index just past the bracket that closes the one at text[i]."""
+    depth = 0
+    for j, c in code(text, i):
+        if c in "([{":
+            depth += 1
+        elif c in ")]}":
+            depth -= 1
+            if not depth:
+                return j + 1
+    return len(text)
+
+
+def split_top(text):
+    """The comma-separated items of an argument or parameter list."""
+    items, depth, last = [], 0, 0
+    for j, c in code(text):
+        if c in "([{":
+            depth += 1
+        elif c in ")]}":
+            depth -= 1
+        elif c == "," and not depth:
+            items.append(text[last:j])
+            last = j + 1
+    items.append(text[last:])
+    return [t.strip() for t in items if t.strip()]
+
+
+def assign_at(text):
+    """Index of the `=` outside brackets that is not part of `=>`, `==`,
+    `<=`, `>=` or `!=`; -1 when there is none."""
+    depth = 0
+    for j, c in code(text):
+        if c in "([{":
+            depth += 1
+        elif c in ")]}":
+            depth -= 1
+        elif (c == "=" and not depth and text[j + 1:j + 2] not in ("=", ">")
+              and text[j - 1:j] not in ("=", "!", "<", ">")):
+            return j
+    return -1
+
+
+def squash(text):
+    return " ".join(text.split())
+
+
+DECL = re.compile(r"\b(?:def|class)\s+([A-Za-z_][A-Za-z0-9_]*)")
+CALL = re.compile(r"(?<![A-Za-z0-9_$])([A-Za-z_][A-Za-z0-9_]*)(?:\[[^\]()]*\])?\(")
+MODIFIER = re.compile(r"^(?:@\w+(?:\([^)]*\))?\s+|(?:implicit|val|var|override|final)\s+)*")
+
+
+def param_lists(text, i):
+    """[[(name, default text or None)]] of the declaration whose name
+    ends at text[i]."""
+    lists = []
+    if text[i:i + 1] == "[":
+        i = closing(text, i)
+    while text[i:i + 1] == "(":
+        end = closing(text, i)
+        ps = []
+        for p in split_top(text[i + 1:end - 1]):
+            p = MODIFIER.sub("", p)
+            eq = assign_at(p)
+            ps.append((IDENT.match(p).group(0), squash(p[eq + 1:]) if eq >= 0 else None))
+        lists.append(ps)
+        i = end
+        while text[i:i + 1].isspace():
+            i += 1
+    return lists
+
+
+def call_args(text):
+    """(callee name, [[argument text]]) for each call in text; a call
+    with several argument lists, `f(a)(b)`, has one entry per list."""
+    for m in CALL.finditer(text):
+        if re.search(r"\b(?:def|class)\s+$", text[max(0, m.start() - 16):m.start()]):
+            continue
+        lists, j = [], m.end() - 1
+        while text[j:j + 1] == "(":
+            end = closing(text, j)
+            lists.append(split_top(text[j + 1:end - 1]))
+            j = end
+        yield m.group(1), lists
+
+
+def is_literal(text):
+    """True when a default's text names nothing: string, number, char
+    and true/false/null literals only. An argument that repeats a
+    non-literal default (`Bands`, `xxhash64(_)`) from another file may
+    name something else there."""
+    rest = re.sub(r'"(?:[^"\\]|\\.)*"|\'(?:[^\'\\]|\\.)\'|\b\d[\w.]*', "", text)
+    return not (set(IDENT.findall(rest)) - {"true", "false", "null"})
+
+
+def scan_params(root):
+    """{(label, path:line): (default, status)} for each default parameter
+    of a public member in the scanned directories; status is "set",
+    "column", "kept" or "unset"."""
+    main = os.path.join(root, "src", "main", "scala", "graft")
+    decls = {}   # member name -> [(label, path:line, path, param lists)]
+    for d, _, files in os.walk(main):
+        if os.path.relpath(d, main).split(os.sep)[0] not in SCANNED:
+            continue
+        for f in sorted(files):
+            if not f.endswith(".scala"):
+                continue
+            path = os.path.join(d, f)
+            lines = code_lines(path)
+            for owner, name, private, rng in members(lines)[0]:
+                text = "\n".join(lines[k] for k in rng)
+                m = DECL.search(text)
+                if private or not m or m.group(1) != name:
+                    continue
+                label = name if owner == name else "%s.%s" % (owner, name)
+                where = "%s:%d" % (os.path.relpath(path, root), rng.start + 1)
+                decls.setdefault(name, []).append(
+                    (label, where, path, param_lists(text, m.end())))
+    set_params = set()   # (path:line, param name)
+    for top in (os.path.join(root, "src"), os.path.join(root, "perfbench", "src")):
+        for d, _, files in os.walk(top):
+            for f in files:
+                if not f.endswith(".scala"):
+                    continue
+                path = os.path.join(d, f)
+                with open(path, encoding="utf-8") as fh:
+                    text = strip_comments(fh.read())
+                for name, args in call_args(text):
+                    for _, where, decl_path, lists in decls.get(name, ()):
+                        for ps, given in zip(lists, args):
+                            defaults = dict(ps)
+                            for pos, arg in enumerate(given):
+                                eq = assign_at(arg)
+                                named = eq >= 0 and IDENT.fullmatch(arg[:eq].strip())
+                                p = arg[:eq].strip() if named else (ps[pos][0] if pos < len(ps) else None)
+                                value = squash(arg[eq + 1:] if named else arg)
+                                default = defaults.get(p)
+                                if default is not None and (
+                                        default != value or
+                                        (path != decl_path and not is_literal(default))):
+                                    set_params.add((where, p))
+    out = {}
+    for name, overloads in decls.items():
+        for label, where, _, lists in overloads:
+            for ps in lists:
+                for p, default in ps:
+                    if default is None:
+                        continue
+                    key = "%s.%s" % (label, p)
+                    if (where, p) in set_params:
+                        status = "set"
+                    elif p.endswith("Col") or p.endswith("Cols"):
+                        status = "column"
+                    else:
+                        status = "kept" if key in PARAM_ALLOWLIST else "unset"
+                    out[(key, where)] = (default, status)
+    return out
+
+
+def report_params(root):
+    """Print the parameter pass; the number of failures."""
+    params = scan_params(root)
+    count = {s: 0 for s in ("set", "column", "kept", "unset")}
+    for (key, where), (default, status) in sorted(params.items(), key=lambda kv: (kv[1][1], kv[0])):
+        count[status] += 1
+        if status == "kept":
+            print("kept     %-46s %s" % (key, PARAM_ALLOWLIST[key]))
+        elif status == "unset":
+            print("unset    %-46s = %-14s %s" % (key, default, where))
+    stale = sorted(k for k in PARAM_ALLOWLIST
+                   if not any(key == k and s == "kept" for (key, _), (_, s) in params.items()))
+    for key in stale:
+        print("stale    %-46s set now or gone; drop it from PARAM_ALLOWLIST" % key)
+    print("%d default parameters: %d never set (%d column bindings, %d kept on purpose, "
+          "%d to inline), %d stale allowlist entries"
+          % (len(params), len(params) - count["set"], count["column"], count["kept"],
+             count["unset"], len(stale)))
+    return count["unset"] + len(stale)
+
+
 def main():
     root = sys.argv[1] if len(sys.argv) > 1 else os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     uncalled, live = scan(root)
@@ -212,7 +432,8 @@ def main():
         print("stale    %-46s called now; drop it from ALLOWLIST" % name)
     print("%d uncalled, %d kept on purpose, %d stale allowlist entries"
           % (bad, len(uncalled) - bad, len(stale)))
-    sys.exit(1 if bad or stale else 0)
+    unset = report_params(root)
+    sys.exit(1 if bad or stale or unset else 0)
 
 
 if __name__ == "__main__":
