@@ -42,11 +42,17 @@ object PortableHash {
   def uniform01(key: Column, salt: Column): Column =
     md5Long(key, salt).cast("double") / lit(1152921504606846976.0) // 2^60
 
-  /** DuckDB SQL fragment equivalents (kept adjacent to the Scala so the
-    * two definitions can't drift): for a string expression `e`,
-    *   md5Long:   CAST('0x' || substr(md5(e), 1, 15) AS BIGINT)
-    *   md5Long48: CAST('0x' || substr(md5(e), 1, 12) AS BIGINT)
-    *   uniform01: md5Long(e) / 1152921504606846976.0
+  /** [[md5Long]] in DuckDB SQL, for a string expression `e`. */
+  def md5LongSql(e: String): String =
+    s"CAST('0x' || substr(md5($e), 1, 15) AS BIGINT)"
+
+  /** [[md5Long48]] in DuckDB SQL. */
+  def md5Long48Sql(e: String): String =
+    s"CAST('0x' || substr(md5($e), 1, 12) AS BIGINT)"
+
+  /** [[uniform01]] in DuckDB SQL, for `e` = the `key || '#' || salt`
+    * string [[md5Long]]`(key, salt)` hashes.
     */
-  val duckDbDoc: Unit = ()
+  def uniform01Sql(e: String): String =
+    s"${md5LongSql(e)} / 1152921504606846976.0"
 }

@@ -44,7 +44,6 @@ object BasketOps {
       .filter(col("item_a") =!= col("item_b"))
       .groupBy("item_a", "item_b")
       .agg(count(lit(1)).as("n_ab"))
-      .filter(col("n_ab") >= 1L) // support floor: one co-occurrence
 
     val d = (c: Column) => c.cast("double")
     pairs

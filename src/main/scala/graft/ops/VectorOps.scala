@@ -596,39 +596,9 @@ object VectorOps {
     */
   def powerComponent(
       df: DataFrame, vecCol: String, dim: Int, iters: Int = 3): DataFrame = {
-    require(dim > 0, s"powerComponent: dim must be positive, got $dim")
-    require(iters >= 1, s"powerComponent: need iters >= 1, got $iters")
     val spark = df.sparkSession
     import spark.implicits._
-    // fanOutSmall + stageNarrow (r15): the cleaned vector frame feeds
-    // EVERY eager pass of the iteration — the base-stats count +
-    // collect and one [[powerPass]] collect per iteration. Probe
-    // (sf0.1): unfanned, each pass's n·dim cell aggregation
-    // ran on the source's ONE scan split (single task of ~128k exact
-    // DECIMAL adds, ~1.2 s/pass warm); fanned to session parallelism
-    // it reads 0.7–0.9 s/pass. The checkpoint then feeds all passes
-    // from memory instead of re-running scan + size/null filter per
-    // pass. Values unchanged (order-free decimal sums, lineage only);
-    // both levers are structural no-ops at scale.
-    val v = graft.core.PlanOps.stageNarrow(
-      graft.core.PlanOps.fanOutSmall(
-        df.select(col(vecCol).as("v"))
-          .filter(col("v").isNotNull && size(col("v")) === dim &&
-            !exists(col("v"), _.isNull))))
-    val (n, mu, totVar) = powerBaseStats(v, dim)
-    def round6(d: Double): Double =
-      BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    var w = Array.fill(dim)(round6(1.0 / math.sqrt(dim.toDouble)))
-    var lambda = 0.0
-    var r = 0
-    while (r < iters && (r == 0 || lambda > 0)) {
-      val u = powerPass(v, dim, mu, w, n)
-      lambda = math.sqrt(u.map(c => c * c).reduceLeft(_ + _))
-      if (lambda > 0) w = u.map(c => round6(c / lambda))
-      r += 1
-    }
-    val lam = lambda
-    val tv = totVar
+    val (Seq((w, lam)), tv) = powerIterate(df, vecCol, dim, iters, k = 1)
     (0 until dim).map(j => (j, w(j), lam, lam / tv))
       .toDF("i", "loading", "eigenvalue", "var_share")
   }
@@ -660,17 +630,35 @@ object VectorOps {
   def powerComponents(
       df: DataFrame, vecCol: String, dim: Int,
       iters: Int = 3): DataFrame = {
-    val k = 2
-    require(dim >= k, s"powerComponents: need dim >= $k, got $dim")
-    require(iters >= 1, s"powerComponents: need iters >= 1, got $iters")
     val spark = df.sparkSession
     import spark.implicits._
-    // fanOutSmall + stageNarrow (r15): k·iters [[powerPass]] collects
-    // plus the base-stats count + collect all re-read this frame and
-    // ran its cell aggregation on one scan split — see
-    // [[powerComponent]] for the probe numbers; at k=2, iters=3 that
-    // is 8 single-task re-reads collapsed to one fanned
-    // materialization.
+    val (comps, tv) = powerIterate(df, vecCol, dim, iters, k = 2)
+    comps.zipWithIndex.flatMap { case ((wc, lam), ci) =>
+      (0 until dim).map(j => (ci + 1, j, wc(j), lam, lam / tv))
+    }.toDF("component", "i", "loading", "eigenvalue", "var_share")
+  }
+
+  /** The power-iteration loop of [[powerComponent]] (k = 1) and
+    * [[powerComponents]]: per component a uniform restart, `iters`
+    * deflated [[powerPass]]es with a round-6 resync after each
+    * normalize. Returns each component's (direction, λ) and the total
+    * variance.
+    */
+  private def powerIterate(
+      df: DataFrame, vecCol: String, dim: Int, iters: Int,
+      k: Int): (Seq[(Array[Double], Double)], Double) = {
+    require(dim >= k, s"power iteration: need dim >= $k, got $dim")
+    require(iters >= 1, s"power iteration: need iters >= 1, got $iters")
+    // fanOutSmall + stageNarrow (r15): the cleaned vector frame feeds
+    // EVERY eager pass of the iteration — the base-stats count +
+    // collect and k·iters [[powerPass]] collects. Probe (sf0.1):
+    // unfanned, each pass's n·dim cell aggregation ran on the source's
+    // ONE scan split (single task of ~128k exact DECIMAL adds,
+    // ~1.2 s/pass warm); fanned to session parallelism it reads
+    // 0.7–0.9 s/pass. The checkpoint then feeds all passes from memory
+    // instead of re-running scan + size/null filter per pass. Values
+    // unchanged (order-free decimal sums, lineage only); both levers
+    // are structural no-ops at scale.
     val v = graft.core.PlanOps.stageNarrow(
       graft.core.PlanOps.fanOutSmall(
         df.select(col(vecCol).as("v"))
@@ -680,8 +668,7 @@ object VectorOps {
     def round6(d: Double): Double =
       BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val comps = scala.collection.mutable.ArrayBuffer.empty[(Array[Double], Double)]
-    var c = 0
-    while (c < k) {
+    while (comps.size < k) {
       var w = Array.fill(dim)(round6(1.0 / math.sqrt(dim.toDouble)))
       var lambda = 0.0
       var r = 0
@@ -697,12 +684,8 @@ object VectorOps {
         r += 1
       }
       comps += ((w, lambda))
-      c += 1
     }
-    val tv = totVar
-    comps.toSeq.zipWithIndex.flatMap { case ((wc, lam), ci) =>
-      (0 until dim).map(j => (ci + 1, j, wc(j), lam, lam / tv))
-    }.toDF("component", "i", "loading", "eigenvalue", "var_share")
+    (comps.toSeq, totVar)
   }
 
   /** (n, μ, totVar) for the power-iteration family via ONE NARROW

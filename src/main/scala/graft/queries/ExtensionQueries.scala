@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{PortableHash, Scratch, Tables}
+import graft.core.PortableHash.{md5Long48Sql, md5LongSql, uniform01Sql}
 import graft.ops._
 
 /** LLM-data-pipeline extension queries (q21+): dedup (MinHash-LSH,
@@ -18,9 +19,6 @@ import graft.ops._
   */
 object ExtensionQueries {
 
-  /** DuckDB fragment: md5-int of a string expr (= PortableHash.md5Long). */
-  private def dk(e: String): String = s"CAST('0x' || substr(md5($e), 1, 15) AS BIGINT)"
-
   // --------------------------------------------------------------- q21
   /** MinHash(16) + LSH(4 bands × 4 rows) candidates, exact-Jaccard
     * verified at 0.6 — the scale path for near-dedup, oracle-checked via
@@ -31,24 +29,61 @@ object ExtensionQueries {
       Tables.documents(spark, dir), "text", "doc_id", threshold = 0.6,
       bands = 4, rowsPerBand = 4)
 
-  /** q21's CTE chain through the verified pair list `vpairs` — shared
-    * with q69's transitive closure (which needs the WITH to be
-    * RECURSIVE, hence no WITH keyword here).
+  /** The token sets `t` (doc_id, distinct whitespace tokens `toks`,
+    * their count `n`) of the documents in `from`.
     */
-  private val minhashPairCtes: String =
+  private def tokenSetSql(from: String): String =
     s"""t AS (
       | SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks,
       |        len(list_distinct(string_split(text, ' '))) AS n
-      | FROM documents),
-      |sig AS (
+      | FROM $from)""".stripMargin
+
+  /** The MinHash(16) signatures `sig` of `t` and their 4 × 4 LSH band
+    * hashes `band`.
+    */
+  private val minhashBandSql: String =
+    s"""sig AS (
       | SELECT doc_id, toks, n,
       |  list_transform(generate_series(0, 15), i ->
-      |    list_min(list_transform(toks, tk -> ${dk("tk || '#' || i")}))) AS sg
+      |    list_min(list_transform(toks, tk -> ${md5LongSql("tk || '#' || i")}))) AS sg
       | FROM t),
       |band AS (
       | SELECT doc_id, u.i AS band,
       |   md5(array_to_string(sg[4*u.i+1 : 4*u.i+4], ',')) AS bh
-      | FROM sig, (SELECT unnest(generate_series(0, 3)) AS i) u),
+      | FROM sig, (SELECT unnest(generate_series(0, 3)) AS i) u)""".stripMargin
+
+  /** Each band bucket's min-id representative `rep`. */
+  private val minhashRepSql: String =
+    """rep AS (
+      | SELECT band, bh, min(doc_id) AS rep FROM band GROUP BY band, bh)""".stripMargin
+
+  /** The keep/drop decision over `t` and `band`: the `edge`s from each
+    * doc to its buckets' reps, the docs `dropped` because their Jaccard
+    * with a rep reaches `threshold`, and the kept doc ids.
+    */
+  private def minhashKeepersSql(threshold: Double): String =
+    s"""$minhashRepSql,
+      |edge AS (
+      | SELECT DISTINCT b.doc_id AS id, r.rep
+      | FROM band b JOIN rep r ON b.band = r.band AND b.bh = r.bh
+      | WHERE b.doc_id > r.rep),
+      |dropped AS (
+      | SELECT DISTINCT e.id
+      | FROM edge e
+      |  JOIN t ta ON ta.doc_id = e.id
+      |  JOIN t tb ON tb.doc_id = e.rep
+      | WHERE CAST(len(list_intersect(ta.toks, tb.toks)) AS DOUBLE)
+      |   / (ta.n + tb.n - len(list_intersect(ta.toks, tb.toks))) >= $threshold)
+      |SELECT doc_id FROM documents
+      |WHERE doc_id NOT IN (SELECT id FROM dropped)""".stripMargin
+
+  /** q21's CTE chain through the verified pair list `vpairs` at
+    * Jaccard >= `threshold` — shared with q69's transitive closure
+    * (which needs the WITH to be RECURSIVE, hence no WITH keyword here).
+    */
+  private def minhashPairCtes(threshold: Double): String =
+    s"""${tokenSetSql("documents")},
+      |$minhashBandSql,
       |cand AS (
       | SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       | FROM band a JOIN band b ON a.band = b.band AND a.bh = b.bh
@@ -61,10 +96,10 @@ object ExtensionQueries {
       |  JOIN t ta ON ta.doc_id = id_a
       |  JOIN t tb ON tb.doc_id = id_b
       | WHERE CAST(len(list_intersect(ta.toks, tb.toks)) AS DOUBLE)
-      |   / (ta.n + tb.n - len(list_intersect(ta.toks, tb.toks))) >= 0.6)""".stripMargin
+      |   / (ta.n + tb.n - len(list_intersect(ta.toks, tb.toks))) >= $threshold)""".stripMargin
 
   val q21Sql: String =
-    s"""WITH $minhashPairCtes
+    s"""WITH ${minhashPairCtes(0.6)}
       |SELECT id_a, id_b, jaccard FROM vpairs""".stripMargin
 
   // --------------------------------------------------------------- q22
@@ -120,6 +155,26 @@ object ExtensionQueries {
       |FROM e a JOIN e b ON a.vec_id < b.vec_id
       |WHERE list_sum(list_transform(generate_series(1, len(a.u)), i -> a.u[i] * b.u[i])) >= 0.45""".stripMargin
 
+  /** `e`: each embedding with its L2 norm `nrm`, plus the columns
+    * `cols` (each followed by ", ").
+    */
+  private def bruteCosineBaseSql(cols: String): String =
+    s"""e AS (SELECT vec_id, ${cols}embedding,
+      |  sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
+      | FROM embeddings)""".stripMargin
+
+  /** `c`: the exact cosine of each query vector (vec_id < `queries`)
+    * against every other vector of `e`; the join condition is left
+    * open for the caller to extend and close.
+    */
+  private def bruteCosineSql(queries: Int): String =
+    s"""c AS (
+      | SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
+      |  list_sum(list_transform(generate_series(1, len(a.embedding)),
+      |    i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
+      |   / (a.nrm * b.nrm) AS cosine
+      | FROM e a JOIN e b ON a.vec_id < $queries AND b.vec_id <> a.vec_id""".stripMargin
+
   // --------------------------------------------------------------- q24
   /** Brute-force cosine top-5 neighbors for query vectors vec_id < 20. */
   def q24(spark: SparkSession, dir: String): DataFrame = {
@@ -129,15 +184,8 @@ object ExtensionQueries {
   }
 
   val q24Sql: String =
-    """WITH e AS (SELECT vec_id, embedding,
-      |  sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-      | FROM embeddings),
-      |c AS (
-      | SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-      |  list_sum(list_transform(generate_series(1, len(a.embedding)),
-      |    i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-      |   / (a.nrm * b.nrm) AS cosine
-      | FROM e a JOIN e b ON a.vec_id < 20 AND b.vec_id <> a.vec_id),
+    s"""WITH ${bruteCosineBaseSql("")},
+      |${bruteCosineSql(20)}),
       |r AS (
       | SELECT query_id, neighbor_id, cosine,
       |  CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS INT) AS rnk
@@ -189,15 +237,18 @@ object ExtensionQueries {
       TextAnalysis.qualityScore(col("text")).as("quality"))
   }
 
-  val q26Sql: String = {
-    val enWords = TextAnalysis.stopwords.toMap.apply("en").map(w => s"'$w'").mkString("[", ", ", "]")
+  /** TextAnalysis' English stopwords as a DuckDB list literal. */
+  private val enStopwordsSql: String = TextAnalysis.stopwords.toMap.apply("en")
+    .map(w => s"'$w'").mkString("[", ", ", "]")
+
+  val q26Sql: String =
     s"""WITH t AS (
       | SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents),
       |s AS (
       | SELECT doc_id,
       |  CAST(len(toks) AS INT) AS n_tokens,
       |  CAST(list_sum(list_transform(toks, tk -> len(tk))) AS DOUBLE) / len(toks) AS mean_token_len,
-      |  CAST(len(list_filter(toks, tk -> list_contains($enWords, tk))) AS DOUBLE) / len(toks) AS stopword_ratio,
+      |  CAST(len(list_filter(toks, tk -> list_contains($enStopwordsSql, tk))) AS DOUBLE) / len(toks) AS stopword_ratio,
       |  CAST(len(text) - len(regexp_replace(text, '[^A-Za-z0-9 ]', '', 'g')) AS DOUBLE) / len(text) AS punct_ratio,
       |  CAST(len(text) - len(regexp_replace(text, '[A-Z]', '', 'g')) AS DOUBLE) / len(text) AS upper_ratio
       | FROM t)
@@ -206,7 +257,6 @@ object ExtensionQueries {
       |  + greatest(0.0, 1.0 - punct_ratio * 4.0) * 0.4
       |  + least(stopword_ratio * 5.0, 1.0) * 0.2 AS quality
       |FROM s""".stripMargin
-  }
 
   // --------------------------------------------------------------- q27
   /** Token counting: whitespace tokens and BPE-ish regex tokens. */
@@ -245,7 +295,7 @@ object ExtensionQueries {
       |   list_distinct(list_transform(
       |     generate_series(1, len(string_split(text, ' ')) - 2),
       |     i -> array_to_string(string_split(text, ' ')[i : i+2], ' '))),
-      |   g -> ${dk("g")})) AS shingle_fp
+      |   g -> ${md5LongSql("g")})) AS shingle_fp
       |FROM documents""".stripMargin
 
   // --------------------------------------------------------------- q29
@@ -259,10 +309,10 @@ object ExtensionQueries {
         .as("simhash"))
 
   val q29Sql: String =
-    """SELECT doc_id,
+    s"""SELECT doc_id,
       | CAST(list_sum(list_transform(generate_series(0, 47), b ->
       |   CASE WHEN list_sum(list_transform(string_split(text, ' '), tk ->
-      |     CASE WHEN (CAST('0x' || substr(md5(tk), 1, 12) AS BIGINT) >> b) & 1 = 1
+      |     CASE WHEN (${md5Long48Sql("tk")} >> b) & 1 = 1
       |       THEN 1 ELSE -1 END)) > 0
       |   THEN (CAST(1 AS BIGINT) << b) ELSE 0 END)) AS BIGINT) AS simhash
       |FROM documents""".stripMargin
@@ -404,34 +454,9 @@ object ExtensionQueries {
       .select(col("doc_id"))
 
   val q42Sql: String =
-    s"""WITH t AS (
-      | SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks,
-      |        len(list_distinct(string_split(text, ' '))) AS n
-      | FROM documents),
-      |sig AS (
-      | SELECT doc_id, toks, n,
-      |  list_transform(generate_series(0, 15), i ->
-      |    list_min(list_transform(toks, tk -> ${dk("tk || '#' || i")}))) AS sg
-      | FROM t),
-      |band AS (
-      | SELECT doc_id, u.i AS band,
-      |   md5(array_to_string(sg[4*u.i+1 : 4*u.i+4], ',')) AS bh
-      | FROM sig, (SELECT unnest(generate_series(0, 3)) AS i) u),
-      |rep AS (
-      | SELECT band, bh, min(doc_id) AS rep FROM band GROUP BY band, bh),
-      |edge AS (
-      | SELECT DISTINCT b.doc_id AS id, r.rep
-      | FROM band b JOIN rep r ON b.band = r.band AND b.bh = r.bh
-      | WHERE b.doc_id > r.rep),
-      |dropped AS (
-      | SELECT DISTINCT e.id
-      | FROM edge e
-      |  JOIN t ta ON ta.doc_id = e.id
-      |  JOIN t tb ON tb.doc_id = e.rep
-      | WHERE CAST(len(list_intersect(ta.toks, tb.toks)) AS DOUBLE)
-      |   / (ta.n + tb.n - len(list_intersect(ta.toks, tb.toks))) >= 0.6)
-      |SELECT doc_id FROM documents
-      |WHERE doc_id NOT IN (SELECT id FROM dropped)""".stripMargin
+    s"""WITH ${tokenSetSql("documents")},
+      |$minhashBandSql,
+      |${minhashKeepersSql(0.6)}""".stripMargin
 
   // --------------------------------------------------------------- q43
   /** The SimHash dedup DECISION path, oracle-checked row-level
@@ -446,12 +471,16 @@ object ExtensionQueries {
       Tables.documents(spark, dir), "text", "doc_id", maxHamming = 3)
       .select(col("doc_id"))
 
-  val q43Sql: String =
-    """WITH s AS (
+  /** The 48-bit SimHash `sig` of each document (`s`), its four 12-bit
+    * chunk buckets `band`, and each bucket's min-id `rep` with its
+    * signature — shared by q43 and q76.
+    */
+  private val simhashRepSql: String =
+    s"""s AS (
       | SELECT doc_id,
       |  CAST(list_sum(list_transform(generate_series(0, 47), b ->
       |    CASE WHEN list_sum(list_transform(string_split(text, ' '), tk ->
-      |      CASE WHEN (CAST('0x' || substr(md5(tk), 1, 12) AS BIGINT) >> b) & 1 = 1
+      |      CASE WHEN (${md5Long48Sql("tk")} >> b) & 1 = 1
       |        THEN 1 ELSE -1 END)) > 0
       |    THEN (CAST(1 AS BIGINT) << b) ELSE 0 END)) AS BIGINT) AS sig
       | FROM documents),
@@ -460,7 +489,10 @@ object ExtensionQueries {
       | FROM s, (SELECT unnest(generate_series(0, 3)) AS c) u),
       |rep AS (
       | SELECT chunk, cv, min(doc_id) AS rep, arg_min(sig, doc_id) AS rep_sig
-      | FROM band GROUP BY chunk, cv),
+      | FROM band GROUP BY chunk, cv)""".stripMargin
+
+  val q43Sql: String =
+    s"""WITH $simhashRepSql,
       |dropped AS (
       | SELECT DISTINCT b.doc_id AS id
       | FROM band b JOIN rep r ON b.chunk = r.chunk AND b.cv = r.cv
@@ -489,7 +521,7 @@ object ExtensionQueries {
   val q44Sql: String =
     s"""WITH doc AS (
       | SELECT doc_id, text,
-      |   ${dk("CAST(doc_id AS VARCHAR)")} % 5 AS part
+      |   ${md5LongSql("CAST(doc_id AS VARCHAR)")} % 5 AS part
       | FROM documents),
       |t AS (
       | SELECT doc_id, part, list_distinct(string_split(text, ' ')) AS toks,
@@ -498,7 +530,7 @@ object ExtensionQueries {
       |sig AS (
       | SELECT doc_id, part, toks, n,
       |  list_transform(generate_series(0, 15), i ->
-      |    list_min(list_transform(toks, tk -> ${dk("tk || '#' || i")}))) AS sg
+      |    list_min(list_transform(toks, tk -> ${md5LongSql("tk || '#' || i")}))) AS sg
       | FROM t),
       |band AS (
       | SELECT doc_id, part, u.i AS band,
@@ -637,30 +669,8 @@ object ExtensionQueries {
       |    generate_series(1, len(string_split(text, ' ')) - 2),
       |    i -> array_to_string(string_split(text, ' ')[i : i+2], ' ')))) AS n
       | FROM documents),
-      |sig AS (
-      | SELECT doc_id, toks, n,
-      |  list_transform(generate_series(0, 15), i ->
-      |    list_min(list_transform(toks, tk -> ${dk("tk || '#' || i")}))) AS sg
-      | FROM t),
-      |band AS (
-      | SELECT doc_id, u.i AS band,
-      |   md5(array_to_string(sg[4*u.i+1 : 4*u.i+4], ',')) AS bh
-      | FROM sig, (SELECT unnest(generate_series(0, 3)) AS i) u),
-      |rep AS (
-      | SELECT band, bh, min(doc_id) AS rep FROM band GROUP BY band, bh),
-      |edge AS (
-      | SELECT DISTINCT b.doc_id AS id, r.rep
-      | FROM band b JOIN rep r ON b.band = r.band AND b.bh = r.bh
-      | WHERE b.doc_id > r.rep),
-      |dropped AS (
-      | SELECT DISTINCT e.id
-      | FROM edge e
-      |  JOIN t ta ON ta.doc_id = e.id
-      |  JOIN t tb ON tb.doc_id = e.rep
-      | WHERE CAST(len(list_intersect(ta.toks, tb.toks)) AS DOUBLE)
-      |   / (ta.n + tb.n - len(list_intersect(ta.toks, tb.toks))) >= 0.05)
-      |SELECT doc_id FROM documents
-      |WHERE doc_id NOT IN (SELECT id FROM dropped)""".stripMargin
+      |$minhashBandSql,
+      |${minhashKeepersSql(0.05)}""".stripMargin
 
   // --------------------------------------------------------------- q52
   /** Gopher-style intra-document repetition signals
@@ -713,15 +723,23 @@ object ExtensionQueries {
       .select("doc_id")
   }
 
-  val q53Sql: String =
-    """WITH toks AS (
+  /** `name`: each document's non-empty whitespace tokens `tk`. */
+  private def wordListSql(name: String): String =
+    s"""$name AS (
       | SELECT doc_id, list_filter(string_split(text, ' '), tk -> tk <> '') AS tk
-      | FROM documents),
+      | FROM documents)""".stripMargin
+
+  /** The word lists `toks` and their word 3-grams `gs` (`grams`). */
+  private val trigramsSql: String =
+    s"""${wordListSql("toks")},
       |grams AS (
       | SELECT doc_id, CASE WHEN len(tk) < 3 THEN []
       |   ELSE list_transform(generate_series(1, len(tk) - 2),
       |     i -> array_to_string(tk[i : i+2], ' ')) END AS gs
-      | FROM toks),
+      | FROM toks)""".stripMargin
+
+  val q53Sql: String =
+    s"""WITH $trigramsSql,
       |ev AS (SELECT DISTINCT unnest(gs) AS g FROM grams WHERE doc_id % 20 = 0),
       |bad AS (
       | SELECT DISTINCT tr.doc_id
@@ -744,22 +762,26 @@ object ExtensionQueries {
         spanKey = PortableHash.md5Long)
       .select("doc_id", "text")
 
-  val q54Sql: String =
-    s"""WITH toks AS (
-      | SELECT doc_id, list_filter(string_split(text, ' '), tk -> tk <> '') AS tk
-      | FROM documents),
+  /** The word lists `toks` cut into consecutive 4-token spans `sp`
+    * (`spans`).
+    */
+  private val spansSql: String =
+    s"""${wordListSql("toks")},
       |spans AS (
       | SELECT doc_id, CASE WHEN len(tk) = 0 THEN []
       |  ELSE list_transform(generate_series(0, CAST(ceil(len(tk) / 4.0) AS BIGINT) - 1),
       |    i -> array_to_string(tk[i*4+1 : i*4+4], ' ')) END AS sp
-      | FROM toks),
+      | FROM toks)""".stripMargin
+
+  val q54Sql: String =
+    s"""WITH $spansSql,
       |freq AS (
-      | SELECT k FROM (SELECT ${dk("g")} AS k FROM (SELECT unnest(sp) AS g FROM spans))
+      | SELECT k FROM (SELECT ${md5LongSql("g")} AS k FROM (SELECT unnest(sp) AS g FROM spans))
       | GROUP BY k HAVING count(*) >= 2),
       |bad AS (SELECT coalesce(list(k), []) AS b FROM freq)
       |SELECT doc_id,
       | coalesce(array_to_string(
-      |   list_filter(sp, x -> NOT list_contains(b, ${dk("x")})), ' '), '') AS text
+      |   list_filter(sp, x -> NOT list_contains(b, ${md5LongSql("x")})), ' '), '') AS text
       |FROM spans, bad""".stripMargin
 
   // --------------------------------------------------------------- q55
@@ -849,8 +871,8 @@ object ExtensionQueries {
       .select("doc_id")
 
   val q58Sql: String =
-    """SELECT doc_id FROM documents
-      |WHERE CAST('0x' || substr(md5(doc_id || '#' || '42'), 1, 15) AS BIGINT)
+    s"""SELECT doc_id FROM documents
+      |WHERE ${md5LongSql("doc_id || '#' || '42'")}
       |    / 1152921504606846976.0
       |  < least(greatest(n_chars / 400.0, 0.0), 1.0)""".stripMargin
 
@@ -884,7 +906,7 @@ object ExtensionQueries {
   }
 
   val q59Sql: String =
-    """WITH RECURSIVE f AS (
+    s"""WITH RECURSIVE f AS (
       | SELECT doc_id, lang, source, n_chars,
       |   list_filter(string_split(text, ' '), tk -> tk <> '') AS tk
       | FROM documents WHERE n_chars >= 100),
@@ -915,7 +937,7 @@ object ExtensionQueries {
       |bal AS (SELECT d.* FROM dedup d JOIN ranked USING (doc_id) WHERE rn <= 8),
       |samp AS (
       | SELECT * FROM bal
-      | WHERE CAST('0x' || substr(md5(doc_id || '#' || '42'), 1, 15) AS BIGINT)
+      | WHERE ${md5LongSql("doc_id || '#' || '42'")}
       |     / 1152921504606846976.0
       |   < least(greatest(n_chars / 400.0, 0.0), 1.0)),
       |stoks AS (
@@ -946,28 +968,35 @@ object ExtensionQueries {
     SearchOps.bm25TopK(Tables.documents(spark, dir), "text", "doc_id",
       Seq("spark", "table", "fast"), k = 500)
 
-  val q60Sql: String = {
-    def term(i: Int, t: String): String =
+  /** BM25 (k1 = 1.2, b = 0.75) of `terms` in DuckDB: the CTEs `t`
+    * (word lists) and `st` (doc count, mean length, per-term document
+    * frequency), the per-term `tf_i` columns of a `t` row, and the
+    * score sum over those columns, `dl` and `st`.
+    */
+  private def bm25Sql(terms: Seq[String]): (String, String, String) = {
+    def term(i: Int): String =
       s"""ln(1.0 + (n_docs - df_$i + 0.5) / (df_$i + 0.5))
          |   * (tf_$i * (1.2 + 1.0))
          |   / (tf_$i + 1.2 * ((1.0 - 0.75) + 0.75 * dl / avgdl))""".stripMargin
-    val terms = Seq("spark", "table", "fast")
     val dfAggs = terms.zipWithIndex.map { case (t, i) =>
       s"CAST(sum(CASE WHEN list_contains(tk, '$t') THEN 1 ELSE 0 END) AS DOUBLE) AS df_$i"
     }.mkString(",\n  ")
     val tfCols = terms.zipWithIndex.map { case (t, i) =>
       s"CAST(len(list_filter(tk, x -> x = '$t')) AS DOUBLE) AS tf_$i"
     }.mkString(",\n  ")
-    val scoreSum = terms.zipWithIndex
-      .map { case (t, i) => term(i, t) }.mkString("\n + ")
-    s"""WITH t AS (
-      | SELECT doc_id, list_filter(string_split(text, ' '), tk -> tk <> '') AS tk
-      | FROM documents),
-      |st AS (
-      | SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-      |  avg(CAST(len(tk) AS DOUBLE)) AS avgdl,
-      |  $dfAggs
-      | FROM t),
+    val ctes =
+      s"""${wordListSql("t")},
+        |st AS (
+        | SELECT CAST(count(*) AS DOUBLE) AS n_docs,
+        |  avg(CAST(len(tk) AS DOUBLE)) AS avgdl,
+        |  $dfAggs
+        | FROM t)""".stripMargin
+    (ctes, tfCols, terms.indices.map(term).mkString("\n + "))
+  }
+
+  val q60Sql: String = {
+    val (bm25, tfCols, scoreSum) = bm25Sql(Seq("spark", "table", "fast"))
+    s"""WITH $bm25,
       |d AS (
       | SELECT doc_id, CAST(len(tk) AS DOUBLE) AS dl,
       |  $tfCols
@@ -1034,17 +1063,10 @@ object ExtensionQueries {
       .select("doc_id", "text")
 
   val q63Sql: String =
-    s"""WITH toks AS (
-      | SELECT doc_id, list_filter(string_split(text, ' '), tk -> tk <> '') AS tk
-      | FROM documents),
-      |spans AS (
-      | SELECT doc_id, CASE WHEN len(tk) = 0 THEN []
-      |  ELSE list_transform(generate_series(0, CAST(ceil(len(tk) / 4.0) AS BIGINT) - 1),
-      |    i -> array_to_string(tk[i*4+1 : i*4+4], ' ')) END AS sp
-      | FROM toks),
+    s"""WITH $spansSql,
       |occ AS (
       | SELECT doc_id, i - 1 AS pos, sp[i] AS g,
-      |  ${dk("sp[i]")} AS k, doc_id * 1048576 + (i - 1) AS ord
+      |  ${md5LongSql("sp[i]")} AS k, doc_id * 1048576 + (i - 1) AS ord
       | FROM (SELECT doc_id, sp, unnest(generate_series(1, len(sp))) AS i FROM spans)),
       |win AS (SELECT k, min(ord) AS w FROM occ GROUP BY k),
       |rebuilt AS (
@@ -1067,29 +1089,33 @@ object ExtensionQueries {
         tokenKey = PortableHash.md5Long)
       .select("doc_id", "n_bigrams", "nll", "ppl")
 
+  /** The word lists `toks` and the corpus count `c` of each md5 word
+    * key `k` (`uni`).
+    */
+  private val unigramSql: String =
+    s"""${wordListSql("toks")},
+      |uni AS (
+      | SELECT ${md5LongSql("w")} AS k, count(*) AS c
+      | FROM (SELECT unnest(tk) AS w FROM toks) GROUP BY 1)""".stripMargin
+
   /** Shared CTE prefix replaying [[graft.ops.CurationOps.perplexitySelf]]
     * (md5 key family) up to the per-position log-prob frame `lp`.
     */
   private val pplPrefixSql: String =
-    s"""WITH toks AS (
-      | SELECT doc_id, list_filter(string_split(text, ' '), tk -> tk <> '') AS tk
-      | FROM documents),
-      |uni AS (
-      | SELECT ${dk("w")} AS k, count(*) AS c
-      | FROM (SELECT unnest(tk) AS w FROM toks) GROUP BY 1),
+    s"""WITH $unigramSql,
       |v AS (SELECT count(*) AS v FROM uni),
       |bgs AS (
       | SELECT doc_id, tk[i] AS w1, tk[i] || ' ' || tk[i+1] AS bg
       | FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 1)) AS i
       |       FROM toks WHERE len(tk) >= 2)),
-      |bi AS (SELECT ${dk("bg")} AS k, count(*) AS c FROM bgs GROUP BY 1),
+      |bi AS (SELECT ${md5LongSql("bg")} AS k, count(*) AS c FROM bgs GROUP BY 1),
       |lp AS (
       | SELECT g.doc_id,
       |  ln(CAST(coalesce(b.c, 0) + 1 AS DOUBLE) /
       |     CAST(coalesce(u.c, 0) + v.v AS DOUBLE)) AS lp
       | FROM bgs g
-      | LEFT JOIN uni u ON u.k = ${dk("g.w1")}
-      | LEFT JOIN bi b ON b.k = ${dk("g.bg")}, v)""".stripMargin
+      | LEFT JOIN uni u ON u.k = ${md5LongSql("g.w1")}
+      | LEFT JOIN bi b ON b.k = ${md5LongSql("g.bg")}, v)""".stripMargin
 
   val q64Sql: String =
     s"""$pplPrefixSql
@@ -1111,9 +1137,21 @@ object ExtensionQueries {
     (0 until q65Dim).map(j =>
       s"CAST($a[${j + 1}] AS DOUBLE) * CAST($b[${j + 1}] AS DOUBLE)").mkString(" + ")
 
-  /** One Lloyd round in SQL: assignment of every vector in `e` to its
-    * max-cosine centroid in `cFrom` (ties → lowest cluster, replaying
-    * TopCentroids' strict-displacement scan), then per-cluster
+  /** `aName`: every vector of `e` assigned to its max-cosine centroid
+    * in `cFrom` (ties → lowest cluster, replaying TopCentroids'
+    * strict-displacement scan).
+    */
+  private def kmeansAssignSql(cFrom: String, aName: String): String =
+    s"""$aName AS (
+      | SELECT vec_id, embedding, vn, cl FROM (
+      |  SELECT e.vec_id, e.embedding, e.vn, r.cl,
+      |   row_number() OVER (PARTITION BY e.vec_id ORDER BY
+      |    (CASE WHEN sqrt(e.vn) * sqrt(r.cn) = 0 THEN 0
+      |     ELSE (${chainSql("e.embedding", "r.c")}) / (sqrt(e.vn) * sqrt(r.cn))
+      |     END) DESC, r.cl) AS rn
+      |  FROM e CROSS JOIN $cFrom r) WHERE rn = 1)""".stripMargin
+
+  /** One Lloyd round in SQL: the [[kmeansAssignSql]] assignment, then per-cluster
     * per-dimension means rounded to 6 decimals and cast to REAL —
     * [[graft.ops.SimilarityOps.kmeansCentroids]]' update — with empty
     * clusters keeping their previous centroid.
@@ -1122,14 +1160,7 @@ object ExtensionQueries {
     val avgList = (0 until q65Dim).map(j =>
       s"CAST(round(avg(CAST(embedding[${j + 1}] AS DOUBLE)), 6) AS REAL)")
       .mkString(", ")
-    s"""$aName AS (
-      | SELECT vec_id, embedding, vn, cl FROM (
-      |  SELECT e.vec_id, e.embedding, e.vn, r.cl,
-      |   row_number() OVER (PARTITION BY e.vec_id ORDER BY
-      |    (CASE WHEN sqrt(e.vn) * sqrt(r.cn) = 0 THEN 0
-      |     ELSE (${chainSql("e.embedding", "r.c")}) / (sqrt(e.vn) * sqrt(r.cn))
-      |     END) DESC, r.cl) AS rn
-      |  FROM e CROSS JOIN $cFrom r) WHERE rn = 1),
+    s"""${kmeansAssignSql(cFrom, aName)},
       |${cName}_m AS (
       | SELECT cl, [$avgList] AS c FROM $aName GROUP BY cl),
       |$cName AS (
@@ -1144,14 +1175,7 @@ object ExtensionQueries {
   private def kmeansPrefixSql(aOut: String): String = {
     val rounds = (1 to q65Iters).map(t =>
       kmeansRoundSql(s"r${t - 1}", s"a$t", s"r$t")).mkString(",\n")
-    val finalAssign = s"""$aOut AS (
-      | SELECT vec_id, embedding, vn, cl FROM (
-      |  SELECT e.vec_id, e.embedding, e.vn, r.cl,
-      |   row_number() OVER (PARTITION BY e.vec_id ORDER BY
-      |    (CASE WHEN sqrt(e.vn) * sqrt(r.cn) = 0 THEN 0
-      |     ELSE (${chainSql("e.embedding", "r.c")}) / (sqrt(e.vn) * sqrt(r.cn))
-      |     END) DESC, r.cl) AS rn
-      |  FROM e CROSS JOIN r$q65Iters r) WHERE rn = 1)""".stripMargin
+    val finalAssign = kmeansAssignSql(s"r$q65Iters", aOut)
     s"""WITH e AS (
       | SELECT vec_id, embedding, ${chainSql("embedding", "embedding")} AS vn
       | FROM embeddings
@@ -1280,9 +1304,12 @@ object ExtensionQueries {
       Tables.documents(spark, dir).select("doc_id"), "doc_id",
       q21(spark, dir))
 
-  val q69Sql: String =
-    s"""WITH RECURSIVE $minhashPairCtes,
-      |edges AS (
+  /** The transitive closure of the `vpairs` graph: both edge
+    * directions, the recursive `reach`, and each reached doc's min-id
+    * `comp`onent — q69 and q215.
+    */
+  private val componentsSql: String =
+    """edges AS (
       | SELECT id_a AS a, id_b AS b FROM vpairs
       | UNION ALL
       | SELECT id_b AS a, id_a AS b FROM vpairs),
@@ -1290,7 +1317,11 @@ object ExtensionQueries {
       | SELECT a AS id, a AS r FROM edges
       | UNION
       | SELECT e.b AS id, reach.r FROM reach JOIN edges e ON e.a = reach.id),
-      |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id)
+      |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id)""".stripMargin
+
+  val q69Sql: String =
+    s"""WITH RECURSIVE ${minhashPairCtes(0.6)},
+      |$componentsSql
       |SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component
       |FROM documents d LEFT JOIN comp c ON c.id = d.doc_id""".stripMargin
 
@@ -1313,7 +1344,7 @@ object ExtensionQueries {
     s"""WITH tok AS (
       | SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents),
       |tf AS (
-      | SELECT doc_id, CAST(${dk("t")} % $q70Dim AS INT) AS bucket,
+      | SELECT doc_id, CAST(${md5LongSql("t")} % $q70Dim AS INT) AS bucket,
       |  count(*) AS tf
       | FROM tok GROUP BY 1, 2),
       |dfq AS (SELECT bucket, count(*) AS dfn FROM tf GROUP BY 1),
@@ -1339,7 +1370,7 @@ object ExtensionQueries {
 
   val q71Sql: String =
     s"""WITH tok AS (
-      | SELECT doc_id, lang, ${dk("t")} AS tk
+      | SELECT doc_id, lang, ${md5LongSql("t")} AS tk
       | FROM (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS t
       |       FROM documents)),
       |tf AS (SELECT doc_id, tk, count(*) AS tf FROM tok GROUP BY 1, 2),
@@ -1384,7 +1415,7 @@ object ExtensionQueries {
   val q72Sql: String =
     s"""WITH g AS (
       | SELECT doc_id, lang,
-      |  CAST(${dk("gr")} % $q72Buckets AS INT) AS bucket
+      |  CAST(${md5LongSql("gr")} % $q72Buckets AS INT) AS bucket
       | FROM (SELECT doc_id, lang, unnest(list_concat(
       |    string_split(text, ' '),
       |    list_transform(
@@ -1423,7 +1454,7 @@ object ExtensionQueries {
   val q73Sql: String =
     s"""SELECT doc_id, lang FROM documents
       |QUALIFY row_number() OVER (
-      | ORDER BY ${dk("CAST(doc_id AS VARCHAR) || '#' || '7'")}, doc_id)
+      | ORDER BY ${md5LongSql("CAST(doc_id AS VARCHAR) || '#' || '7'")}, doc_id)
       | <= $q73K""".stripMargin
 
   // --------------------------------------------------------------- q74
@@ -1490,20 +1521,7 @@ object ExtensionQueries {
       .select(col("doc_id"))
 
   val q76Sql: String =
-    s"""WITH s AS (
-      | SELECT doc_id,
-      |  CAST(list_sum(list_transform(generate_series(0, 47), b ->
-      |    CASE WHEN list_sum(list_transform(string_split(text, ' '), tk ->
-      |      CASE WHEN (CAST('0x' || substr(md5(tk), 1, 12) AS BIGINT) >> b) & 1 = 1
-      |        THEN 1 ELSE -1 END)) > 0
-      |    THEN (CAST(1 AS BIGINT) << b) ELSE 0 END)) AS BIGINT) AS sig
-      | FROM documents),
-      |band AS (
-      | SELECT doc_id, sig, u.c AS chunk, (sig >> (12 * u.c)) & 4095 AS cv
-      | FROM s, (SELECT unnest(generate_series(0, 3)) AS c) u),
-      |rep AS (
-      | SELECT chunk, cv, min(doc_id) AS rep, arg_min(sig, doc_id) AS rep_sig
-      | FROM band GROUP BY chunk, cv),
+    s"""WITH $simhashRepSql,
       |cand AS (
       | SELECT DISTINCT b.doc_id AS id, r.rep
       | FROM band b JOIN rep r ON b.chunk = r.chunk AND b.cv = r.cv
@@ -1552,34 +1570,15 @@ object ExtensionQueries {
   }
 
   val q77Sql: String = {
-    def term(i: Int): String =
-      s"""ln(1.0 + (n_docs - df_$i + 0.5) / (df_$i + 0.5))
-         |   * (tf_$i * (1.2 + 1.0))
-         |   / (tf_$i + 1.2 * ((1.0 - 0.75) + 0.75 * dl / avgdl))""".stripMargin
-    val dfAggs = q77Terms.zipWithIndex.map { case (t, i) =>
-      s"CAST(sum(CASE WHEN list_contains(tk, '$t') THEN 1 ELSE 0 END) AS DOUBLE) AS df_$i"
-    }.mkString(",\n  ")
-    val tfCols = q77Terms.zipWithIndex.map { case (t, i) =>
-      s"CAST(len(list_filter(tk, x -> x = '$t')) AS DOUBLE) AS tf_$i"
-    }.mkString(",\n  ")
-    val scoreSum = q77Terms.indices.map(term).mkString("\n + ")
-    s"""WITH t AS (
-      | SELECT doc_id, list_filter(string_split(text, ' '), tk -> tk <> '') AS tk
-      | FROM documents),
-      |st AS (
-      | SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-      |  avg(CAST(len(tk) AS DOUBLE)) AS avgdl,
-      |  $dfAggs
-      | FROM t),
+    val (bm25, tfCols, scoreSum) = bm25Sql(q77Terms)
+    s"""WITH $bm25,
       |bm AS (
       | SELECT doc_id, $scoreSum AS score
       | FROM (SELECT doc_id, CAST(len(tk) AS DOUBLE) AS dl, $tfCols FROM t) d, st),
       |bmr AS (
       | SELECT doc_id, ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS rank
       | FROM bm QUALIFY rank <= $q77PerList),
-      |e AS (SELECT vec_id, embedding,
-      |  sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-      | FROM embeddings),
+      |${bruteCosineBaseSql("")},
       |cs AS (
       | SELECT b.vec_id AS doc_id,
       |  list_sum(list_transform(generate_series(1, len(a.embedding)),
@@ -1614,7 +1613,7 @@ object ExtensionQueries {
   val q78Sql: String =
     s"""SELECT doc_id, lang FROM documents
       |QUALIFY ROW_NUMBER() OVER (PARTITION BY lang
-      | ORDER BY ${dk("CAST(doc_id AS VARCHAR) || '#' || '11'")}, doc_id)
+      | ORDER BY ${md5LongSql("CAST(doc_id AS VARCHAR) || '#' || '11'")}, doc_id)
       | <= $q78K""".stripMargin
 
   // --------------------------------------------------------------- q79
@@ -1633,15 +1632,8 @@ object ExtensionQueries {
   }
 
   val q79Sql: String =
-    """WITH e AS (SELECT vec_id, label, embedding,
-      |  sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-      | FROM embeddings),
-      |c AS (
-      | SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-      |  list_sum(list_transform(generate_series(1, len(a.embedding)),
-      |    i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-      |   / (a.nrm * b.nrm) AS cosine
-      | FROM e a JOIN e b ON a.vec_id < 20 AND b.vec_id <> a.vec_id
+    s"""WITH ${bruteCosineBaseSql("label, ")},
+      |${bruteCosineSql(20)}
       |  AND b.label <> a.label),
       |r AS (
       | SELECT query_id, neighbor_id, cosine,
@@ -1676,7 +1668,7 @@ object ExtensionQueries {
       |    / CAST(n AS DOUBLE)) AS rate
       | FROM c CROSS JOIN t)
       |SELECT d.doc_id, d.lang FROM documents d JOIN r USING (lang)
-      |WHERE ${dk("d.doc_id || '#' || '13'")}
+      |WHERE ${md5LongSql("d.doc_id || '#' || '13'")}
       |    / 1152921504606846976.0 < r.rate""".stripMargin
 
   // --------------------------------------------------------------- q81
@@ -1699,7 +1691,7 @@ object ExtensionQueries {
 
   val q81Sql: String = {
     def u(salt: String): String =
-      s"${dk(s"doc_id || '#' || '$salt'")} / 1152921504606846976.0"
+      uniform01Sql(s"doc_id || '#' || '$salt'")
     s"""WITH o AS (
       | SELECT doc_id, lang, n_chars FROM documents WHERE ${u("81o")} < 0.95),
       |n AS (
@@ -1784,7 +1776,15 @@ object ExtensionQueries {
     * cell) equi-join instead of the per-user cross product DuckDB (and
     * naive Spark) plan for the raw inequality.
     */
-  def q83(spark: SparkSession, dir: String): DataFrame = {
+  def q83(spark: SparkSession, dir: String): DataFrame =
+    purchaseViewPairs(spark, dir)
+      .select(col("purchase_id"), col("user_id"), col("view_id"),
+        (col("pt") - col("lo")).as("gap_us"))
+
+  /** q83's range join before the projection: each purchase's
+    * `(pt)` row paired with every `[lo, hi)` view window of its user.
+    */
+  private[graft] def purchaseViewPairs(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(spark, dir)
     val points = e.filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id"),
@@ -1794,9 +1794,7 @@ object ExtensionQueries {
         unix_micros(col("ts")).as("lo"),
         (unix_micros(col("ts")) + q83WindowUs).as("hi"))
     JoinOps.rangeJoinBucketed(points, intervals, "user_id",
-        "pt", "lo", "hi", cellWidth = q83WindowUs)
-      .select(col("purchase_id"), col("user_id"), col("view_id"),
-        (col("pt") - col("lo")).as("gap_us"))
+      "pt", "lo", "hi", cellWidth = q83WindowUs)
   }
 
   val q83Sql: String =
@@ -1829,7 +1827,7 @@ object ExtensionQueries {
       | SELECT unnest(list_filter(string_split(text, ' '), tk -> tk <> '')) AS tok
       | FROM documents),
       |sk AS (
-      | SELECT r, ${dk("tok || '#' || '7' || '#' || r")} % 512 AS bucket,
+      | SELECT r, ${md5LongSql("tok || '#' || '7' || '#' || r")} % 512 AS bucket,
       |  CAST(count(*) AS BIGINT) AS cnt
       | FROM toks CROSS JOIN range(0, 4) t(r)
       | GROUP BY 1, 2),
@@ -1837,7 +1835,7 @@ object ExtensionQueries {
       | SELECT tok AS token FROM toks GROUP BY tok
       | ORDER BY count(*) DESC, tok LIMIT 30),
       |pr AS (
-      | SELECT token, r, ${dk("token || '#' || '7' || '#' || r")} % 512 AS bucket
+      | SELECT token, r, ${md5LongSql("token || '#' || '7' || '#' || r")} % 512 AS bucket
       | FROM vocab CROSS JOIN range(0, 4) t(r))
       |SELECT token, min(COALESCE(cnt, CAST(0 AS BIGINT))) AS est
       |FROM pr LEFT JOIN sk USING (r, bucket) GROUP BY token""".stripMargin
@@ -1855,11 +1853,11 @@ object ExtensionQueries {
     SketchOps.hllRegisters(Tables.documents(spark, dir), "text", b = 8, seed = 9L)
 
   val q85Sql: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       | SELECT unnest(list_filter(string_split(text, ' '), tk -> tk <> '')) AS tok
       | FROM documents),
       |h AS (
-      | SELECT CAST('0x' || substr(md5(tok || '#' || '9'), 1, 12) AS BIGINT) AS h
+      | SELECT ${md5Long48Sql("tok || '#' || '9'")} AS h
       | FROM toks)
       |SELECT h >> 40 AS bucket,
       | CAST(max(CASE WHEN (h & ((CAST(1 AS BIGINT) << 40) - 1)) = 0 THEN 41
@@ -1885,7 +1883,7 @@ object ExtensionQueries {
   val q86Sql: String =
     s"""WITH ev AS (
       | SELECT * FROM events
-      | WHERE ${dk("event_id || '#' || '86'")} % 8 = 0),
+      | WHERE ${md5LongSql("event_id || '#' || '86'")} % 8 = 0),
       |u1 AS (
       | SELECT user_id, min(ts) AS t FROM ev
       | WHERE event_type = 'signup' GROUP BY 1),
@@ -1956,7 +1954,7 @@ object ExtensionQueries {
       | SELECT DISTINCT unnest(list_filter(string_split(text, ' '), tk -> tk <> '')) AS tok
       | FROM documents WHERE doc_id % 20 = 0),
       |bits AS (
-      | SELECT DISTINCT ${dk("tok || '#' || '5' || '#' || j")} % 4096 AS bit
+      | SELECT DISTINCT ${md5LongSql("tok || '#' || '5' || '#' || j")} % 4096 AS bit
       | FROM btoks CROSS JOIN range(0, 3) t(j)),
       |toks AS (
       | SELECT unnest(list_filter(string_split(text, ' '), tk -> tk <> '')) AS tok
@@ -1967,7 +1965,7 @@ object ExtensionQueries {
       |pr0 AS (
       | SELECT token FROM vocab UNION ALL SELECT token || '-x' FROM vocab),
       |pr AS (
-      | SELECT token, ${dk("token || '#' || '5' || '#' || j")} % 4096 AS bit
+      | SELECT token, ${md5LongSql("token || '#' || '5' || '#' || j")} % 4096 AS bit
       | FROM pr0 CROSS JOIN range(0, 3) t(j))
       |SELECT token, count(b.bit) = 3 AS maybe_present
       |FROM pr LEFT JOIN bits b USING (bit) GROUP BY token""".stripMargin
@@ -2081,11 +2079,11 @@ object ExtensionQueries {
       Seq("lang"), b = 8)
 
   val q92Sql: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       | SELECT lang, unnest(list_filter(string_split(text, ' '), tk -> tk <> '')) AS tok
       | FROM documents),
       |h AS (
-      | SELECT lang, CAST('0x' || substr(md5(tok || '#' || '9'), 1, 12) AS BIGINT) AS h
+      | SELECT lang, ${md5Long48Sql("tok || '#' || '9'")} AS h
       | FROM toks),
       |r AS (
       | SELECT lang, h >> 40 AS bucket,
@@ -2316,6 +2314,37 @@ object ExtensionQueries {
       | END AS z
       |FROM t""".stripMargin
 
+  /** Two derived versions of the corpus for the drift rows: "old"
+    * keeps the docs whose `<salt>o` draw is below `keep`, "new" those
+    * whose `<salt>n` draw is, with the lang of a `relabel` share
+    * (`<salt>c` draw) rewritten to `lang-x`.
+    */
+  private[graft] def langVersions(spark: SparkSession, dir: String, salt: String,
+      keep: Double, relabel: Double): (DataFrame, DataFrame) = {
+    val d = Tables.documents(spark, dir)
+    def u(s: String) = PortableHash.uniform01(col("doc_id"), lit(salt + s))
+    (d.filter(u("o") < keep),
+      d.filter(u("n") < keep).withColumn("lang",
+        when(u("c") < relabel, concat(col("lang"), lit("-x"))).otherwise(col("lang"))))
+  }
+
+  /** [[langVersions]] in DuckDB: the old (`o`) and new (`n`) langs,
+    * their counts `co`/`cn`, and `j`, both counts per lang of either.
+    */
+  private def langVersionsSql(salt: String, keep: Double, relabel: Double): String = {
+    def u(s: String): String =
+      uniform01Sql(s"doc_id || '#' || '$salt$s'")
+    s"""o AS (SELECT lang FROM documents WHERE ${u("o")} < $keep),
+      |n AS (SELECT CASE WHEN ${u("c")} < $relabel THEN lang || '-x' ELSE lang END AS lang
+      |      FROM documents WHERE ${u("n")} < $keep),
+      |co AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_old FROM o GROUP BY 1),
+      |cn AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_new FROM n GROUP BY 1),
+      |j AS (SELECT COALESCE(co.lang, cn.lang) AS lang,
+      |  COALESCE(n_old, CAST(0 AS BIGINT)) AS n_old,
+      |  COALESCE(n_new, CAST(0 AS BIGINT)) AS n_new
+      | FROM co FULL JOIN cn ON co.lang = cn.lang)""".stripMargin
+  }
+
   // --------------------------------------------------------------- q100
   /** Categorical drift / PSI ([[graft.ops.DriftOps.categoricalDrift]]):
     * language-mix Population Stability Index between two
@@ -2326,27 +2355,12 @@ object ExtensionQueries {
     * "stable" band — the synthetic lang rewrite is a real shift).
     */
   def q100(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    val oldDf = d.filter(PortableHash.uniform01(col("doc_id"), lit("100o")) < 0.95)
-    val newDf = d.filter(PortableHash.uniform01(col("doc_id"), lit("100n")) < 0.95)
-      .withColumn("lang",
-        when(PortableHash.uniform01(col("doc_id"), lit("100c")) < 0.1,
-          concat(col("lang"), lit("-x"))).otherwise(col("lang")))
+    val (oldDf, newDf) = langVersions(spark, dir, "100", 0.95, 0.1)
     DriftOps.categoricalDrift(oldDf, newDf, "lang")
   }
 
-  val q100Sql: String = {
-    def u(salt: String): String =
-      s"${dk(s"doc_id || '#' || '$salt'")} / 1152921504606846976.0"
-    s"""WITH o AS (SELECT lang FROM documents WHERE ${u("100o")} < 0.95),
-      |n AS (SELECT CASE WHEN ${u("100c")} < 0.1 THEN lang || '-x' ELSE lang END AS lang
-      |      FROM documents WHERE ${u("100n")} < 0.95),
-      |co AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_old FROM o GROUP BY 1),
-      |cn AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_new FROM n GROUP BY 1),
-      |j AS (SELECT COALESCE(co.lang, cn.lang) AS lang,
-      |  COALESCE(n_old, CAST(0 AS BIGINT)) AS n_old,
-      |  COALESCE(n_new, CAST(0 AS BIGINT)) AS n_new
-      | FROM co FULL JOIN cn ON co.lang = cn.lang),
+  val q100Sql: String =
+    s"""WITH ${langVersionsSql("100", 0.95, 0.1)},
       |t AS (SELECT SUM(n_old) AS t_old, SUM(n_new) AS t_new, count(*) AS k FROM j),
       |w AS (SELECT lang, n_old, n_new,
       |  (CAST(n_old AS DOUBLE) + 1.0) / (CAST(t_old AS DOUBLE) + CAST(k AS DOUBLE)) AS p_old,
@@ -2357,7 +2371,6 @@ object ExtensionQueries {
       |tt AS (SELECT CAST(SUM(CAST(round(psi_term, 9) AS DECIMAL(38,9))) AS DOUBLE)
       |       AS psi_total FROM w2)
       |SELECT * FROM w2 CROSS JOIN tt""".stripMargin
-  }
 
   // --------------------------------------------------------------- q101
   /** Numeric drift ([[graft.ops.DriftOps.numericDrift]]): PSI of
@@ -2379,7 +2392,7 @@ object ExtensionQueries {
 
   val q101Sql: String = {
     def u(salt: String): String =
-      s"${dk(s"doc_id || '#' || '$salt'")} / 1152921504606846976.0"
+      uniform01Sql(s"doc_id || '#' || '$salt'")
     val probs = (1 until 5).map(i => (i.toDouble / 5).toString).mkString(", ")
     val binCase = "CASE " + (0 until 4).map(i =>
       s"WHEN round(n_chars, 6) <= c[${i + 1}] THEN CAST($i AS INT)").mkString(" ") +
@@ -2580,10 +2593,10 @@ object ExtensionQueries {
         col("col").cast("double").as("val"))
 
   val q108Sql: String =
-    """WITH s AS (
+    s"""WITH s AS (
       | SELECT vec_id, embedding,
       |  list_sort(list_transform(range(len(embedding)), i ->
-      |    {'h': CAST('0x' || substr(md5(vec_id::VARCHAR || '#' || i::VARCHAR || '#' || '7'), 1, 15) AS BIGINT),
+      |    {'h': ${md5LongSql("vec_id::VARCHAR || '#' || i::VARCHAR || '#' || '7'")},
       |     'i': i})) AS scored
       | FROM embeddings),
       |c AS (
@@ -2765,9 +2778,7 @@ object ExtensionQueries {
   }
 
   val q111Sql: String =
-    """WITH e AS (SELECT vec_id, embedding,
-      |  sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-      | FROM embeddings),
+    s"""WITH ${bruteCosineBaseSql("")},
       |c AS (
       | SELECT a.vec_id AS query_id, b.vec_id AS doc_id,
       |  list_sum(list_transform(generate_series(1, len(a.embedding)),
@@ -2867,11 +2878,11 @@ object ExtensionQueries {
       "score", "label")
 
   val q113Sql: String =
-    """WITH u AS (
+    s"""WITH u AS (
       | SELECT
-      |  CAST('0x' || substr(md5(doc_id || '#' || 'cal'), 1, 15) AS BIGINT)
+      |  ${md5LongSql("doc_id || '#' || 'cal'")}
       |    / 1152921504606846976.0 AS s,
-      |  CAST('0x' || substr(md5(doc_id || '#' || 'lab'), 1, 15) AS BIGINT)
+      |  ${md5LongSql("doc_id || '#' || 'lab'")}
       |    / 1152921504606846976.0 AS u2
       | FROM documents),
       |s AS (
@@ -2908,10 +2919,7 @@ object ExtensionQueries {
       Tables.documents(spark, dir), "text", "doc_id", threshold = 0.6)
 
   val q114Sql: String =
-    """WITH t AS (
-      | SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks,
-      |        len(list_distinct(string_split(text, ' '))) AS n
-      | FROM documents),
+    s"""WITH ${tokenSetSql("documents")},
       |e AS (SELECT doc_id, n, unnest(toks) AS tok FROM t),
       |p AS (
       | SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.n AS na, b.n AS nb,
@@ -2935,10 +2943,7 @@ object ExtensionQueries {
       Tables.documents(spark, dir), "text", "doc_id", threshold = 0.7)
 
   val q115Sql: String =
-    """WITH t AS (
-      | SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks,
-      |        len(list_distinct(string_split(text, ' '))) AS n
-      | FROM documents),
+    s"""WITH ${tokenSetSql("documents")},
       |e AS (SELECT doc_id, n, unnest(toks) AS tok FROM t),
       |p AS (
       | SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.n AS na,
@@ -2958,27 +2963,12 @@ object ExtensionQueries {
     * PSI row and this row disagree exactly where smoothing matters.
     */
   def q116(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    val oldDf = d.filter(PortableHash.uniform01(col("doc_id"), lit("116o")) < 0.9)
-    val newDf = d.filter(PortableHash.uniform01(col("doc_id"), lit("116n")) < 0.9)
-      .withColumn("lang",
-        when(PortableHash.uniform01(col("doc_id"), lit("116c")) < 0.15,
-          concat(col("lang"), lit("-x"))).otherwise(col("lang")))
+    val (oldDf, newDf) = langVersions(spark, dir, "116", 0.9, 0.15)
     DriftOps.jsDivergence(oldDf, newDf, "lang")
   }
 
-  val q116Sql: String = {
-    def u(salt: String): String =
-      s"${dk(s"doc_id || '#' || '$salt'")} / 1152921504606846976.0"
-    s"""WITH o AS (SELECT lang FROM documents WHERE ${u("116o")} < 0.9),
-      |n AS (SELECT CASE WHEN ${u("116c")} < 0.15 THEN lang || '-x' ELSE lang END AS lang
-      |      FROM documents WHERE ${u("116n")} < 0.9),
-      |co AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_old FROM o GROUP BY 1),
-      |cn AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_new FROM n GROUP BY 1),
-      |j AS (SELECT COALESCE(co.lang, cn.lang) AS lang,
-      |  COALESCE(n_old, CAST(0 AS BIGINT)) AS n_old,
-      |  COALESCE(n_new, CAST(0 AS BIGINT)) AS n_new
-      | FROM co FULL JOIN cn ON co.lang = cn.lang),
+  val q116Sql: String =
+    s"""WITH ${langVersionsSql("116", 0.9, 0.15)},
       |t AS (SELECT SUM(n_old) AS t_old, SUM(n_new) AS t_new FROM j),
       |w AS (SELECT lang, n_old, n_new,
       |  CAST(n_old AS DOUBLE) / CAST(t_old AS DOUBLE) AS p_old,
@@ -2993,7 +2983,6 @@ object ExtensionQueries {
       |tt AS (SELECT CAST(SUM(CAST(round(jsd_term, 9) AS DECIMAL(38,9))) AS DOUBLE)
       |       AS jsd_total FROM w2)
       |SELECT * FROM w2 CROSS JOIN tt""".stripMargin
-  }
 
   // --------------------------------------------------------------- q117
   /** Windowed co-occurrence PMI
@@ -3035,6 +3024,57 @@ object ExtensionQueries {
       |WHERE c_xy >= 5""".stripMargin
 
   // --------------------------------------------------------------- q118
+  /** The arithmetic corpus graph of q118, q119, q175 and q176: doc i
+    * links to i+1, i+2 and 7i+11 mod N, self-loops dropped.
+    */
+  private def arithmeticGraph(spark: SparkSession, dir: String): DataFrame = {
+    val d = Tables.documents(spark, dir)
+    val n = d.count()
+    d.select(col("doc_id").as("src"), ((col("doc_id") + 1) % n).as("dst"))
+      .union(d.select(col("doc_id"), (col("doc_id") + 2) % n))
+      .union(d.select(col("doc_id"), (col("doc_id") * 7 + 11) % n))
+      .filter(col("src") =!= col("dst"))
+  }
+
+  /** [[arithmeticGraph]] in DuckDB: the doc count `t` and the edge
+    * union `e0`, self-loops still in.
+    */
+  private val arithmeticEdgesSql: String =
+    """t AS (SELECT CAST(count(*) AS BIGINT) AS cnt FROM documents),
+      |e0 AS (
+      | SELECT doc_id AS src, (doc_id + 1) % cnt AS dst FROM documents CROSS JOIN t
+      | UNION SELECT doc_id, (doc_id + 2) % cnt FROM documents CROSS JOIN t
+      | UNION SELECT doc_id, (doc_id * 7 + 11) % cnt FROM documents CROSS JOIN t)""".stripMargin
+
+  /** The undirected graph `canon`: each edge of `e0` once, as a < b. */
+  private val canonEdgesSql: String =
+    """canon AS (
+      | SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+      | FROM e0 WHERE src <> dst)""".stripMargin
+
+  /** q175/q176's layout of `t`, `e0` and `canon`. */
+  private val undirectedGraphSql: String =
+    s"""t AS (SELECT CAST(count(*) AS BIGINT) AS cnt FROM documents),
+      |e0 AS (
+      | SELECT doc_id AS src, (doc_id + 1) % cnt AS dst
+      |  FROM documents CROSS JOIN t
+      | UNION SELECT doc_id, (doc_id + 2) % cnt FROM documents CROSS JOIN t
+      | UNION SELECT doc_id, (doc_id * 7 + 11) % cnt
+      |  FROM documents CROSS JOIN t),
+      |$canonEdgesSql""".stripMargin
+
+  /** Every triangle of `canon` once, as x < y < z, and its `corners`. */
+  private val trianglesSql: String =
+    """tri AS (
+      | SELECT e1.a AS x, e1.b AS y, e2.b AS z
+      | FROM canon e1
+      |  JOIN canon e2 ON e2.a = e1.b
+      |  JOIN canon e3 ON e3.a = e1.a AND e3.b = e2.b),
+      |corners AS (
+      | SELECT x AS id FROM tri UNION ALL
+      | SELECT y FROM tri UNION ALL
+      | SELECT z FROM tri)""".stripMargin
+
   /** PageRank ([[graft.ops.GraphOps.pageRank]], 5 passes, d = 0.85)
     * over a deterministic arithmetic corpus graph (doc i links to
     * i+1, i+2 and 7i+11 mod N): the oracle UNROLLS all five
@@ -3043,16 +3083,8 @@ object ExtensionQueries {
     * stay bit-aligned through the whole iteration, not just at the
     * end.
     */
-  def q118(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    val n = d.count()
-    val e = d.select(col("doc_id").as("src"),
-        ((col("doc_id") + 1) % n).as("dst"))
-      .union(d.select(col("doc_id"), (col("doc_id") + 2) % n))
-      .union(d.select(col("doc_id"), (col("doc_id") * 7 + 11) % n))
-      .filter(col("src") =!= col("dst"))
-    GraphOps.pageRank(e, iters = 5)
-  }
+  def q118(spark: SparkSession, dir: String): DataFrame =
+    GraphOps.pageRank(arithmeticGraph(spark, dir), iters = 5)
 
   val q118Sql: String = {
     def pass(i: Int): String =
@@ -3064,11 +3096,7 @@ object ExtensionQueries {
         |    CAST(SUM(CAST(round(r.rank / d.outdeg, 9) AS DECIMAL(38,9))) AS DOUBLE) AS m
         |   FROM e JOIN r${i - 1} r ON r.id = e.src JOIN d ON d.id = e.src
         |   GROUP BY e.dst) s ON s.id = n.id)"""
-    s"""WITH t AS (SELECT CAST(count(*) AS BIGINT) AS cnt FROM documents),
-      |e0 AS (
-      | SELECT doc_id AS src, (doc_id + 1) % cnt AS dst FROM documents CROSS JOIN t
-      | UNION SELECT doc_id, (doc_id + 2) % cnt FROM documents CROSS JOIN t
-      | UNION SELECT doc_id, (doc_id * 7 + 11) % cnt FROM documents CROSS JOIN t),
+    s"""WITH $arithmeticEdgesSql,
       |e AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
       |n AS (SELECT src AS id FROM e UNION SELECT dst FROM e),
       |d AS (SELECT src AS id, CAST(count(*) AS BIGINT) AS outdeg FROM e GROUP BY 1),
@@ -3085,36 +3113,14 @@ object ExtensionQueries {
     * three-way edge join — matching per-node rows prove the
     * orientation enumerates every triangle exactly once.
     */
-  def q119(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    val n = d.count()
-    val e = d.select(col("doc_id").as("src"),
-        ((col("doc_id") + 1) % n).as("dst"))
-      .union(d.select(col("doc_id"), (col("doc_id") + 2) % n))
-      .union(d.select(col("doc_id"), (col("doc_id") * 7 + 11) % n))
-      .filter(col("src") =!= col("dst"))
-    GraphOps.triangleCount(e)
-  }
+  def q119(spark: SparkSession, dir: String): DataFrame =
+    GraphOps.triangleCount(arithmeticGraph(spark, dir))
 
   val q119Sql: String =
-    """WITH t AS (SELECT CAST(count(*) AS BIGINT) AS cnt FROM documents),
-      |e0 AS (
-      | SELECT doc_id AS src, (doc_id + 1) % cnt AS dst FROM documents CROSS JOIN t
-      | UNION SELECT doc_id, (doc_id + 2) % cnt FROM documents CROSS JOIN t
-      | UNION SELECT doc_id, (doc_id * 7 + 11) % cnt FROM documents CROSS JOIN t),
-      |canon AS (
-      | SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-      | FROM e0 WHERE src <> dst),
+    s"""WITH $arithmeticEdgesSql,
+      |$canonEdgesSql,
       |nodes AS (SELECT a AS id FROM canon UNION SELECT b FROM canon),
-      |tri AS (
-      | SELECT e1.a AS x, e1.b AS y, e2.b AS z
-      | FROM canon e1
-      |  JOIN canon e2 ON e2.a = e1.b
-      |  JOIN canon e3 ON e3.a = e1.a AND e3.b = e2.b),
-      |corners AS (
-      | SELECT x AS id FROM tri UNION ALL
-      | SELECT y FROM tri UNION ALL
-      | SELECT z FROM tri),
+      |$trianglesSql,
       |pn AS (SELECT id, CAST(count(*) AS BIGINT) AS triangles FROM corners GROUP BY 1),
       |tot AS (SELECT CAST(count(*) AS BIGINT) AS total_triangles FROM tri)
       |SELECT nodes.id, COALESCE(pn.triangles, CAST(0 AS BIGINT)) AS triangles,
@@ -3215,12 +3221,13 @@ object ExtensionQueries {
     SplitOps.negativeSamples(d, "doc_id", d, "text", k = 3, salt = "neg")
   }
 
-  val q123Sql: String =
-    s"""WITH w AS (
-      | SELECT unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS tok
-      | FROM documents),
-      |v AS (SELECT tok, CAST(count(*) AS BIGINT) AS cnt FROM w GROUP BY 1),
-      |wt AS (SELECT tok,
+  /** Over the vocabulary counts `v` (tok, cnt): the ^0.75-damped
+    * integer weights `wt`, their cumulative ladder `c` and total `t`,
+    * three md5 draws per document salted with `salt` (`d`), and the
+    * token each draw lands on — q123 and q213.
+    */
+  private def negativeDrawSql(salt: String): String =
+    s"""wt AS (SELECT tok,
       |  CAST(round(sqrt(CAST(cnt AS DOUBLE) * sqrt(CAST(cnt AS DOUBLE))) * 1000)
       |    AS BIGINT) AS w
       | FROM v),
@@ -3230,12 +3237,19 @@ object ExtensionQueries {
       |t AS (SELECT CAST(SUM(w) AS BIGINT) AS tw FROM wt),
       |d AS (
       | SELECT doc_id, j,
-      |  ${dk("doc_id || '#' || j || '#' || 'neg'")} % tw AS u
+      |  ${md5LongSql(s"doc_id || '#' || j || '#' || '$salt'")} % tw AS u
       | FROM documents
       |  CROSS JOIN (SELECT unnest(generate_series(0, 2)) AS j) jj
       |  CROSS JOIN t)
       |SELECT d.doc_id, CAST(d.j AS INT) AS j, c.tok AS neg
       |FROM d JOIN c ON d.u < c.cum AND d.u >= c.cum - c.w""".stripMargin
+
+  val q123Sql: String =
+    s"""WITH w AS (
+      | SELECT unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS tok
+      | FROM documents),
+      |v AS (SELECT tok, CAST(count(*) AS BIGINT) AS cnt FROM w GROUP BY 1),
+      |${negativeDrawSql("neg")}""".stripMargin
 
   // --------------------------------------------------------------- q124
   /** Mergeable log-binned quantile sketch
@@ -3341,18 +3355,13 @@ object ExtensionQueries {
       .select("doc_id", "n_trigrams", "sb_nll", "sb_ppl")
 
   val q127Sql: String =
-    s"""WITH toks AS (
-      | SELECT doc_id, list_filter(string_split(text, ' '), tk -> tk <> '') AS tk
-      | FROM documents),
-      |uni AS (
-      | SELECT ${dk("w")} AS k, count(*) AS c
-      | FROM (SELECT unnest(tk) AS w FROM toks) GROUP BY 1),
+    s"""WITH $unigramSql,
       |tot AS (SELECT sum(c) AS n_tokens, count(*) AS v FROM uni),
       |bgs AS (
       | SELECT tk[i] || ' ' || tk[i+1] AS bg
       | FROM (SELECT tk, unnest(generate_series(1, len(tk) - 1)) AS i
       |       FROM toks WHERE len(tk) >= 2)),
-      |bi AS (SELECT ${dk("bg")} AS k, count(*) AS c FROM bgs GROUP BY 1),
+      |bi AS (SELECT ${md5LongSql("bg")} AS k, count(*) AS c FROM bgs GROUP BY 1),
       |tgs AS (
       | SELECT doc_id,
       |  tk[i] || ' ' || tk[i+1] AS ctx2,
@@ -3362,7 +3371,7 @@ object ExtensionQueries {
       |  tk[i+2] AS w3
       | FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 2)) AS i
       |       FROM toks WHERE len(tk) >= 3)),
-      |tri AS (SELECT ${dk("tri")} AS k, count(*) AS c FROM tgs GROUP BY 1),
+      |tri AS (SELECT ${md5LongSql("tri")} AS k, count(*) AS c FROM tgs GROUP BY 1),
       |lp AS (
       | SELECT g.doc_id, ln(
       |  CASE WHEN coalesce(t.c, 0) > 0
@@ -3372,11 +3381,11 @@ object ExtensionQueries {
       |       ELSE (0.4 * 0.4) * CAST(coalesce(u3.c, 0) + 1 AS DOUBLE)
       |            / CAST(tot.n_tokens + tot.v AS DOUBLE) END) AS lp
       | FROM tgs g
-      | LEFT JOIN tri t ON t.k = ${dk("g.tri")}
-      | LEFT JOIN bi c2 ON c2.k = ${dk("g.ctx2")}
-      | LEFT JOIN bi b ON b.k = ${dk("g.b23")}
-      | LEFT JOIN uni u2 ON u2.k = ${dk("g.w2")}
-      | LEFT JOIN uni u3 ON u3.k = ${dk("g.w3")}, tot)
+      | LEFT JOIN tri t ON t.k = ${md5LongSql("g.tri")}
+      | LEFT JOIN bi c2 ON c2.k = ${md5LongSql("g.ctx2")}
+      | LEFT JOIN bi b ON b.k = ${md5LongSql("g.b23")}
+      | LEFT JOIN uni u2 ON u2.k = ${md5LongSql("g.w2")}
+      | LEFT JOIN uni u3 ON u3.k = ${md5LongSql("g.w3")}, tot)
       |SELECT doc_id, count(*) AS n_trigrams,
       | -sum(lp) / count(*) AS sb_nll,
       | exp(-sum(lp) / count(*)) AS sb_ppl
@@ -3404,13 +3413,13 @@ object ExtensionQueries {
   }
 
   val q128Sql: String =
-    """WITH a AS (
+    s"""WITH a AS (
       | SELECT value AS v FROM events
-      | WHERE CAST('0x' || substr(md5(event_id || '#' || '128a'), 1, 15) AS BIGINT)
+      | WHERE ${md5LongSql("event_id || '#' || '128a'")}
       |     / 1152921504606846976.0 < 0.5 AND value IS NOT NULL),
       |b AS (
       | SELECT value * 1.1::DOUBLE AS v FROM events
-      | WHERE CAST('0x' || substr(md5(event_id || '#' || '128b'), 1, 15) AS BIGINT)
+      | WHERE ${md5LongSql("event_id || '#' || '128b'")}
       |     / 1152921504606846976.0 < 0.5 AND value IS NOT NULL),
       |ac AS (SELECT v, count(*) AS ca FROM a GROUP BY 1),
       |bc AS (SELECT v, count(*) AS cb FROM b GROUP BY 1),
@@ -3491,18 +3500,16 @@ object ExtensionQueries {
   }
 
   val q130Sql: String =
-    """WITH toks AS (
-      | SELECT doc_id, list_filter(string_split(text, ' '), tk -> tk <> '') AS tk
-      | FROM documents),
+    s"""WITH ${wordListSql("toks")},
       |pos AS (
       | SELECT doc_id, i - 1 AS i,
-      |  CAST(CAST('0x' || substr(md5(tk[i]), 1, 15) AS BIGINT) % 1000 AS INTEGER) AS tok
+      |  CAST(${md5LongSql("tk[i]")} % 1000 AS INTEGER) AS tok
       | FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk))) AS i FROM toks)),
       |draws AS (
       | SELECT doc_id, i, tok,
-      |  (CAST('0x' || substr(md5(doc_id || '#' || i || '#' || '0' || '#' || 'sstart'), 1, 15) AS BIGINT)
+      |  (${md5LongSql("doc_id || '#' || i || '#' || '0' || '#' || 'sstart'")}
       |    / 1152921504606846976.0) < (0.15::DOUBLE / 3.0::DOUBLE) AS st,
-      |  1 + CAST('0x' || substr(md5(doc_id || '#' || i || '#' || '0' || '#' || 'slen'), 1, 15) AS BIGINT) % 5 AS ln
+      |  1 + ${md5LongSql("doc_id || '#' || i || '#' || '0' || '#' || 'slen'")} % 5 AS ln
       | FROM pos),
       |cov AS (
       | SELECT *, max(CASE WHEN st THEN i + ln ELSE -1 END)
@@ -3850,7 +3857,7 @@ object ExtensionQueries {
   }
 
   val q140Sql: String =
-    """WITH sizes(lv1, n) AS (VALUES
+    s"""WITH sizes(lv1, n) AS (VALUES
       | (0,9),(1,5),(2,9),(3,6),(4,6),(5,3),(6,3),(7,6),(8,6),(9,8),
       | (10,4),(11,6),(12,6),(13,12),(14,4),(15,10),(16,11),(17,9),
       | (18,7),(19,6),(20,16),(21,24),(22,24)),
@@ -3864,7 +3871,7 @@ object ExtensionQueries {
       | FROM (SELECT lv1, off, unnest(generate_series(0, n - 1)) AS i FROM offs)),
       |docs AS (
       | SELECT doc_id,
-      |  CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
+      |  CAST(${md5LongSql("CAST(doc_id AS VARCHAR)")}
       |       % 200 AS INTEGER) AS pick
       | FROM documents)
       |SELECT d.doc_id, m.category_id AS code, m.lv2id, m.lv1id
@@ -3887,10 +3894,10 @@ object ExtensionQueries {
   }
 
   val q141Sql: String =
-    """WITH truth AS (SELECT doc_id AS vid, lang AS label FROM documents),
+    s"""WITH truth AS (SELECT doc_id AS vid, lang AS label FROM documents),
       |preds AS (
       | SELECT doc_id AS vid,
-      |  CASE WHEN CAST('0x' || substr(md5(doc_id || '#' || '141'), 1, 15) AS BIGINT)
+      |  CASE WHEN ${md5LongSql("doc_id || '#' || '141'")}
       |        / 1152921504606846976.0 < 0.9
       |       THEN lang ELSE 'xx' END AS pred
       | FROM documents)
@@ -3918,12 +3925,10 @@ object ExtensionQueries {
   }
 
   val q142Sql: String =
-    """WITH toks AS (
-      | SELECT doc_id, list_filter(string_split(text, ' '), tk -> tk <> '') AS tk
-      | FROM documents),
+    s"""WITH ${wordListSql("toks")},
       |p AS (
       | SELECT doc_id, i, len(tk) AS L, tk[i] AS rt,
-      |  CASE WHEN CAST('0x' || substr(md5(doc_id || '#' || i || '#' || '142'), 1, 15) AS BIGINT)
+      |  CASE WHEN ${md5LongSql("doc_id || '#' || i || '#' || '142'")}
       |        / 1152921504606846976.0 < 0.9
       |       THEN tk[i] ELSE 'xx' END AS ct
       | FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk))) AS i FROM toks)),
@@ -4000,10 +4005,10 @@ object ExtensionQueries {
 
   val q143Sql: String =
     s"""WITH sa AS (
-      | SELECT DISTINCT ${dk("o_orderkey || '#' || '43'")} AS h
+      | SELECT DISTINCT ${md5LongSql("o_orderkey || '#' || '43'")} AS h
       | FROM orders ORDER BY h LIMIT 256),
       |sb AS (
-      | SELECT DISTINCT ${dk("l_orderkey || '#' || '43'")} AS h
+      | SELECT DISTINCT ${md5LongSql("l_orderkey || '#' || '43'")} AS h
       | FROM lineitem ORDER BY h LIMIT 256),
       |u AS (
       | SELECT h FROM (SELECT h FROM sa UNION SELECT h FROM sb)
@@ -4051,11 +4056,11 @@ object ExtensionQueries {
 
   val q144Sql: String =
     s"""WITH sa AS (
-      | SELECT r, ${dk("o_orderkey || '#' || '11' || '#' || r")} % 1024
+      | SELECT r, ${md5LongSql("o_orderkey || '#' || '11' || '#' || r")} % 1024
       |   AS bucket, CAST(count(*) AS BIGINT) AS cnt
       | FROM orders CROSS JOIN range(0, 4) t(r) GROUP BY 1, 2),
       |sb AS (
-      | SELECT r, ${dk("l_orderkey || '#' || '11' || '#' || r")} % 1024
+      | SELECT r, ${md5LongSql("l_orderkey || '#' || '11' || '#' || r")} % 1024
       |   AS bucket, CAST(count(*) AS BIGINT) AS cnt
       | FROM lineitem CROSS JOIN range(0, 4) t(r) GROUP BY 1, 2),
       |re AS (
@@ -4151,14 +4156,14 @@ object ExtensionQueries {
   val q148Sql: String =
     s"""WITH wg AS (
       | SELECT f, i,
-      |  sqrt(-2.0 * ln((CAST(${dk("'w#' || f || '#' || i || '#' || '8'")}
+      |  sqrt(-2.0 * ln((CAST(${md5LongSql("'w#' || f || '#' || i || '#' || '8'")}
       |     AS DOUBLE) + 0.5) / 1152921504606846976.0))
-      |  * cos(2.0 * pi() * ((CAST(${dk("'u#' || f || '#' || i || '#' || '8'")}
+      |  * cos(2.0 * pi() * ((CAST(${md5LongSql("'u#' || f || '#' || i || '#' || '8'")}
       |     AS DOUBLE) + 0.5) / 1152921504606846976.0)) / 4.0 AS w
       | FROM (SELECT unnest(generate_series(0, 15)) AS f),
       |      (SELECT unnest(generate_series(0, 63)) AS i)),
       |bg AS (
-      | SELECT f, 2.0 * pi() * ((CAST(${dk("'b#' || f || '#' || '8'")}
+      | SELECT f, 2.0 * pi() * ((CAST(${md5LongSql("'b#' || f || '#' || '8'")}
       |    AS DOUBLE) + 0.5) / 1152921504606846976.0) AS bp
       | FROM (SELECT unnest(generate_series(0, 15)) AS f)),
       |e AS (
@@ -4598,20 +4603,27 @@ object ExtensionQueries {
       Tables.lineitem(spark, dir), "l_returnflag", "l_extendedprice",
       "l_quantity", q = 0.5)
 
-  val q158Sql: String =
-    """WITH clean AS (
-      | SELECT l_returnflag AS k, CAST(l_extendedprice AS DOUBLE) AS v,
-      |  CAST(l_quantity AS DECIMAL(38, 6)) AS w
-      | FROM lineitem
-      | WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
-      |  AND l_quantity > 0),
-      |c AS (
+  /** `c`: each (k, v) row of `clean` with its key's cumulative weight
+    * `cum` up to v (RANGE frame, ties together) and total `tot` — the
+    * weighted-quantile scan of q158 and q170.
+    */
+  private val weightedCumSql: String =
+    """c AS (
       | SELECT k, v,
       |  CAST(sum(w) OVER (PARTITION BY k ORDER BY v
       |    RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
       |   AS cum,
       |  CAST(sum(w) OVER (PARTITION BY k) AS DOUBLE) AS tot
-      | FROM clean)
+      | FROM clean)""".stripMargin
+
+  val q158Sql: String =
+    s"""WITH clean AS (
+      | SELECT l_returnflag AS k, CAST(l_extendedprice AS DOUBLE) AS v,
+      |  CAST(l_quantity AS DECIMAL(38, 6)) AS w
+      | FROM lineitem
+      | WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
+      |  AND l_quantity > 0),
+      |$weightedCumSql
       |SELECT k AS l_returnflag, min(v) AS weighted_quantile,
       | max(tot) AS total_weight
       |FROM c WHERE cum >= tot * 0.5 GROUP BY 1""".stripMargin
@@ -4633,16 +4645,13 @@ object ExtensionQueries {
     StatsOps.twoProportionZ(users, "variant", "converted")
   }
 
-  val q159Sql: String =
-    """WITH u AS (
-      | SELECT user_id, sum(CASE WHEN event_type = 'purchase'
-      |    THEN 1 ELSE 0 END) AS np
-      | FROM events GROUP BY 1),
-      |v AS (
-      | SELECT CASE WHEN user_id % 2 = 0 THEN 'A' ELSE 'B' END AS variant,
-      |  np >= 14 AS converted
-      | FROM u),
-      |a AS (
+  /** [[graft.ops.StatsOps.twoProportionZ]] over `v` (variant,
+    * converted): per-variant counts `a`, the first variant `p`, both
+    * variants side by side `w`, and the pooled two-proportion z row —
+    * q159 and q210.
+    */
+  private val twoProportionZSql: String =
+    """a AS (
       | SELECT variant, CAST(count(*) AS BIGINT) AS n,
       |  CAST(sum(CASE WHEN converted THEN 1 ELSE 0 END) AS BIGINT) AS s
       | FROM v GROUP BY 1),
@@ -4667,6 +4676,17 @@ object ExtensionQueries {
       |  (1.0 / CAST(n1 AS DOUBLE) + 1.0 / CAST(n2 AS DOUBLE))) AS z
       |FROM w""".stripMargin
 
+  val q159Sql: String =
+    s"""WITH u AS (
+      | SELECT user_id, sum(CASE WHEN event_type = 'purchase'
+      |    THEN 1 ELSE 0 END) AS np
+      | FROM events GROUP BY 1),
+      |v AS (
+      | SELECT CASE WHEN user_id % 2 = 0 THEN 'A' ELSE 'B' END AS variant,
+      |  np >= 14 AS converted
+      | FROM u),
+      |$twoProportionZSql""".stripMargin
+
   // --------------------------------------------------------------- q160
   /** Item-to-item neighbors ([[graft.ops.BasketOps.itemNeighbors]],
     * top-3 by basket-set cosine): the "people who did A also did B"
@@ -4680,14 +4700,12 @@ object ExtensionQueries {
           floor(unix_micros(col("ts")) / lit(86400000000L))),
       Seq("user_id", "day"), "event_type", k = 3)
 
-  val q160Sql: String =
-    """WITH obs AS (
-      | SELECT DISTINCT user_id,
-      |  CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS day,
-      |  event_type AS item
-      | FROM events),
-      |ic AS (SELECT item, CAST(count(*) AS BIGINT) AS n_i FROM obs GROUP BY 1),
-      |p AS (
+  /** Over the (user, day, item) observations `obs` and item counts
+    * `ic`: the co-occurrence count `n_ab` of each ordered item pair
+    * (`p`) and its cosine score (`sc`) — q160 and q180.
+    */
+  private val itemPairScoreSql: String =
+    """p AS (
       | SELECT a.item AS item_a, b.item AS item_b,
       |  CAST(count(*) AS BIGINT) AS n_ab
       | FROM obs a JOIN obs b ON a.user_id = b.user_id AND a.day = b.day
@@ -4698,7 +4716,16 @@ object ExtensionQueries {
       |  CAST(n_ab AS DOUBLE) /
       |   sqrt(CAST(ia.n_i AS DOUBLE) * CAST(ib.n_i AS DOUBLE)) AS score
       | FROM p JOIN ic ia ON p.item_a = ia.item
-      |        JOIN ic ib ON p.item_b = ib.item),
+      |        JOIN ic ib ON p.item_b = ib.item)""".stripMargin
+
+  val q160Sql: String =
+    s"""WITH obs AS (
+      | SELECT DISTINCT user_id,
+      |  CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS day,
+      |  event_type AS item
+      | FROM events),
+      |ic AS (SELECT item, CAST(count(*) AS BIGINT) AS n_i FROM obs GROUP BY 1),
+      |$itemPairScoreSql,
       |rk AS (
       | SELECT item_a, item_b, n_ab, score, CAST(row_number() OVER
       |   (PARTITION BY item_a ORDER BY score DESC, item_b) AS INT) AS rk
@@ -5123,19 +5150,27 @@ object ExtensionQueries {
           .as("n_clamped_high"))
   }
 
+  /** `name`: each row of `from` with its key's row count `cum` up to
+    * its `col` value (RANGE frame, ties together) and total `tot` —
+    * the exact lower-edge quantile scan of the robust-statistics rows.
+    */
+  private def countCumSql(name: String, col: String, from: String): String =
+    s"""$name AS (
+      | SELECT k, $col,
+      |  CAST(sum(CAST(1.0 AS DECIMAL(38, 6))) OVER (PARTITION BY k
+      |    ORDER BY $col RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+      |   AS DOUBLE) AS cum,
+      |  CAST(sum(CAST(1.0 AS DECIMAL(38, 6))) OVER (PARTITION BY k)
+      |   AS DOUBLE) AS tot
+      | FROM $from)""".stripMargin
+
   val q170Sql: String =
-    """WITH clean AS (
+    s"""WITH clean AS (
       | SELECT l_returnflag AS k, CAST(l_extendedprice AS DOUBLE) AS v,
       |  CAST(1.0 AS DECIMAL(38, 6)) AS w
       | FROM lineitem
       | WHERE l_extendedprice IS NOT NULL),
-      |c AS (
-      | SELECT k, v,
-      |  CAST(sum(w) OVER (PARTITION BY k ORDER BY v
-      |    RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-      |   AS cum,
-      |  CAST(sum(w) OVER (PARTITION BY k) AS DOUBLE) AS tot
-      | FROM clean),
+      |$weightedCumSql,
       |lo AS (
       | SELECT k, min(v) AS p_lo FROM c WHERE cum >= tot * 0.1 GROUP BY 1),
       |hi AS (
@@ -5227,30 +5262,16 @@ object ExtensionQueries {
       "l_returnflag", "l_extendedprice")
 
   val q172Sql: String =
-    """WITH clean AS (
+    s"""WITH clean AS (
       | SELECT l_returnflag AS k, CAST(l_extendedprice AS DOUBLE) AS v
       | FROM lineitem WHERE l_extendedprice IS NOT NULL),
-      |c1 AS (
-      | SELECT k, v,
-      |  CAST(sum(CAST(1.0 AS DECIMAL(38, 6))) OVER (PARTITION BY k
-      |    ORDER BY v RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      |   AS DOUBLE) AS cum,
-      |  CAST(sum(CAST(1.0 AS DECIMAL(38, 6))) OVER (PARTITION BY k)
-      |   AS DOUBLE) AS tot
-      | FROM clean),
+      |${countCumSql("c1", "v", "clean")},
       |med AS (
       | SELECT k, min(v) AS med FROM c1 WHERE cum >= tot * 0.5 GROUP BY 1),
       |dev AS (
       | SELECT clean.k, v, med, abs(v - med) AS ad
       | FROM clean JOIN med USING (k)),
-      |c2 AS (
-      | SELECT k, ad,
-      |  CAST(sum(CAST(1.0 AS DECIMAL(38, 6))) OVER (PARTITION BY k
-      |    ORDER BY ad RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      |   AS DOUBLE) AS cum,
-      |  CAST(sum(CAST(1.0 AS DECIMAL(38, 6))) OVER (PARTITION BY k)
-      |   AS DOUBLE) AS tot
-      | FROM dev),
+      |${countCumSql("c2", "ad", "dev")},
       |mad AS (
       | SELECT k, min(ad) AS mad FROM c2 WHERE cum >= tot * 0.5 GROUP BY 1),
       |j AS (
@@ -5318,28 +5339,36 @@ object ExtensionQueries {
       .stripMargin
 
   // --------------------------------------------------------------- q174
+  /** The daily series of q174 and q182: per (event_type, day) the
+    * exact round-then-DECIMAL sum of `value` as `v`.
+    */
+  private def dailyValue(spark: SparkSession, dir: String): DataFrame =
+    Tables.events(spark, dir)
+      .groupBy(col("event_type"),
+        floor(unix_micros(col("ts")) / lit(86400000000L)).as("day"))
+      .agg(sum(round(col("value").cast("double"), 6)
+        .cast("decimal(38,6)")).cast("double").as("v"))
+
+  /** [[dailyValue]] in DuckDB: `s` (k, idx, x). */
+  private val dailyValueSql: String =
+    """s AS (
+      | SELECT event_type AS k,
+      |  CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS idx,
+      |  CAST(sum(CAST(round(CAST(value AS DOUBLE), 6)
+      |   AS DECIMAL(38, 6))) AS DOUBLE) AS x
+      | FROM events GROUP BY 1, 2)""".stripMargin
+
   /** CUSUM changepoint per event type
     * ([[graft.ops.TrendOps.cusumChangepoint]]) over daily event-value
     * sums: the level-shift locator. The cumulative deviation runs as
     * exact DECIMAL in one keyed window; the argmax breaks ties toward
     * the earliest day via a max-struct.
     */
-  def q174(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(spark, dir)
-      .groupBy(col("event_type"),
-        floor(unix_micros(col("ts")) / lit(86400000000L)).as("day"))
-      .agg(sum(round(col("value").cast("double"), 6)
-        .cast("decimal(38,6)")).cast("double").as("v"))
-    TrendOps.cusumChangepoint(daily, "event_type", "day", "v")
-  }
+  def q174(spark: SparkSession, dir: String): DataFrame =
+    TrendOps.cusumChangepoint(dailyValue(spark, dir), "event_type", "day", "v")
 
   val q174Sql: String =
-    """WITH s AS (
-      | SELECT event_type AS k,
-      |  CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS idx,
-      |  CAST(sum(CAST(round(CAST(value AS DOUBLE), 6)
-      |   AS DECIMAL(38, 6))) AS DOUBLE) AS x
-      | FROM events GROUP BY 1, 2),
+    s"""WITH $dailyValueSql,
       |st AS (
       | SELECT k,
       |  CAST(sum(CAST(round(x, 6) AS DECIMAL(38, 6))) AS DOUBLE)
@@ -5368,28 +5397,11 @@ object ExtensionQueries {
     * round-then-DECIMAL and the cut orders by the EXACT decimal score
     * with an `(a, b)` tiebreak, so the selected set replays.
     */
-  def q175(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    val n = d.count()
-    val e = d.select(col("doc_id").as("src"),
-        ((col("doc_id") + 1) % n).as("dst"))
-      .union(d.select(col("doc_id"), (col("doc_id") + 2) % n))
-      .union(d.select(col("doc_id"), (col("doc_id") * 7 + 11) % n))
-      .filter(col("src") =!= col("dst"))
-    GraphOps.adamicAdar(e, topK = 20)
-  }
+  def q175(spark: SparkSession, dir: String): DataFrame =
+    GraphOps.adamicAdar(arithmeticGraph(spark, dir), topK = 20)
 
   val q175Sql: String =
-    """WITH t AS (SELECT CAST(count(*) AS BIGINT) AS cnt FROM documents),
-      |e0 AS (
-      | SELECT doc_id AS src, (doc_id + 1) % cnt AS dst
-      |  FROM documents CROSS JOIN t
-      | UNION SELECT doc_id, (doc_id + 2) % cnt FROM documents CROSS JOIN t
-      | UNION SELECT doc_id, (doc_id * 7 + 11) % cnt
-      |  FROM documents CROSS JOIN t),
-      |canon AS (
-      | SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-      | FROM e0 WHERE src <> dst),
+    s"""WITH $undirectedGraphSql,
       |sym AS (SELECT a AS z, b AS x FROM canon
       |        UNION ALL SELECT b, a FROM canon),
       |deg AS (SELECT z, CAST(count(*) AS BIGINT) AS deg FROM sym
@@ -5419,37 +5431,12 @@ object ExtensionQueries {
     * NULL. The engine's degree-oriented wedge join is checked against
     * the oracle's independent three-way edge join.
     */
-  def q176(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    val n = d.count()
-    val e = d.select(col("doc_id").as("src"),
-        ((col("doc_id") + 1) % n).as("dst"))
-      .union(d.select(col("doc_id"), (col("doc_id") + 2) % n))
-      .union(d.select(col("doc_id"), (col("doc_id") * 7 + 11) % n))
-      .filter(col("src") =!= col("dst"))
-    GraphOps.clusteringCoefficient(e)
-  }
+  def q176(spark: SparkSession, dir: String): DataFrame =
+    GraphOps.clusteringCoefficient(arithmeticGraph(spark, dir))
 
   val q176Sql: String =
-    """WITH t AS (SELECT CAST(count(*) AS BIGINT) AS cnt FROM documents),
-      |e0 AS (
-      | SELECT doc_id AS src, (doc_id + 1) % cnt AS dst
-      |  FROM documents CROSS JOIN t
-      | UNION SELECT doc_id, (doc_id + 2) % cnt FROM documents CROSS JOIN t
-      | UNION SELECT doc_id, (doc_id * 7 + 11) % cnt
-      |  FROM documents CROSS JOIN t),
-      |canon AS (
-      | SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-      | FROM e0 WHERE src <> dst),
-      |tri AS (
-      | SELECT e1.a AS x, e1.b AS y, e2.b AS z
-      | FROM canon e1
-      |  JOIN canon e2 ON e2.a = e1.b
-      |  JOIN canon e3 ON e3.a = e1.a AND e3.b = e2.b),
-      |corners AS (
-      | SELECT x AS id FROM tri UNION ALL
-      | SELECT y FROM tri UNION ALL
-      | SELECT z FROM tri),
+    s"""WITH $undirectedGraphSql,
+      |$trianglesSql,
       |pn AS (SELECT id, CAST(count(*) AS BIGINT) AS triangles
       |       FROM corners GROUP BY 1),
       |deg AS (
@@ -5613,25 +5600,14 @@ object ExtensionQueries {
       kNeighbors = 3, topN = 2)
 
   val q180Sql: String =
-    """WITH obs AS (
+    s"""WITH obs AS (
       | SELECT DISTINCT user_id,
       |  CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS day,
       |  event_type AS item
       | FROM events WHERE event_id % 3 = 0),
       |ic AS (SELECT item, CAST(count(*) AS BIGINT) AS n_i FROM obs
       |       GROUP BY 1),
-      |p AS (
-      | SELECT a.item AS item_a, b.item AS item_b,
-      |  CAST(count(*) AS BIGINT) AS n_ab
-      | FROM obs a JOIN obs b ON a.user_id = b.user_id AND a.day = b.day
-      |  AND a.item <> b.item
-      | GROUP BY 1, 2),
-      |sc AS (
-      | SELECT item_a, item_b, n_ab,
-      |  CAST(n_ab AS DOUBLE) /
-      |   sqrt(CAST(ia.n_i AS DOUBLE) * CAST(ib.n_i AS DOUBLE)) AS score
-      | FROM p JOIN ic ia ON p.item_a = ia.item
-      |        JOIN ic ib ON p.item_b = ib.item),
+      |$itemPairScoreSql,
       |rk AS (
       | SELECT item_a, item_b, n_ab, score, row_number() OVER
       |   (PARTITION BY item_a ORDER BY score DESC, item_b) AS rk
@@ -5732,22 +5708,12 @@ object ExtensionQueries {
     * of the detrended values, residual remainder. All means are
     * round-then-DECIMAL sums over one double division.
     */
-  def q182(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(spark, dir)
-      .groupBy(col("event_type"),
-        floor(unix_micros(col("ts")) / lit(86400000000L)).as("day"))
-      .agg(sum(round(col("value").cast("double"), 6)
-        .cast("decimal(38,6)")).cast("double").as("v"))
-    TrendOps.seasonalDecompose(daily, "event_type", "day", "v", period = 7)
-  }
+  def q182(spark: SparkSession, dir: String): DataFrame =
+    TrendOps.seasonalDecompose(dailyValue(spark, dir), "event_type", "day", "v",
+      period = 7)
 
   val q182Sql: String =
-    """WITH s AS (
-      | SELECT event_type AS k,
-      |  CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS idx,
-      |  CAST(sum(CAST(round(CAST(value AS DOUBLE), 6)
-      |   AS DECIMAL(38, 6))) AS DOUBLE) AS x
-      | FROM events GROUP BY 1, 2),
+    s"""WITH $dailyValueSql,
       |t AS (
       | SELECT k, idx, x,
       |  CASE WHEN count(*) OVER w = 7 THEN
@@ -5788,7 +5754,7 @@ object ExtensionQueries {
   }
 
   val q183Sql: String =
-    """WITH s AS (
+    s"""WITH s AS (
       | SELECT l_returnflag AS k,
       |  CAST(floor(epoch_us(l_shipdate) / 604800000000) AS BIGINT)
       |   AS idx,
@@ -5814,14 +5780,7 @@ object ExtensionQueries {
       |r AS (
       | SELECT s2.k, s2.y - sl.ts_slope * s2.x AS b
       | FROM s2 JOIN sl ON sl.k = s2.k),
-      |c2 AS (
-      | SELECT k, b,
-      |  CAST(sum(CAST(1.0 AS DECIMAL(38, 6))) OVER (PARTITION BY k
-      |    ORDER BY b RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      |   AS DOUBLE) AS cum,
-      |  CAST(sum(CAST(1.0 AS DECIMAL(38, 6))) OVER (PARTITION BY k)
-      |   AS DOUBLE) AS tot
-      | FROM r),
+      |${countCumSql("c2", "b", "r")},
       |ic AS (
       | SELECT k, min(b) AS ts_intercept FROM c2
       | WHERE cum >= tot * 0.5 GROUP BY 1)
@@ -6287,17 +6246,10 @@ object ExtensionQueries {
       "l_returnflag", "l_extendedprice", 0.05, 0.95)
 
   val q195Sql: String =
-    """WITH clean AS (
+    s"""WITH clean AS (
       | SELECT l_returnflag AS k, CAST(l_extendedprice AS DOUBLE) AS v
       | FROM lineitem WHERE l_extendedprice IS NOT NULL),
-      |c AS (
-      | SELECT k, v,
-      |  CAST(sum(CAST(1.0 AS DECIMAL(38, 6))) OVER (PARTITION BY k
-      |    ORDER BY v RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      |   AS DOUBLE) AS cum,
-      |  CAST(sum(CAST(1.0 AS DECIMAL(38, 6))) OVER (PARTITION BY k)
-      |   AS DOUBLE) AS tot
-      | FROM clean),
+      |${countCumSql("c", "v", "clean")},
       |lo AS (SELECT k, min(v) AS p_lo FROM c WHERE cum >= tot * 0.05
       |       GROUP BY 1),
       |hi AS (SELECT k, min(v) AS p_hi FROM c WHERE cum >= tot * 0.95
@@ -6387,7 +6339,7 @@ object ExtensionQueries {
   val q197Sql: String =
     s"""WITH s AS (
       | SELECT doc_id, lower(trim(text)) AS norm,
-      |  CASE WHEN ${dk("lower(trim(text)) || '#' || 'split42'")} % 100
+      |  CASE WHEN ${md5LongSql("lower(trim(text)) || '#' || 'split42'")} % 100
       |   < 10 THEN 'test' ELSE 'train' END AS split
       | FROM documents),
       |per AS (
@@ -6426,7 +6378,7 @@ object ExtensionQueries {
       | SELECT doc_id + 10000000, text, 'mirror_' || source
       | FROM documents WHERE doc_id % 25 = 0),
       |t AS (
-      | SELECT ${dk("lower(trim(text))")} AS h, doc_id, source
+      | SELECT ${md5LongSql("lower(trim(text))")} AS h, doc_id, source
       | FROM allv)
       |SELECT least(a.source, b.source) AS source_a,
       | greatest(a.source, b.source) AS source_b,
@@ -6812,27 +6764,13 @@ object ExtensionQueries {
     s"""WITH clean AS (
       | SELECT l_returnflag AS k, CAST(l_extendedprice AS DOUBLE) AS x
       | FROM lineitem WHERE l_extendedprice IS NOT NULL),
-      |c1 AS (
-      | SELECT k, x,
-      |  CAST(sum(CAST(1.0 AS DECIMAL(38, 6))) OVER (PARTITION BY k
-      |    ORDER BY x RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      |   AS DOUBLE) AS cum,
-      |  CAST(sum(CAST(1.0 AS DECIMAL(38, 6))) OVER (PARTITION BY k)
-      |   AS DOUBLE) AS tot
-      | FROM clean),
+      |${countCumSql("c1", "x", "clean")},
       |med AS (SELECT k, min(x) AS med FROM c1 WHERE cum >= tot * 0.5
       |        GROUP BY 1),
       |dv AS (
       | SELECT clean.k, x, med, abs(x - med) AS ad
       | FROM clean JOIN med ON med.k = clean.k),
-      |c2 AS (
-      | SELECT k, ad,
-      |  CAST(sum(CAST(1.0 AS DECIMAL(38, 6))) OVER (PARTITION BY k
-      |    ORDER BY ad RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      |   AS DOUBLE) AS cum,
-      |  CAST(sum(CAST(1.0 AS DECIMAL(38, 6))) OVER (PARTITION BY k)
-      |   AS DOUBLE) AS tot
-      | FROM dv),
+      |${countCumSql("c2", "ad", "dv")},
       |sc AS (SELECT k, 1.4826 * min(ad) AS s FROM c2
       |       WHERE cum >= tot * 0.5 GROUP BY k),
       |j AS (
@@ -6864,9 +6802,7 @@ object ExtensionQueries {
         count(lit(1)).cast("double")).as("avg_tokens"))
   }
 
-  val q209Sql: String = {
-    val enWords = TextAnalysis.stopwords.toMap.apply("en")
-      .map(w => s"'$w'").mkString("[", ", ", "]")
+  val q209Sql: String =
     s"""WITH t AS (
       | SELECT source, text, lower(trim(text)) AS norm,
       |  list_filter(string_split(text, ' '), x -> x <> '') AS toks
@@ -6879,7 +6815,7 @@ object ExtensionQueries {
       |        '[^A-Za-z0-9 ]', '', 'g')) AS DOUBLE) / len(text)) * 4.0)
       |     * 0.4
       |   + least((CAST(len(list_filter(toks,
-      |        tk -> list_contains($enWords, tk))) AS DOUBLE) / len(toks))
+      |        tk -> list_contains($enStopwordsSql, tk))) AS DOUBLE) / len(toks))
       |      * 5.0, 1.0) * 0.2 AS quality,
       |  CAST(len(toks) AS DOUBLE) AS ntok
       | FROM t)
@@ -6891,7 +6827,6 @@ object ExtensionQueries {
       | CAST(sum(CAST(round(ntok, 9) AS DECIMAL(38, 9))) AS DOUBLE)
       |  / CAST(count(*) AS DOUBLE) AS avg_tokens
       |FROM q GROUP BY 1""".stripMargin
-  }
 
   // --------------------------------------------------------------- q210
   /** Funnel A/B test: signup→purchase-within-1-day conversion by
@@ -6918,7 +6853,7 @@ object ExtensionQueries {
   }
 
   val q210Sql: String =
-    """WITH su AS (
+    s"""WITH su AS (
       | SELECT user_id, min(epoch_us(ts)) AS st FROM events
       | WHERE event_type = 'signup' GROUP BY 1),
       |pu AS (
@@ -6933,30 +6868,7 @@ object ExtensionQueries {
       | SELECT CASE WHEN user_id % 2 = 0 THEN 'A' ELSE 'B' END AS variant,
       |  conv = 1 AS converted
       | FROM cv),
-      |a AS (
-      | SELECT variant, CAST(count(*) AS BIGINT) AS n,
-      |  CAST(sum(CASE WHEN converted THEN 1 ELSE 0 END) AS BIGINT) AS s
-      | FROM v GROUP BY 1),
-      |p AS (SELECT min(variant) AS v1 FROM a),
-      |w AS (
-      | SELECT p.v1,
-      |  max(CASE WHEN variant = v1 THEN n END) AS n1,
-      |  max(CASE WHEN variant = v1 THEN s END) AS s1,
-      |  max(CASE WHEN variant <> v1 THEN variant END) AS v2,
-      |  max(CASE WHEN variant <> v1 THEN n END) AS n2,
-      |  max(CASE WHEN variant <> v1 THEN s END) AS s2
-      | FROM a CROSS JOIN p GROUP BY p.v1)
-      |SELECT v1 AS variant1, v2 AS variant2, n1, s1, n2, s2,
-      | CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE) AS p1,
-      | CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE) AS p2,
-      | (CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE) -
-      |  CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE)) /
-      | sqrt(((CAST(s1 AS DOUBLE) + CAST(s2 AS DOUBLE)) /
-      |       (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE))) *
-      |  (1.0 - (CAST(s1 AS DOUBLE) + CAST(s2 AS DOUBLE)) /
-      |         (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE))) *
-      |  (1.0 / CAST(n1 AS DOUBLE) + 1.0 / CAST(n2 AS DOUBLE))) AS z
-      |FROM w""".stripMargin
+      |$twoProportionZSql""".stripMargin
 
   // --------------------------------------------------------------- q211
   /** Session engagement report on [[graft.ops.SessionOps.sessionize]]
@@ -7083,22 +6995,7 @@ object ExtensionQueries {
       | FROM documents),
       |v AS (SELECT tok, CAST(count(*) AS BIGINT) AS cnt FROM w GROUP BY 1
       |      ORDER BY cnt DESC, tok ASC LIMIT 20),
-      |wt AS (SELECT tok,
-      |  CAST(round(sqrt(CAST(cnt AS DOUBLE) * sqrt(CAST(cnt AS DOUBLE))) * 1000)
-      |    AS BIGINT) AS w
-      | FROM v),
-      |c AS (SELECT tok, w,
-      |  CAST(SUM(w) OVER (ORDER BY tok ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-      | FROM wt),
-      |t AS (SELECT CAST(SUM(w) AS BIGINT) AS tw FROM wt),
-      |d AS (
-      | SELECT doc_id, j,
-      |  ${dk("doc_id || '#' || j || '#' || 'negcap'")} % tw AS u
-      | FROM documents
-      |  CROSS JOIN (SELECT unnest(generate_series(0, 2)) AS j) jj
-      |  CROSS JOIN t)
-      |SELECT d.doc_id, CAST(d.j AS INT) AS j, c.tok AS neg
-      |FROM d JOIN c ON d.u < c.cum AND d.u >= c.cum - c.w""".stripMargin
+      |${negativeDrawSql("negcap")}""".stripMargin
 
   val q212Sql: String =
     """WITH g AS (
@@ -7160,25 +7057,14 @@ object ExtensionQueries {
       |    (${q214D2("sub.v", "0", "cb.c")}) ASC, cb.code) AS rn
       |  FROM $subFrom sub JOIN $cbFrom cb ON cb.s = sub.s) WHERE rn = 1)""".stripMargin
 
-  /** Product-quantization ADC top-3
-    * ([[graft.ops.PqOps.pqSearchADC]], m=4, ksub=8, 1 Lloyd round,
-    * dim 64): the oracle unrolls subspace slicing, the seed codebook
-    * (8 smallest-id vectors), one L2 Lloyd round with the
-    * round-6-cast-REAL centroid update, the final encode, the
-    * per-query lookup table, and the ADC sum — pivoted to explicit
-    * `((d0 + d1) + d2) + d3` so both engines add subspaces in the
-    * same order and ranks replay bit-for-bit.
+  /** The PQ-ADC candidate search of q214 and q247 (m=4, ksub=8, 1
+    * Lloyd round) up to the per-(query, neighbor) subspace distances
+    * `padd`, for the query vectors that `queries` selects.
     */
-  def q214(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    PqOps.pqSearchADC(e.filter(col("vec_id") % 50 === 0), e, k = 3,
-      m = q214M, ksub = q214Ksub, dim = q214M * q214Sub)
-  }
-
-  val q214Sql: String = {
+  private def pqAdcSql(queries: String): String = {
     val avgList = (1 to q214Sub).map(j =>
       s"CAST(round(avg(CAST(v[$j] AS DOUBLE)), 6) AS REAL)").mkString(", ")
-    s"""WITH e AS (
+    s"""e AS (
       | SELECT vec_id, embedding FROM embeddings
       | WHERE embedding IS NOT NULL AND len(embedding) = ${q214M * q214Sub}
       |  AND len(list_filter(embedding, x -> x IS NULL)) = 0),
@@ -7201,7 +7087,7 @@ object ExtensionQueries {
       |lut AS (
       | SELECT q.vec_id AS query_id, cb.s, cb.code,
       |  (${q214D2("q.v", "0", "cb.c")}) AS d2
-      | FROM (SELECT * FROM sub WHERE vec_id % 50 = 0) q
+      | FROM (SELECT * FROM sub WHERE $queries) q
       | JOIN cb1 cb ON cb.s = q.s),
       |padd AS (
       | SELECT l.query_id, en.vec_id AS neighbor_id,
@@ -7211,13 +7097,31 @@ object ExtensionQueries {
       |  max(CASE WHEN l.s = 3 THEN l.d2 END) AS dd
       | FROM enc en JOIN lut l ON l.s = en.s AND l.code = en.code
       | WHERE l.query_id <> en.vec_id
-      | GROUP BY 1, 2)
+      | GROUP BY 1, 2)""".stripMargin
+  }
+
+  /** Product-quantization ADC top-3
+    * ([[graft.ops.PqOps.pqSearchADC]], m=4, ksub=8, 1 Lloyd round,
+    * dim 64): the oracle unrolls subspace slicing, the seed codebook
+    * (8 smallest-id vectors), one L2 Lloyd round with the
+    * round-6-cast-REAL centroid update, the final encode, the
+    * per-query lookup table, and the ADC sum — pivoted to explicit
+    * `((d0 + d1) + d2) + d3` so both engines add subspaces in the
+    * same order and ranks replay bit-for-bit.
+    */
+  def q214(spark: SparkSession, dir: String): DataFrame = {
+    val e = Tables.embeddings(spark, dir)
+    PqOps.pqSearchADC(e.filter(col("vec_id") % 50 === 0), e, k = 3,
+      m = q214M, ksub = q214Ksub, dim = q214M * q214Sub)
+  }
+
+  val q214Sql: String =
+    s"""WITH ${pqAdcSql("vec_id % 50 = 0")}
       |SELECT query_id, neighbor_id, round(adc, 6) AS adc6, rank FROM (
       | SELECT query_id, neighbor_id, ((da + db) + dc) + dd AS adc,
       |  CAST(row_number() OVER (PARTITION BY query_id
       |   ORDER BY ((da + db) + dc) + dd ASC, neighbor_id) AS INT) AS rank
       | FROM padd) WHERE rank <= 3""".stripMargin
-  }
 
   // --------------------------------------------------------------- q215
   /** Soft dedup ([[graft.ops.DedupOps.softDedupWeights]] over q69's
@@ -7228,22 +7132,11 @@ object ExtensionQueries {
     * `1.0 / n` is one double division in both engines.
     */
   def q215(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.softDedupWeights(
-      DedupOps.dupComponents(
-        Tables.documents(spark, dir).select("doc_id"), "doc_id",
-        q21(spark, dir)))
+    DedupOps.softDedupWeights(q69(spark, dir))
 
   val q215Sql: String =
-    s"""WITH RECURSIVE $minhashPairCtes,
-      |edges AS (
-      | SELECT id_a AS a, id_b AS b FROM vpairs
-      | UNION ALL
-      | SELECT id_b AS a, id_a AS b FROM vpairs),
-      |reach AS (
-      | SELECT a AS id, a AS r FROM edges
-      | UNION
-      | SELECT e.b AS id, reach.r FROM reach JOIN edges e ON e.a = reach.id),
-      |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id),
+    s"""WITH RECURSIVE ${minhashPairCtes(0.6)},
+      |$componentsSql,
       |lab AS (
       | SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component
       | FROM documents d LEFT JOIN comp c ON c.id = d.doc_id)
@@ -7383,15 +7276,21 @@ object ExtensionQueries {
     MixOps.epochPlan(Tables.documents(spark, dir), "source", "n_chars",
       targetTokens = 1000000L, temperature = 0.7)
 
-  val q219Sql: String =
-    """WITH per AS (
+  /** The τ = 0.7 mixture weights of q219 and q220: per-source token
+    * counts `per`, the tempered weights `w` and their total `t`.
+    */
+  private val epochWeightsSql: String =
+    """per AS (
       | SELECT source AS domain, CAST(sum(n_chars) AS BIGINT) AS n_tokens
       | FROM documents GROUP BY 1),
       |w AS (
       | SELECT domain, n_tokens,
       |  round(pow(CAST(n_tokens AS DOUBLE), 0.7), 6) AS w
       | FROM per),
-      |t AS (SELECT list_sum(list(w ORDER BY domain)) AS tw FROM w)
+      |t AS (SELECT list_sum(list(w ORDER BY domain)) AS tw FROM w)""".stripMargin
+
+  val q219Sql: String =
+    s"""WITH $epochWeightsSql
       |SELECT domain, n_tokens, w / tw AS weight,
       | round(w / tw * 1000000.0, 6) AS target_tokens,
       | round(round(w / tw * 1000000.0, 6) / CAST(n_tokens AS DOUBLE), 6)
@@ -7410,14 +7309,7 @@ object ExtensionQueries {
       "doc_id", targetTokens = 1000000L, temperature = 0.7)
 
   val q220Sql: String =
-    """WITH per AS (
-      | SELECT source AS domain, CAST(sum(n_chars) AS BIGINT) AS n_tokens
-      | FROM documents GROUP BY 1),
-      |w AS (
-      | SELECT domain, n_tokens,
-      |  round(pow(CAST(n_tokens AS DOUBLE), 0.7), 6) AS w
-      | FROM per),
-      |t AS (SELECT list_sum(list(w ORDER BY domain)) AS tw FROM w),
+    s"""WITH $epochWeightsSql,
       |plan AS (
       | SELECT domain,
       |  round(round(w / tw * 1000000.0, 6) / CAST(n_tokens AS DOUBLE), 6)
@@ -7447,28 +7339,32 @@ object ExtensionQueries {
   def q221(spark: SparkSession, dir: String): DataFrame =
     BpeOps.bpeMergeTable(Tables.documents(spark, dir), "text", numMerges = 3)
 
-  val q221Sql: String = {
-    // one training round: pairs from spaced-symbol state s{k-1}, the
-    // argmax m{k}, and the merged state s{k}
-    def round(k: Int): String = {
-      val prev = s"s${k - 1}"
-      s"""p$k AS (
-         | SELECT l[i] AS a, l[i + 1] AS b, CAST(SUM(n) AS BIGINT) AS cnt
-         | FROM (SELECT n, string_split(s, ' ') AS l FROM $prev) t,
-         |      unnest(range(1, len(l))) u(i)
-         | GROUP BY 1, 2),
-         |m$k AS (
-         | SELECT a, b, cnt FROM p$k WHERE cnt >= 2
-         | ORDER BY cnt DESC, a, b LIMIT 1),
-         |s$k AS (
-         | SELECT n, list_reduce(string_split(s, ' '), (acc, x) ->
-         |   CASE WHEN (acc = m.a OR
-         |              right(acc, length(m.a) + 1) = ' ' || m.a)
-         |             AND x = m.b
-         |        THEN substr(acc, 1, length(acc) - length(m.a)) || m.a || m.b
-         |        ELSE acc || ' ' || x END) AS s
-         | FROM $prev CROSS JOIN m$k m)""".stripMargin
-    }
+  /** BPE training round `k` in DuckDB: the weighted adjacent-pair
+    * counts `p<k>` of the spaced-symbol state `s<k-1>`, their argmax
+    * `m<k>`, and the merged state `s<k>`; `carry` ("" or "word, ")
+    * names the columns carried through the fold besides `n`.
+    */
+  private def bpeRoundSql(k: Int, carry: String): String = {
+    val prev = s"s${k - 1}"
+    s"""p$k AS (
+       | SELECT l[i] AS a, l[i + 1] AS b, CAST(SUM(n) AS BIGINT) AS cnt
+       | FROM (SELECT n, string_split(s, ' ') AS l FROM $prev) t,
+       |      unnest(range(1, len(l))) u(i)
+       | GROUP BY 1, 2),
+       |m$k AS (
+       | SELECT a, b, cnt FROM p$k WHERE cnt >= 2
+       | ORDER BY cnt DESC, a, b LIMIT 1),
+       |s$k AS (
+       | SELECT ${carry}n, list_reduce(string_split(s, ' '), (acc, x) ->
+       |   CASE WHEN (acc = m.a OR
+       |              right(acc, length(m.a) + 1) = ' ' || m.a)
+       |             AND x = m.b
+       |        THEN substr(acc, 1, length(acc) - length(m.a)) || m.a || m.b
+       |        ELSE acc || ' ' || x END) AS s
+       | FROM $prev CROSS JOIN m$k m)""".stripMargin
+  }
+
+  val q221Sql: String =
     s"""WITH wds AS (
        | SELECT unnest(list_filter(string_split(text, ' '), x -> x <> ''))
        |   AS word
@@ -7477,16 +7373,33 @@ object ExtensionQueries {
        |s0 AS (
        | SELECT n, array_to_string(regexp_split_to_array(word, ''), ' ') AS s
        | FROM v),
-       |${round(1)},
-       |${round(2)},
-       |${round(3)}
+       |${(1 to 3).map(bpeRoundSql(_, "")).mkString(",\n")}
        |SELECT * FROM (
        | SELECT CAST(1 AS INT) AS step, a, b, cnt FROM m1
        | UNION ALL SELECT CAST(2 AS INT), a, b, cnt FROM m2
        | UNION ALL SELECT CAST(3 AS INT), a, b, cnt FROM m3)""".stripMargin
-  }
 
   // --------------------------------------------------------------- q222
+  /** The non-empty documents `t` with their word lists `toks` — the
+    * input of [[qualitySql]] in q222 and q225.
+    */
+  private val qualityToksSql: String =
+    """t AS (
+       | SELECT doc_id, text,
+       |  list_filter(string_split(text, ' '), x -> x <> '') AS toks
+       | FROM documents WHERE text IS NOT NULL AND len(text) > 0)""".stripMargin
+
+  /** TextAnalysis.qualityScore over a `t` row, as the column
+    * `quality`.
+    */
+  private val qualitySql: String =
+    s"""least(len(toks) / 20.0, 1.0) * 0.4
+       |   + greatest(0.0, 1.0 -
+       |      (CAST(len(text) - len(regexp_replace(text, '[^A-Za-z0-9 ]', '', 'g')) AS DOUBLE)
+       |       / len(text)) * 4.0) * 0.4
+       |   + least((CAST(len(list_filter(toks, tk -> list_contains($enStopwordsSql, tk))) AS DOUBLE)
+       |      / len(toks)) * 5.0, 1.0) * 0.2 AS quality""".stripMargin
+
   /** Curriculum ordering ([[graft.ops.SplitOps.curriculumOrder]] over
     * the q26 quality score, descending thresholds 0.8/0.5): easy bins
     * first, md5-shuffled within bin, dense global position from the
@@ -7502,33 +7415,22 @@ object ExtensionQueries {
       binThresholds = Seq(0.8, 0.5), seed = "cur")
   }
 
-  val q222Sql: String = {
-    val enWords = TextAnalysis.stopwords.toMap.apply("en")
-      .map(w => s"'$w'").mkString("[", ", ", "]")
-    s"""WITH t AS (
-       | SELECT doc_id, text,
-       |  list_filter(string_split(text, ' '), x -> x <> '') AS toks
-       | FROM documents WHERE text IS NOT NULL AND len(text) > 0),
+  val q222Sql: String =
+    s"""WITH $qualityToksSql,
        |s AS (
        | SELECT doc_id,
-       |  least(len(toks) / 20.0, 1.0) * 0.4
-       |   + greatest(0.0, 1.0 -
-       |      (CAST(len(text) - len(regexp_replace(text, '[^A-Za-z0-9 ]', '', 'g')) AS DOUBLE)
-       |       / len(text)) * 4.0) * 0.4
-       |   + least((CAST(len(list_filter(toks, tk -> list_contains($enWords, tk))) AS DOUBLE)
-       |      / len(toks)) * 5.0, 1.0) * 0.2 AS quality
+       |  $qualitySql
        | FROM t),
        |b AS (
        | SELECT doc_id,
        |  CASE WHEN quality >= 0.8 THEN 0
        |       WHEN quality >= 0.5 THEN 1 ELSE 2 END AS bin,
-       |  CAST('0x' || substr(md5(doc_id || '#' || 'cur'), 1, 15) AS BIGINT)
+       |  ${md5LongSql("doc_id || '#' || 'cur'")}
        |    / 1152921504606846976.0 AS draw
        | FROM s)
        |SELECT doc_id, CAST(bin AS INT) AS bin,
        | ROW_NUMBER() OVER (ORDER BY bin, draw, doc_id) - 1 AS position
        |FROM b""".stripMargin
-  }
 
   // --------------------------------------------------------------- q223
   /** Power-iteration top principal component
@@ -7543,36 +7445,19 @@ object ExtensionQueries {
     VectorOps.powerComponent(
       Tables.embeddings(spark, dir), "embedding", dim = 64, iters = 3)
 
-  val q223Sql: String = {
-    val dim = 64
-    def xj(j: Int) = s"CAST(v[${j + 1}] AS DOUBLE)"
-    // one power pass: per-row projection t onto wExpr, exact per-dim
-    // re-accumulation, L2 normalize + round-6 resync
-    def pass(k: Int, wExpr: Int => String, wFrom: String): String = {
-      val tChain = (0 until dim)
-        .map(j => s"(${xj(j)} - m.mu[${j + 1}]) * ${wExpr(j)}")
-        .mkString(" + ")
-      s"""t$k AS (
-         | SELECT v, $tChain AS t FROM e, m$wFrom),
-         |u$k AS (
-         | SELECT i, CAST(SUM(CAST(round(
-         |   (CAST(v[i + 1] AS DOUBLE) - m.mu[i + 1]) * t, 9)
-         |   AS DECIMAL(38,9))) AS DOUBLE) AS u
-         | FROM (SELECT v, t, unnest(generate_series(0, ${dim - 1})) AS i
-         |       FROM t$k), m
-         | GROUP BY i),
-         |w$k AS (
-         | SELECT list_transform(ul, x -> round(x / lam, 6)) AS w, lam
-         | FROM (SELECT list(u / nn.n ORDER BY i) AS ul,
-         |        sqrt(list_sum(list((u / nn.n) * (u / nn.n) ORDER BY i)))
-         |         AS lam
-         |       FROM u$k, nn))""".stripMargin
-    }
-    s"""WITH e AS (
+  private val powerDim = 64
+
+  /** The power-iteration replay of q223 and q240 up to the first pass:
+    * the valid vectors `e`, their count `nn`, exact per-dim sums `b`,
+    * and the mean vector `mu` with the total variance `tv` (`m`);
+    * `mat` (" MATERIALIZED" or "") pins `nn` and `m`.
+    */
+  private def powerStatsSql(mat: String): String =
+    s"""e AS (
        | SELECT embedding AS v FROM embeddings
-       | WHERE embedding IS NOT NULL AND len(embedding) = $dim
+       | WHERE embedding IS NOT NULL AND len(embedding) = $powerDim
        |  AND len(list_filter(embedding, x -> x IS NULL)) = 0),
-       |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM e),
+       |nn AS$mat (SELECT CAST(count(*) AS DOUBLE) AS n FROM e),
        |b AS (
        | SELECT i,
        |  CAST(SUM(CAST(round(CAST(v[i + 1] AS DOUBLE), 9)
@@ -7580,21 +7465,53 @@ object ExtensionQueries {
        |  CAST(SUM(CAST(round(
        |    CAST(v[i + 1] AS DOUBLE) * CAST(v[i + 1] AS DOUBLE), 9)
        |    AS DECIMAL(38,9))) AS DOUBLE) AS sq
-       | FROM (SELECT v, unnest(generate_series(0, ${dim - 1})) AS i FROM e)
+       | FROM (SELECT v, unnest(generate_series(0, ${powerDim - 1})) AS i FROM e)
        | GROUP BY i),
-       |m AS (
+       |m AS$mat (
        | SELECT list(sx / nn.n ORDER BY i) AS mu,
        |  list_sum(list(sq / nn.n - (sx / nn.n) * (sx / nn.n) ORDER BY i))
        |   AS tv
-       | FROM b, nn),
-       |${pass(1, _ => "0.125", "")},
-       |${pass(2, j => s"w1.w[${j + 1}]", ", w1")},
-       |${pass(3, j => s"w2.w[${j + 1}]", ", w2")}
+       | FROM b, nn)""".stripMargin
+
+  /** Power pass `k` from direction `w<k-1>`, or from the uniform start
+    * 0.125 = 1/√64 on a `restart`: the per-row projection `t<k>` and
+    * the exact per-dim re-accumulation `u<k>`.
+    */
+  private def powerPassSql(k: Int, restart: Boolean): String = {
+    def w(j: Int) = if (restart) "0.125" else s"w${k - 1}.w[${j + 1}]"
+    val wFrom = if (restart) "" else s", w${k - 1}"
+    val tChain = (0 until powerDim)
+      .map(j => s"(CAST(v[${j + 1}] AS DOUBLE) - m.mu[${j + 1}]) * ${w(j)}")
+      .mkString(" + ")
+    s"""t$k AS (
+       | SELECT v, $tChain AS t FROM e, m$wFrom),
+       |u$k AS (
+       | SELECT i, CAST(SUM(CAST(round(
+       |   (CAST(v[i + 1] AS DOUBLE) - m.mu[i + 1]) * t, 9)
+       |   AS DECIMAL(38,9))) AS DOUBLE) AS u
+       | FROM (SELECT v, t, unnest(generate_series(0, ${powerDim - 1})) AS i
+       |       FROM t$k), m
+       | GROUP BY i)""".stripMargin
+  }
+
+  /** `w<k>`: `u<k>` L2-normalized, resynced to 6 decimals, with its
+    * norm `lam`; `mat` as in [[powerStatsSql]].
+    */
+  private def powerNormSql(k: Int, mat: String): String =
+    s"""w$k AS$mat (
+       | SELECT list_transform(ul, x -> round(x / lam, 6)) AS w, lam
+       | FROM (SELECT list(u / nn.n ORDER BY i) AS ul,
+       |        sqrt(list_sum(list((u / nn.n) * (u / nn.n) ORDER BY i)))
+       |         AS lam
+       |       FROM u$k, nn))""".stripMargin
+
+  val q223Sql: String =
+    s"""WITH ${powerStatsSql("")},
+       |${(1 to 3).map(k => s"${powerPassSql(k, k == 1)},\n${powerNormSql(k, "")}").mkString(",\n")}
        |SELECT CAST(i AS INT) AS i, w3.w[i + 1] AS loading,
        | w3.lam AS eigenvalue, w3.lam / m.tv AS var_share
-       |FROM (SELECT unnest(generate_series(0, ${dim - 1})) AS i), w3, m"""
+       |FROM (SELECT unnest(generate_series(0, ${powerDim - 1})) AS i), w3, m"""
       .stripMargin
-  }
 
   // --------------------------------------------------------------- q224
   /** ε-DP noisy source counts ([[graft.ops.ProfileOps.dpCounts]],
@@ -7608,12 +7525,12 @@ object ExtensionQueries {
       epsilon = 0.5, salt = "dp")
 
   val q224Sql: String =
-    """WITH g AS (
+    s"""WITH g AS (
       | SELECT source, CAST(count(*) AS BIGINT) AS n
       | FROM documents GROUP BY 1),
       |u AS (
       | SELECT source, n,
-      |  CAST('0x' || substr(md5(source || '#' || 'dp'), 1, 15) AS BIGINT)
+      |  ${md5LongSql("source || '#' || 'dp'")}
       |   / 1152921504606846976.0 AS u
       | FROM g)
       |SELECT source,
@@ -7640,21 +7557,11 @@ object ExtensionQueries {
       when(flesch >= 60.0, "good").otherwise("bad"))
   }
 
-  val q225Sql: String = {
-    val enWords = TextAnalysis.stopwords.toMap.apply("en")
-      .map(w => s"'$w'").mkString("[", ", ", "]")
-    s"""WITH t AS (
-       | SELECT doc_id, text,
-       |  list_filter(string_split(text, ' '), x -> x <> '') AS toks
-       | FROM documents WHERE text IS NOT NULL AND len(text) > 0),
+  val q225Sql: String =
+    s"""WITH $qualityToksSql,
        |sig AS (
        | SELECT doc_id,
-       |  least(len(toks) / 20.0, 1.0) * 0.4
-       |   + greatest(0.0, 1.0 -
-       |      (CAST(len(text) - len(regexp_replace(text, '[^A-Za-z0-9 ]', '', 'g')) AS DOUBLE)
-       |       / len(text)) * 4.0) * 0.4
-       |   + least((CAST(len(list_filter(toks, tk -> list_contains($enWords, tk))) AS DOUBLE)
-       |      / len(toks)) * 5.0, 1.0) * 0.2 AS quality,
+       |  $qualitySql,
        |  CAST(len(toks) AS INT) AS n_words,
        |  CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS INT)
        |   AS n_sentences,
@@ -7691,7 +7598,6 @@ object ExtensionQueries {
        |  CAST(pe_num AS DOUBLE)
        |   / (CAST(tot.n AS DOUBLE) * CAST(tot.n AS DOUBLE)) AS pe
        | FROM tot, pe)""".stripMargin
-  }
 
   // --------------------------------------------------------------- q226
   /** Tokenizer fertility ([[graft.ops.BpeOps.bpeFertility]], 3 BPE
@@ -7705,27 +7611,7 @@ object ExtensionQueries {
     BpeOps.bpeFertility(Tables.documents(spark, dir), "text", "lang",
       numMerges = 3)
 
-  val q226Sql: String = {
-    // q221's training round, with `word` carried through the fold
-    def round(k: Int): String = {
-      val prev = s"s${k - 1}"
-      s"""p$k AS (
-         | SELECT l[i] AS a, l[i + 1] AS b, CAST(SUM(n) AS BIGINT) AS cnt
-         | FROM (SELECT n, string_split(s, ' ') AS l FROM $prev) t,
-         |      unnest(range(1, len(l))) u(i)
-         | GROUP BY 1, 2),
-         |m$k AS (
-         | SELECT a, b, cnt FROM p$k WHERE cnt >= 2
-         | ORDER BY cnt DESC, a, b LIMIT 1),
-         |s$k AS (
-         | SELECT word, n, list_reduce(string_split(s, ' '), (acc, x) ->
-         |   CASE WHEN (acc = m.a OR
-         |              right(acc, length(m.a) + 1) = ' ' || m.a)
-         |             AND x = m.b
-         |        THEN substr(acc, 1, length(acc) - length(m.a)) || m.a || m.b
-         |        ELSE acc || ' ' || x END) AS s
-         | FROM $prev CROSS JOIN m$k m)""".stripMargin
-    }
+  val q226Sql: String =
     s"""WITH wds AS (
        | SELECT lang,
        |  unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS word
@@ -7735,9 +7621,7 @@ object ExtensionQueries {
        | SELECT word, n,
        |  array_to_string(regexp_split_to_array(word, ''), ' ') AS s
        | FROM v),
-       |${round(1)},
-       |${round(2)},
-       |${round(3)},
+       |${(1 to 3).map(bpeRoundSql(_, "word, ")).mkString(",\n")},
        |tk AS (
        | SELECT word, CAST(len(string_split(s, ' ')) AS BIGINT) AS n_tok,
        |  CAST(length(word) AS BIGINT) AS n_chr
@@ -7750,7 +7634,6 @@ object ExtensionQueries {
        |  AS chars_per_token
        |FROM wds JOIN tk USING (word)
        |GROUP BY 1""".stripMargin
-  }
 
   // --------------------------------------------------------------- q227
   /** Fairness audit ([[graft.ops.EvalMetrics.fairnessAudit]]) of the
@@ -7816,14 +7699,7 @@ object ExtensionQueries {
   }
 
   val q228Sql: String =
-    """WITH toks AS (
-      | SELECT doc_id, list_filter(string_split(text, ' '), tk -> tk <> '') AS tk
-      | FROM documents),
-      |grams AS (
-      | SELECT doc_id, CASE WHEN len(tk) < 3 THEN []
-      |   ELSE list_transform(generate_series(1, len(tk) - 2),
-      |     i -> array_to_string(tk[i : i+2], ' ')) END AS gs
-      | FROM toks),
+    s"""WITH $trigramsSql,
       |ev AS (
       | SELECT DISTINCT doc_id, g FROM (
       |  SELECT doc_id, unnest(gs) AS g FROM grams WHERE doc_id % 20 = 0)),
@@ -7846,6 +7722,63 @@ object ExtensionQueries {
       |LEFT JOIN per p USING (doc_id)""".stripMargin
 
   // --------------------------------------------------------------- q229
+  /** `name`: the vectors of `from` as `emb` = `emb` (the full vector or
+    * a slice) with its L2 norm `nrm`.
+    */
+  private def embNormSql(name: String, emb: String, from: String): String =
+    s"""$name AS (
+       | SELECT vec_id, $emb AS emb,
+       |  sqrt(list_sum(list_transform($emb,
+       |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
+       | FROM $from)""".stripMargin
+
+  /** `name`: the exact cosine of each (query, neighbor) pair of `src`
+    * (an [[embNormSql]] relation) that the join condition `on` keeps.
+    */
+  private def cosinePairsSql(name: String, src: String, on: String): String =
+    s"""$name AS (
+       | SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
+       |  list_sum(list_transform(generate_series(1, len(a.emb)),
+       |    i -> CAST(a.emb[i] AS DOUBLE) * CAST(b.emb[i] AS DOUBLE)))
+       |   / (a.nrm * b.nrm) AS cosine
+       | FROM $src a JOIN $src b$on)""".stripMargin
+
+  /** `name`: the `k` best neighbors of each query in `from` by (cosine
+    * DESC, neighbor_id), as the columns `cols`.
+    */
+  private def topRankedSql(name: String, from: String, cols: String, k: Int): String =
+    s"""$name AS (
+       | SELECT $cols FROM (
+       |  SELECT query_id, neighbor_id, ROW_NUMBER() OVER (
+       |   PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rnk
+       |  FROM $from) WHERE rnk <= $k)""".stripMargin
+
+  /** `out`: the exact top-5 of the query vectors (vec_id < 20) of
+    * `src`, via the pair cosines `<out>c`.
+    */
+  private def top5Sql(src: String, out: String, cols: String): String =
+    s"""${cosinePairsSql(out + "c", src, " ON a.vec_id < 20 AND b.vec_id <> a.vec_id")},
+       |${topRankedSql(out, out + "c", cols, 5)}""".stripMargin
+
+  /** Brute cosine top-5 of the query vectors (vec_id < 20) on the full
+    * embeddings and on their first 16 dims — q229, q241 and q245.
+    */
+  private def fullAndTruncatedTop5(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val e = Tables.embeddings(spark, dir)
+    val full = SimilarityOps.bruteCosineTopK(e.filter(col("vec_id") < 20), e, 5)
+    val t = e.select(col("vec_id"), slice(col("embedding"), 1, 16).as("embedding"))
+    (full, SimilarityOps.bruteCosineTopK(t.filter(col("vec_id") < 20), t, 5))
+  }
+
+  /** [[fullAndTruncatedTop5]] in DuckDB: the full-dim `f` and the
+    * first-16-dim `t` rankings with the columns `cols`.
+    */
+  private def fullVsTruncatedSql(cols: String): String =
+    s"""${embNormSql("ef", "embedding", "embeddings")},
+       |${embNormSql("et", "embedding[1:16]", "embeddings")},
+       |${top5Sql("ef", "f", cols)},
+       |${top5Sql("et", "t", cols)}""".stripMargin
+
   /** Truncated-dimension retrieval recall (the Matryoshka-embedding
     * evaluation): brute top-5 on the first 16 of 64 dims, scored by
     * [[graft.ops.SimilarityOps.annRecall]] against the full-dim
@@ -7854,39 +7787,12 @@ object ExtensionQueries {
     * and counts the overlap as integers.
     */
   def q229(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val full = SimilarityOps.bruteCosineTopK(e.filter(col("vec_id") < 20), e, 5)
-    val t = e.select(col("vec_id"), slice(col("embedding"), 1, 16).as("embedding"))
-    val trunc =
-      SimilarityOps.bruteCosineTopK(t.filter(col("vec_id") < 20), t, 5)
+    val (full, trunc) = fullAndTruncatedTop5(spark, dir)
     SimilarityOps.annRecall(full, trunc, k = 5)
   }
 
-  val q229Sql: String = {
-    def ranking(src: String, out: String): String =
-      s"""${out}c AS (
-         | SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         |  list_sum(list_transform(generate_series(1, len(a.emb)),
-         |    i -> CAST(a.emb[i] AS DOUBLE) * CAST(b.emb[i] AS DOUBLE)))
-         |   / (a.nrm * b.nrm) AS cosine
-         | FROM $src a JOIN $src b ON a.vec_id < 20 AND b.vec_id <> a.vec_id),
-         |$out AS (
-         | SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id, ROW_NUMBER() OVER (
-         |   PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rnk
-         |  FROM ${out}c) WHERE rnk <= 5)""".stripMargin
-    s"""WITH ef AS (
-       | SELECT vec_id, embedding AS emb,
-       |  sqrt(list_sum(list_transform(embedding,
-       |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-       | FROM embeddings),
-       |et AS (
-       | SELECT vec_id, embedding[1:16] AS emb,
-       |  sqrt(list_sum(list_transform(embedding[1:16],
-       |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-       | FROM embeddings),
-       |${ranking("ef", "f")},
-       |${ranking("et", "t")},
+  val q229Sql: String =
+    s"""WITH ${fullVsTruncatedSql("query_id, neighbor_id")},
        |ov AS (
        | SELECT f.query_id, CAST(count(*) AS BIGINT) AS n_kept
        | FROM f JOIN t USING (query_id, neighbor_id) GROUP BY 1)
@@ -7894,7 +7800,6 @@ object ExtensionQueries {
        | CAST(coalesce(ov.n_kept, 0) AS DOUBLE) / 5.0 AS recall_at_k
        |FROM (SELECT DISTINCT query_id FROM f) q
        |LEFT JOIN ov USING (query_id)""".stripMargin
-  }
 
   // --------------------------------------------------------------- q230
   /** Content-defined chunking dup census
@@ -7997,25 +7902,40 @@ object ExtensionQueries {
     StatsOps.poissonBootstrapCI(Tables.events(spark, dir),
       "value", "event_id", reps = 40, seed = "boot", alpha = 0.05)
 
-  val q232Sql: String = {
-    val cdf = StatsOps.poisson1Cdf
-    val caseW = cdf.zipWithIndex
-      .map { case (t, k) => s"WHEN u < $t THEN $k" }
-      .mkString("CASE ", " ", " ELSE 6 END")
-    s"""WITH e AS (
-       | SELECT CAST(event_id AS VARCHAR) AS k, value AS v FROM events
-       | WHERE value IS NOT NULL),
-       |t AS (
+  /** A replicate weight: the Poisson(1) inverse CDF
+    * ([[graft.ops.StatsOps.poisson1Cdf]]) at the md5 uniform `u`.
+    */
+  private val poissonWeightSql: String = StatsOps.poisson1Cdf.zipWithIndex
+    .map { case (t, k) => s"WHEN u < $t THEN $k" }
+    .mkString("CASE ", " ", " ELSE 6 END")
+
+  /** The md5 key of row `k`'s draw in replicate `b` under `seed`. Like
+    * [[bootstrapSql]] it keeps its margin for the caller's stripMargin:
+    * its second line starts with `||`, which a second stripMargin
+    * would cut.
+    */
+  private def bootstrapKeySql(seed: String): String =
+    s"""k || '#' || CAST(b AS VARCHAR)
+       |    || '#' || '$seed'"""
+
+  /** The B = 40 Poisson bootstrap of the mean of `from` (k, v): the
+    * count and exact sum `total`, the md5 draws `d` under `seed`, the
+    * weights `w`, replicate sums `m`, the sorted replicate means `mm`
+    * and the order-statistic inputs `st` — q232, q241 and
+    * [[retrievalStackTailSql]]. Interpolate it into a stripMargin'd
+    * string, which strips its margin once.
+    */
+  private def bootstrapSql(total: String, from: String, seed: String): String =
+    s"""$total AS (
        | SELECT CAST(count(*) AS BIGINT) AS n,
        |  CAST(SUM(CAST(round(v, 9) AS DECIMAL(38,9))) AS DOUBLE) AS sv
-       | FROM e),
+       | FROM $from),
        |d AS (
        | SELECT b, v,
-       |  CAST('0x' || substr(md5(k || '#' || CAST(b AS VARCHAR)
-       |    || '#' || 'boot'), 1, 15) AS BIGINT)
+       |  ${md5LongSql(bootstrapKeySql(seed))}
        |   / 1152921504606846976.0 AS u
-       | FROM e, range(0, 40) r(b)),
-       |w AS (SELECT b, v, $caseW AS w FROM d),
+       | FROM $from, range(0, 40) r(b)),
+       |w AS (SELECT b, v, $poissonWeightSql AS w FROM d),
        |m AS (
        | SELECT b,
        |  CAST(SUM(CAST(round(CAST(w AS DOUBLE) * v, 9) AS DECIMAL(38,9)))
@@ -8027,15 +7947,24 @@ object ExtensionQueries {
        | SELECT ms, len(ms) AS nb,
        |  CAST(floor(0.025 * (len(ms) - 1)) AS INT) AS kk,
        |  list_sum(ms) / len(ms) AS mb
-       | FROM mm)
-       |SELECT t.n, t.sv / t.n AS mean,
+       | FROM mm)"""
+
+  /** The percentile CI row over [[bootstrapSql]]'s `total` and `st`. */
+  private def bootstrapCiSql(total: String): String =
+    s"""SELECT $total.n, $total.sv / $total.n AS mean,
        | st.ms[st.kk + 1] AS boot_lo,
        | st.ms[st.nb - st.kk] AS boot_hi,
        | CASE WHEN st.nb > 1 THEN
        |  sqrt(list_sum(list_transform(st.ms, x -> (x - st.mb) * (x - st.mb)))
        |   / (st.nb - 1)) ELSE 0.0 END AS boot_se
-       |FROM t, st""".stripMargin
-  }
+       |FROM $total, st""".stripMargin
+
+  val q232Sql: String =
+    s"""WITH e AS (
+       | SELECT CAST(event_id AS VARCHAR) AS k, value AS v FROM events
+       | WHERE value IS NOT NULL),
+       |${bootstrapSql("t", "e", "boot")}
+       |${bootstrapCiSql("t")}""".stripMargin
 
   // --------------------------------------------------------------- q233
   /** Label-noise screen ([[graft.ops.EvalMetrics.labelDisagreement]]
@@ -8051,21 +7980,12 @@ object ExtensionQueries {
   }
 
   val q233Sql: String =
-    """WITH e AS (SELECT vec_id, label, embedding,
+    s"""WITH e AS (SELECT vec_id, label, embedding,
       |  sqrt(list_sum(list_transform(embedding,
       |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
       | FROM embeddings),
-      |c AS (
-      | SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-      |  list_sum(list_transform(generate_series(1, len(a.embedding)),
-      |    i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-      |   / (a.nrm * b.nrm) AS cosine
-      | FROM e a JOIN e b ON a.vec_id < 30 AND b.vec_id <> a.vec_id),
-      |r AS (
-      | SELECT query_id, neighbor_id FROM (
-      |  SELECT query_id, neighbor_id, ROW_NUMBER() OVER (
-      |   PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rnk
-      |  FROM c) WHERE rnk <= 5)
+      |${bruteCosineSql(30)}),
+      |${topRankedSql("r", "c", "query_id, neighbor_id", 5)}
       |SELECT r.query_id, ql.label,
       | CAST(count(*) AS BIGINT) AS n_neighbors,
       | CAST(SUM(CASE WHEN nl.label <> ql.label THEN 1 ELSE 0 END) AS BIGINT)
@@ -8206,10 +8126,7 @@ object ExtensionQueries {
       "event_type", "value", "event_id", reps = 40, seed = "boot",
       alpha = 0.05)
 
-  val q237Sql: String = {
-    val caseW = StatsOps.poisson1Cdf.zipWithIndex
-      .map { case (t, k) => s"WHEN u < $t THEN $k" }
-      .mkString("CASE ", " ", " ELSE 6 END")
+  val q237Sql: String =
     s"""WITH e AS (
        | SELECT event_type AS g, CAST(event_id AS VARCHAR) AS k, value AS v
        | FROM events WHERE value IS NOT NULL),
@@ -8220,11 +8137,10 @@ object ExtensionQueries {
        | FROM e GROUP BY 1),
        |d AS (
        | SELECT g, v, b,
-       |  CAST('0x' || substr(md5(k || '#' || CAST(b AS VARCHAR)
-       |    || '#' || 'boot'), 1, 15) AS BIGINT)
+       |  ${md5LongSql(bootstrapKeySql("boot"))}
        |   / 1152921504606846976.0 AS u
        | FROM e, range(0, 40) r(b)),
-       |w AS (SELECT g, b, v, $caseW AS w FROM d),
+       |w AS (SELECT g, b, v, $poissonWeightSql AS w FROM d),
        |m AS (
        | SELECT g, b,
        |  CAST(SUM(CAST(round(CAST(w AS DOUBLE) * v, 9) AS DECIMAL(38,9)))
@@ -8245,7 +8161,6 @@ object ExtensionQueries {
        |  sqrt(list_sum(list_transform(st.ms, x -> (x - st.mb) * (x - st.mb)))
        |   / (st.nb - 1)) ELSE 0.0 END AS boot_se
        |FROM pt JOIN st ON pt.g = st.g""".stripMargin
-  }
 
   // --------------------------------------------------------------- q238
   /** Quantile normalization ([[graft.ops.StatsOps.quantileNormalize]])
@@ -8297,7 +8212,7 @@ object ExtensionQueries {
   }
 
   val q239Sql: String = {
-    val curve = minhashPairCtes.replace(">= 0.6", ">= 0.5")
+    val curve = minhashPairCtes(0.5)
     val rows = Seq(0.5, 0.6, 0.7, 0.8, 0.9).map(t =>
       s"SELECT CAST($t AS DOUBLE) AS threshold, CAST(SUM(CASE WHEN" +
         s" jaccard >= $t THEN 1 ELSE 0 END) AS BIGINT) AS n_pairs" +
@@ -8326,85 +8241,36 @@ object ExtensionQueries {
       Tables.embeddings(spark, dir), "embedding", dim = 64, iters = 3)
 
   val q240Sql: String = {
-    val dim = 64
-    def xj(j: Int) = s"CAST(v[${j + 1}] AS DOUBLE)"
-    // one power pass: per-row projection t onto wExpr, exact per-dim
-    // re-accumulation, optional Hotelling deflation against the
-    // MATERIALIZED final component-1 direction, L2 normalize +
-    // round-6 resync
-    def pass(k: Int, wExpr: Int => String, wFrom: String,
-        deflate: Option[String]): String = {
-      val tChain = (0 until dim)
-        .map(j => s"(${xj(j)} - m.mu[${j + 1}]) * ${wExpr(j)}")
+    // passes 4-6 deflate against the MATERIALIZED final component-1
+    // direction w3
+    def deflated(k: Int): String = {
+      // dot as an explicit left-to-right chain (driver parity)
+      val dotChain = (0 until powerDim)
+        .map(j => if (k == 4) s"w3.w[${j + 1}] * 0.125" else s"w3.w[${j + 1}] * w${k - 1}.w[${j + 1}]")
         .mkString(" + ")
-      val core =
-        s"""t$k AS (
-           | SELECT v, $tChain AS t FROM e, m$wFrom),
-           |u$k AS (
-           | SELECT i, CAST(SUM(CAST(round(
-           |   (CAST(v[i + 1] AS DOUBLE) - m.mu[i + 1]) * t, 9)
-           |   AS DECIMAL(38,9))) AS DOUBLE) AS u
-           | FROM (SELECT v, t, unnest(generate_series(0, ${dim - 1})) AS i
-           |       FROM t$k), m
-           | GROUP BY i)"""
-      deflate match {
-        case None =>
-          s"""$core,
-             |w$k AS MATERIALIZED (
-             | SELECT list_transform(ul, x -> round(x / lam, 6)) AS w, lam
-             | FROM (SELECT list(u / nn.n ORDER BY i) AS ul,
-             |        sqrt(list_sum(list((u / nn.n) * (u / nn.n) ORDER BY i)))
-             |         AS lam
-             |       FROM u$k, nn))""".stripMargin
-        case Some(wd) =>
-          // dot as an explicit left-to-right chain (driver parity)
-          val dotChain = (0 until dim)
-            .map(j => s"$wd.w[${j + 1}] * ${wExpr(j)}")
-            .mkString(" + ")
-          s"""$core,
-             |d$k AS MATERIALIZED (
-             | SELECT $dotChain AS dot FROM $wd$wFrom),
-             |w$k AS MATERIALIZED (
-             | SELECT list_transform(ul, x -> round(x / lam, 6)) AS w, lam
-             | FROM (SELECT list(ud ORDER BY i) AS ul,
-             |        sqrt(list_sum(list(ud * ud ORDER BY i))) AS lam
-             |       FROM (SELECT i,
-             |              u / nn.n - ($wd.lam * d$k.dot) * $wd.w[i + 1]
-             |               AS ud
-             |             FROM u$k, nn, $wd, d$k)))""".stripMargin
-      }
+      val wFrom = if (k == 4) "" else s", w${k - 1}"
+      s"""${powerPassSql(k, k == 4)},
+         |d$k AS MATERIALIZED (
+         | SELECT $dotChain AS dot FROM w3$wFrom),
+         |w$k AS MATERIALIZED (
+         | SELECT list_transform(ul, x -> round(x / lam, 6)) AS w, lam
+         | FROM (SELECT list(ud ORDER BY i) AS ul,
+         |        sqrt(list_sum(list(ud * ud ORDER BY i))) AS lam
+         |       FROM (SELECT i,
+         |              u / nn.n - (w3.lam * d$k.dot) * w3.w[i + 1]
+         |               AS ud
+         |             FROM u$k, nn, w3, d$k)))""".stripMargin
     }
     def outRow(c: Int, wk: String): String =
       s"""SELECT CAST($c AS INT) AS component, CAST(i AS INT) AS i,
          | $wk.w[i + 1] AS loading, $wk.lam AS eigenvalue,
          | $wk.lam / m.tv AS var_share
-         |FROM (SELECT unnest(generate_series(0, ${dim - 1})) AS i), $wk, m"""
+         |FROM (SELECT unnest(generate_series(0, ${powerDim - 1})) AS i), $wk, m"""
         .stripMargin
-    s"""WITH e AS (
-       | SELECT embedding AS v FROM embeddings
-       | WHERE embedding IS NOT NULL AND len(embedding) = $dim
-       |  AND len(list_filter(embedding, x -> x IS NULL)) = 0),
-       |nn AS MATERIALIZED (SELECT CAST(count(*) AS DOUBLE) AS n FROM e),
-       |b AS (
-       | SELECT i,
-       |  CAST(SUM(CAST(round(CAST(v[i + 1] AS DOUBLE), 9)
-       |    AS DECIMAL(38,9))) AS DOUBLE) AS sx,
-       |  CAST(SUM(CAST(round(
-       |    CAST(v[i + 1] AS DOUBLE) * CAST(v[i + 1] AS DOUBLE), 9)
-       |    AS DECIMAL(38,9))) AS DOUBLE) AS sq
-       | FROM (SELECT v, unnest(generate_series(0, ${dim - 1})) AS i FROM e)
-       | GROUP BY i),
-       |m AS MATERIALIZED (
-       | SELECT list(sx / nn.n ORDER BY i) AS mu,
-       |  list_sum(list(sq / nn.n - (sx / nn.n) * (sx / nn.n) ORDER BY i))
-       |   AS tv
-       | FROM b, nn),
-       |${pass(1, _ => "0.125", "", None)},
-       |${pass(2, j => s"w1.w[${j + 1}]", ", w1", None)},
-       |${pass(3, j => s"w2.w[${j + 1}]", ", w2", None)},
-       |${pass(4, _ => "0.125", "", Some("w3"))},
-       |${pass(5, j => s"w4.w[${j + 1}]", ", w4", Some("w3"))},
-       |${pass(6, j => s"w5.w[${j + 1}]", ", w5", Some("w3"))}
+    val mat = " MATERIALIZED"
+    s"""WITH ${powerStatsSql(mat)},
+       |${(1 to 3).map(k => s"${powerPassSql(k, k == 1)},\n${powerNormSql(k, mat)}").mkString(",\n")},
+       |${(4 to 6).map(deflated).mkString(",\n")}
        |${outRow(1, "w3")}
        |UNION ALL
        |${outRow(2, "w6")}""".stripMargin
@@ -8428,45 +8294,12 @@ object ExtensionQueries {
     SimilarityOps.mmrRerank(cands, e, k = 5, lambdaRel = 0.5)
   }
 
-  val q242Sql: String = {
-    def step(i: Int): String =
-      s"""m$i AS (
-         | SELECT p.query_id, p.neighbor_id, p.cosine, max(ps.sim) AS msim
-         | FROM pool p
-         | JOIN ps ON ps.query_id = p.query_id AND ps.a = p.neighbor_id
-         | JOIN sU${i - 1} s ON s.query_id = ps.query_id
-         |  AND s.neighbor_id = ps.b
-         | WHERE NOT EXISTS (SELECT 1 FROM sU${i - 1} x
-         |   WHERE x.query_id = p.query_id
-         |    AND x.neighbor_id = p.neighbor_id)
-         | GROUP BY 1, 2, 3),
-         |sel$i AS MATERIALIZED (
-         | SELECT query_id, neighbor_id, $i AS mmr_rank,
-         |  cosine AS relevance,
-         |  0.5 * cosine - 0.5 * msim AS mmr_score
-         | FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |   ORDER BY 0.5 * cosine - 0.5 * msim DESC, neighbor_id) AS rnk
-         |  FROM m$i) WHERE rnk = 1),
-         |sU$i AS MATERIALIZED (
-         | SELECT * FROM sU${i - 1}
-         | UNION ALL SELECT query_id, neighbor_id FROM sel$i)""".stripMargin
-    s"""WITH ef AS (
-       | SELECT vec_id, embedding AS emb,
-       |  sqrt(list_sum(list_transform(embedding,
-       |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-       | FROM embeddings),
-       |fc AS (
-       | SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-       |  list_sum(list_transform(generate_series(1, len(a.emb)),
-       |    i -> CAST(a.emb[i] AS DOUBLE) * CAST(b.emb[i] AS DOUBLE)))
-       |   / (a.nrm * b.nrm) AS cosine
-       | FROM ef a JOIN ef b ON a.vec_id < 20 AND b.vec_id <> a.vec_id),
-       |pool AS MATERIALIZED (
-       | SELECT query_id, neighbor_id, cosine FROM (
-       |  SELECT query_id, neighbor_id, cosine, ROW_NUMBER() OVER (
-       |   PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rnk
-       |  FROM fc) WHERE rnk <= 10),
-       |ps AS MATERIALIZED (
+  /** `ps`: the full-dim cosine (over `ef`) of each ordered pair of
+    * distinct candidates in one query's `pool` — q242 and
+    * [[retrievalStackTailSql]].
+    */
+  private val poolSimSql: String =
+    """ps AS MATERIALIZED (
        | SELECT p1.query_id, p1.neighbor_id AS a, p2.neighbor_id AS b,
        |  list_sum(list_transform(generate_series(1, len(ea.emb)),
        |    i -> CAST(ea.emb[i] AS DOUBLE) * CAST(eb.emb[i] AS DOUBLE)))
@@ -8474,7 +8307,43 @@ object ExtensionQueries {
        | FROM pool p1 JOIN pool p2 ON p2.query_id = p1.query_id
        |  AND p2.neighbor_id <> p1.neighbor_id
        | JOIN ef ea ON ea.vec_id = p1.neighbor_id
-       | JOIN ef eb ON eb.vec_id = p2.neighbor_id),
+       | JOIN ef eb ON eb.vec_id = p2.neighbor_id)""".stripMargin
+
+  /** MMR greedy step `i` (λ = 0.5) over `pool` and `ps`: each
+    * unselected candidate's max similarity `msim` to the selected set
+    * `sU<i-1>` (`m<i>`), the step's pick `sel<i>` (query, neighbor,
+    * mmr_rank, then `scoreCols`), and the grown set `sU<i>`.
+    */
+  private def mmrStepSql(i: Int, scoreCols: String): String =
+    s"""m$i AS (
+       | SELECT p.query_id, p.neighbor_id, p.cosine, max(ps.sim) AS msim
+       | FROM pool p
+       | JOIN ps ON ps.query_id = p.query_id AND ps.a = p.neighbor_id
+       | JOIN sU${i - 1} s ON s.query_id = ps.query_id
+       |  AND s.neighbor_id = ps.b
+       | WHERE NOT EXISTS (SELECT 1 FROM sU${i - 1} x
+       |   WHERE x.query_id = p.query_id
+       |    AND x.neighbor_id = p.neighbor_id)
+       | GROUP BY 1, 2, 3),
+       |sel$i AS MATERIALIZED (
+       | SELECT query_id, neighbor_id, $i AS mmr_rank$scoreCols
+       | FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+       |   ORDER BY 0.5 * cosine - 0.5 * msim DESC, neighbor_id) AS rnk
+       |  FROM m$i) WHERE rnk = 1),
+       |sU$i AS MATERIALIZED (
+       | SELECT * FROM sU${i - 1}
+       | UNION ALL SELECT query_id, neighbor_id FROM sel$i)""".stripMargin
+
+  val q242Sql: String = {
+    val scoreCols = ",\n  cosine AS relevance,\n  0.5 * cosine - 0.5 * msim AS mmr_score"
+    s"""WITH ${embNormSql("ef", "embedding", "embeddings")},
+       |${cosinePairsSql("fc", "ef", " ON a.vec_id < 20 AND b.vec_id <> a.vec_id")},
+       |pool AS MATERIALIZED (
+       | SELECT query_id, neighbor_id, cosine FROM (
+       |  SELECT query_id, neighbor_id, cosine, ROW_NUMBER() OVER (
+       |   PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rnk
+       |  FROM fc) WHERE rnk <= 10),
+       |$poolSimSql,
        |sel1 AS MATERIALIZED (
        | SELECT query_id, neighbor_id, 1 AS mmr_rank, cosine AS relevance,
        |  0.5 * cosine AS mmr_score
@@ -8482,7 +8351,7 @@ object ExtensionQueries {
        |   ORDER BY 0.5 * cosine DESC, neighbor_id) AS rnk
        |  FROM pool) WHERE rnk = 1),
        |sU1 AS MATERIALIZED (SELECT query_id, neighbor_id FROM sel1),
-       |${(2 to 5).map(step).mkString(",\n")}
+       |${(2 to 5).map(mmrStepSql(_, scoreCols)).mkString(",\n")}
        |SELECT query_id, neighbor_id, CAST(mmr_rank AS INT) AS mmr_rank,
        | relevance, mmr_score
        |FROM (SELECT * FROM sel1 UNION ALL SELECT * FROM sel2
@@ -8574,47 +8443,18 @@ object ExtensionQueries {
     * round-then-DECIMAL log2-discount sums.
     */
   def q245(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val full = SimilarityOps.bruteCosineTopK(e.filter(col("vec_id") < 20), e, 5)
-    val t = e.select(col("vec_id"), slice(col("embedding"), 1, 16).as("embedding"))
-    val trunc =
-      SimilarityOps.bruteCosineTopK(t.filter(col("vec_id") < 20), t, 5)
+    val (full, trunc) = fullAndTruncatedTop5(spark, dir)
     SimilarityOps.retrievalMetrics(full, trunc, k = 5)
   }
 
-  val q245Sql: String = {
-    def ranking(src: String, out: String): String =
-      s"""${out}c AS (
-         | SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         |  list_sum(list_transform(generate_series(1, len(a.emb)),
-         |    i -> CAST(a.emb[i] AS DOUBLE) * CAST(b.emb[i] AS DOUBLE)))
-         |   / (a.nrm * b.nrm) AS cosine
-         | FROM $src a JOIN $src b ON a.vec_id < 20 AND b.vec_id <> a.vec_id),
-         |$out AS (
-         | SELECT query_id, neighbor_id, rnk FROM (
-         |  SELECT query_id, neighbor_id, ROW_NUMBER() OVER (
-         |   PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rnk
-         |  FROM ${out}c) WHERE rnk <= 5)""".stripMargin
-    val gain = (x: String) =>
-      s"1.0 / (ln(CAST($x AS DOUBLE) + 1.0) / ln(2.0))"
-    s"""WITH ef AS (
-       | SELECT vec_id, embedding AS emb,
-       |  sqrt(list_sum(list_transform(embedding,
-       |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-       | FROM embeddings),
-       |et AS (
-       | SELECT vec_id, embedding[1:16] AS emb,
-       |  sqrt(list_sum(list_transform(embedding[1:16],
-       |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-       | FROM embeddings),
-       |${ranking("ef", "f")},
-       |${ranking("et", "t")},
-       |nrel AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_rel
-       |         FROM f GROUP BY 1),
-       |hits AS (
-       | SELECT t.query_id, t.rnk AS r
-       | FROM t JOIN f USING (query_id, neighbor_id)),
-       |perq AS (
+  /** Over the hit ranks `hits` (query_id, r) and relevant counts
+    * `nrel`: per query the hits, first hit rank and exact-DECIMAL DCG
+    * (`perq`), and the ideal DCG at 5 (`ideal`) — q245 and
+    * [[retrievalStackTailSql]].
+    */
+  private val ndcgSql: String = {
+    def gain(x: String) = s"1.0 / (ln(CAST($x AS DOUBLE) + 1.0) / ln(2.0))"
+    s"""perq AS (
        | SELECT query_id, CAST(count(*) AS BIGINT) AS n_kept,
        |  min(r) AS fr,
        |  CAST(SUM(CAST(round(${gain("r")}, 9) AS DECIMAL(38,9)))
@@ -8626,14 +8466,23 @@ object ExtensionQueries {
        |   AS DOUBLE) AS idcg
        | FROM (SELECT query_id,
        |        unnest(generate_series(1, least(n_rel, 5))) AS i
-       |       FROM nrel) GROUP BY 1)
+       |       FROM nrel) GROUP BY 1)""".stripMargin
+  }
+
+  val q245Sql: String =
+    s"""WITH ${fullVsTruncatedSql("query_id, neighbor_id, rnk")},
+       |nrel AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_rel
+       |         FROM f GROUP BY 1),
+       |hits AS (
+       | SELECT t.query_id, t.rnk AS r
+       | FROM t JOIN f USING (query_id, neighbor_id)),
+       |$ndcgSql
        |SELECT n.query_id, coalesce(p.n_kept, 0) AS n_kept,
        | CAST(coalesce(p.n_kept, 0) AS DOUBLE) / 5.0 AS recall_at_k,
        | coalesce(1.0 / CAST(p.fr AS DOUBLE), 0.0) AS mrr,
        | coalesce(p.dcg, 0.0) / i.idcg AS ndcg
        |FROM nrel n JOIN ideal i USING (query_id)
        |LEFT JOIN perq p USING (query_id)""".stripMargin
-  }
 
   // --------------------------------------------------------------- q246
   /** Per-dimension standardization
@@ -8679,43 +8528,12 @@ object ExtensionQueries {
     * replicate sums, ascending-means order statistics).
     */
   def q241(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val full = SimilarityOps.bruteCosineTopK(e.filter(col("vec_id") < 20), e, 5)
-    val t = e.select(col("vec_id"), slice(col("embedding"), 1, 16).as("embedding"))
-    val trunc =
-      SimilarityOps.bruteCosineTopK(t.filter(col("vec_id") < 20), t, 5)
+    val (full, trunc) = fullAndTruncatedTop5(spark, dir)
     SimilarityOps.annRecallCI(full, trunc, k = 5)
   }
 
-  val q241Sql: String = {
-    val cdf = StatsOps.poisson1Cdf
-    val caseW = cdf.zipWithIndex
-      .map { case (t, k) => s"WHEN u < $t THEN $k" }
-      .mkString("CASE ", " ", " ELSE 6 END")
-    def ranking(src: String, out: String): String =
-      s"""${out}c AS (
-         | SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         |  list_sum(list_transform(generate_series(1, len(a.emb)),
-         |    i -> CAST(a.emb[i] AS DOUBLE) * CAST(b.emb[i] AS DOUBLE)))
-         |   / (a.nrm * b.nrm) AS cosine
-         | FROM $src a JOIN $src b ON a.vec_id < 20 AND b.vec_id <> a.vec_id),
-         |$out AS (
-         | SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id, ROW_NUMBER() OVER (
-         |   PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rnk
-         |  FROM ${out}c) WHERE rnk <= 5)""".stripMargin
-    s"""WITH ef AS (
-       | SELECT vec_id, embedding AS emb,
-       |  sqrt(list_sum(list_transform(embedding,
-       |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-       | FROM embeddings),
-       |et AS (
-       | SELECT vec_id, embedding[1:16] AS emb,
-       |  sqrt(list_sum(list_transform(embedding[1:16],
-       |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-       | FROM embeddings),
-       |${ranking("ef", "f")},
-       |${ranking("et", "t")},
+  val q241Sql: String =
+    s"""WITH ${fullVsTruncatedSql("query_id, neighbor_id")},
        |ov AS (
        | SELECT f.query_id, CAST(count(*) AS BIGINT) AS n_kept
        | FROM f JOIN t USING (query_id, neighbor_id) GROUP BY 1),
@@ -8724,37 +8542,8 @@ object ExtensionQueries {
        |  CAST(coalesce(ov.n_kept, 0) AS DOUBLE) / 5.0 AS v
        | FROM (SELECT DISTINCT query_id FROM f) q
        | LEFT JOIN ov USING (query_id)),
-       |tt AS (
-       | SELECT CAST(count(*) AS BIGINT) AS n,
-       |  CAST(SUM(CAST(round(v, 9) AS DECIMAL(38,9))) AS DOUBLE) AS sv
-       | FROM e),
-       |d AS (
-       | SELECT b, v,
-       |  CAST('0x' || substr(md5(k || '#' || CAST(b AS VARCHAR)
-       |    || '#' || 'annci'), 1, 15) AS BIGINT)
-       |   / 1152921504606846976.0 AS u
-       | FROM e, range(0, 40) r(b)),
-       |w AS (SELECT b, v, $caseW AS w FROM d),
-       |m AS (
-       | SELECT b,
-       |  CAST(SUM(CAST(round(CAST(w AS DOUBLE) * v, 9) AS DECIMAL(38,9)))
-       |   AS DOUBLE) AS s,
-       |  CAST(SUM(w) AS BIGINT) AS c
-       | FROM w GROUP BY b),
-       |mm AS (SELECT list(s / c ORDER BY s / c) AS ms FROM m WHERE c > 0),
-       |st AS (
-       | SELECT ms, len(ms) AS nb,
-       |  CAST(floor(0.025 * (len(ms) - 1)) AS INT) AS kk,
-       |  list_sum(ms) / len(ms) AS mb
-       | FROM mm)
-       |SELECT tt.n, tt.sv / tt.n AS mean,
-       | st.ms[st.kk + 1] AS boot_lo,
-       | st.ms[st.nb - st.kk] AS boot_hi,
-       | CASE WHEN st.nb > 1 THEN
-       |  sqrt(list_sum(list_transform(st.ms, x -> (x - st.mb) * (x - st.mb)))
-       |   / (st.nb - 1)) ELSE 0.0 END AS boot_se
-       |FROM tt, st""".stripMargin
-  }
+       |${bootstrapSql("tt", "e", "annci")}
+       |${bootstrapCiSql("tt")}""".stripMargin
 
   // --------------------------------------------------------------- q247
   /** END-TO-END RETRIEVAL-STACK ACCEPTANCE ROW — the composed pipeline
@@ -8823,87 +8612,27 @@ object ExtensionQueries {
     * the deployments they model.
     */
   private def retrievalStackTailSql: String = {
-    val cdf = StatsOps.poisson1Cdf
-    val caseW = cdf.zipWithIndex
-      .map { case (t, k) => s"WHEN u < $t THEN $k" }
-      .mkString("CASE ", " ", " ELSE 6 END")
-    val gain = (x: String) =>
-      s"1.0 / (ln(CAST($x AS DOUBLE) + 1.0) / ln(2.0))"
-    // q242's greedy step over THIS pool (relevance = -adc6)
-    def step(i: Int): String =
-      s"""m$i AS (
-         | SELECT p.query_id, p.neighbor_id, p.cosine, max(ps.sim) AS msim
-         | FROM pool p
-         | JOIN ps ON ps.query_id = p.query_id AND ps.a = p.neighbor_id
-         | JOIN sU${i - 1} s ON s.query_id = ps.query_id
-         |  AND s.neighbor_id = ps.b
-         | WHERE NOT EXISTS (SELECT 1 FROM sU${i - 1} x
-         |   WHERE x.query_id = p.query_id
-         |    AND x.neighbor_id = p.neighbor_id)
-         | GROUP BY 1, 2, 3),
-         |sel$i AS MATERIALIZED (
-         | SELECT query_id, neighbor_id, $i AS mmr_rank
-         | FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |   ORDER BY 0.5 * cosine - 0.5 * msim DESC, neighbor_id) AS rnk
-         |  FROM m$i) WHERE rnk = 1),
-         |sU$i AS MATERIALIZED (
-         | SELECT * FROM sU${i - 1}
-         | UNION ALL SELECT query_id, neighbor_id FROM sel$i)""".stripMargin
-    s"""ef AS (
-       | SELECT vec_id, embedding AS emb,
-       |  sqrt(list_sum(list_transform(embedding,
-       |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-       | FROM embeddings),
-       |ps AS MATERIALIZED (
-       | SELECT p1.query_id, p1.neighbor_id AS a, p2.neighbor_id AS b,
-       |  list_sum(list_transform(generate_series(1, len(ea.emb)),
-       |    i -> CAST(ea.emb[i] AS DOUBLE) * CAST(eb.emb[i] AS DOUBLE)))
-       |   / (ea.nrm * eb.nrm) AS sim
-       | FROM pool p1 JOIN pool p2 ON p2.query_id = p1.query_id
-       |  AND p2.neighbor_id <> p1.neighbor_id
-       | JOIN ef ea ON ea.vec_id = p1.neighbor_id
-       | JOIN ef eb ON eb.vec_id = p2.neighbor_id),
+    s"""${embNormSql("ef", "embedding", "embeddings")},
+       |$poolSimSql,
        |sel1 AS MATERIALIZED (
        | SELECT query_id, neighbor_id, 1 AS mmr_rank
        | FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
        |   ORDER BY 0.5 * cosine DESC, neighbor_id) AS rnk
        |  FROM pool) WHERE rnk = 1),
        |sU1 AS MATERIALIZED (SELECT query_id, neighbor_id FROM sel1),
-       |${(2 to 5).map(step).mkString(",\n")},
+       |${(2 to 5).map(mmrStepSql(_, "")).mkString(",\n")},
        |rr AS (
        | SELECT query_id, neighbor_id, mmr_rank AS r FROM (
        |  SELECT * FROM sel1 UNION ALL SELECT * FROM sel2
        |  UNION ALL SELECT * FROM sel3 UNION ALL SELECT * FROM sel4
        |  UNION ALL SELECT * FROM sel5)),
-       |fc AS (
-       | SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-       |  list_sum(list_transform(generate_series(1, len(a.emb)),
-       |    i -> CAST(a.emb[i] AS DOUBLE) * CAST(b.emb[i] AS DOUBLE)))
-       |   / (a.nrm * b.nrm) AS cosine
-       | FROM ef a JOIN ef b ON a.vec_id < 20 AND b.vec_id <> a.vec_id),
-       |f AS (
-       | SELECT query_id, neighbor_id FROM (
-       |  SELECT query_id, neighbor_id, ROW_NUMBER() OVER (
-       |   PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rnk
-       |  FROM fc) WHERE rnk <= 5),
+       |${top5Sql("ef", "f", "query_id, neighbor_id")},
        |nrel AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_rel
        |         FROM f GROUP BY 1),
        |hits AS (
        | SELECT rr.query_id, rr.r
        | FROM rr JOIN f USING (query_id, neighbor_id) WHERE rr.r <= 5),
-       |perq AS (
-       | SELECT query_id, CAST(count(*) AS BIGINT) AS n_kept,
-       |  min(r) AS fr,
-       |  CAST(SUM(CAST(round(${gain("r")}, 9) AS DECIMAL(38,9)))
-       |   AS DOUBLE) AS dcg
-       | FROM hits GROUP BY 1),
-       |ideal AS (
-       | SELECT query_id,
-       |  CAST(SUM(CAST(round(${gain("i")}, 9) AS DECIMAL(38,9)))
-       |   AS DOUBLE) AS idcg
-       | FROM (SELECT query_id,
-       |        unnest(generate_series(1, least(n_rel, 5))) AS i
-       |       FROM nrel) GROUP BY 1),
+       |$ndcgSql,
        |met AS (
        | SELECT n.query_id,
        |  CAST(coalesce(p.n_kept, 0) AS DOUBLE) / 5.0 AS recall,
@@ -8912,29 +8641,7 @@ object ExtensionQueries {
        | FROM nrel n JOIN ideal i USING (query_id)
        | LEFT JOIN perq p USING (query_id)),
        |eb2 AS (SELECT CAST(query_id AS VARCHAR) AS k, recall AS v FROM met),
-       |tt AS (
-       | SELECT CAST(count(*) AS BIGINT) AS n,
-       |  CAST(SUM(CAST(round(v, 9) AS DECIMAL(38,9))) AS DOUBLE) AS sv
-       | FROM eb2),
-       |d AS (
-       | SELECT b, v,
-       |  CAST('0x' || substr(md5(k || '#' || CAST(b AS VARCHAR)
-       |    || '#' || 'stackci'), 1, 15) AS BIGINT)
-       |   / 1152921504606846976.0 AS u
-       | FROM eb2, range(0, 40) r(b)),
-       |w AS (SELECT b, v, $caseW AS w FROM d),
-       |m AS (
-       | SELECT b,
-       |  CAST(SUM(CAST(round(CAST(w AS DOUBLE) * v, 9) AS DECIMAL(38,9)))
-       |   AS DOUBLE) AS s,
-       |  CAST(SUM(w) AS BIGINT) AS c
-       | FROM w GROUP BY b),
-       |mm AS (SELECT list(s / c ORDER BY s / c) AS ms FROM m WHERE c > 0),
-       |st AS (
-       | SELECT ms, len(ms) AS nb,
-       |  CAST(floor(0.025 * (len(ms) - 1)) AS INT) AS kk,
-       |  list_sum(ms) / len(ms) AS mb
-       | FROM mm),
+       |${bootstrapSql("tt", "eb2", "stackci")},
        |mz AS (
        | SELECT CAST(count(*) AS BIGINT) AS nq,
        |  CAST(SUM(CAST(round(mrr, 9) AS DECIMAL(38,9))) AS DOUBLE) AS smrr,
@@ -8951,43 +8658,8 @@ object ExtensionQueries {
        |FROM tt, st, mz""".stripMargin
   }
 
-  val q247Sql: String = {
-    val avgList = (1 to q214Sub).map(j =>
-      s"CAST(round(avg(CAST(v[$j] AS DOUBLE)), 6) AS REAL)").mkString(", ")
-    s"""WITH e AS (
-       | SELECT vec_id, embedding FROM embeddings
-       | WHERE embedding IS NOT NULL AND len(embedding) = ${q214M * q214Sub}
-       |  AND len(list_filter(embedding, x -> x IS NULL)) = 0),
-       |sub AS (
-       | SELECT e.vec_id, sp.s,
-       |  e.embedding[(sp.s * $q214Sub + 1):(sp.s * $q214Sub + $q214Sub)] AS v
-       | FROM e CROSS JOIN (SELECT unnest(range($q214M)) AS s) sp),
-       |seed AS (
-       | SELECT s, CAST(code AS INT) AS code, v AS c FROM (
-       |  SELECT s, row_number() OVER (PARTITION BY s ORDER BY vec_id) - 1
-       |    AS code, v
-       |  FROM sub) WHERE code < $q214Ksub),
-       |${q214AssignSql("seed", "a1")},
-       |cb1m AS (
-       | SELECT s, code, [$avgList] AS c FROM a1 GROUP BY s, code),
-       |cb1 AS (
-       | SELECT sd.s, sd.code, coalesce(m.c, sd.c) AS c
-       | FROM seed sd LEFT JOIN cb1m m ON m.s = sd.s AND m.code = sd.code),
-       |${q214AssignSql("cb1", "enc")},
-       |lut AS (
-       | SELECT q.vec_id AS query_id, cb.s, cb.code,
-       |  (${q214D2("q.v", "0", "cb.c")}) AS d2
-       | FROM (SELECT * FROM sub WHERE vec_id < 20) q
-       | JOIN cb1 cb ON cb.s = q.s),
-       |padd AS (
-       | SELECT l.query_id, en.vec_id AS neighbor_id,
-       |  max(CASE WHEN l.s = 0 THEN l.d2 END) AS da,
-       |  max(CASE WHEN l.s = 1 THEN l.d2 END) AS db,
-       |  max(CASE WHEN l.s = 2 THEN l.d2 END) AS dc,
-       |  max(CASE WHEN l.s = 3 THEN l.d2 END) AS dd
-       | FROM enc en JOIN lut l ON l.s = en.s AND l.code = en.code
-       | WHERE l.query_id <> en.vec_id
-       | GROUP BY 1, 2),
+  val q247Sql: String =
+    s"""WITH ${pqAdcSql("vec_id < 20")},
        |pool AS MATERIALIZED (
        | SELECT query_id, neighbor_id, -round(adc, 6) AS cosine FROM (
        |  SELECT query_id, neighbor_id, ((da + db) + dc) + dd AS adc,
@@ -8995,7 +8667,6 @@ object ExtensionQueries {
        |    ORDER BY ((da + db) + dc) + dd ASC, neighbor_id) AS rank
        |  FROM padd) WHERE rank <= 10)""".stripMargin +
       ",\n" + retrievalStackTailSql
-  }
 
   // --------------------------------------------------------------- q248
   /** RESIDUAL IVF-PQ search, value-level
@@ -9057,7 +8728,7 @@ object ExtensionQueries {
        |${P}cpick AS MATERIALIZED (
        | SELECT vec_id, embedding FROM $corpusFrom
        | WHERE embedding IS NOT NULL AND ($trainPred)
-       | ORDER BY ${dk(s"CAST(vec_id AS VARCHAR) || '#' || 'ivf'")}, vec_id
+       | ORDER BY ${md5LongSql(s"CAST(vec_id AS VARCHAR) || '#' || 'ivf'")}, vec_id
        | LIMIT 4),
        |${P}cent AS MATERIALIZED (
        | SELECT row_number() OVER (ORDER BY vec_id) - 1 AS centroid,
@@ -9325,7 +8996,7 @@ object ExtensionQueries {
        |cpick AS MATERIALIZED (
        | SELECT vec_id, embedding FROM embeddings
        | WHERE embedding IS NOT NULL AND vec_id % 5 <> 0
-       | ORDER BY ${dk(s"CAST(vec_id AS VARCHAR) || '#' || 'ivf'")}, vec_id
+       | ORDER BY ${md5LongSql(s"CAST(vec_id AS VARCHAR) || '#' || 'ivf'")}, vec_id
        | LIMIT 4),
        |cent AS MATERIALIZED (
        | SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT)
@@ -9408,23 +9079,9 @@ object ExtensionQueries {
        |   row_number() OVER (PARTITION BY nprobe, query_id
        |    ORDER BY adc ASC, neighbor_id) AS rnk
        |  FROM curve) WHERE rnk <= 3),
-       |ef2 AS (
-       | SELECT vec_id, embedding AS emb,
-       |  sqrt(list_sum(list_transform(embedding,
-       |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-       | FROM embeddings),
-       |fc2 AS (
-       | SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-       |  list_sum(list_transform(generate_series(1, len(a.emb)),
-       |    i -> CAST(a.emb[i] AS DOUBLE) * CAST(b.emb[i] AS DOUBLE)))
-       |   / (a.nrm * b.nrm) AS cosine
-       | FROM ef2 a JOIN ef2 b
-       |  ON a.vec_id % 50 = 0 AND b.vec_id <> a.vec_id),
-       |f2 AS (
-       | SELECT query_id, neighbor_id FROM (
-       |  SELECT query_id, neighbor_id, ROW_NUMBER() OVER (
-       |   PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rnk
-       |  FROM fc2) WHERE rnk <= 3),
+       |${embNormSql("ef2", "embedding", "embeddings")},
+       |${cosinePairsSql("fc2", "ef2", "\n  ON a.vec_id % 50 = 0 AND b.vec_id <> a.vec_id")},
+       |${topRankedSql("f2", "fc2", "query_id, neighbor_id", 3)},
        |hits AS (
        | SELECT c.nprobe, c.query_id, CAST(count(*) AS BIGINT) AS h
        | FROM topk c JOIN f2 USING (query_id, neighbor_id) GROUP BY 1, 2),
@@ -9508,24 +9165,9 @@ object ExtensionQueries {
        |${leg("s2", "vec_id < 1000000")},
        |${leg("r2", "TRUE")},
        |qv AS (SELECT vec_id AS query_id FROM s2e WHERE $qpred),
-       |ef2 AS (
-       | SELECT vec_id, embedding AS emb,
-       |  sqrt(list_sum(list_transform(embedding,
-       |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-       | FROM corpus252),
-       |fc2 AS (
-       | SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-       |  list_sum(list_transform(generate_series(1, len(a.emb)),
-       |    i -> CAST(a.emb[i] AS DOUBLE) * CAST(b.emb[i] AS DOUBLE)))
-       |   / (a.nrm * b.nrm) AS cosine
-       | FROM ef2 a JOIN ef2 b
-       |  ON a.vec_id >= 1000000 AND a.vec_id < 1000010
-       |   AND b.vec_id <> a.vec_id),
-       |f2 AS (
-       | SELECT query_id, neighbor_id FROM (
-       |  SELECT query_id, neighbor_id, ROW_NUMBER() OVER (
-       |   PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rnk
-       |  FROM fc2) WHERE rnk <= 3),
+       |${embNormSql("ef2", "embedding", "corpus252")},
+       |${cosinePairsSql("fc2", "ef2", "\n  ON a.vec_id >= 1000000 AND a.vec_id < 1000010\n   AND b.vec_id <> a.vec_id")},
+       |${topRankedSql("f2", "fc2", "query_id, neighbor_id", 3)},
        |${tail("s2")},
        |${tail("r2")}
        |${sel("s2", "stale")}
@@ -9611,23 +9253,11 @@ object ExtensionQueries {
   val q254Sql: String =
     s"""WITH doc AS (
       | SELECT doc_id, text,
-      |   ${dk("CAST(doc_id AS VARCHAR)")} % 5 AS part
+      |   ${md5LongSql("CAST(doc_id AS VARCHAR)")} % 5 AS part
       | FROM documents),
-      |t AS (
-      | SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks,
-      |        len(list_distinct(string_split(text, ' '))) AS n
-      | FROM doc WHERE part >= 2),
-      |sig AS (
-      | SELECT doc_id, toks, n,
-      |  list_transform(generate_series(0, 15), i ->
-      |    list_min(list_transform(toks, tk -> ${dk("tk || '#' || i")}))) AS sg
-      | FROM t),
-      |band AS (
-      | SELECT doc_id, u.i AS band,
-      |   md5(array_to_string(sg[4*u.i+1 : 4*u.i+4], ',')) AS bh
-      | FROM sig, (SELECT unnest(generate_series(0, 3)) AS i) u),
-      |rep AS (
-      | SELECT band, bh, min(doc_id) AS rep FROM band GROUP BY band, bh)
+      |${tokenSetSql("doc WHERE part >= 2")},
+      |$minhashBandSql,
+      |$minhashRepSql
       |SELECT CAST(r.band AS INT) AS band, r.bh AS band_hash, r.rep,
       |       CAST(t.n AS INT) AS rep_n,
       |       md5(array_to_string(list_sort(t.toks), ' ')) AS rep_toks_md5
@@ -9694,7 +9324,7 @@ object ExtensionQueries {
   val q255Sql: String =
     s"""WITH doc AS (
       | SELECT doc_id, lower(trim(text)) AS t,
-      |   ${dk("CAST(doc_id AS VARCHAR)")} AS h
+      |   ${md5LongSql("CAST(doc_id AS VARCHAR)")} AS h
       | FROM documents),
       |win AS (
       | SELECT t, min(doc_id) AS w FROM doc GROUP BY t),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{PortableHash, Tables}
+import graft.core.PortableHash.{md5LongSql, uniform01Sql}
 import graft.ops._
 
 /** Reference-pipeline operator queries (q31+): stratified splits,
@@ -12,8 +13,6 @@ import graft.ops._
   * reference's training pipeline (SURVEY §2.5/§2.8), oracle-checked.
   */
 object ReferenceQueries {
-
-  private def dk(e: String): String = s"CAST('0x' || substr(md5($e), 1, 15) AS BIGINT)"
 
   // --------------------------------------------------------------- q31
   /** Stratified holdout (OP-36): per-label deterministic 10% validation
@@ -28,7 +27,7 @@ object ReferenceQueries {
     s"""WITH w AS (
       | SELECT label,
       |  ROW_NUMBER() OVER (PARTITION BY label
-      |    ORDER BY ${dk("CAST(vec_id AS VARCHAR) || '#42'")}, vec_id) AS rn,
+      |    ORDER BY ${md5LongSql("CAST(vec_id AS VARCHAR) || '#42'")}, vec_id) AS rn,
       |  COUNT(*) OVER (PARTITION BY label) AS cnt
       | FROM embeddings)
       |SELECT label,
@@ -79,10 +78,10 @@ object ReferenceQueries {
 
   val q33Sql: String = {
     val key = "CAST(doc_id AS VARCHAR) || '#' || CAST(i - 1 AS VARCHAR) || '#0'"
-    val uSel = s"${dk(s"$key || '#sel'")} / 1152921504606846976.0"
-    val uSub = s"${dk(s"$key || '#sub'")} / 1152921504606846976.0"
-    val rnd = s"${dk(s"$key || '#rand'")} % 1000"
-    val tid = s"${dk("toks[i]")} % 1000"
+    val uSel = uniform01Sql(s"$key || '#sel'")
+    val uSub = uniform01Sql(s"$key || '#sub'")
+    val rnd = s"${md5LongSql(s"$key || '#rand'")} % 1000"
+    val tid = s"${md5LongSql("toks[i]")} % 1000"
     s"""WITH t AS (
       | SELECT doc_id, string_split(text, ' ') AS toks,
       |        len(string_split(text, ' ')) AS n FROM documents),
@@ -213,7 +212,7 @@ object ReferenceQueries {
   }
 
   val q37Sql: String = {
-    val u = dk("CAST(vec_id AS VARCHAR) || '#' || CAST(i - 1 AS VARCHAR) || '#0#mfm'")
+    val u = md5LongSql("CAST(vec_id AS VARCHAR) || '#' || CAST(i - 1 AS VARCHAR) || '#0#mfm'")
     s"""WITH f AS (
       | SELECT vec_id,
       |  list_transform(generate_series(0, 15), fr -> embedding[4*fr+1 : 4*fr+4]) AS frames
@@ -294,7 +293,7 @@ object ReferenceQueries {
   val q49Sql: String =
     s"""SELECT doc_id,
       | ROW_NUMBER() OVER (
-      |   ORDER BY ${dk("CAST(doc_id AS VARCHAR) || '#7'")}, doc_id) - 1 AS shuffle_rank
+      |   ORDER BY ${md5LongSql("CAST(doc_id AS VARCHAR) || '#7'")}, doc_id) - 1 AS shuffle_rank
       |FROM documents""".stripMargin
 
   // --------------------------------------------------------------- q50
