@@ -967,19 +967,7 @@ object Bench {
     */
   private def lshTable(s: SparkSession, prefix: String, dir: String): String = {
     val t = prefix + java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL)
-    Scratch.dir(s"lsh:$t:$dir") { _ =>
-      // A previous PROCESS's managed-table directory can survive in
-      // spark-warehouse while this session's fresh catalog has no such
-      // table — saveAsTable(Overwrite) then refuses with
-      // LOCATION_ALREADY_EXISTS instead of overwriting. Clear the
-      // orphan (and any orphan tombstone dir) before building.
-      for (name <- Seq(t, s"${t}__tombstones"); if !s.catalog.tableExists(name)) {
-        val wh = s.conf.get("spark.sql.warehouse.dir")
-        val whPath = if (wh.startsWith("file:")) new java.net.URI(wh).getPath else wh
-        FileUtils.deleteDirectory(new java.io.File(whPath, name))
-      }
-      SimilarityOps.writeLshIndex(Tables.embeddings(s, dir), t)
-    }
+    Scratch.dir(s"lsh:$t:$dir")(_ => SimilarityOps.writeLshIndex(Tables.embeddings(s, dir), t))
     t
   }
 

@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.TempDirBridge
 import org.apache.spark.unsafe.array.ByteArrayMethods
 
 /** Session factory for the graft engine.
@@ -39,6 +40,11 @@ import org.apache.spark.unsafe.array.ByteArrayMethods
   * `events_stream` went 750 → 715 MB (6 pairs). Cluster masters keep
   * Spark's formula: their executors are other JVMs and size their own
   * pages.
+  *
+  * Managed tables (`saveAsTable`) live in a warehouse directory of the
+  * JVM's own, deleted at exit like every [[Scratch]] artifact: the
+  * catalog is in-memory, so a table under the default
+  * `<cwd>/spark-warehouse` outlived its catalog entry.
   */
 object GraftSession {
 
@@ -59,6 +65,9 @@ object GraftSession {
   private val ReservedBytes = 300L << 20
   private val MinPage = 1L << 20
   private val MaxPage = 64L << 20
+
+  private lazy val warehouseDir: String =
+    new java.io.File(TempDirBridge.createTempDir(), "spark-warehouse").getAbsolutePath
 
   /** `spark.buffer.pageSize` for a master whose driver JVM is also the
     * executor (`local`, `local[N]`, `local[*]`, `local[N,F]`), else
@@ -118,6 +127,7 @@ object GraftSession {
       // landed on the last-run phase (2-9x streaming inflation, see
       // Bench/BASELINE).
       .config("spark.sql.codegen.cache.maxEntries", "4000")
+      .config("spark.sql.warehouse.dir", warehouseDir)
     localPageSize(master, Runtime.getRuntime.maxMemory)
       .foreach(bytes => builder.config("spark.buffer.pageSize", s"${bytes}b"))
     val spark = builder.getOrCreate()

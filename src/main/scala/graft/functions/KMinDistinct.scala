@@ -48,6 +48,8 @@ object KMinDistinct {
   def kMin(k: Int): Aggregator[Long, List[Long], Seq[Long]] = {
     require(k >= 2, "kMin: k must be >= 2")
     new Aggregator[Long, List[Long], Seq[Long]] {
+      // plans print the aggregator by its toString: name k there
+      override def toString: String = s"KMinDistinct(k=$k)"
       override def zero: List[Long] = Nil
       override def reduce(b: List[Long], a: Long): List[Long] =
         insert(b, a, k)

@@ -27,6 +27,8 @@ object MisraGries {
   def mg(k: Int): Aggregator[String, List[IC], Seq[IC]] = {
     require(k >= 1, "misraGries: k must be >= 1")
     new Aggregator[String, List[IC], Seq[IC]] {
+      // plans print the aggregator by its toString: name k there
+      override def toString: String = s"MisraGries(k=$k)"
       override def zero: List[IC] = Nil
       override def reduce(b: List[IC], x: String): List[IC] =
         if (b.exists(_._1 == x))

@@ -32,6 +32,8 @@ object TopKAggregator {
   def topK(k: Int): Aggregator[VI, List[VI], Seq[VI]] = {
     require(k >= 1, "topK: k must be >= 1")
     new Aggregator[VI, List[VI], Seq[VI]] {
+      // plans print the aggregator by its toString: name k there
+      override def toString: String = s"TopKAggregator(k=$k)"
       override def zero: List[VI] = Nil
       override def reduce(b: List[VI], a: VI): List[VI] = insert(b, a, k)
       override def merge(x: List[VI], y: List[VI]): List[VI] =

@@ -70,9 +70,18 @@ object BpeOps {
   def bpeTrain(
       df: DataFrame, textCol: String,
       numMerges: Int): (Seq[(String, String)], DataFrame) = {
+    val (merges, vocab) = learnMerges(df, textCol, numMerges)
+    (merges.map { case (a, b, _) => (a, b) }, vocab)
+  }
+
+  /** The training loop of [[bpeTrain]] and [[bpeMergeTable]]: each
+    * round's winning `(a, b, cnt)` in order, and the final vocab. */
+  private def learnMerges(
+      df: DataFrame, textCol: String,
+      numMerges: Int): (Seq[(String, String, Long)], DataFrame) = {
     require(numMerges >= 0)
     var vocab = wordVocab(df, textCol).localCheckpoint()
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
     var r = 0
     var exhausted = false
     while (r < numMerges && !exhausted) {
@@ -83,7 +92,7 @@ object BpeOps {
       if (top.isEmpty) exhausted = true
       else {
         val (a, b) = (top(0).getString(0), top(0).getString(1))
-        merges += ((a, b))
+        merges += ((a, b, top(0).getLong(2)))
         vocab = vocab
           .withColumn("syms", applyMerge(col("syms"), a, b))
           .localCheckpoint()
@@ -104,29 +113,11 @@ object BpeOps {
     */
   def bpeMergeTable(
       df: DataFrame, textCol: String, numMerges: Int): DataFrame = {
-    require(numMerges >= 0)
     val spark = df.sparkSession
     import spark.implicits._
-    var vocab = wordVocab(df, textCol).localCheckpoint()
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var r = 0
-    var exhausted = false
-    while (r < numMerges && !exhausted) {
-      val top = pairCounts(vocab)
-        .filter(col("cnt") >= 2)
-        .orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (a, b, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        rows += ((r + 1, a, b, c))
-        vocab = vocab
-          .withColumn("syms", applyMerge(col("syms"), a, b))
-          .localCheckpoint()
-      }
-      r += 1
-    }
-    rows.toSeq.toDF("step", "a", "b", "cnt")
+    learnMerges(df, textCol, numMerges)._1.zipWithIndex
+      .map { case ((a, b, c), i) => (i + 1, a, b, c) }
+      .toDF("step", "a", "b", "cnt")
   }
 
   /** Encode a corpus with a learned merge list: merges are applied to

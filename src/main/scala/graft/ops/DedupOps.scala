@@ -165,16 +165,7 @@ object DedupOps {
       threshold: Double): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    val t = df.select(col(idCol).as("id"),
-        hashedTokenSet(col(textCol)).as("hset"))
-      .withColumn("n", size(col("hset")))
-    val e = t.select(col("id"), col("n"), explode(col("hset")).as("h"))
-    // Global rarity order: (document frequency, hash) ascending. The
-    // vocabulary frame is token-keyed and tiny relative to the corpus.
-    val freq = e.groupBy("h").agg(count(lit(1)).as("df_tok"))
-    val ordered = e.join(freq, "h")
-      .groupBy("id").agg(max(col("n")).as("n"),
-        sort_array(collect_list(struct(col("df_tok"), col("h")))).as("ord"))
+    val (t, _, ordered) = rarityOrdered(df, textCol, idCol)
     // Each occurrence also carries the H-SORTED set of the tokens
     // EARLIER in its own prefix (positions 0..p-1) — the first-shared-
     // token dedup below reads it.
@@ -232,6 +223,25 @@ object DedupOps {
     verifyJaccard(cand, t, threshold)
   }
 
+  /** The prefix-filter inputs of a token-set pair join: `t` = (id,
+    * hset, n) per doc, its token occurrences `e` = (id, n, h), and
+    * `ordered` = (id, n, ord) with `ord` the doc's tokens in global
+    * rarity order: (document frequency, hash) ascending. The vocabulary
+    * frame is token-keyed and tiny relative to the corpus.
+    */
+  private def rarityOrdered(
+      df: DataFrame, textCol: String, idCol: String): (DataFrame, DataFrame, DataFrame) = {
+    val t = df.select(col(idCol).as("id"),
+        hashedTokenSet(col(textCol)).as("hset"))
+      .withColumn("n", size(col("hset")))
+    val e = t.select(col("id"), col("n"), explode(col("hset")).as("h"))
+    val freq = e.groupBy("h").agg(count(lit(1)).as("df_tok"))
+    val ordered = e.join(freq, "h")
+      .groupBy("id").agg(max(col("n")).as("n"),
+        sort_array(collect_list(struct(col("df_tok"), col("h")))).as("ord"))
+    (t, e, ordered)
+  }
+
   private def verifyJaccard(
       cand: DataFrame, t: DataFrame, threshold: Double): DataFrame = {
     val lt = t.select(col("id").as("id_a"), col("hset").as("set_a"),
@@ -268,14 +278,7 @@ object DedupOps {
       threshold: Double, maxPosting: Int = 0): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    val t = df.select(col(idCol).as("id"),
-        hashedTokenSet(col(textCol)).as("hset"))
-      .withColumn("n", size(col("hset")))
-    val e = t.select(col("id"), col("n"), explode(col("hset")).as("h"))
-    val freq = e.groupBy("h").agg(count(lit(1)).as("df_tok"))
-    val ordered = e.join(freq, "h")
-      .groupBy("id").agg(max(col("n")).as("n"),
-        sort_array(collect_list(struct(col("df_tok"), col("h")))).as("ord"))
+    val (t, e, ordered) = rarityOrdered(df, textCol, idCol)
     val prefixes = ordered
       .withColumn("plen",
         (col("n") - ceil(col("n") * threshold) + 1).cast("int"))

@@ -14,6 +14,20 @@ import org.apache.spark.sql.functions._
   */
 object DriftOps {
 
+  /** Per category of either side, `(catCol, n_old, n_new)` row
+    * counts: two count aggregates, full-outer joined with coalesced
+    * zeros (the full union grid — the chi-square zero-cell lesson).
+    */
+  private def countGrid(oldDf: DataFrame, newDf: DataFrame, catCol: String): DataFrame = {
+    def counts(df: DataFrame, n: String): DataFrame =
+      df.groupBy(col(catCol)).agg(count(lit(1)).as(n))
+    counts(oldDf, "n_old")
+      .join(counts(newDf, "n_new"), Seq(catCol), "full_outer")
+      .select(col(catCol),
+        coalesce(col("n_old"), lit(0L)).as("n_old"),
+        coalesce(col("n_new"), lit(0L)).as("n_new"))
+  }
+
   /** Per-category Population Stability Index terms between `oldDf`
     * and `newDf` on `catCol`, with add-one (Laplace) smoothing over
     * the UNION domain so vanished/new categories stay finite:
@@ -26,13 +40,7 @@ object DriftOps {
     */
   def categoricalDrift(
       oldDf: DataFrame, newDf: DataFrame, catCol: String): DataFrame = {
-    def counts(df: DataFrame, n: String): DataFrame =
-      df.groupBy(col(catCol)).agg(count(lit(1)).as(n))
-    val joined = counts(oldDf, "n_old")
-      .join(counts(newDf, "n_new"), Seq(catCol), "full_outer")
-      .select(col(catCol),
-        coalesce(col("n_old"), lit(0L)).as("n_old"),
-        coalesce(col("n_new"), lit(0L)).as("n_new"))
+    val joined = countGrid(oldDf, newDf, catCol)
     val totals = joined.agg(
       sum(col("n_old")).as("__t_old"),
       sum(col("n_new")).as("__t_new"),
@@ -69,13 +77,7 @@ object DriftOps {
     */
   def jsDivergence(
       oldDf: DataFrame, newDf: DataFrame, catCol: String): DataFrame = {
-    def counts(df: DataFrame, n: String): DataFrame =
-      df.groupBy(col(catCol)).agg(count(lit(1)).as(n))
-    val joined = counts(oldDf, "n_old")
-      .join(counts(newDf, "n_new"), Seq(catCol), "full_outer")
-      .select(col(catCol),
-        coalesce(col("n_old"), lit(0L)).as("n_old"),
-        coalesce(col("n_new"), lit(0L)).as("n_new"))
+    val joined = countGrid(oldDf, newDf, catCol)
     val totals = joined.agg(
       sum(col("n_old")).as("__t_old"), sum(col("n_new")).as("__t_new"))
     val d = (c: Column) => c.cast("double")

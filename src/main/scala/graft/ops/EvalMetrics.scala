@@ -163,12 +163,19 @@ object EvalMetrics {
       .withColumn("__rg", grams(col(refCol)))
       .withColumn("__cg", grams(col(candCol)))
     def cnt(arr: Column, g: Column): Column = size(filter(arr, x => x === g))
-    withGrams
+    withRougeScores(withGrams
       .withColumn("overlap",
         aggregate(array_distinct(col("__cg")), lit(0L), (acc, g) =>
-          acc + least(cnt(col("__rg"), g), cnt(col("__cg"), g)).cast("long")))
-      .withColumn("ref_n", size(col("__rg")).cast("long"))
-      .withColumn("cand_n", size(col("__cg")).cast("long"))
+          acc + least(cnt(col("__rg"), g), cnt(col("__cg"), g)).cast("long"))),
+      "__rg", "__cg")
+  }
+
+  /** The ROUGE-N scores from the clipped n-gram `overlap` and the two
+    * n-gram arrays `ref`/`cand` (dropped after): `ref_n`, `cand_n`,
+    * precision, recall and F1 (null on an empty side). */
+  private def withRougeScores(df: DataFrame, ref: String, cand: String): DataFrame =
+    df.withColumn("ref_n", size(col(ref)).cast("long"))
+      .withColumn("cand_n", size(col(cand)).cast("long"))
       .withColumn("rouge_p",
         when(col("cand_n") > 0, col("overlap").cast("double") / col("cand_n")))
       .withColumn("rouge_r",
@@ -176,8 +183,7 @@ object EvalMetrics {
       .withColumn("rouge_f1",
         when(col("rouge_p") + col("rouge_r") > 0.0,
           lit(2.0) * col("rouge_p") * col("rouge_r") / (col("rouge_p") + col("rouge_r"))))
-      .drop("__rg", "__cg")
-  }
+      .drop(ref, cand)
 
   /** ROC AUC via the Mann-Whitney U statistic — the quality-classifier
     * evaluation gauge next to [[f1Block]] (a DSIR / NB / quality-score
@@ -321,22 +327,13 @@ object EvalMetrics {
     def gramHashes(c: Column): Column =
       graft.functions.ShingleHashes64.shingleHashesMulti64(
         filter(split(c, " "), t => t =!= ""), n)
-    pairs
+    withRougeScores(pairs
       .withColumn("__rh", gramHashes(col(refCol)))
       .withColumn("__ch", gramHashes(col(candCol)))
       .withColumn("overlap",
         graft.functions.SortedIntersectCount
-          .sortedIntersectCount(col("__rh"), col("__ch")).cast("long"))
-      .withColumn("ref_n", size(col("__rh")).cast("long"))
-      .withColumn("cand_n", size(col("__ch")).cast("long"))
-      .withColumn("rouge_p",
-        when(col("cand_n") > 0, col("overlap").cast("double") / col("cand_n")))
-      .withColumn("rouge_r",
-        when(col("ref_n") > 0, col("overlap").cast("double") / col("ref_n")))
-      .withColumn("rouge_f1",
-        when(col("rouge_p") + col("rouge_r") > 0.0,
-          lit(2.0) * col("rouge_p") * col("rouge_r") / (col("rouge_p") + col("rouge_r"))))
-      .drop("__rh", "__ch")
+          .sortedIntersectCount(col("__rh"), col("__ch")).cast("long")),
+      "__rh", "__ch")
   }
 
   /** BRADLEY–TERRY STRENGTHS from head-to-head outcomes — the model

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Event-sequence analytics over the events table (SURVEY §2 extension:
@@ -106,6 +106,22 @@ object FunnelOps {
     }.reduce(_ unionByName _)
   }
 
+  /** The epoch-aligned `bucketSeconds` bucket of a timestamp: an
+    * integer division of its epoch micros, exact on any engine. */
+  private def bucketOf(ts: Column, bucketSeconds: Long): Column =
+    floor(unix_micros(ts) / (bucketSeconds * 1000000L))
+
+  /** `(userCol, cohort)`: each user's cohort, the bucket of their
+    * first event (any type). */
+  private def cohorts(
+      events: DataFrame, userCol: String, tsCol: String,
+      bucketSeconds: Long): DataFrame = {
+    require(bucketSeconds > 0, s"bucketSeconds must be positive")
+    events
+      .groupBy(userCol).agg(min(col(tsCol)).as("__first_ts"))
+      .select(col(userCol), bucketOf(col("__first_ts"), bucketSeconds).as("cohort"))
+  }
+
   /** Cohort retention grid: users cohorted by the time bucket of their
     * FIRST event (any type), then for every (cohort, later-or-equal
     * activity bucket) the count of distinct cohort users active in
@@ -121,14 +137,9 @@ object FunnelOps {
   def cohortRetention(
       events: DataFrame, userCol: String, tsCol: String,
       bucketSeconds: Long): DataFrame = {
-    require(bucketSeconds > 0, s"bucketSeconds must be positive")
-    def bucketOf(c: org.apache.spark.sql.Column) =
-      floor(unix_micros(c) / (bucketSeconds * 1000000L))
-    val firstSeen = events
-      .groupBy(userCol).agg(min(col(tsCol)).as("__first_ts"))
-      .select(col(userCol), bucketOf(col("__first_ts")).as("cohort"))
+    val firstSeen = cohorts(events, userCol, tsCol, bucketSeconds)
     events
-      .select(col(userCol), bucketOf(col(tsCol)).as("bucket"))
+      .select(col(userCol), bucketOf(col(tsCol), bucketSeconds).as("bucket"))
       .join(firstSeen, Seq(userCol))
       .groupBy("cohort", "bucket")
       .agg(countDistinct(userCol).as("n_active"))
@@ -155,16 +166,11 @@ object FunnelOps {
       events: DataFrame, userCol: String, tsCol: String, valueCol: String,
       revenueType: String, typeCol: String,
       bucketSeconds: Long): DataFrame = {
-    require(bucketSeconds > 0, s"bucketSeconds must be positive")
-    def bucketOf(c: org.apache.spark.sql.Column) =
-      floor(unix_micros(c) / (bucketSeconds * 1000000L))
-    val firstSeen = events
-      .groupBy(userCol).agg(min(col(tsCol)).as("__first_ts"))
-      .select(col(userCol), bucketOf(col("__first_ts")).as("cohort"))
+    val firstSeen = cohorts(events, userCol, tsCol, bucketSeconds)
     val sizes = firstSeen.groupBy("cohort")
       .agg(count(lit(1)).as("n_users"))
     val grid = events
-      .select(col(userCol), bucketOf(col(tsCol)).as("bucket"),
+      .select(col(userCol), bucketOf(col(tsCol), bucketSeconds).as("bucket"),
         when(col(typeCol) === revenueType,
           round(col(valueCol).cast("double"), 6).cast("decimal(38,6)"))
           .otherwise(lit(BigDecimal(0)).cast("decimal(38,6)")).as("__v"))

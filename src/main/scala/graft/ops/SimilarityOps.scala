@@ -1,7 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, Row}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (`array<float>`).
@@ -24,6 +24,22 @@ object SimilarityOps {
   private val Bands = 8
   private val PlanesPerBand = 8
 
+  /** The per-query order of every cosine top-k: cosine descending,
+    * ascending neighbor_id on ties. */
+  private val ByCosine =
+    Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
+
+  /** The columns every cosine top-k returns. */
+  private val CosineRanked = Seq("query_id", "neighbor_id", "cosine", "rank").map(col)
+
+  /** The per-query top-k tail: number each `w` partition's rows in
+    * order as `rank`, keep the first `k`, project `out`. */
+  private[ops] def rankTopK(
+      scored: DataFrame, w: WindowSpec, k: Int, out: Seq[Column]): DataFrame =
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(out: _*)
+
   /** Exact cosine top-k: for every row of `queries`, the `k` nearest
     * `corpus` rows by cosine (self-pairs excluded when ids collide).
     * Broadcast the queries side when it is small — Catalyst then plans a
@@ -34,14 +50,10 @@ object SimilarityOps {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    broadcast(q).join(c, col("query_id") =!= col("neighbor_id"))
+    rankTopK(broadcast(q).join(c, col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine",
-        graft.functions.CosineSimilarity.cosineFused(col("q_vec"), col("c_vec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+        graft.functions.CosineSimilarity.cosineFused(col("q_vec"), col("c_vec"))),
+      ByCosine, k, CosineRanked)
   }
 
   /** ANN RECALL HARNESS — recall@k of any approximate top-k result
@@ -206,16 +218,13 @@ object SimilarityOps {
     val labelPred =
       if (negatives) col("n_label") =!= col("q_label")
       else col("n_label") === col("q_label")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    broadcast(q)
+    rankTopK(broadcast(q)
       .join(c, col("query_id") =!= col("neighbor_id") && labelPred)
       .withColumn("cosine",
-        graft.functions.CosineSimilarity.cosineFused(col("q_vec"), col("c_vec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("q_label"), col("neighbor_id"),
-        col("n_label"), col("cosine"), col("rank"))
+        graft.functions.CosineSimilarity.cosineFused(col("q_vec"), col("c_vec"))),
+      ByCosine, k,
+      Seq(col("query_id"), col("q_label"), col("neighbor_id"),
+        col("n_label"), col("cosine"), col("rank")))
   }
 
   /** MMR DIVERSIFIED RERANKING (Carbonell & Goldstein 1998's maximal
@@ -416,14 +425,10 @@ object SimilarityOps {
     * (nlist × dim floats, a few KB) — collected once on the driver and
     * shipped inside the serialized plan like any broadcast dim; both the
     * corpus assignment and the query probe list come from ONE narrow
-    * generated pass per row ([[graft.functions.TopCentroids]] — no
-    * crossJoin row blowup, no window Exchange carrying vectors, which
-    * is what the previous formulation paid, VERDICT r4 #2). The only
-    * shuffle left is the search join on the centroid id — cost scales
+    * generated pass per row ([[graft.functions.TopCentroids]]). The
+    * only shuffle is the search join on the centroid id — cost scales
     * with corpus/nlist × nprobe per query instead of |corpus|.
-    *
-    * Null/absent embeddings yield no assignment (they cannot be indexed
-    * or probed) rather than the previous accidental centroid-0 bucket.
+    * Null/absent embeddings yield no assignment.
     */
   def ivfCosineTopK(
       df: DataFrame, k: Int, nlist: Int = 16, nprobe: Int = 4,
@@ -481,47 +486,102 @@ object SimilarityOps {
     */
   val defaultMaxBucket: Int = 256
 
-  /** Deterministic per-(band, bucket) occupancy cap: keep the `m`
-    * members with the smallest (xxhash64(band, id), id) — an unbiased,
-    * reproducible sample of the bucket, salted by band so hot-bucket
-    * survivors DIFFER across bands (candidate diversity: a query
-    * probing `bands` capped buckets sees up to bands × m distinct
-    * reps, not the same m repeated). The rank window partitions on
-    * exactly the join keys, so its exchange is the one the bucket
-    * join needs anyway and its sort is a prefix-compatible superset —
-    * capping adds NO extra shuffle.
+  /** Deterministic per-bucket occupancy cap: per `keys` group (an LSH
+    * (band, bucket) or an IVF centroid) keep the `m` members with the
+    * smallest (xxhash64(keys.head, id), id) — a reproducible sample,
+    * salted by band so hot-bucket survivors DIFFER across bands. The
+    * rank window partitions on exactly the join keys, so capping adds
+    * NO shuffle. `m` <= 0 = uncapped.
     *
-    * Recall trade (documented contract): a pair co-occurring only in
-    * buckets where the corpus member was capped out is lost; with the
-    * band-salted hash the chance a true neighbor is capped out of ALL
-    * `bands` buckets decays geometrically in bands for buckets a few ×
-    * over the cap — and a bucket 100× over the cap is precisely the
-    * degenerate near-dup cluster where any m members represent it.
+    * Recall trade: a pair co-occurring only in buckets where the corpus
+    * member was capped out is lost; the chance a true neighbor is
+    * capped out of ALL bands decays geometrically in bands, and a
+    * bucket 100× over the cap is a near-dup cluster any m members
+    * represent.
     */
-  private def capBucketSide(banded: DataFrame, idName: String, m: Int): DataFrame =
+  private def capBucketSide(
+      banded: DataFrame, keys: Seq[String], idName: String, m: Int): DataFrame =
     if (m <= 0) banded
     else {
-      val wb = Window.partitionBy("band", "bucket")
-        .orderBy(xxhash64(col("band"), col(idName)), col(idName))
+      val wb = Window.partitionBy(keys.map(col): _*)
+        .orderBy(xxhash64(col(keys.head), col(idName)), col(idName))
       banded.withColumn("__occ", row_number().over(wb))
         .filter(col("__occ") <= m).drop("__occ")
     }
 
-  /** Drop duplicate (query_id, neighbor_id) occurrences from a scored
-    * pair stream that is about to be top-k ranked: occurrences of the
-    * same pair are ADJACENT under the rank window's own
-    * (cosine desc, neighbor_id) ordering, so a `lag` over the very
-    * same window identifies them — dedup costs one extra window pass
-    * over the exchange+sort the top-k already pays, zero extra
-    * shuffles (Filter preserves partitioning and ordering, so the
-    * row_number window below it reuses them).
+  private val BandKeys = Seq("band", "bucket")
+
+  /** The banded vector stream: one row per (doc, band) carrying
+    * `(id, vec, carried…, buckets, band, bucket)` — the doc's
+    * [[graft.functions.HyperplaneBandSigs]] bucket array and its
+    * (band, bucket) join key. `carried` renames extra columns
+    * (source -> name) riding next to the vector. */
+  private def bandedStream(
+      df: DataFrame, bands: Int, planesPerBand: Int,
+      idCol: String, vecCol: String, dim: Int,
+      carried: (String, String)*): DataFrame = {
+    val sigs = graft.functions.HyperplaneBandSigs
+      .hyperplaneBandSigs(col(vecCol), bands, planesPerBand, dim)
+    val withSigs = df.select(Seq(col(idCol).as("id"), col(vecCol).as("vec")) ++
+      carried.map { case (c, a) => col(c).as(a) } :+ sigs.as("buckets"): _*)
+    withSigs.select(withSigs.columns.toIndexedSeq.map(col) :+ posexplode(col("buckets")): _*)
+      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
+  }
+
+  /** One side of the bucket join: a banded stream's join key, its id
+    * and vector as `id`/`vec`, and each `more` column renamed. */
+  private def joinSide(
+      banded: DataFrame, id: String, vec: String, more: (String, String)*): DataFrame =
+    banded.select(Seq(col("band"), col("bucket"), col("id").as(id), col("vec").as(vec)) ++
+      more.map { case (c, a) => col(c).as(a) }: _*)
+
+  /** The scored pairs of an LSH search: each (query_id, neighbor_id)
+    * sharing a (band, bucket) of the [[joinSide]]s `q` and `c`, minus
+    * self-pairs and `extra` rejects, with the exact cosine computed
+    * once per unique pair. `firstCollision` (bucket arrays `bk_q`/`bk_c`
+    * on both sides): only the first band where the two arrays agree
+    * scores the pair — zero extra shuffle. Otherwise (a capped corpus,
+    * where that band's member may be capped out) duplicates are dropped
+    * as ADJACENT rows under the top-k window's own order: one `lag`
+    * pass over the exchange+sort the top-k pays anyway, at most `bands`
+    * redundant cosines per pair.
     */
-  private def dedupAdjacentPairs(scored: DataFrame, w: org.apache.spark.sql.expressions.WindowSpec): DataFrame =
-    scored
-      .withColumn("__dup",
-        lag("neighbor_id", 1).over(w) === col("neighbor_id") &&
-          lag("cosine", 1).over(w) === col("cosine"))
-      .filter(col("__dup").isNull || !col("__dup")).drop("__dup")
+  private def bucketPairs(
+      q: DataFrame, c: DataFrame, firstCollision: Boolean,
+      extra: Option[Column]): DataFrame = {
+    val pairs = q.join(c, BandKeys)
+      .filter(extra.foldLeft(col("query_id") =!= col("neighbor_id"))(_ && _))
+    def scored(p: DataFrame): DataFrame = p.select(col("query_id"), col("neighbor_id"),
+      graft.functions.CosineSimilarity.cosineFused(col("q_vec"), col("c_vec")).as("cosine"))
+    if (firstCollision)
+      scored(pairs.filter(graft.functions.FirstEqualIndex
+        .firstEqualIndex(col("bk_q"), col("bk_c")) === col("band")))
+    else
+      scored(pairs)
+        .withColumn("__dup",
+          lag("neighbor_id", 1).over(ByCosine) === col("neighbor_id") &&
+            lag("cosine", 1).over(ByCosine) === col("cosine"))
+        .filter(col("__dup").isNull || !col("__dup")).drop("__dup")
+  }
+
+  /** [[bucketPairs]] of two embedding frames banded alike, the corpus
+    * side capped at `maxBucket` ([[capBucketSide]]; first-collision
+    * dedup when uncapped). `labelCol` rides both banded streams and
+    * rejects same-label pairs at the join. */
+  private def lshPairs(
+      queries: DataFrame, corpus: DataFrame, bands: Int, planesPerBand: Int,
+      idCol: String, vecCol: String, dim: Int, maxBucket: Int,
+      labelCol: Option[String]): DataFrame = {
+    def side(df: DataFrame, id: String, vec: String, lbl: String, bk: String) =
+      joinSide(bandedStream(df, bands, planesPerBand, idCol, vecCol, dim,
+          labelCol.map(_ -> "lbl").toSeq: _*),
+        id, vec, labelCol.map(_ => "lbl" -> lbl).toSeq :+ ("buckets" -> bk): _*)
+    bucketPairs(
+      side(queries, "query_id", "q_vec", "q_lbl", "bk_q"),
+      capBucketSide(side(corpus, "neighbor_id", "c_vec", "c_lbl", "bk_c"),
+        BandKeys, "neighbor_id", maxBucket),
+      maxBucket <= 0, labelCol.map(_ => col("q_lbl") =!= col("c_lbl")))
+  }
 
   /** Two-frame hyperplane-LSH search: for every `queries` row, the
     * approximate top-k `corpus` neighbors — the standing ANN deployment
@@ -537,26 +597,18 @@ object SimilarityOps {
     * excluded when ids collide ([[bruteCosineTopK]]'s convention).
     *
     * `maxBucket` > 0 caps the CORPUS side of every (band, bucket) at
-    * that many members ([[capBucketSide]] — deterministic top-m by
-    * band-salted key hash), bounding the join output at
-    * |banded queries| × maxBucket regardless of signature skew.
-    * Capping switches pair dedup from the first-colliding-band filter
-    * (which would LOSE a pair whose first shared band had its member
-    * capped out) to an adjacent-duplicate drop inside the top-k
-    * window's own sort ([[dedupAdjacentPairs]]) — same shuffle count,
-    * at most `bands` redundant cosines per multi-band pair.
-    * `maxBucket` <= 0 = uncapped, bit-identical to the legacy plan.
+    * that many members ([[capBucketSide]]), bounding the join output at
+    * |banded queries| × maxBucket regardless of signature skew, and
+    * switches pair dedup to [[bucketPairs]]' adjacent-duplicate drop.
+    * `maxBucket` <= 0 = uncapped.
     */
   def lshCosineSearch(
       queries: DataFrame, corpus: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      dim: Int = 64, maxBucket: Int = defaultMaxBucket): DataFrame = {
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
-    lshScoredPairs(queries, corpus, Bands, PlanesPerBand, idCol, vecCol, dim, maxBucket)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
-  }
+      dim: Int = 64, maxBucket: Int = defaultMaxBucket): DataFrame =
+    rankTopK(
+      lshScoredPairs(queries, corpus, Bands, PlanesPerBand, idCol, vecCol, dim, maxBucket),
+      ByCosine, k, CosineRanked)
 
   /** The unique scored candidate pairs behind [[lshCosineSearch]]
     * (everything before the per-query top-k): one row per distinct
@@ -570,39 +622,8 @@ object SimilarityOps {
       queries: DataFrame, corpus: DataFrame,
       bands: Int = Bands, planesPerBand: Int = PlanesPerBand,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      dim: Int = 64, maxBucket: Int = defaultMaxBucket): DataFrame = {
-    def banded(df: DataFrame): DataFrame = {
-      val sigs = graft.functions.HyperplaneBandSigs
-        .hyperplaneBandSigs(col(vecCol), bands, planesPerBand, dim)
-      df.select(col(idCol).as("id"), col(vecCol).as("vec"), sigs.as("buckets"))
-        .select(col("id"), col("vec"), col("buckets"), posexplode(col("buckets")))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-    }
-    val l = banded(queries).select(col("band"), col("bucket"),
-      col("id").as("query_id"), col("vec").as("q_vec"), col("buckets").as("bk_q"))
-    val r0 = banded(corpus).select(col("band"), col("bucket"),
-      col("id").as("neighbor_id"), col("vec").as("c_vec"), col("buckets").as("bk_c"))
-    if (maxBucket <= 0) {
-      l.join(r0, Seq("band", "bucket"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        // first-collision-wins: this occurrence survives only if band is
-        // the first position where the two bucket arrays agree — each
-        // unique pair is scored exactly once, with zero extra shuffle.
-        .filter(graft.functions.FirstEqualIndex
-          .firstEqualIndex(col("bk_q"), col("bk_c")) === col("band"))
-        .select(col("query_id"), col("neighbor_id"),
-          graft.functions.CosineSimilarity.cosineFused(col("q_vec"), col("c_vec")).as("cosine"))
-    } else {
-      val r = capBucketSide(r0, "neighbor_id", maxBucket)
-      val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
-      dedupAdjacentPairs(
-        l.join(r, Seq("band", "bucket"))
-          .filter(col("query_id") =!= col("neighbor_id"))
-          .select(col("query_id"), col("neighbor_id"),
-            graft.functions.CosineSimilarity.cosineFused(col("q_vec"), col("c_vec")).as("cosine")),
-        w)
-    }
-  }
+      dim: Int = 64, maxBucket: Int = defaultMaxBucket): DataFrame =
+    lshPairs(queries, corpus, bands, planesPerBand, idCol, vecCol, dim, maxBucket, None)
 
   /** Persist the LSH index: the banded corpus stream — one row per
     * (band, bucket) occurrence carrying the vector and the full bucket
@@ -625,16 +646,11 @@ object SimilarityOps {
   def writeLshIndex(
       corpus: DataFrame, table: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      dim: Int = 64, maxBucket: Int = defaultMaxBucket): Unit = {
-    val sigs = graft.functions.HyperplaneBandSigs
-      .hyperplaneBandSigs(col(vecCol), Bands, PlanesPerBand, dim)
-    val banded = corpus
-      .select(col(idCol).as("id"), col(vecCol).as("vec"), sigs.as("buckets"))
-      .select(col("id"), col("vec"), col("buckets"), posexplode(col("buckets")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-    graft.io.Sources.writeBucketed(capBucketSide(banded, "id", maxBucket),
-      table, 32, Seq("band", "bucket"))
-  }
+      dim: Int = 64, maxBucket: Int = defaultMaxBucket): Unit =
+    graft.io.Sources.writeBucketed(
+      capBucketSide(bandedStream(corpus, Bands, PlanesPerBand, idCol, vecCol, dim),
+        BandKeys, "id", maxBucket),
+      table, 32, BandKeys)
 
   /** DELETE ids from a standing [[writeLshIndex]] table —
     * [[graft.ops.PqOps.ivfPqDelete]]'s removal verb for the LSH leg
@@ -658,14 +674,6 @@ object SimilarityOps {
       .write.mode(org.apache.spark.sql.SaveMode.Append)
       .format("parquet").saveAsTable(s"${table}__tombstones")
 
-  /** The table's tombstones, if a delete has run on it. */
-  private def lshTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      table: String): Option[DataFrame] =
-    if (spark.catalog.tableExists(s"${table}__tombstones"))
-      Some(spark.table(s"${table}__tombstones"))
-    else None
-
   /** Search a [[writeLshIndex]] table: `dim` must match the write
     * (signatures are deterministic, so the shared banding and a
     * matching dim mean matching buckets). Same candidate semantics as a capped
@@ -682,32 +690,19 @@ object SimilarityOps {
       idCol: String = "vec_id", vecCol: String = "embedding",
       dim: Int = 64): DataFrame = {
     val spark = queries.sparkSession
-    val sigs = graft.functions.HyperplaneBandSigs
-      .hyperplaneBandSigs(col(vecCol), Bands, PlanesPerBand, dim)
-    val l = queries
-      .select(col(idCol).as("id"), col(vecCol).as("vec"), sigs.as("buckets"))
-      .select(col("id"), col("vec"), col("buckets"), posexplode(col("buckets")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-      .select(col("band"), col("bucket"),
-        col("id").as("query_id"), col("vec").as("q_vec"))
-    val stored = lshTombstones(spark, table) match {
-      case Some(t) =>
+    val tombstones = s"${table}__tombstones"
+    val stored =
+      if (spark.catalog.tableExists(tombstones))
         spark.table(table)
-          .join(broadcast(t.select(col("id"))), Seq("id"), "left_anti")
-      case None => spark.table(table)
-    }
-    val r = stored.select(col("band"), col("bucket"),
-      col("id").as("neighbor_id"), col("vec").as("c_vec"))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
-    dedupAdjacentPairs(
-      l.join(r, Seq("band", "bucket"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          graft.functions.CosineSimilarity.cosineFused(col("q_vec"), col("c_vec")).as("cosine")),
-      w)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+          .join(broadcast(spark.table(tombstones).select(col("id"))), Seq("id"), "left_anti")
+      else spark.table(table)
+    rankTopK(
+      bucketPairs(
+        joinSide(bandedStream(queries, Bands, PlanesPerBand, idCol, vecCol, dim),
+          "query_id", "q_vec"),
+        joinSide(stored, "neighbor_id", "c_vec"),
+        firstCollision = false, None),
+      ByCosine, k, CosineRanked)
   }
 
   /** Hard-negative mining for contrastive training (the DPR/SimCSE
@@ -728,46 +723,10 @@ object SimilarityOps {
   def hardNegativesLsh(
       df: DataFrame, k: Int, labelCol: String = "label",
       idCol: String = "vec_id", vecCol: String = "embedding",
-      dim: Int = 64, maxBucket: Int = defaultMaxBucket): DataFrame = {
-    def banded(d: DataFrame): DataFrame = {
-      val sigs = graft.functions.HyperplaneBandSigs
-        .hyperplaneBandSigs(col(vecCol), Bands, PlanesPerBand, dim)
-      d.select(col(idCol).as("id"), col(vecCol).as("vec"),
-          col(labelCol).as("lbl"), sigs.as("buckets"))
-        .select(col("id"), col("vec"), col("lbl"), col("buckets"),
-          posexplode(col("buckets")))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-    }
-    val l = banded(df).select(col("band"), col("bucket"),
-      col("id").as("query_id"), col("vec").as("q_vec"),
-      col("lbl").as("q_lbl"), col("buckets").as("bk_q"))
-    val r0 = banded(df).select(col("band"), col("bucket"),
-      col("id").as("neighbor_id"), col("vec").as("c_vec"),
-      col("lbl").as("c_lbl"), col("buckets").as("bk_c"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    val ranked =
-      if (maxBucket <= 0)
-        l.join(r0, Seq("band", "bucket"))
-          .filter(col("query_id") =!= col("neighbor_id") &&
-            col("q_lbl") =!= col("c_lbl"))
-          .filter(graft.functions.FirstEqualIndex
-            .firstEqualIndex(col("bk_q"), col("bk_c")) === col("band"))
-          .select(col("query_id"), col("neighbor_id"),
-            graft.functions.CosineSimilarity.cosineFused(col("q_vec"), col("c_vec")).as("cosine"))
-      else
-        dedupAdjacentPairs(
-          l.join(capBucketSide(r0, "neighbor_id", maxBucket), Seq("band", "bucket"))
-            .filter(col("query_id") =!= col("neighbor_id") &&
-              col("q_lbl") =!= col("c_lbl"))
-            .select(col("query_id"), col("neighbor_id"),
-              graft.functions.CosineSimilarity.cosineFused(col("q_vec"), col("c_vec")).as("cosine")),
-          w)
-    ranked
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
-  }
+      dim: Int = 64, maxBucket: Int = defaultMaxBucket): DataFrame =
+    rankTopK(
+      lshPairs(df, df, Bands, PlanesPerBand, idCol, vecCol, dim, maxBucket, Some(labelCol)),
+      ByCosine, k, CosineRanked)
 
   /** Brute-force twin of [[hardNegativesLsh]] for a bounded query set —
     * the oracle/recall baseline ([[bruteCosineTopK]]'s contract: all
@@ -795,8 +754,8 @@ object SimilarityOps {
     *
     * `maxList` > 0 caps each centroid's inverted list at that many
     * members (deterministic top-m by key hash via a rank window that
-    * shares the search join's exchange — [[capBucketSide]]'s
-    * construction on the centroid key), bounding the join output at
+    * shares the search join's exchange — [[capBucketSide]] on the
+    * centroid key), bounding the join output at
     * |probes| × maxList under any cell skew. Unlike the LSH cap this
     * DEFAULTS OFF: an IVF cell is a Voronoi region, not a near-dup
     * bucket — its members are genuinely distinct neighbors, and the
@@ -809,6 +768,61 @@ object SimilarityOps {
       nlist: Int = 16, nprobe: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding",
       maxList: Int = 0): DataFrame = {
+    val cands = ivfCentroids(corpus, nlist, idCol, vecCol, None)
+      .top(col("vec"), math.max(nprobe, 1))
+    val assigned = capBucketSide(
+      corpus
+        .select(col(idCol).as("id"), col(vecCol).as("vec"))
+        .select(col("id").as("neighbor_id"), col("vec").as("c_vec2"),
+          element_at(cands, 1).as("centroid")),
+      Seq("centroid"), "neighbor_id", maxList)
+    val probes = queries
+      .select(col(idCol).as("id"), col(vecCol).as("vec"))
+      .select(col("id").as("query_id"), col("vec").as("q_vec"),
+        explode(slice(cands, 1, nprobe)).as("centroid"))
+    rankTopK(probes.join(assigned, Seq("centroid"))
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .withColumn("cosine",
+        graft.functions.CosineSimilarity.cosineFused(col("q_vec"), col("c_vec2"))),
+      ByCosine, k, CosineRanked)
+  }
+
+  /** An IVF coarse quantizer: the centroid vectors in index order (the
+    * index is the `centroid` id everywhere downstream) and the same
+    * vectors as one row-major (n × dim) matrix, the constant-size
+    * dimension [[graft.functions.TopCentroids]] ships inside the plan.
+    */
+  private[ops] final case class Centroids(vecs: Array[Seq[Float]], dim: Int) {
+    val mat: Array[Float] = {
+      val m = new Array[Float](vecs.length * dim)
+      vecs.zipWithIndex.foreach { case (v, c) =>
+        var j = 0
+        while (j < dim) { m(c * dim + j) = v(j); j += 1 }
+      }
+      m
+    }
+
+    /** Each row's `n` nearest centroid ids, nearest first. */
+    def top(vec: Column, n: Int): Column =
+      graft.functions.TopCentroids.topCentroids(vec, mat, dim, n)
+
+    def nearest(vec: Column): Column = nearestCentroid(vec, mat, dim)
+  }
+
+  /** The max-cosine row of a row-major (k × dim) centroid matrix
+    * (ties → lowest, the [[graft.functions.TopCentroids]] contract). */
+  private def nearestCentroid(vec: Column, mat: Array[Float], dim: Int): Column =
+    element_at(graft.functions.TopCentroids.topCentroids(vec, mat, dim, 1), 1)
+
+  /** The deterministic IVF centroid pick: the `nlist` non-null corpus
+    * vectors with the smallest `md5Long(id, 'ivf')` (then id), in
+    * ascending-id index order, collected once on the driver. `dim`
+    * defaults to the first centroid's length; every centroid must
+    * have it.
+    */
+  private[ops] def ivfCentroids(
+      corpus: DataFrame, nlist: Int, idCol: String, vecCol: String,
+      dim: Option[Int]): Centroids = {
     val picked = corpus
       .filter(col(vecCol).isNotNull)
       .select(col(idCol).as("c_id"), col(vecCol).as("c_vec"))
@@ -816,56 +830,55 @@ object SimilarityOps {
       .limit(nlist)
       .orderBy("c_id")
       .collect()
-    require(picked.nonEmpty, "ivfCosineSearch: empty corpus")
-    val dim = picked.head.getSeq[Float](1).length
-    val mat = new Array[Float](picked.length * dim)
-    picked.zipWithIndex.foreach { case (r, c) =>
+    require(picked.nonEmpty, "IVF centroid pick: empty corpus")
+    val d = dim.getOrElse(picked.head.getSeq[Float](1).length)
+    Centroids(picked.map { r =>
       val v = r.getSeq[Float](1)
-      require(v.length == dim,
-        s"ivfCosineSearch: centroid ${r.get(0)} has dim ${v.length}, expected $dim " +
+      require(v.length == d,
+        s"IVF centroid ${r.get(0)} has dim ${v.length}, expected $d " +
           "(mixed-dimension corpus — TopCentroids requires a fixed dim)")
-      var j = 0
-      while (j < dim) { mat(c * dim + j) = v(j); j += 1 }
-    }
-
-    val cands = graft.functions.TopCentroids.topCentroids(
-      col("vec"), mat, dim, math.max(nprobe, 1))
-    val assigned0 = corpus
-      .select(col(idCol).as("id"), col(vecCol).as("vec"))
-      .select(col("id").as("neighbor_id"), col("vec").as("c_vec2"),
-        element_at(cands, 1).as("centroid"))
-    val assigned =
-      if (maxList <= 0) assigned0
-      else {
-        val wl = Window.partitionBy("centroid")
-          .orderBy(xxhash64(col("centroid"), col("neighbor_id")), col("neighbor_id"))
-        assigned0.withColumn("__occ", row_number().over(wl))
-          .filter(col("__occ") <= maxList).drop("__occ")
-      }
-    val probes = queries
-      .select(col(idCol).as("id"), col(vecCol).as("vec"))
-      .select(col("id").as("query_id"), col("vec").as("q_vec"),
-        explode(slice(cands, 1, nprobe)).as("centroid"))
-
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
-    probes.join(assigned, Seq("centroid"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        graft.functions.CosineSimilarity.cosineFused(col("q_vec"), col("c_vec2")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+      v
+    }, d)
   }
 
   /** Rows whose vector can participate in fixed-dim cosine work:
     * non-null, exactly `dim` elements, no null element — the
     * [[graft.functions.TopCentroids]] null contract as a filter.
     */
-  private def validVecs(
+  private[ops] def validVecs(
       df: DataFrame, vecCol: String, idCol: String, dim: Int): DataFrame =
     df.select(col(idCol).as("id"), col(vecCol).as("vec"))
       .filter(col("vec").isNotNull && size(col("vec")) === dim &&
         !exists(col("vec"), _.isNull))
+
+  /** The `n` valid vectors with the smallest ids, ascending: the
+    * deterministic seeds of every Lloyd training here. */
+  private[ops] def seedVecs(valid: DataFrame, n: Int): Array[Seq[Float]] =
+    valid.orderBy("id").limit(n).orderBy("id").select("vec").collect()
+      .map(_.getSeq[Float](0))
+
+  /** One Lloyd recenter: a copy of row-major `mat` (rows of `width`)
+    * where each group of `g` holds the per-dimension mean of its `vec`
+    * arrays, ROUNDED to 6 decimals and cast to float (reproducible
+    * across engines and accumulation orders); `row` maps a result row
+    * (keys, then means) to its matrix row. Rows no group reaches keep
+    * their entry.
+    */
+  private[ops] def recenter(
+      mat: Array[Float], g: RelationalGroupedDataset, vec: String, width: Int)(
+      row: Row => Int): Array[Float] = {
+    val aggs = (0 until width).map(j =>
+      round(avg(element_at(col(vec), j + 1).cast("double")), 6)
+        .cast("float").as(s"c$j"))
+    val next = mat.clone()
+    g.agg(aggs.head, aggs.tail: _*).collect().foreach { r =>
+      val base = row(r) * width
+      val at = r.length - width
+      var j = 0
+      while (j < width) { next(base + j) = r.getFloat(at + j); j += 1 }
+    }
+    next
+  }
 
   /** Spherical k-means (Lloyd) centroids over an embedding column —
     * the clustering stage SemDeDup (Abbas et al. 2023) and
@@ -873,13 +886,11 @@ object SimilarityOps {
     * the `k` valid vectors with the smallest ids (cluster j = j-th
     * smallest); each of the `iters` rounds assigns every vector to its
     * max-cosine centroid (ties → lowest cluster, the
-    * [[graft.functions.TopCentroids]] contract) and recenters each
-    * cluster at the per-dimension mean, ROUNDED to 6 decimals and cast
-    * to float so the update is reproducible across engines and
-    * accumulation orders (assignment is scale-invariant under cosine,
-    * so skipping the usual sphere re-normalization changes nothing).
-    * A cluster that loses all members keeps its previous centroid.
-    * Vectors failing the fixed-dim/null contract are excluded.
+    * [[graft.functions.TopCentroids]] contract) and [[recenter]]s each
+    * cluster (assignment is scale-invariant under cosine, so skipping
+    * the usual sphere re-normalization changes nothing); a cluster that
+    * loses all members keeps its previous centroid. Vectors failing the
+    * fixed-dim/null contract are excluded.
     *
     * Scale shape (100 TB): per round = ONE narrow corpus pass (the
     * fused TopCentroids assignment — no exchange, no row blowup) + a
@@ -895,30 +906,13 @@ object SimilarityOps {
       k: Int, iters: Int, dim: Int): Array[Float] = {
     require(k >= 1 && iters >= 0 && dim >= 1)
     val valid = validVecs(df, vecCol, idCol, dim)
-    val seeds = valid.orderBy("id").limit(k).orderBy("id").select("vec").collect()
+    val seeds = seedVecs(valid, k)
     require(seeds.nonEmpty, "kmeansCentroids: no valid vectors")
-    var mat = new Array[Float](seeds.length * dim)
-    seeds.zipWithIndex.foreach { case (r, c) =>
-      val v = r.getSeq[Float](0)
-      var j = 0
-      while (j < dim) { mat(c * dim + j) = v(j); j += 1 }
-    }
-    for (_ <- 1 to iters) {
-      val cl = element_at(graft.functions.TopCentroids.topCentroids(
-        col("vec"), mat, dim, 1), 1)
-      val aggs = (0 until dim).map(j =>
-        round(avg(element_at(col("vec"), j + 1).cast("double")), 6)
-          .cast("float").as(s"c$j"))
-      val next = mat.clone()
-      valid.select(cl.as("cl"), col("vec"))
-        .groupBy("cl").agg(aggs.head, aggs.tail: _*)
-        .collect().foreach { r =>
-          val c = r.getInt(0)
-          var j = 0
-          while (j < dim) { next(c * dim + j) = r.getFloat(j + 1); j += 1 }
-        }
-      mat = next
-    }
+    var mat = Centroids(seeds, dim).mat
+    for (_ <- 1 to iters)
+      mat = recenter(mat,
+        valid.select(nearestCentroid(col("vec"), mat, dim).as("cl"), col("vec"))
+          .groupBy("cl"), "vec", dim)(_.getInt(0))
     mat
   }
 
@@ -931,9 +925,7 @@ object SimilarityOps {
       df: DataFrame, vecCol: String, idCol: String,
       mat: Array[Float], dim: Int): DataFrame =
     validVecs(df, vecCol, idCol, dim)
-      .select(col("id").as(idCol),
-        element_at(graft.functions.TopCentroids.topCentroids(
-          col("vec"), mat, dim, 1), 1).as("cluster"))
+      .select(col("id").as(idCol), nearestCentroid(col("vec"), mat, dim).as("cluster"))
 
   /** [[kmeansCentroids]] + final [[assignClusters]] in one call. */
   def kmeansAssign(
@@ -971,9 +963,7 @@ object SimilarityOps {
       .map(c => (c, (0 until dim).map(j => mat(c * dim + j)).toArray))
       .toDF("cluster", "centroid")
     val scored = validVecs(df, vecCol, idCol, dim)
-      .select(col("id"), col("vec"),
-        element_at(graft.functions.TopCentroids.topCentroids(
-          col("vec"), mat, dim, 1), 1).as("cluster"))
+      .select(col("id"), col("vec"), nearestCentroid(col("vec"), mat, dim).as("cluster"))
       .join(broadcast(cents), Seq("cluster"))
       .select(col("id").as(idCol), col("cluster"),
         graft.functions.CosineSimilarity.cosineFused(

@@ -1298,22 +1298,32 @@ object StatsOps {
     val n = r.getLong(0)
     require(n > 0, "poissonBootstrapCI: no non-null values")
     val mean = r.getDouble(1) / n.toDouble
-    val means = (0 until reps).flatMap { b =>
+    val (lo, hi, se) = bootstrapInterval((0 until reps).flatMap { b =>
       val c = r.getLong(2 + 2 * b + 1)
       if (c == 0) None
       else Some(r.getDouble(2 + 2 * b) / c.toDouble)
-    }.sorted
+    }, alpha)
+    Seq((n, mean, lo, hi, se))
+      .toDF("n", "mean", "boot_lo", "boot_hi", "boot_se")
+  }
+
+  /** `(lo, hi, se)` of a non-empty set of bootstrap replicate means:
+    * the percentile interval of the ascending means with
+    * `floor(α/2·(B−1))` trimmed from each end, and the bootstrap SE
+    * folded over the ascending means — the one definition the batch
+    * CI and the streaming gauge share, so both replay bit-for-bit.
+    */
+  private[graft] def bootstrapInterval(
+      replicateMeans: IndexedSeq[Double], alpha: Double): (Double, Double, Double) = {
+    val means = replicateMeans.sorted
     val b = means.length
     val k = math.floor(alpha / 2.0 * (b - 1)).toInt
-    val lo = means(k)
-    val hi = means(b - 1 - k)
     val mm = means.reduceLeft(_ + _) / b
     val se =
       if (b > 1)
         math.sqrt(means.map(m => (m - mm) * (m - mm)).reduceLeft(_ + _)
           / (b - 1))
       else 0.0
-    Seq((n, mean, lo, hi, se))
-      .toDF("n", "mean", "boot_lo", "boot_hi", "boot_se")
+    (means(k), means(b - 1 - k), se)
   }
 }

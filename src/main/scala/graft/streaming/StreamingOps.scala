@@ -580,20 +580,12 @@ object StreamingOps {
           }
         }
         val means = (0 until reps)
-          .flatMap(b => if (c(b) == 0L) None else Some(s(b) / c(b))).sorted
+          .flatMap(b => if (c(b) == 0L) None else Some(s(b) / c(b)))
         val out =
           if (n == 0 || means.isEmpty) Iterator.empty
           else {
-            val bl = means.length
-            val kk = math.floor(alpha / 2.0 * (bl - 1)).toInt
-            val mm = means.reduceLeft(_ + _) / bl
-            val se =
-              if (bl > 1)
-                math.sqrt(means.map(m => (m - mm) * (m - mm))
-                  .reduceLeft(_ + _) / (bl - 1))
-              else 0.0
-            Iterator.single(
-              BootGauge(key, n, sv / n, means(kk), means(bl - 1 - kk), se))
+            val (lo, hi, se) = graft.ops.StatsOps.bootstrapInterval(means, alpha)
+            Iterator.single(BootGauge(key, n, sv / n, lo, hi, se))
           }
         (Some(BootState(n, sv, s.toIndexedSeq, c.toIndexedSeq)), out)
     }.toDF(keyCol, "n", "mean", "boot_lo", "boot_hi", "boot_se")

@@ -55,4 +55,19 @@ class GraftSessionSpec extends AnyFunSuite {
     val peak = sorts.head.metrics("peakMemory").value
     assert(peak > 0 && peak <= MB + pointerArray, s"peak execution memory $peak bytes")
   }
+
+  test("managed tables land in the JVM's own warehouse, none under <cwd>/spark-warehouse") {
+    val spark = SharedSpark.spark
+    import spark.implicits._
+    val table = s"graft_warehouse_probe_${System.nanoTime}"
+    val cwdWarehouse = new java.io.File(System.getProperty("user.dir"), "spark-warehouse")
+    val warehouse = new java.io.File(
+      new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath)
+    try {
+      graft.io.Sources.writeBucketed(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), table, 2, Seq("k"))
+      assert(new java.io.File(warehouse, table).isDirectory, s"no $table under $warehouse")
+      assert(!new java.io.File(cwdWarehouse, table).exists, s"$table written under $cwdWarehouse")
+      assert(warehouse.getCanonicalPath != cwdWarehouse.getCanonicalPath)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
 }

@@ -137,6 +137,19 @@ class SearchOpsSpec extends AnyFunSuite {
     assert(all.toSeq == Seq(("a", 1, 2L, 2.0), ("a", 2, 1L, 1.0)))
   }
 
+  test("topKPerGroup's plan names its k; every k-bounded aggregator prints its k") {
+    import org.apache.spark.sql.execution.FormattedMode
+    val df = Seq(("a", 1.0, 1L)).toDF("g", "v", "id")
+    def plan(k: Int) = SearchOps.topKPerGroup(df, "g", "v", "id", k)
+      .queryExecution.explainString(FormattedMode)
+      .replaceAll("#\\d+L?", "").replaceAll("\\[plan_id=\\d+\\]", "")
+      .replaceAll("@[0-9a-f]{4,}", "@H")
+    assert(plan(5) != plan(10))
+    assert(plan(5).contains("TopKAggregator(k=5)"), plan(5))
+    assert(graft.functions.MisraGries.mg(3).toString == "MisraGries(k=3)")
+    assert(graft.functions.KMinDistinct.kMin(4).toString == "KMinDistinct(k=4)")
+  }
+
   test("keywordExtract: idf suppresses corpus-frequent terms, ranked cut") {
     // df: apple 1, banana 3, cherry 1 over N=3 docs; smoothed idf
     // makes the rare terms beat the everywhere-banana

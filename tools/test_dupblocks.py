@@ -74,16 +74,35 @@ class DupBlocksTest(unittest.TestCase):
                                      ("Bench.scala", 5, 10, "Q.scala", 5)])
 
     def test_exit_status(self):
-        script = os.path.join(os.path.dirname(os.path.abspath(__file__)), "dupblocks.py")
+        # the script's main on a fixture tree, with the repo's own
+        # ALLOWLIST emptied: its entries name the repo's files, and
+        # would read as stale here
+        code = ("import sys, dupblocks; dupblocks.ALLOWLIST.clear(); "
+                "sys.argv = ['dupblocks.py', sys.argv[1]]; dupblocks.main()")
+        tools = os.path.dirname(os.path.abspath(__file__))
+
+        def run(root):
+            return subprocess.run([sys.executable, "-c", code, root], cwd=tools,
+                                  capture_output=True, text=True)
         with tempfile.TemporaryDirectory() as root:
             tree(root)
-            bad = subprocess.run([sys.executable, script, root], capture_output=True, text=True)
+            bad = run(root)
             write(root, "src/main/scala/graft/Bench.scala", "package graft\n")
             write(root, "src/main/scala/graft/queries/Q.scala", BENCH)
-            clean = subprocess.run([sys.executable, script, root], capture_output=True, text=True)
+            clean = run(root)
         self.assertEqual(bad.returncode, 1)
         self.assertIn("12 copied lines in 2 runs", bad.stdout)
         self.assertEqual(clean.returncode, 0, clean.stdout)
+
+    def test_engine_layers_are_scanned_and_other_packages_are_not(self):
+        with tempfile.TemporaryDirectory() as root:
+            write(root, "src/main/scala/graft/Bench.scala", "package graft\n")
+            for rel in ("ops/A.scala", "streaming/sub/B.scala", "functions/C.scala"):
+                name = os.path.basename(rel)[0]
+                write(root, "src/main/scala/graft/" + rel, "object %s {\n%s}\n" % (name, BLOCK))
+            runs = [(os.path.basename(p), first, last, os.path.basename(op), ol)
+                    for p, first, last, op, ol, _ in dupblocks.scan(root)]
+        self.assertEqual(runs, [("B.scala", 2, 7, "A.scala", 2)])
 
     def test_allowlist_covers_and_goes_stale(self):
         saved = dict(dupblocks.ALLOWLIST)
