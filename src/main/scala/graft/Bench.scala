@@ -71,8 +71,7 @@ object Bench {
     * time as a parquet row count); hashing the full row forces every
     * projection to actually evaluate while still aggregating to one
     * driver-side value. bit_xor, not sum: summing 64-bit hashes
-    * overflows Long under ANSI mode. [[graft.tools.PlanProbe]] probes
-    * the same frame.
+    * overflows Long under ANSI mode.
     */
   private[graft] def forcing(df: DataFrame): DataFrame =
     df.select(xxhash64(struct(df.columns.map(col): _*)).as("__h"))
@@ -485,7 +484,8 @@ object Bench {
       SimilarityOps.clusterDiversitySample(Tables.embeddings(s, dir),
         "embedding", "vec_id", k = 16, iters = 2, dim = 64, cap = 200)),
     // duplicate-cluster labels at the production hash: MinHash verified
-    // pairs -> min-label propagation (per pass: one (id, long) shuffle)
+    // pairs -> alternating star contraction (per round: (long, long)
+    // shuffles over an edge set that shrinks every round)
     "b_dup_components" -> ((s, dir) =>
       DedupOps.dupComponents(
         Tables.documents(s, dir).select("doc_id"), "doc_id",
@@ -493,8 +493,8 @@ object Bench {
           threshold = 0.6, bands = 4, rowsPerBand = 4))),
     // the PRODUCTION component path: verified (member, bucket-rep)
     // star edges — O(docs x bands) edges, no pair list — into the same
-    // min-label propagation (the pair form above keeps the quadratic
-    // floor visible for comparison; q69 pins the oracle)
+    // star contraction (the pair form above keeps the quadratic floor
+    // visible for comparison; q69 pins the oracle)
     "b_dup_components_reps" -> ((s, dir) =>
       DedupOps.dupComponentsFromReps(
         Tables.documents(s, dir).select("doc_id", "text"), "text", "doc_id",

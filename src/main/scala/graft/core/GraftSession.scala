@@ -102,8 +102,6 @@ object GraftSession {
       .builder()
       .master(master)
       .appName(appName)
-      // native expressions as SQL functions (cosine_sim, ...)
-      .withExtensions(new graft.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -119,7 +117,7 @@ object GraftSession {
       // 100 entries): a many-plan single JVM (bench sweep, long verify
       // run) otherwise evicts and re-Janinos whole plan families, and
       // every re-load restarts JIT tiering from zero — measured at the
-      // 100x fixture (round-12 PlanProbe): with the default cache 4 of
+      // 100x fixture (round 12, BASELINE.md): with the default cache 4 of
       // 8 identical-plan attempts ran 3-20x task-CPU in tier-down
       // windows; at 2000 entries 1 of 8. Classes are small; the cache
       // is bounded by plan count, not data. 2000 → 4000 (r14): the

@@ -28,12 +28,6 @@ object Tables {
     StructField("c_acctbal", DoubleType),
     StructField("c_mktsegment", StringType)))
 
-  val supplier: StructType = StructType(Seq(
-    StructField("s_suppkey", LongType),
-    StructField("s_name", StringType),
-    StructField("s_nationkey", IntegerType),
-    StructField("s_acctbal", DoubleType)))
-
   val part: StructType = StructType(Seq(
     StructField("p_partkey", LongType),
     StructField("p_name", StringType),
@@ -81,14 +75,13 @@ object Tables {
   def region(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "nation")
   def customer(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "customer")
-  def supplier(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "supplier")
   def part(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "part")
   def orders(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "orders")
   def lineitem(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "lineitem")
   def documents(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "embeddings")
 
-  /** Normalize a physically-varying event timestamp to TimestampType.
+  /** Normalize the physically-varying event timestamp `ts` to TimestampType.
     *
     * The driver has shipped `events.parquet` with `ts` as parquet
     * TIMESTAMP(NANOS) (reads as LongType nanos under
@@ -105,12 +98,12 @@ object Tables {
     *    oracle reads the same file.
     *  - TimestampType    → already canonical.
     */
-  def normalizeTs(df: DataFrame, colName: String = "ts"): DataFrame =
-    df.schema(colName).dataType match {
+  def normalizeTs(df: DataFrame): DataFrame =
+    df.schema("ts").dataType match {
       case LongType =>
-        df.withColumn(colName, timestamp_micros(expr(s"$colName div 1000")))
+        df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampNTZType =>
-        df.withColumn(colName, col(colName).cast(TimestampType))
+        df.withColumn("ts", col("ts").cast(TimestampType))
       case _ => df
     }
 

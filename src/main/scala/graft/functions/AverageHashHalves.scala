@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -30,15 +31,8 @@ case class AverageHashHalves(child: Expression, cells: Int)
     s"cells must be even, 2..64, got $cells")
 
   // resolved lazily: at construction the child may still be unresolved
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"average_hash_halves needs array<float|double>, got $t")
-    }
+  override def checkInputDataTypes(): TypeCheckResult =
+    AverageHashHalves.checkGrid(child, prettyName)
 
   private lazy val isFloat = child.dataType match {
     case ArrayType(FloatType, _) => true
@@ -84,6 +78,13 @@ case class AverageHashHalves(child: Expression, cells: Int)
 }
 
 object AverageHashHalves {
+  /** The image hashes' input check: a float or double grid. */
+  private[functions] def checkGrid(child: Expression, name: String): TypeCheckResult =
+    child.dataType match {
+      case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+      case t => TypeCheckResult.TypeCheckFailure(s"$name needs array<float|double>, got $t")
+    }
+
   def averageHashHalves(vec: Column, cells: Int = 64): Column =
     ColumnBridge.column(AverageHashHalves(ColumnBridge.expression(vec), cells))
 }

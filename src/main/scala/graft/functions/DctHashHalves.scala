@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -30,15 +31,8 @@ import org.apache.spark.sql.types._
 case class DctHashHalves(child: Expression)
     extends UnaryExpression with CodegenFallback {
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"dct_hash_halves needs array<float|double>, got $t")
-    }
+  override def checkInputDataTypes(): TypeCheckResult =
+    AverageHashHalves.checkGrid(child, prettyName)
 
   private lazy val isFloat = child.dataType match {
     case ArrayType(FloatType, _) => true

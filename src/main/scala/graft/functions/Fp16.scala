@@ -23,10 +23,8 @@ import org.apache.spark.sql.types._
   * nulls the pack, an odd-length blob nulls the unpack — the
   * [[graft.ops.MultimodalOps.averageHash]] corruption contract.
   *
-  * The decode is round-trip-pinned against the INDEPENDENT fp16 path
-  * in [[graft.io.Npy.halfToFloat]] (written for the npy reader) by an
-  * exhaustive 65,536-value spec, so the two implementations cannot
-  * drift apart silently.
+  * The unpack widens each element with [[graft.io.Npy.halfToFloat]],
+  * the npy reader's binary16 decoder, so both paths share one kernel.
   */
 case class Fp16Pack(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {
@@ -115,27 +113,6 @@ object Fp16 {
     out.toShort
   }
 
-  /** binary16 bits → Float32, exact. Same contract as the independent
-    * [[graft.io.Npy.halfToFloat]] (exhaustively spec-pinned equal).
-    */
-  def halfToFloat(h: Short): Float = {
-    val bits = h & 0xFFFF
-    val sign = (bits & 0x8000) << 16
-    val exp = (bits >>> 10) & 0x1F
-    val mant = bits & 0x03FF
-    val fbits =
-      if (exp == 0) {
-        if (mant == 0) sign
-        else {
-          var e2 = -1; var m2 = mant
-          do { e2 += 1; m2 <<= 1 } while ((m2 & 0x0400) == 0)
-          sign | ((127 - 15 - e2) << 23) | ((m2 & 0x03FF) << 13)
-        }
-      } else if (exp == 0x1F) sign | 0x7F800000 | (mant << 13)
-      else sign | ((exp - 15 + 127) << 23) | (mant << 13)
-    java.lang.Float.intBitsToFloat(fbits)
-  }
-
   /** Pack a float ArrayData little-endian; null on any null element. */
   def packOrNull(arr: ArrayData): Array[Byte] = {
     val n = arr.numElements()
@@ -159,7 +136,7 @@ object Fp16 {
     var i = 0
     while (i < n) {
       val h = ((bytes(2 * i) & 0xFF) | ((bytes(2 * i + 1) & 0xFF) << 8)).toShort
-      out(i) = halfToFloat(h)
+      out(i) = graft.io.Npy.halfToFloat(h)
       i += 1
     }
     new GenericArrayData(out)

@@ -58,6 +58,19 @@ object MinShingleMd5 {
 
   private val space = UTF8String.fromString(" ")
 
+  /** The n-token window at `i` joined by single spaces (a null token is
+    * skipped, as in `concat_ws`); `window`, of length n, is the caller's
+    * buffer, refilled for each window.
+    */
+  private[functions] def windowText(arr: ArrayData, i: Int, window: Array[UTF8String]): UTF8String = {
+    var j = 0
+    while (j < window.length) {
+      window(j) = if (arr.isNullAt(i + j)) null else arr.getUTF8String(i + j)
+      j += 1
+    }
+    UTF8String.concatWs(space, window: _*)
+  }
+
   /** Min 60-bit md5 over all n-token windows; caller guarantees
     * `arr.numElements() >= n`.
     */
@@ -67,12 +80,7 @@ object MinShingleMd5 {
     var minV = Long.MaxValue
     var i = 0
     while (i + n <= len) {
-      var j = 0
-      while (j < n) {
-        window(j) = if (arr.isNullAt(i + j)) null else arr.getUTF8String(i + j)
-        j += 1
-      }
-      val v = Md5Long.top(UTF8String.concatWs(space, window: _*), 60)
+      val v = Md5Long.top(windowText(arr, i, window), 60)
       if (v < minV) minV = v
       i += 1
     }

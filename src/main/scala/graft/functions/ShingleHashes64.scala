@@ -49,8 +49,6 @@ case class ShingleHashes64(child: Expression, n: Int, distinct: Boolean = true)
 
 object ShingleHashes64 {
 
-  private val space = UTF8String.fromString(" ")
-
   /** Sorted xxhash64 (seed 42) MULTISET of every n-token window —
     * duplicates kept, one hash per window position. The clipped-
     * overlap representation: two-pointer-merging two of these counts
@@ -64,12 +62,7 @@ object ShingleHashes64 {
     val window = new Array[UTF8String](n)
     var i = 0
     while (i + n <= len) {
-      var j = 0
-      while (j < n) {
-        window(j) = if (arr.isNullAt(i + j)) null else arr.getUTF8String(i + j)
-        j += 1
-      }
-      out(i) = XXH64.hashUTF8String(UTF8String.concatWs(space, window: _*), 42L)
+      out(i) = XXH64.hashUTF8String(MinShingleMd5.windowText(arr, i, window), 42L)
       i += 1
     }
     java.util.Arrays.sort(out)

@@ -122,10 +122,9 @@ object SpanCorruptMd5 {
       corrupted)
   }
 
-  def spanCorruptMd5(toks: Column, key: Column, corruptRate: Double = 0.15,
-      meanSpan: Int = 3, sentinelBase: Int = 32000,
-      seed: Long = 0L): Column =
+  /** T5's corruption rate 0.15 and mean span 3, seed 0. */
+  def spanCorruptMd5(toks: Column, key: Column, sentinelBase: Int = 32000): Column =
     ColumnBridge.column(SpanCorruptMd5(
       ColumnBridge.expression(toks), ColumnBridge.expression(key),
-      corruptRate, meanSpan, sentinelBase, seed))
+      0.15, 3, sentinelBase, 0L))
 }

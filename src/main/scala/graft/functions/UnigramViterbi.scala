@@ -28,7 +28,7 @@ case class UnigramViterbi(
     child: Expression,
     pieces: Seq[(String, Double)],
     maxPieceLen: Int,
-    unkLogProb: Double = -25.0)
+    unkLogProb: Double)
     extends UnaryExpression with CodegenFallback {
   require(maxPieceLen >= 1, "maxPieceLen must be >= 1")
 
@@ -85,8 +85,8 @@ case class UnigramViterbi(
 }
 
 object UnigramViterbi {
-  def unigramViterbi(word: Column, pieces: Seq[(String, Double)],
-      maxPieceLen: Int, unkLogProb: Double = -25.0): Column =
+  /** An unknown single character scores -25.0. */
+  def unigramViterbi(word: Column, pieces: Seq[(String, Double)], maxPieceLen: Int): Column =
     ColumnBridge.column(UnigramViterbi(
-      ColumnBridge.expression(word), pieces, maxPieceLen, unkLogProb))
+      ColumnBridge.expression(word), pieces, maxPieceLen, -25.0))
 }

@@ -28,8 +28,8 @@ import org.apache.spark.unsafe.types.UTF8String
 case class WordPieceTokenize(
     child: Expression,
     vocab: Seq[String],
-    lowercase: Boolean = true,
-    maxCharsPerWord: Int = 100) extends UnaryExpression with CodegenFallback {
+    lowercase: Boolean,
+    maxCharsPerWord: Int) extends UnaryExpression with CodegenFallback {
 
   @transient private lazy val vocabIds: java.util.HashMap[String, Integer] = {
     val m = new java.util.HashMap[String, Integer](vocab.size * 2)
@@ -166,9 +166,10 @@ case class WordPieceTokenize(
 }
 
 object WordPieceTokenize {
-  /** Column-API entry point. */
-  def wordpiece(text: Column, vocab: Seq[String], lowercase: Boolean = true,
-      maxCharsPerWord: Int = 100): Column =
+  /** Column-API entry point: lowercased (BERT uncased), words over 100
+    * characters become `[UNK]`.
+    */
+  def wordpiece(text: Column, vocab: Seq[String]): Column =
     ColumnBridge.column(WordPieceTokenize(
-      ColumnBridge.expression(text), vocab, lowercase, maxCharsPerWord))
+      ColumnBridge.expression(text), vocab, true, 100))
 }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * → greedy left-to-right collapse as a pure column fold. The loop
   * `localCheckpoint`s the vocab frame per round — `numMerges` chained
   * `aggregate` expressions would otherwise nest the plan `numMerges`
-  * deep (the [[DedupOps.connectedComponents]] lineage lesson).
+  * deep (the [[GraphOps.pageRank]] lineage lesson).
   */
 object BpeOps {
 

@@ -1219,76 +1219,6 @@ object DedupOps {
     df.join(dropped.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
   }
 
-  /** Connected components over an undirected edge list by iterative
-    * min-label propagation: every node's label converges to the
-    * smallest node id transitively reachable from it. Pass `t`:
-    * `label(v) ← min(label(v), min over neighbors' labels)` — one
-    * shuffle of (id, long-label) pairs per pass, text/payload never
-    * involved — until a pass changes nothing or `maxPasses` hits.
-    * Deterministic regardless of partitioning (min is
-    * order-insensitive).
-    *
-    * Scale notes (100 TB): plain propagation converges in
-    * graph-diameter passes. Near-dup graphs are the intended input and
-    * have tiny diameters (LSH banding yields star/clique-shaped
-    * components around min-id reps), so 2-4 passes is typical; a
-    * pathological chain-shaped graph is what the large-star/small-star
-    * contraction of Kiveris et al. (2014, "Connected Components in
-    * MapReduce") bounds — swap the pass body for star contraction if
-    * diameters grow.
-    *
-    * Every round-trip frame is `localCheckpoint`ed, NOT merely
-    * persisted: `labels` appears twice in each pass's plan (union
-    * branch + propagation join), so without LINEAGE truncation the
-    * logical plan doubles per pass and AQE's per-action plan
-    * re-stringification turns O(2^passes) plan text into a driver OOM
-    * long before the data is a problem — persist caches rows but keeps
-    * the full plan. (On a real cluster swap `localCheckpoint` for
-    * reliable `checkpoint` — executor loss invalidates local
-    * checkpoints.)
-    *
-    * Returns `(id, component)`, one row per node appearing in `edges`,
-    * checkpointed and materialized — do NOT `.unpersist()` it (that
-    * would drop the checkpoint blocks mid-use); the blocks are freed
-    * when the frame is garbage-collected.
-    */
-  def connectedComponents(
-      edges: DataFrame, srcCol: String, dstCol: String,
-      maxPasses: Int = 20): DataFrame = {
-    // checkpoint the edge projection BEFORE symmetrizing: the union's
-    // two branches would otherwise each re-evaluate the (possibly very
-    // expensive — e.g. a MinHash verify) upstream pair plan
-    val e = edges.select(col(srcCol).cast("long").as("id"),
-      col(dstCol).cast("long").as("nb")).localCheckpoint()
-    val sym = e.union(e.select(col("nb").as("id"), col("id").as("nb")))
-      .distinct().localCheckpoint()
-    // NOT sized like the alternating loop (r15 A/B): wrapping these
-    // passes in withShufflePartitions(partsForRows(sym.count)) read
-    // FLAT on b_minhash_components and +15% on b_dup_components_reps
-    // (back-to-back min-of-2) — the min-label loop's edge set never
-    // shrinks, so the sizing only serialized the per-pass joins
-    // without removing any work. Kept at the session's partitioning.
-    var labels = sym.select("id").distinct()
-      .withColumn("component", col("id")).localCheckpoint()
-    var pass = 0
-    var converged = false
-    while (pass < maxPasses && !converged) {
-      val nbLab = sym
-        .join(labels.select(col("id").as("nb"), col("component")), Seq("nb"))
-        .select("id", "component")
-      val next = labels.union(nbLab)
-        .groupBy("id").agg(min("component").as("component"))
-        .localCheckpoint()
-      val changed = next
-        .join(labels.withColumnRenamed("component", "old"), Seq("id"))
-        .filter(col("component") < col("old")).count()
-      labels = next
-      converged = changed == 0
-      pass += 1
-    }
-    labels
-  }
-
   /** Duplicate-cluster labels: every row of `df` tagged with the
     * min-id of its transitive near-dup component under the verified
     * pair list `pairs` (e.g. [[minHashDedup]]'s output) — the "group
@@ -1306,9 +1236,8 @@ object DedupOps {
     * near-clique onto its minimum — the edge set SHRINKS every round
     * (measured 30.3 s → 14.4 s on the sf0.1 pair list — the
     * pair-GENERATION floor, so labeling is now ~free) and deep-chain
-    * graphs stay O(log² n) instead of O(diameter). Labels are
-    * identical by both algorithms (min reachable id; parity
-    * spec-pinned in `GraphOpsSpec`), so the q69 oracle is unchanged.
+    * graphs stay O(log² n) instead of O(diameter). The label is the
+    * min reachable id, which the q69 oracle replays.
     */
   def dupComponents(
       df: DataFrame, idCol: String, pairs: DataFrame,
@@ -1342,7 +1271,7 @@ object DedupOps {
     *
     * Returns `df` + a `component` long column (min reachable id, the
     * [[dupComponents]] convention); the embedded components frame is
-    * checkpointed ([[connectedComponents]]' contract).
+    * checkpointed, its blocks freed on garbage collection.
     */
   def dupComponentsFromReps(
       df: DataFrame, textCol: String, idCol: String, threshold: Double,
@@ -1355,19 +1284,20 @@ object DedupOps {
   }
 
   /** Shared core of [[dupComponentsFromReps]] /
-    * [[dedupKeepersByComponents]]: (id, component) labels over the
-    * verified star-edge graph — only ids that appear in some verified
-    * edge get a row (callers default the rest to their own id). The
-    * returned frame is checkpointed (the [[connectedComponents]]
-    * contract) and long-typed only.
+    * [[dedupKeepersByComponents]] / [[softDedupWeightsFromReps]]:
+    * (id, component) labels over the verified star-edge graph by
+    * [[graft.ops.GraphOps.connectedComponentsAlternating]], the
+    * [[dupComponents]] algorithm — only ids that appear in some
+    * verified edge get a row (callers default the rest to their own
+    * id). The returned frame is checkpointed and long-typed only.
     */
   private def starComponentLabels(
       df: DataFrame, textCol: String, idCol: String, threshold: Double,
       bands: Int, rowsPerBand: Int): DataFrame =
-    connectedComponents(
+    graft.ops.GraphOps.connectedComponentsAlternating(
       verifiedRepEdges(Production, df, Production.tokens(col(textCol)), idCol,
         threshold, bands, rowsPerBand, emptyMatchesEmpty = true),
-      "id", "rep")
+      "id", "rep", 20)
 
   /** ONE-PASS cluster dedup (VERDICT r7 #5): keep exactly one doc —
     * the min id — per CONNECTED COMPONENT of the verified star-edge

@@ -11,12 +11,12 @@ import org.apache.spark.sql.functions._
   * (id, double) pairs — never payloads. PageRank is the canonical
   * iterative join+agg; each pass is one shuffle on dst plus a
   * broadcast-able degree dim, with `localCheckpoint` truncating the
-  * lineage every pass (the [[DedupOps.connectedComponents]] lesson:
-  * persist-only iteration OOMs the driver on plan growth long before
-  * data is the problem). Triangle counting uses the degree-orientation
-  * trick (orient every edge from lower to higher degree), which bounds
-  * per-node out-degree by O(sqrt(m)) — the hub that makes the naive
-  * wedge join quadratic can never be a wedge CENTER.
+  * lineage every pass (persist-only iteration OOMs the driver on plan
+  * growth long before data is the problem). Triangle counting uses
+  * the degree-orientation trick (orient every edge from lower to
+  * higher degree), which bounds per-node out-degree by O(sqrt(m)) —
+  * the hub that makes the naive wedge join quadratic can never be a
+  * wedge CENTER.
   */
 object GraphOps {
 
@@ -226,11 +226,11 @@ object GraphOps {
   /** Connected components by ALTERNATING STAR CONTRACTION (Kiveris,
     * Lattanzi, Mirrokni, Rastogi & Vassilvitskii, SoCC 2014
     * "Connected Components in MapReduce and Beyond", two-phase
-    * algorithm) — the O(log² n)-round replacement for min-label
-    * propagation ([[DedupOps.connectedComponents]]) when component
-    * DIAMETERS are not tiny: propagation needs diameter passes (a
-    * 10⁶-node path graph = 10⁶ shuffles), star contraction halves
-    * tree heights every round regardless of shape.
+    * algorithm) — the O(log² n)-round alternative to min-label
+    * propagation, which needs diameter passes (a 10⁶-node path graph
+    * = 10⁶ shuffles); star contraction halves tree heights every
+    * round regardless of shape. The one connected-components algorithm
+    * of the engine: [[DedupOps]] labels duplicate clusters with it.
     *
     * Per round, two edge rewrites, each one keyed agg + one equi-join
     * of (long, long) rows:
@@ -243,10 +243,9 @@ object GraphOps {
     * Both preserve connectivity and monotonically pull every tree
     * toward a star rooted at its component minimum; convergence =
     * the edge set reaches a fixpoint (star centers ARE the min ids,
-    * matching [[DedupOps.connectedComponents]]' label convention,
-    * which the differential spec pins). Every round-trip frame is
-    * `localCheckpoint`ed — the same lineage-truncation contract as
-    * the propagation loop and [[pageRank]].
+    * the min-reachable-id label a union-find spec pins). Every
+    * round-trip frame is `localCheckpoint`ed — the same
+    * lineage-truncation contract as [[pageRank]].
     *
     * Returns `(id, component)` for every node in `edges`,
     * checkpointed and materialized.

@@ -57,9 +57,11 @@ object StatsOps {
     val o = df.groupBy(col(aCol), col(bCol)).agg(count(lit(1)).as("n"))
     val r = o.groupBy(col(aCol)).agg(sum(col("n")).as("__rn"))
     val c = o.groupBy(col(bCol)).agg(sum(col("n")).as("__cn"))
-    val t = o.agg(sum(col("n")).as("__tot"),
-      countDistinct(col(aCol)).as("__ka"),
-      countDistinct(col(bCol)).as("__kb"))
+    // |a| and |b| from the marginals, one row per level (count skips
+    // the NULL level, as countDistinct does): a countDistinct over `o`
+    // would plan an Expand whose key order changes between runs
+    val t = r.agg(sum(col("__rn")).as("__tot"), count(col(aCol)).as("__ka"))
+      .crossJoin(c.agg(count(col(bCol)).as("__kb")))
     val d = (x: Column) => x.cast("double")
     val n0 = coalesce(col("n"), lit(0L))
     val expCt = d(col("__rn")) * d(col("__cn")) / d(col("__tot"))

@@ -121,42 +121,6 @@ object VectorOps {
       .otherwise(transform(idx, i => element_at(frames, i + 1)))
   }
 
-  /** Softmax over a vector (OP-52, reference `src/model.py:194-212`):
-    * max-subtracted for stability, double accumulation.
-    */
-  def softmax(a: Column): Column = {
-    val m = array_max(transform(a, _.cast("double")))
-    val exps = transform(a, x => exp(x.cast("double") - m))
-    val z = aggregate(exps, lit(0.0), (acc, x) => acc + x)
-    transform(exps, e => e / z)
-  }
-
-  /** erf by the Abramowitz–Stegun 7.1.26 polynomial (|err| < 1.5e-7) —
-    * Spark ships no erf builtin; this stays pure column algebra.
-    */
-  def erfApprox(z: Column): Column = {
-    val zd = z.cast("double")
-    val az = abs(zd)
-    val t = lit(1.0) / (lit(1.0) + lit(0.3275911) * az)
-    val poly = ((((lit(1.061405429) * t - 1.453152027) * t + 1.421413741) * t
-      - 0.284496736) * t + 0.254829592) * t
-    val e = lit(1.0) - poly * exp(-az * az)
-    when(zd < 0, -e).otherwise(e)
-  }
-
-  /** erf-based GELU, the reference's activation
-    * (`src/pretrained_model.py:92-102`): x·0.5·(1+erf(x/√2)).
-    */
-  def gelu(x: Column): Column =
-    x.cast("double") * 0.5 * (lit(1.0) + erfApprox(x.cast("double") / math.sqrt(2.0)))
-
-  /** L2-normalize a vector; zero vector passes through unchanged. */
-  def l2Normalize(a: Column): Column = {
-    val n = l2Norm(a)
-    when(n === 0.0, transform(a, _.cast("double")))
-      .otherwise(transform(a, x => x.cast("double") / n))
-  }
-
   /** Exponential moving average over an ordered window (the data-
     * semantics analog of the reference's parameter EMA, OP-33,
     * `src/main.py:81-106`): e_t = d·e_{t-1} + (1-d)·x_t.

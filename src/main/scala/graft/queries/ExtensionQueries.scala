@@ -3487,8 +3487,7 @@ object ExtensionQueries {
     val sc = Tables.documents(spark, dir)
       .select(col("doc_id"),
         graft.functions.SpanCorruptMd5.spanCorruptMd5(
-          ids, col("doc_id").cast("string"), corruptRate = 0.15,
-          meanSpan = 3, sentinelBase = 1000, seed = 0L).as("sc"))
+          ids, col("doc_id").cast("string"), sentinelBase = 1000).as("sc"))
     // row form (doc_id, part, pos, tok): the driver compare hashes
     // scalar columns, not arrays
     val inp = sc.select(col("doc_id"), lit("i").as("part"),

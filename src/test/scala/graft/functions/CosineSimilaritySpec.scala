@@ -36,8 +36,11 @@ class CosineSimilaritySpec extends AnyFunSuite {
   }
 
   test("SQL registration works and codegen path evaluates") {
-    Seq((Seq(1.0f, 0.0f), Seq(1.0f, 0.0f))).toDF("a", "b").createOrReplaceTempView("cs_t")
-    val v = spark.sql("SELECT cosine_sim(a, b) AS c FROM cs_t").as[Double].head()
+    // a range, not a local Seq: the optimizer folds an expression over
+    // a LocalRelation itself, so the generated code would never run
+    val df = spark.range(1).select(
+      array((col("id") + 1).cast("float"), col("id").cast("float")).as("a"))
+    val v = df.select(CosineSimilarity.cosineFused(col("a"), col("a"))).as[Double].head()
     assert(v == 1.0)
   }
 }

@@ -5,24 +5,39 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
 
-/** fp16 codec: exhaustive agreement with the independent npy decoder,
-  * numpy-rule rounding, and the NULL-on-malformed column contracts.
+/** fp16 codec: the shared binary16 decoder checked exhaustively against
+  * an arithmetic reference, numpy-rule rounding, and the
+  * NULL-on-malformed column contracts.
   */
 class Fp16Spec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
   import spark.implicits._
+
+  /** binary16 by its definition: (-1)^s · m · 2^-24 for a subnormal,
+    * (-1)^s · (1 + m/1024) · 2^(e-15) for a normal, ±Inf, and NaN with
+    * the 10 payload bits at the top of the float32 mantissa.
+    */
+  private def referenceHalf(h: Int): Float = {
+    val sign = if ((h & 0x8000) != 0) -1.0 else 1.0
+    val e = (h >>> 10) & 0x1F
+    val m = h & 0x3FF
+    if (e == 0) (sign * m * math.pow(2, -24)).toFloat
+    else if (e < 0x1F) (sign * (1 + m / 1024.0) * math.pow(2, e - 15)).toFloat
+    else if (m == 0) (sign * Double.PositiveInfinity).toFloat
+    else java.lang.Float.intBitsToFloat(((h & 0x8000) << 16) | 0x7F800000 | (m << 13))
+  }
 
   test("halfToFloat agrees with io.Npy.halfToFloat on ALL 65,536 bit patterns; " +
       "floatToHalf round-trips every one of them") {
     var h = 0
     while (h < 0x10000) {
       val s = h.toShort
-      val a = Fp16.halfToFloat(s)
-      val b = graft.io.Npy.halfToFloat(s)
-      assert(java.lang.Float.floatToRawIntBits(a) ==
-        java.lang.Float.floatToRawIntBits(b),
-        f"halfToFloat($h%04x): codec $a vs npy $b")
-      assert(Fp16.floatToHalf(a) == s, f"roundtrip broke at $h%04x -> $a")
+      val got = graft.io.Npy.halfToFloat(s)
+      val want = referenceHalf(h)
+      assert(java.lang.Float.floatToRawIntBits(got) ==
+        java.lang.Float.floatToRawIntBits(want),
+        f"halfToFloat($h%04x): decoder $got vs reference $want")
+      assert(Fp16.floatToHalf(got) == s, f"roundtrip broke at $h%04x -> $got")
       h += 1
     }
   }
@@ -84,7 +99,7 @@ class Fp16Spec extends AnyFunSuite {
         Fp16.unpackFp16(Fp16.packFp16(col("v"))).as("rt"), col("v"))
       .as[(Long, Seq[Float], Seq[Float])].collect()
     rt.foreach { case (id, got, orig) =>
-      val want = orig.map(x => Fp16.halfToFloat(Fp16.floatToHalf(x)))
+      val want = orig.map(x => graft.io.Npy.halfToFloat(Fp16.floatToHalf(x)))
       assert(got == want, s"row $id: fp16 rounding drifted")
     }
     // identity on packed bytes (fp16 -> fp32 -> fp16 is lossless)

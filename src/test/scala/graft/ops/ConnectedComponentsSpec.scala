@@ -4,10 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
 
-/** Min-label propagation contracts: transitive closure across chains
-  * (the worst case for pass count), isolation between components,
-  * singleton handling in dupComponents, and determinism under
-  * repartitioning.
+/** Duplicate-cluster component contracts (alternating star
+  * contraction): transitive closure across chains, isolation between
+  * components, singleton handling in dupComponents, and determinism
+  * under repartitioning.
   */
 class ConnectedComponentsSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
@@ -19,7 +19,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L),
       (10L, 11L), (11L, 12L), (10L, 12L),
       (20L, 21L)).toDF("a", "b")
-    val comp = DedupOps.connectedComponents(edges, "a", "b")
+    val comp = GraphOps.connectedComponentsAlternating(edges, "a", "b")
     val got = comp.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((1L to 5L).forall(got(_) == 1L))
     assert(Seq(10L, 11L, 12L).forall(got(_) == 10L))
@@ -29,8 +29,8 @@ class ConnectedComponentsSpec extends AnyFunSuite {
 
   test("result is deterministic under repartitioning") {
     val edges = Seq((5L, 9L), (9L, 2L), (7L, 5L), (3L, 8L)).toDF("a", "b")
-    val a = DedupOps.connectedComponents(edges, "a", "b")
-    val b = DedupOps.connectedComponents(edges.repartition(7), "a", "b")
+    val a = GraphOps.connectedComponentsAlternating(edges, "a", "b")
+    val b = GraphOps.connectedComponentsAlternating(edges.repartition(7), "a", "b")
     val ra = a.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     val rb = b.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     assert(ra == rb)
@@ -75,16 +75,5 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(fromReps(70L) == 70L && fromReps(71L) == 71L)
     assert((0 until 6).map(i => fromReps(10L + i)).toSet.size == 1)
     assert((0 until 4).map(i => fromReps(30L + i)).toSet.size == 1)
-  }
-
-  test("maxPasses caps the iteration") {
-    // a 6-long chain needs >2 min-propagation passes to fully collapse
-    val edges = (1L until 7L).map(i => (i, i + 1)).toDF("a", "b")
-    val capped = DedupOps.connectedComponents(edges, "a", "b", maxPasses = 1)
-    val full = DedupOps.connectedComponents(edges, "a", "b")
-    val cm = capped.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val fm = full.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(fm.values.toSet == Set(1L), s"uncapped must collapse fully: $fm")
-    assert(cm(7L) != 1L, "one pass cannot collapse a 6-edge chain")
   }
 }

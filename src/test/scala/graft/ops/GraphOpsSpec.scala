@@ -117,18 +117,25 @@ class GraphOpsSpec extends AnyFunSuite {
 
   // ----------------------------------- alternating-star components
 
-  test("alternating CC matches min-label propagation on a mixed graph") {
+  test("alternating CC matches a union-find on a mixed graph") {
     // three planted components (clique, star, pair) + self-loop noise
-    val edges = (
+    val pairs =
       (for (a <- 0 to 4; b <- (a + 1) to 4) yield (a.toLong, b.toLong)) ++
         Seq((10L, 11L), (10L, 12L), (10L, 13L), (20L, 21L), (5L, 5L))
-      ).toDF("src", "dst")
-    val alt = GraphOps.connectedComponentsAlternating(edges, "src", "dst")
+    val alt = GraphOps.connectedComponentsAlternating(pairs.toDF("src", "dst"), "src", "dst")
       .as[(Long, Long)].collect().toMap
-    val prop = DedupOps.connectedComponents(
-      edges.filter(col("src") =!= col("dst")), "src", "dst")
-      .as[(Long, Long)].collect().toMap
-    assert(alt == prop)
+    // union-find over the non-loop edges, each root the component's min id
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    for ((a, b) <- pairs if a != b) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val uf = parent.keys.toSeq.map(x => x -> find(x)).toMap
+    assert(alt == uf)
     assert(alt.filter(_._1 <= 4).values.toSet == Set(0L))
     assert(alt(13L) == 10L && alt(21L) == 20L)
   }

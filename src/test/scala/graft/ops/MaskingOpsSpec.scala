@@ -116,7 +116,7 @@ class MaskingOpsSpec extends AnyFunSuite {
     val got = docs.toDF("id", "toks")
       .select(col("id"),
         graft.functions.SpanCorruptMd5.spanCorruptMd5(
-          col("toks"), col("id").cast("string"), 0.15, 3, 1000, 0L).as("sc"))
+          col("toks"), col("id").cast("string"), 1000).as("sc"))
       .select(col("id"), col("sc.input_ids"), col("sc.target_ids"),
         col("sc.n_corrupted"))
       .as[(Long, Seq[Int], Seq[Int], Int)].collect()

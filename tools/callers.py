@@ -1,21 +1,24 @@
 #!/usr/bin/env python3
 """List the engine members that nothing calls.
 
-Scans the members of the top-level objects in `ops/`, `streaming/`, `io/`
-and `pipeline/` (under src/main/scala/graft) and marks a member as called
-when its name is referenced
+The entry files (ENTRY, under src/main/scala/graft, and every
+perfbench/src file) are the roots: the programs a user or the benchmark
+launches. Every other src/main/scala/graft file is scanned: a member of
+one of its top-level objects is called when its name is referenced
 
-  - from any other src/main file outside those four directories, or from
-    a perfbench/src file (the roots), or
+  - from an entry file, or
   - from the body of a member that is itself called, in the same file or
     in another scanned file (so the scan is transitive, to a fixpoint).
 
 Comments are stripped before the scan, and `import` lines do not count as
-references. A name is matched as a whole identifier, so overloads share
-one entry and a common name (`run`, `apply`) may be marked called by an
-unrelated reference: the scan can miss dead code, never flag live code.
-A top-level class (the Hadoop file systems in io/LocalFs) is one member
-whose body is the whole class, so its overrides live and die with it.
+references. The identifier `main` never counts either: the JVM launcher
+calls a `main`, no code does, so a scanned object's `main` is uncalled
+and only an entry file's `main` runs. A name is matched as a whole
+identifier, so overloads share one entry and a common name (`run`,
+`apply`) may be marked called by an unrelated reference: the scan can
+miss dead code, never flag live code. A top-level class (the Hadoop file
+systems in io/LocalFs, an Expression in functions/) is one member whose
+body is the whole class, so its overrides live and die with it.
 
 Prints every member that is not called. Members on ALLOWLIST, kept on
 purpose, are printed with their reason. Exit 1 when any other member is
@@ -37,11 +40,16 @@ exempt, or on a PARAM_ALLOWLIST entry that is set now (a stale entry).
 
 Usage: python3 tools/callers.py [repo_root]   (default: this script's repo)
 """
+import fnmatch
 import os
 import re
 import sys
 
-SCANNED = ("ops", "streaming", "io", "pipeline")
+# The entry files, relative to src/main/scala/graft: each has a `main`
+# that is run (the driver contract, the plan dump the verify skill runs,
+# the scale-point generator) or is the registry those mains read.
+ENTRY = ("SparkEntry.scala", "Verify.scala", "Bench.scala", "queries/*.scala",
+         "tools/Explain.scala", "tools/ScaleGen.scala")
 
 # Spec oracles: a test compares a live kernel against each of them, so
 # they have no caller in src/main by design.
@@ -165,29 +173,36 @@ def members(lines):
     return found, free
 
 
-def scan(root):
+def sources(root):
+    """(path, is entry) for each .scala file under src/main/scala/graft."""
     main = os.path.join(root, "src", "main", "scala", "graft")
-    nodes, roots = {}, set()   # (file, name) -> [owner, private, identifiers]
     for d, _, files in os.walk(main):
-        for f in files:
-            if not f.endswith(".scala"):
-                continue
-            path = os.path.join(d, f)
-            lines = code_lines(path)
-            if os.path.relpath(d, main).split(os.sep)[0] not in SCANNED:
-                roots.update(IDENT.findall("\n".join(lines)))
-                continue
-            found, free = members(lines)
-            roots.update(IDENT.findall("\n".join(free)))
-            for owner, name, private, rng in found:
-                node = nodes.setdefault((path, name), [owner, True, set()])
-                node[1] = node[1] and private
-                node[2].update(IDENT.findall("\n".join(lines[i] for i in rng)))
-                node[2].discard(name)
+        for f in sorted(files):
+            if f.endswith(".scala"):
+                path = os.path.join(d, f)
+                rel = os.path.relpath(path, main).replace(os.sep, "/")
+                yield path, any(fnmatch.fnmatch(rel, e) for e in ENTRY)
+
+
+def scan(root):
+    nodes, roots = {}, set()   # (file, name) -> [owner, private, identifiers]
+    for path, entry in sources(root):
+        lines = code_lines(path)
+        if entry:
+            roots.update(IDENT.findall("\n".join(lines)))
+            continue
+        found, free = members(lines)
+        roots.update(IDENT.findall("\n".join(free)))
+        for owner, name, private, rng in found:
+            node = nodes.setdefault((path, name), [owner, True, set()])
+            node[1] = node[1] and private
+            node[2].update(IDENT.findall("\n".join(lines[i] for i in rng)))
+            node[2].difference_update((name, "main"))
     for d, _, files in os.walk(os.path.join(root, "perfbench", "src")):
         for f in files:
             if f.endswith(".scala"):
                 roots.update(IDENT.findall("\n".join(code_lines(os.path.join(d, f)))))
+    roots.discard("main")
     by_name = {}
     for key in nodes:
         by_name.setdefault(key[1], []).append(key)
@@ -331,27 +346,22 @@ def is_literal(text):
 
 def scan_params(root):
     """{(label, path:line): (default, status)} for each default parameter
-    of a public member in the scanned directories; status is "set",
+    of a public member in a scanned file; status is "set",
     "column", "kept" or "unset"."""
-    main = os.path.join(root, "src", "main", "scala", "graft")
     decls = {}   # member name -> [(label, path:line, path, param lists)]
-    for d, _, files in os.walk(main):
-        if os.path.relpath(d, main).split(os.sep)[0] not in SCANNED:
+    for path, entry in sources(root):
+        if entry:
             continue
-        for f in sorted(files):
-            if not f.endswith(".scala"):
+        lines = code_lines(path)
+        for owner, name, private, rng in members(lines)[0]:
+            text = "\n".join(lines[k] for k in rng)
+            m = DECL.search(text)
+            if private or not m or m.group(1) != name:
                 continue
-            path = os.path.join(d, f)
-            lines = code_lines(path)
-            for owner, name, private, rng in members(lines)[0]:
-                text = "\n".join(lines[k] for k in rng)
-                m = DECL.search(text)
-                if private or not m or m.group(1) != name:
-                    continue
-                label = name if owner == name else "%s.%s" % (owner, name)
-                where = "%s:%d" % (os.path.relpath(path, root), rng.start + 1)
-                decls.setdefault(name, []).append(
-                    (label, where, path, param_lists(text, m.end())))
+            label = name if owner == name else "%s.%s" % (owner, name)
+            where = "%s:%d" % (os.path.relpath(path, root), rng.start + 1)
+            decls.setdefault(name, []).append(
+                (label, where, path, param_lists(text, m.end())))
     set_params = set()   # (path:line, param name)
     for top in (os.path.join(root, "src"), os.path.join(root, "perfbench", "src")):
         for d, _, files in os.walk(top):

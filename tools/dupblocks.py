@@ -1,11 +1,13 @@
 #!/usr/bin/env python3
 """Report code that repeats an earlier block line for line.
 
-Scans the registry (src/main/scala/graft/queries/*.scala) and the Bench
-sweep (src/main/scala/graft/Bench.scala), in that order. Comments are
-stripped (callers.strip_comments) and so is each line's surrounding
-whitespace, so a block copied at another indentation, or with its own
-end-of-line comments, still matches.
+Scans every .scala file under src/main/scala/graft: the registry
+(queries/*.scala) first, then the Bench sweep (Bench.scala), then every
+other file in path order. Comments are stripped (callers.strip_comments)
+and so is each line's surrounding whitespace, so a block copied at
+another indentation, or with its own end-of-line comments, still
+matches. `import` lines are blanked (callers.code_lines): no shared
+definition can replace an import block, so imports never form a copy.
 
 A run is RUN or more consecutive lines, none of them SHORT characters or
 shorter (a lone `}` or `)` ends a run), that equals an earlier run in
@@ -23,7 +25,7 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from callers import SCANNED, strip_comments  # noqa: E402
+from callers import code_lines  # noqa: E402
 
 RUN = 6
 SHORT = 3
@@ -41,9 +43,10 @@ ALLOWLIST = {
 
 def files(root):
     graft = os.path.join(root, "src", "main", "scala", "graft")
-    return sorted(glob.glob(os.path.join(graft, "queries", "*.scala"))) + \
-        [os.path.join(graft, "Bench.scala")] + \
-        [p for d in SCANNED for p in sorted(glob.glob(os.path.join(graft, d, "**", "*.scala"), recursive=True))]
+    first = sorted(glob.glob(os.path.join(graft, "queries", "*.scala"))) + \
+        [os.path.join(graft, "Bench.scala")]
+    rest = sorted(glob.glob(os.path.join(graft, "**", "*.scala"), recursive=True))
+    return [p for p in first if os.path.exists(p)] + [p for p in rest if p not in first]
 
 
 def scan(root):
@@ -51,8 +54,7 @@ def scan(root):
     for each run of copied lines, 1-based and in file order."""
     seen, runs = {}, []
     for path in files(root):
-        with open(path, encoding="utf-8") as f:
-            lines = [l.strip() for l in strip_comments(f.read()).split("\n")]
+        lines = [l.strip() for l in code_lines(path)]
         copied = {}   # line index -> origin of the window that copied it
         for i in range(len(lines) - RUN + 1):
             window = tuple(lines[i:i + RUN])

@@ -1,4 +1,4 @@
-"""Unit tests for the default-parameter pass of tools/callers.py.
+"""Unit tests for tools/callers.py: the entry list and the default-parameter pass.
 
 Run: python3 -m unittest discover -s tools
 """
@@ -114,6 +114,74 @@ class ParamPassTest(unittest.TestCase):
         finally:
             callers.PARAM_ALLOWLIST.clear()
             callers.PARAM_ALLOWLIST.update(saved)
+
+
+ENTRY_FILES = {
+    "src/main/scala/graft/Verify.scala": """package graft
+
+object Verify {
+  def main(args: Array[String]): Unit = Demo.run()
+}
+""",
+    "src/main/scala/graft/tools/Explain.scala": """package graft.tools
+
+object Explain {
+  def main(args: Array[String]): Unit = graft.core.Plans.fromExplain()
+}
+""",
+    "src/main/scala/graft/tools/Demo.scala": """package graft.tools
+
+object Demo {
+  def run(): Unit = ()
+
+  def main(args: Array[String]): Unit = graft.ops.FooOps.onlyFromDemoMain()
+}
+""",
+    "src/main/scala/graft/ops/FooOps.scala": """package graft.ops
+
+object FooOps {
+  def onlyFromDemoMain(): Unit = ()
+}
+""",
+    "src/main/scala/graft/functions/Bar.scala": """package graft.functions
+
+object Bar {
+  def unusedFunction(): Unit = ()
+}
+""",
+    "src/main/scala/graft/core/Plans.scala": """package graft.core
+
+object Plans {
+  def fromExplain(): Unit = ()
+  def unusedCore(): Unit = ()
+}
+""",
+}
+
+
+class EntryListTest(unittest.TestCase):
+
+    @classmethod
+    def setUpClass(cls):
+        with tempfile.TemporaryDirectory() as root:
+            for rel, text in ENTRY_FILES.items():
+                write(root, rel, text)
+            os.makedirs(os.path.join(root, "perfbench", "src"))
+            cls.uncalled, cls.live = callers.scan(root)
+
+    def test_a_main_outside_the_entry_list_keeps_nothing_alive(self):
+        # Verify's own `main` names `main`, which never counts as a call
+        self.assertIn("Demo.main", self.uncalled)
+        self.assertIn("FooOps.onlyFromDemoMain", self.uncalled)
+
+    def test_functions_and_core_are_scanned(self):
+        self.assertIn("Bar.unusedFunction", self.uncalled)
+        self.assertIn("Plans.unusedCore", self.uncalled)
+
+    def test_entry_files_keep_members_alive(self):
+        # Demo.run from Verify; Plans.fromExplain from tools/Explain
+        self.assertIn("Demo.run", self.live)
+        self.assertIn("Plans.fromExplain", self.live)
 
 
 if __name__ == "__main__":

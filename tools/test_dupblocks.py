@@ -94,7 +94,7 @@ class DupBlocksTest(unittest.TestCase):
         self.assertIn("12 copied lines in 2 runs", bad.stdout)
         self.assertEqual(clean.returncode, 0, clean.stdout)
 
-    def test_engine_layers_are_scanned_and_other_packages_are_not(self):
+    def test_every_package_is_scanned(self):
         with tempfile.TemporaryDirectory() as root:
             write(root, "src/main/scala/graft/Bench.scala", "package graft\n")
             for rel in ("ops/A.scala", "streaming/sub/B.scala", "functions/C.scala"):
@@ -102,7 +102,20 @@ class DupBlocksTest(unittest.TestCase):
                 write(root, "src/main/scala/graft/" + rel, "object %s {\n%s}\n" % (name, BLOCK))
             runs = [(os.path.basename(p), first, last, os.path.basename(op), ol)
                     for p, first, last, op, ol, _ in dupblocks.scan(root)]
-        self.assertEqual(runs, [("B.scala", 2, 7, "A.scala", 2)])
+        # queries/ and Bench.scala first, then every other file in path order
+        self.assertEqual(runs, [("A.scala", 2, 7, "C.scala", 2),
+                                ("B.scala", 2, 7, "C.scala", 2)])
+
+    def test_import_lines_never_form_a_copy(self):
+        imports = "".join("import org.apache.spark.sql.%s\n" % n
+                          for n in ("Column", "DataFrame", "Row", "SparkSession",
+                                    "functions._", "types._", "expressions.Window"))
+        with tempfile.TemporaryDirectory() as root:
+            write(root, "src/main/scala/graft/Bench.scala", "package graft\n")
+            for name in ("A", "B"):
+                write(root, "src/main/scala/graft/ops/%s.scala" % name,
+                      "package graft.ops\n\n%s\nobject %s\n" % (imports, name))
+            self.assertEqual(dupblocks.scan(root), [])
 
     def test_allowlist_covers_and_goes_stale(self):
         saved = dict(dupblocks.ALLOWLIST)
